@@ -58,21 +58,26 @@ object Bench {
   private def enc(rs: Seq[(String, Double)]): String =
     rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
+  private def encNames(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   /** The one-line machine-readable headline. BOUNDED: the capture harness
     * keeps only the tail of stdout, so the encoded line must fit its
     * window with room for surrounding noise — if the query subset pushes
     * the line past `maxChars`, trailing entries are dropped (and counted
     * in `headline_dropped`) until it fits; the FULL map always lives in
     * BENCH_FULL.json. BenchSpec pins both properties (valid JSON, fits)
-    * against a full-suite-sized map.
+    * against a full-suite-sized map. `failed` names the queries that threw;
+    * they carry no time and are not in `total`.
     */
   private[graft] def encodeHeadline(queries: Seq[(String, Double)], total: Double,
       sfDir: String, cpus: String, nQueries: Int, degraded: Boolean,
-      nSuspect: Int, maxChars: Int = 1900): String = {
+      nSuspect: Int, failed: Seq[String] = Nil, maxChars: Int = 1900): String = {
+    val f = s""""failed":${encNames(failed)}"""
     def render(qs: Seq[(String, Double)]): String = {
       val dropped = queries.size - qs.size
       val d = if (dropped > 0) s""","headline_dropped":$dropped""" else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${enc(qs)},"sf":"$sfDir","basis":"best-of-2-min","cpus":$cpus,"n_queries":$nQueries,"degraded":$degraded,"suspects":$nSuspect,"full":"BENCH_FULL.json"$d}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${enc(qs)},"sf":"$sfDir","basis":"best-of-2-min","cpus":$cpus,"n_queries":$nQueries,"degraded":$degraded,"suspects":$nSuspect,$f,"full":"BENCH_FULL.json"$d}"""
     }
     var qs = queries
     var out = render(qs)
@@ -84,12 +89,12 @@ object Bench {
     // dropped, a pathological sfDir/cpus string can still overflow the
     // fixed envelope — shorten sf to its basename, then fall back to a
     // minimal valid-JSON envelope (still machine-parsable: metric, value,
-    // unit, pointer to the full artifact)
+    // unit, failure count, pointer to the full artifact)
     if (out.length > maxChars) {
       val base = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir).take(64)
-      out = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{},"sf":"$base","basis":"best-of-2-min","cpus":$cpus,"n_queries":$nQueries,"degraded":$degraded,"suspects":$nSuspect,"full":"BENCH_FULL.json","headline_dropped":${queries.size}}"""
+      out = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{},"sf":"$base","basis":"best-of-2-min","cpus":$cpus,"n_queries":$nQueries,"degraded":$degraded,"suspects":$nSuspect,$f,"full":"BENCH_FULL.json","headline_dropped":${queries.size}}"""
       if (out.length > maxChars)
-        out = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","full":"BENCH_FULL.json"}"""
+        out = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":${failed.size},"full":"BENCH_FULL.json"}"""
     }
     out
   }
@@ -169,17 +174,11 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    // the engine's own session defaults (GraftSession): AQE coalesces the
+    // small shuffles this suite is full of, so wide masters don't pay
+    // 32-way task overhead on 600k-row stages
+    val spark = GraftSession.builder(s"local[$cpus]", shufflePartitions = cpus.toInt)
       .config("spark.ui.enabled", "false")
-      // the engine's own session defaults (GraftSession): AQE coalesces
-      // the small shuffles this suite is full of, so wide masters don't
-      // pay 32-way task overhead on 600k-row stages
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .getOrCreate()
     // ERROR, not WARN: interleaved WARN lines have corrupted the one-line
     // JSON capture downstream (BENCH_r02/r03 both show parsed: null)
@@ -211,22 +210,28 @@ object Bench {
     sentinel(); sentinel() // two at the start: the floor is in-run, not a constant
     // BEST-OF-2 per query (basis change recorded in BASELINE.md): a
     // transient host stall lands on one run, not both — rounds 7-9 each
-    // recorded a multi-second phantom regression from a single-pass time
+    // recorded a multi-second phantom regression from a single-pass time.
+    // A query that throws gets no time: it is listed in `failed`, left out
+    // of `total`, and the run exits non-zero.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
       }
-      (System.nanoTime() - t0) / 1e9
     }
     val raw: Seq[(String, Double, Double)] = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .zipWithIndex
-      .map { case ((name, fn), i) =>
+      .flatMap { case ((name, fn), i) =>
         if (i > 0 && i % SentinelEvery == 0) sentinel()
-        (name, runOnce(name, fn), runOnce(name, fn))
+        for (a <- runOnce(name, fn); b <- runOnce(name, fn)) yield (name, a, b)
       }
     sentinel()
     // PER-QUERY DRIFT CANARY: adjudicate against the committed history's
@@ -236,14 +241,15 @@ object Bench {
       if (only.isDefined) Map.empty else loadHistory(sfDir)
     // (name, reportedValue, Option[(allReadings, anchor, stillSuspect)])
     val adjudicated: Seq[(String, Double, Option[(Seq[Double], Double, Boolean)])] =
-      raw.map { case (name, a, b) =>
+      raw.flatMap { case (name, a, b) =>
         val v = math.min(a, b)
         hist.get(name).filter(_.nonEmpty).map(anchor) match {
           case Some(m) if overThreshold(v, m) =>
-            val c = runOnce(name, SparkEntry.queries(name))
-            val v3 = math.min(v, c)
-            (name, v3, Some((Seq(a, b, c), m, overThreshold(v3, m))))
-          case _ => (name, v, None)
+            runOnce(name, SparkEntry.queries(name)).map { c =>
+              val v3 = math.min(v, c)
+              (name, v3, Some((Seq(a, b, c), m, overThreshold(v3, m))))
+            }
+          case _ => Some((name, v, None))
         }
       }
     val results: Seq[(String, Double)] = adjudicated.map(t => (t._1, t._2))
@@ -265,7 +271,7 @@ object Bench {
     // full map -> file (survives the stdout tail window; committed
     // in-repo). Subset runs (SPARK_GRAFT_BENCH_ONLY) must NOT clobber the
     // committed full-suite artifact with a partial map.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${enc(results)},"sf":"$sfDir","basis":"best-of-2-min","cpus":$cpus,"n_queries":${results.size},$sentinelJson,$suspectJson}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${enc(results)},"sf":"$sfDir","basis":"best-of-2-min","cpus":$cpus,"n_queries":${results.size},"failed":${encNames(failed.toSeq)},$sentinelJson,$suspectJson}"""
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("BENCH_FULL.json"); w.println(full); w.close()
       // committed per-query history the next round's canary adjudicates
@@ -278,7 +284,8 @@ object Bench {
     } catch { case _: Throwable => () }
     val nSuspect = adjudicated.count(_._3.exists(_._3))
     val subset = results.filter { case (k, _) => only.isDefined || headline.contains(k) }
-    val line = encodeHeadline(subset, total, sfDir, cpus, results.size, degraded, nSuspect)
+    val line = encodeHeadline(subset, total, sfDir, cpus, results.size, degraded, nSuspect,
+      failed.toSeq)
     println(line)
     System.out.flush()
     spark.stop()
@@ -289,5 +296,6 @@ object Bench {
     // to any parser that takes the last JSON line.
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -16,6 +16,11 @@ import graft.functions.VectorExpressions
   * `shufflePartitions` should track cluster parallelism (cores on local
   * mode, 2-3× total executor cores on a real cluster); AQE coalesces
   * oversized counts at runtime, so erring high is safe.
+  *
+  * Every session in the project is built here; callers chain only what
+  * they really differ in (e.g. `spark.ui.enabled`) onto `builder`.
+  * GraftSessionSpec fails the suite if another source calls the Spark
+  * session builder directly.
   */
 object GraftSession {
 
@@ -42,5 +47,34 @@ object GraftSession {
     val spark = builder(master, appName, shufflePartitions).getOrCreate()
     VectorExpressions.register(spark)
     spark
+  }
+
+  /** A CBO-enabled session on the caller's SparkContext, with the graft
+    * extensions (pre-CBO stats rule) installed — the driver's plain
+    * session has neither. Cached per context; AQE off so plan-level
+    * `require`s are deterministic. Default/active session registrations
+    * are preserved: only queries that explicitly opt in run CBO.
+    */
+  @volatile private var cboCache: SparkSession = _
+  def cboSession(s: SparkSession): SparkSession = synchronized {
+    if (cboCache == null || cboCache.sparkContext != s.sparkContext ||
+        cboCache.sparkContext.isStopped) {
+      val prevDefault = SparkSession.getDefaultSession
+      val prevActive = SparkSession.getActiveSession
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      cboCache = SparkSession.builder()
+        .withExtensions(e => new GraftExtensions().apply(e))
+        .config("spark.sql.cbo.enabled", "true")
+        .config("spark.sql.cbo.joinReorder.enabled", "true")
+        .config("spark.sql.shuffle.partitions",
+          s.conf.get("spark.sql.shuffle.partitions"))
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.adaptive.enabled", "false")
+        .getOrCreate()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+    cboCache
   }
 }

@@ -55,35 +55,6 @@ object SparkEntry {
     finally pool.shutdown()
   }
 
-  /** A CBO-enabled session on the caller's SparkContext, with the graft
-    * extensions (pre-CBO stats rule) installed — the driver's plain
-    * session has neither. Cached per context; AQE off so plan-level
-    * `require`s are deterministic. Default/active session registrations
-    * are preserved: only queries that explicitly opt in run CBO.
-    */
-  @volatile private var cboCache: SparkSession = _
-  private def cboSession(s: SparkSession): SparkSession = synchronized {
-    if (cboCache == null || cboCache.sparkContext != s.sparkContext ||
-        cboCache.sparkContext.isStopped) {
-      val prevDefault = SparkSession.getDefaultSession
-      val prevActive = SparkSession.getActiveSession
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      cboCache = SparkSession.builder()
-        .withExtensions(e => new GraftExtensions().apply(e))
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.sql.shuffle.partitions",
-          s.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "false")
-        .getOrCreate()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-    cboCache
-  }
-
   /** All (idA < idB) pairs of `__id`s sharing a `__key` — one shuffle +
     * inline combination expansion (never a self-join, which would recompute
     * the upstream pipeline once per side).
@@ -1305,7 +1276,7 @@ object SparkEntry {
         () => ct.append(t(s, dir, "customer")
           .select("c_custkey", "c_mktsegment").repartition(2),
           collectStats = Seq("c_custkey")))
-      val cbo = cboSession(s)
+      val cbo = GraftSession.cboSession(s)
       // NDV sketches: FilterEstimation wants distinctCount alongside
       // min/max before it estimates range selectivity
       inParallel( // sketch passes on disjoint tables (§2.6)
@@ -1393,7 +1364,7 @@ object SparkEntry {
         () => ct.append(t(s, dir, "customer")
           .select("c_custkey", "c_mktsegment").repartition(2),
           collectStats = Seq("c_custkey")))
-      val cbo = cboSession(s)
+      val cbo = GraftSession.cboSession(s)
       // NDV on every join key: JoinEstimation sizes equi-joins from
       // distinct counts, and CostBasedJoinReorder only moves items whose
       // estimates it trusts; c_custkey min/max feeds the range filter

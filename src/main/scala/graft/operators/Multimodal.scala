@@ -162,10 +162,10 @@ object Multimodal {
     // FAST PATH: direct RIFF/WAVE PCM16 parse. AudioSystem's provider
     // registry serializes under concurrency — a 32-thread microbench ran
     // SLOWER than 1 thread for the same decode count (tools/AudioProbe,
-    // PLANS.md r16), which at sf1 made q_audio_decode scale 18x at 10x
-    // rows. The dominant container+codec is parsed lock-free with
-    // bit-identical arithmetic; AIFF/AU/compressed fall through to the
-    // provider path unchanged.
+    // deleted; in git at ebe1843; PLANS.md r16), which at sf1 made
+    // q_audio_decode scale 18x at 10x rows. The dominant container+codec
+    // is parsed lock-free with bit-identical arithmetic; AIFF/AU/compressed
+    // fall through to the provider path unchanged.
     val fast = decodeWavPcm16(bytes)
     if (fast.isDefined) return fast
     try {
@@ -386,8 +386,9 @@ object Multimodal {
   /** Lock-free canonical RIFF/WAVE PCM16 container around raw little-endian
     * sample bytes. `AudioSystem.write` walks the SAME synchronized provider
     * registry whose read side serialized 32 threads below 1-thread
-    * throughput (the r16 AudioProbe finding) — synthesis paid it on every
-    * row. A 44-byte canonical header is pure arithmetic; the bytes parse
+    * throughput (the r16 AudioProbe finding; tools/AudioProbe is deleted,
+    * in git at ebe1843) — synthesis paid it on every row. A 44-byte
+    * canonical header is pure arithmetic; the bytes parse
     * identically under both the fast RIFF path and the AudioSystem readers
     * (decode stays on the REAL decoders everywhere).
     */

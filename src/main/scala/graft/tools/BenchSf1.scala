@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerate BENCH_SF1.json from HEAD over the FULL query surface at sf1
   * (VERDICT r15, Next #5 — the committed artifact was the r14 49-query
   * headline). Mirrors graft.Bench's protocol: q_count warm-up, best-of-2
@@ -20,14 +18,8 @@ object BenchSf1 {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1_full")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", shufflePartitions = cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try graft.SparkEntry.queries("q_count")(spark, sfDir)

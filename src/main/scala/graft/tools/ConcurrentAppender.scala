@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.table.Icebox
 
 /** Child-process worker for the cross-PROCESS concurrency specs: opens the
@@ -31,10 +30,9 @@ object ConcurrentAppender {
   def main(args: Array[String]): Unit = {
     val Array(dir, n, tag) = args.take(3)
     val op = if (args.length > 3) args(3) else "append"
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
+    val spark = graft.GraftSession.builder("local[2]", s"appender-$tag", 2)
       .config("spark.ui.enabled", "false")
-      .appName(s"appender-$tag").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val t = Icebox(dir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch (r17): dump .explain("formatted") for named queries into
   * plans/r18/<name>_<suffix>.txt. Usage:
   *   runMain graft.tools.ExplainQ <suffix> q_a q_b ...
@@ -11,13 +9,8 @@ object ExplainQ {
     val suffix = args.head
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[32]", shufflePartitions = 32)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("plans/r18"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Testdata
 
@@ -14,10 +14,9 @@ object GenSf1 {
   def main(args: Array[String]): Unit = {
     val src = "/root/testdata/sf0.1"
     val out = "/tmp/graft_sf1_full"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", shufflePartitions = 32)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def scaled(name: String, shift: DataFrame => Long => DataFrame): Unit = {

@@ -52,11 +52,8 @@ object MinhashScale {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", shufflePartitions = cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

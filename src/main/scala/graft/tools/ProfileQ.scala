@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -13,13 +12,8 @@ import java.util.concurrent.atomic.AtomicInteger
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[32]", shufflePartitions = 32)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: round-10 brief item 6 — sf1 CORRECTNESS (not just timing).
   * Runs the five headline table-format queries from SparkEntry against the
   * 10x generated tables under /tmp/graft_sf1_full and dumps results +
@@ -64,10 +62,7 @@ object VerifySf1 {
     val outDir = if (args.length > 1) args(1) else "/tmp/verify-sf1"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[32]", shufflePartitions = 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -99,6 +99,23 @@ class BenchSpec extends AnyFunSuite with Matchers {
     (node.get("queries").size() + node.get("headline_dropped").asInt()) shouldBe 200
   }
 
+  test("failed queries are named in the headline, and counted when nothing else fits") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val l1 = Bench.encodeHeadline(Seq("q_ok" -> 1.0), 1.0, "sf0.1",
+      "32", 1, degraded = false, nSuspect = 0, failed = Seq("q_a", "q_b"))
+    val names = mapper.readTree(l1).get("failed")
+    (0 until names.size()).map(names.get(_).asText()) shouldBe Seq("q_a", "q_b")
+    val clean = Bench.encodeHeadline(Seq("q_ok" -> 1.0), 1.0, "sf0.1",
+      "32", 1, degraded = false, nSuspect = 0)
+    mapper.readTree(clean).get("failed").size() shouldBe 0
+    // a failure list too long for the window still leaves its count
+    val many = (1 to 200).map(i => s"q_some_rather_long_query_name_$i")
+    val l2 = Bench.encodeHeadline(Seq("q_ok" -> 1.0), 1.0, "sf0.1",
+      "32", 1, degraded = false, nSuspect = 0, failed = many)
+    l2.length should be <= 1900
+    mapper.readTree(l2).get("n_failed").asInt() shouldBe 200
+  }
+
   test("threshold is relative AND absolute: sub-second jitter never flags") {
     Bench.overThreshold(0.9, 0.3) shouldBe false // 3x but under +1 s
     Bench.overThreshold(1.4, 0.3) shouldBe true // past both

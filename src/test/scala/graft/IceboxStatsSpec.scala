@@ -16,26 +16,11 @@ import graft.table.Icebox
 class IceboxStatsSpec extends SparkSpec {
 
   /** A second session on the SAME SparkContext with the graft extensions
-    * (pre-CBO stats rule) and CBO enabled — the shared test session has
-    * neither, which doubles as the control group.
+    * (pre-CBO stats rule) and CBO enabled — the engine's own CBO session,
+    * shared with the CBO queries. The shared test session has neither,
+    * which doubles as the control group.
     */
-  private lazy val cboSpark: SparkSession = {
-    val base = spark // force shared session init first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(e => new GraftExtensions().apply(e))
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  private lazy val cboSpark: SparkSession = GraftSession.cboSession(spark)
 
   /** Stats visitors read `SQLConf.get` from the THREAD-LOCAL active
     * session — calling `.stats` from the test thread with the control

@@ -8,14 +8,12 @@ import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
   * sessions are expensive; ScalaTest runs suites sequentially in-process).
+  * Built by the engine's session factory, so every suite runs on the
+  * engine defaults whatever the suite order.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("local[4]", "graft-test", shufflePartitions = 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
