@@ -237,10 +237,10 @@ object MaterializedView {
     last match {
       case None => fullBuild()
       case Some(from) =>
+        // cursor expired on source: only a full rebuild can catch up
+        if (!source.snapshotExists(from)) return fullBuild()
         val nFiles = srcSnap.files.size
-        val diff =
-          try spreadIfNarrow(filtered(source.changeDiff(spark, from, srcHead)), nFiles)
-          catch { case _: Exception => return fullBuild() } // cursor expired on source
+        val diff = spreadIfNarrow(filtered(source.changeDiff(spark, from, srcHead)), nFiles)
         applyDelta(spark, target, opPrefix(mvId) + srcHead, tgtHead, diff, keys,
           sums, recompCols,
           // recompute input deliberately NOT spread: the semi-join filter
@@ -329,10 +329,12 @@ object MaterializedView {
         // a side whose cursor already sits at its head (metadata compare,
         // zero I/O) has an empty diff — its whole term vanishes. The
         // steady-state fact-only refresh runs ONE term, not two.
-        val (dl0, dr0) =
-          try ((if (fromL != lSnap.id) Some(left.changeDiff(spark, fromL, lSnap.id)) else None),
-            if (fromR != rSnap.id) Some(right.changeDiff(spark, fromR, rSnap.id)) else None)
-          catch { case _: Exception => return fullBuild() } // cursor expired
+        // a cursor expired on either source: only a full rebuild can catch up
+        if (!left.snapshotExists(fromL) || !right.snapshotExists(fromR)) return fullBuild()
+        val dl0 =
+          if (fromL != lSnap.id) Some(left.changeDiff(spark, fromL, lSnap.id)) else None
+        val dr0 =
+          if (fromR != rSnap.id) Some(right.changeDiff(spark, fromR, rSnap.id)) else None
         // each diff feeds its term's join AND the other side's pruning-key
         // collection (a separate collect job) — persist so each diff's
         // scan runs once (same move as refreshStar)
@@ -505,12 +507,14 @@ object MaterializedView {
         // prune-collect jobs that all produce nothing.
         val changedF = fromF != fSnap.id
         val changedD = dims.indices.map(j => fromD(j) != dSnaps(j).id)
-        val (df0, dDiffs) =
-          try ((if (changedF) Some(fact.changeDiff(spark, fromF, fSnap.id)) else None),
-            dims.zip(fromD).zip(dSnaps).zip(changedD).map {
-              case (((d, from), snap), ch) =>
-                if (ch) Some(d.table.changeDiff(spark, from, snap.id)) else None })
-          catch { case _: Exception => return fullBuild() } // cursor expired
+        // a cursor expired on any source: only a full rebuild can catch up
+        if (!fact.snapshotExists(fromF) ||
+            dims.zip(fromD).exists { case (d, from) => !d.table.snapshotExists(from) })
+          return fullBuild()
+        val df0 = if (changedF) Some(fact.changeDiff(spark, fromF, fSnap.id)) else None
+        val dDiffs = dims.zip(fromD).zip(dSnaps).zip(changedD).map {
+          case (((d, from), snap), ch) =>
+            if (ch) Some(d.table.changeDiff(spark, from, snap.id)) else None }
         // every diff feeds k+1 consumers (its own term's join plus every
         // OTHER source's pruning-key collection) and each pruning probe is
         // a separate collect job — persist so the diff scans run once

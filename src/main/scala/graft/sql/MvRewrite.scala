@@ -568,11 +568,12 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // batches — a merely-ANALYZED subtree spliced in here still carries
     // operators the planner requires the optimizer to have replaced
     // (ResolvedHint and Deduplicate both appear in the view read when the
-    // backing table has merge-on-read deletes: applyDeletes broadcasts the
-    // delete-key sides and dropDuplicates them) and planning dies with an
-    // INTERNAL_ERROR. Splice the fully OPTIMIZED subtree instead; the
-    // optimizer preserves output attributes, so the exprId re-alias below
-    // still lines the parent plan up. (Re-entering the optimizer from a
+    // backing table has an equality-delete key set too large to hold on
+    // the driver: applyDeletes then broadcast-joins the dropDuplicates'd
+    // keys) and planning dies with an INTERNAL_ERROR. Splice the fully
+    // OPTIMIZED subtree instead; the optimizer preserves output
+    // attributes, so the exprId re-alias below still lines the parent
+    // plan up. (Re-entering the optimizer from a
     // rule is safe — rules are stateless — and an MV-over-MV chain
     // terminates because each nesting level moves strictly up the chain.)
     val optimized = projected.queryExecution.optimizedPlan

@@ -1,0 +1,174 @@
+package graft.table
+
+import java.util.concurrent.ConcurrentHashMap
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, struct, udf}
+import org.apache.spark.sql.types._
+
+/** Read side of equality deletes (Iceberg v2's merge-on-read delete type,
+  * written by [[Icebox.commitEqualityDeletes]]): a row is deleted by a
+  * delete dir iff its key tuple is in the dir's key set AND its data file
+  * carries the dir in its attach list (the attach list IS the sequence
+  * semantics — files appended after the delete never carry it).
+  *
+  * Both sets are driver-held and ship as driver-created broadcast
+  * VARIABLES behind one membership predicate ([[deletedBy]]) — the way
+  * Iceberg's own readers apply equality deletes (keys loaded into an
+  * in-memory set, rows filtered against it, no join). A broadcast JOIN would not do: a
+  * `BroadcastExchange` runs a Spark job to collect its side even when
+  * that side is a driver-side LocalRelation. Key sets over
+  * [[EqKeyCacheMaxRows]] are not driver-held; they keep a distributed
+  * broadcast-hinted key join.
+  */
+private[graft] object EqualityDeletes {
+
+  /** The largest key set held on the driver; bigger ones stay distributed. */
+  private[graft] val EqKeyCacheMaxRows = 100000
+  private val EqKeyCacheMaxEntries = 512
+
+  /** One delete dir's deduplicated key tuples as Catalyst-internal values,
+    * plus the broadcast that ships them (created once per SparkContext).
+    */
+  private final class KeySet(val schema: StructType, val keys: Set[Any]) {
+    private var shipped: (SparkContext, Broadcast[Set[Any]]) = _
+    def broadcastOn(sc: SparkContext): Broadcast[Set[Any]] = synchronized {
+      if (shipped == null || (shipped._1 ne sc)) shipped = (sc, sc.broadcast(keys))
+      shipped._2
+    }
+  }
+
+  /** Driver-held key sets, keyed by delete-dir path; `None` marks a dir
+    * whose set is not driver-held (over the cap, or a key type the set
+    * cannot compare by value). Safe because delete dirs are IMMUTABLE:
+    * each commit writes its keys under a fresh uuid-named dir that is never
+    * modified afterwards (expiry deletes whole dirs, never rewrites them).
+    * Metadata caching (the Iceberg manifest-cache analog), never a result
+    * cache; cleared when it reaches [[EqKeyCacheMaxEntries]] dirs.
+    */
+  private val cache = new ConcurrentHashMap[String, Option[KeySet]]()
+
+  private def admit(dir: String, entry: Option[KeySet]): Option[KeySet] = {
+    if (cache.size >= EqKeyCacheMaxEntries) cache.clear()
+    cache.put(dir, entry)
+    entry
+  }
+
+  /** Whether `dir`'s key set is in the cache (no key-file job to read it). */
+  private[graft] def isDriverHeld(dir: String): Boolean =
+    Option(cache.get(dir)).exists(_.isDefined)
+
+  /** Types whose Catalyst-internal values are equal exactly when the SQL
+    * values are (binary arrays compare by identity; floating point differs
+    * from join equality on NaN and -0.0; only the binary string collation
+    * compares by bytes).
+    */
+  private def setComparable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType | _: DecimalType => true
+    case s: StringType => s == StringType
+    case _ => false
+  }
+
+  private def comparable(schema: StructType): Boolean =
+    schema.nonEmpty && schema.forall(f => setComparable(f.dataType))
+
+  /** A key tuple as a set element — its values Catalyst-internal, so they
+    * compare by value whatever external classes the session maps them to;
+    * a bare value for a one-column key; `null` when any column is NULL.
+    */
+  private def keyOf(r: Row): Any = {
+    val t = new Array[Any](r.length)
+    var i = 0
+    while (i < t.length) {
+      val v = r.get(i)
+      if (v == null) return null
+      t(i) = CatalystTypeConverters.convertToCatalyst(v)
+      i += 1
+    }
+    if (t.length == 1) t(0) else ArraySeq.unsafeWrapArray(t)
+  }
+
+  // a NULL-bearing key never matches a row: a NULL key is never deleted
+  private def keySetOf(schema: StructType, rows: Seq[Row]): KeySet =
+    new KeySet(schema, rows.iterator.map(keyOf).filter(_ != null).toSet)
+
+  /** Write `keys` (distinct tuples of the equality columns) to `dir`. A set
+    * that fits [[EqKeyCacheMaxRows]] is collected ONCE, written from that
+    * local copy and admitted to the cache under `dir`, so no reader ever
+    * runs a key-file job for it; a larger set is written distributed and
+    * marked as not driver-held.
+    */
+  private[table] def write(keys: DataFrame, dir: String): Unit = {
+    val distinct = keys.dropDuplicates()
+    val held = Some(keys.schema).filter(comparable)
+      .map(_ => distinct.limit(EqKeyCacheMaxRows + 1).collect().toSeq)
+      .filter(_.length <= EqKeyCacheMaxRows)
+    held match {
+      case Some(rows) =>
+        keys.sparkSession.createDataFrame(rows.asJava, keys.schema)
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+        admit(dir, Some(keySetOf(keys.schema, rows)))
+      case None =>
+        distinct.coalesce(1).write.mode("overwrite").parquet(dir)
+        admit(dir, None)
+    }
+  }
+
+  /** `dir`'s key set when it is driver-held: from the cache, else one
+    * schema read plus one bounded collect, admitted for every later read.
+    */
+  private def keySet(spark: SparkSession, dir: String): Option[KeySet] = {
+    val hit = cache.get(dir)
+    if (hit != null) return hit
+    val df = spark.read.parquet(dir)
+    if (!comparable(df.schema)) return admit(dir, None)
+    val rows = df.dropDuplicates().limit(EqKeyCacheMaxRows + 1).collect().toSeq
+    admit(dir, if (rows.length > EqKeyCacheMaxRows) None else Some(keySetOf(df.schema, rows)))
+  }
+
+  private val SchemePrefix = java.util.regex.Pattern.compile(Icebox.SchemePrefix)
+
+  /** `p` without its [[Icebox.SchemePrefix]], as [[Icebox.normPathCol]] does. */
+  private def normPath(p: String): String = SchemePrefix.matcher(p).replaceFirst("")
+
+  /** `df` and its "deleted by `dir`" flag: key tuple ∈ the dir's keys ∧
+    * `fpCol`'s file ∈ `attached`, each a membership test against a
+    * broadcast set, the key test first so the path is only normalized on a
+    * key hit. Only the broadcast HANDLE travels with the plan, and each
+    * executor fetches a set once (an `isin` literal list would plan slowly
+    * at scale and ship the whole set inside every task). The attach test
+    * is skipped when `attached` covers every one of `files`, the files
+    * `df` reads. Off the set path (oversize set, a key type the set cannot
+    * compare, or a key type that differs from the column's) the frame
+    * gains a broadcast-hinted left join adding column `tmp`; callers drop
+    * it.
+    */
+  private[table] def deletedBy(spark: SparkSession, df: DataFrame, dir: String,
+      attached: Seq[String], files: Seq[String], fpCol: String, tmp: String): (DataFrame, Column) = {
+    val attachedSet = attached.toSet
+    val inFile: Option[Column] =
+      if (files.forall(attachedSet)) None
+      else {
+        val paths = spark.sparkContext.broadcast(attachedSet.map(normPath))
+        Some(udf((p: String) => p != null && paths.value.contains(normPath(p))).apply(col(fpCol)))
+      }
+    val colTypes = df.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    val (out, keyHit) = keySet(spark, dir)
+      .filter(_.schema.forall(f => colTypes.get(f.name.toLowerCase).contains(f.dataType))) match {
+      case Some(ks) =>
+        val keys = ks.broadcastOn(spark.sparkContext)
+        val member = udf { (r: Row) => val k = keyOf(r); k != null && keys.value.contains(k) }
+        (df, member(struct(ks.schema.fieldNames.toSeq.map(col): _*)))
+      case None =>
+        val keys = spark.read.parquet(dir).dropDuplicates()
+        (df.join(broadcast(keys.withColumn(tmp, lit(true))), keys.columns.toSeq, "left"),
+          coalesce(col(tmp), lit(false)))
+    }
+    (out, inFile.fold(keyHit)(keyHit && _))
+  }
+}

@@ -985,7 +985,12 @@ final class Icebox(val tableDir: String) {
     require(!refs.contains(name), s"ref '$name' already exists")
 
   private def requireSnapshotExists(id: Long): Unit =
-    require(store.exists(manifestPath(id)), s"no snapshot $id")
+    require(snapshotExists(id), s"no snapshot $id")
+
+  /** Whether snapshot `id` is still readable — false once expiry removed
+    * it (an incremental consumer's cursor then has to start over).
+    */
+  def snapshotExists(id: Long): Boolean = store.exists(manifestPath(id))
 
   /** Metadata table of refs: `(name, kind, snapshot_id)` — the
     * `t.refs` listing analog of [[snapshotsDf]]/[[filesDf]].
@@ -1271,11 +1276,11 @@ final class Icebox(val tableDir: String) {
       n.deletes.filterNot(o.deletes.toSet) }.distinct
     if (newPosDirs.nonEmpty) {
       val dels = spark.read.parquet(newPosDirs: _*)
-        .select(Icebox.normPathColPub(col("file_path")).as("__gd_fp"),
+        .select(Icebox.normPathCol(col("file_path")).as("__gd_fp"),
           col("pos").as("__gd_pos"))
         .dropDuplicates() // a position listed twice must not duplicate its row
       flagged = flagged.join(broadcast(dels),
-        Icebox.normPathColPub(flagged(fp)) === col("__gd_fp") &&
+        Icebox.normPathCol(flagged(fp)) === col("__gd_fp") &&
           flagged(pos) === col("__gd_pos"), "left")
       flags += col("__gd_fp").isNotNull
     }
@@ -1285,19 +1290,11 @@ final class Icebox(val tableDir: String) {
       // attach semantics mirror applyEqualityDeletes: a row is removed by
       // this dir iff its key tuple matches AND its file newly attaches it
       val attached = pairs.collect { case (o, n)
-        if n.eqDeletes.contains(dir) && !o.eqDeletes.contains(dir) => o.path }.distinct
-      // LocalRelation + cached keys: same jobless-broadcast rationale as
-      // [[Icebox.applyEqualityDeletes]]
-      val attDf = spark.createDataFrame(attached.map(Row(_)).asJava,
-        StructType(Seq(StructField(s"__g_att_fp$i", StringType))))
-      val keys = Icebox.eqDeleteKeys(spark, dir)
-      val hit = s"__g_hit$i"; val att = s"__g_att$i"
-      flagged = flagged
-        .join(broadcast(keys.withColumn(hit, lit(true))), keys.columns.toSeq, "left")
-        .join(broadcast(attDf.withColumn(att, lit(true))),
-          Icebox.normPathColPub(col(fp)) ===
-            Icebox.normPathColPub(col(s"__g_att_fp$i")), "left")
-      flags += (coalesce(col(hit), lit(false)) && coalesce(col(att), lit(false)))
+        if n.eqDeletes.contains(dir) && !o.eqDeletes.contains(dir) => o.path }
+      val (joined, hit) = EqualityDeletes.deletedBy(spark, flagged, dir, attached,
+        olds.map(_.path), fp, s"__g_hit$i")
+      flagged = joined
+      flags += hit
     }
     Some(flagged.filter(flags.reduce(_ || _))
       .select(schema.fields.map(f =>
@@ -2269,14 +2266,12 @@ final class Icebox(val tableDir: String) {
       else {
         // survivors of the over-depth files: stacked deletes applied by the
         // read, the NEW positions anti-joined here
-        def norm(c: Column): Column =
-          regexp_replace(c, "^[a-zA-Z][\\w+.-]*:(//[^/]*)?", "")
         val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
         val withPos = readDataFilesWithPos(spark, overFiles, "__icx_rw_fp", "__icx_rw_pos")
-        val dels = positions.select(norm(col("file_path")).as("__del_fp"),
+        val dels = positions.select(Icebox.normPathCol(col("file_path")).as("__del_fp"),
           col("pos").as("__del_pos"))
         Some(withPos.join(dels,
-            norm(col("__icx_rw_fp")) === col("__del_fp") &&
+            Icebox.normPathCol(col("__icx_rw_fp")) === col("__del_fp") &&
               col("__icx_rw_pos") === col("__del_pos"), "left_anti")
           .select(schema.fieldNames.map(col).toIndexedSeq: _*))
       }
@@ -2314,12 +2309,13 @@ final class Icebox(val tableDir: String) {
   /** Write `keys` — distinct key tuples whose column set IS the equality
     * columns — as ONE equality-delete parquet dir under `deletes/` and
     * return its path. Small by construction (one CDC batch's keys), so the
-    * read-side joins broadcast.
+    * key set is usually driver-held and seeds the read-side key cache
+    * ([[EqualityDeletes.write]]).
     */
   private def writeEqDeleteFile(keys: DataFrame): String = {
     store.mkdirs(deletesDir)
     val dir = store.render(new HPath(deletesDir, s"eqdelete-${UUID.randomUUID().toString.take(12)}"))
-    keys.dropDuplicates().coalesce(1).write.mode("overwrite").parquet(dir)
+    EqualityDeletes.write(keys, dir)
     dir
   }
 
@@ -2464,13 +2460,13 @@ final class Icebox(val tableDir: String) {
     val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
     val preExisting = cur.files.map(_.path).toSet
     val disjoint = keyDisjoint(cur.files, keysPhys)
-    // READ-AMPLIFICATION BOUND: every attached eq-delete adds a broadcast
-    // join to reads of that file, so depth must not grow without limit on a
-    // hot file. Files whose depth would EXCEED `write.merge-on-read
-    // .max-delete-files` are rewritten copy-on-write in this same commit
-    // (all stacked deletes + the new keys applied), resetting their depth
-    // to zero — the hybrid that keeps O(batch) writes for the common case
-    // and bounded join fan-in forever (Delta's DV-compaction analog).
+    // READ-AMPLIFICATION BOUND: every attached eq-delete adds a membership
+    // test (a key join, for an oversize key set) to reads of that file, so
+    // depth must not grow without limit on a hot file. Files whose depth
+    // would EXCEED `write.merge-on-read.max-delete-files` are rewritten
+    // copy-on-write in this same commit (all stacked deletes + the new keys
+    // applied), resetting their depth to zero — the hybrid that keeps O(batch) writes for the common case
+    // and bounded delete fan-in forever (Delta's DV-compaction analog).
     val maxDepth = properties.get("write.merge-on-read.max-delete-files")
       .map(_.toInt).getOrElse(8)
     val wouldAttach = cur.files.filter(f => !disjoint(f))
@@ -3871,9 +3867,10 @@ object Icebox {
 
   /** Apply BOTH delete kinds — position then equality — to a raw
     * file-relation DataFrame. Position deletes anti-join on
-    * `(_metadata.file_path, _metadata.row_index)`; both delete sides are
-    * small by construction, so Spark broadcasts the joins (an oversized
-    * set degrades to a shuffled join, never to an error). `_metadata` is
+    * `(_metadata.file_path, _metadata.row_index)`; the delete side is
+    * small by construction, so Spark broadcasts the join (an oversized
+    * set degrades to a shuffled join, never to an error). Equality deletes
+    * filter by set membership ([[applyEqualityDeletes]]). `_metadata` is
     * only reachable on the file relation itself, so the file-path/row-index
     * columns are materialized ONCE here and shared by both passes — must
     * run BEFORE any projection. Zero plan overhead when the snapshot
@@ -3902,64 +3899,20 @@ object Icebox {
   private[graft] def antiJoinDeletes(spark: SparkSession, df: DataFrame,
       deleteDirs: Seq[String], fpCol: String, posCol: String): DataFrame = {
     if (deleteDirs.isEmpty) return df
-    def norm(c: Column): Column = regexp_replace(c, "^[a-zA-Z][\\w+.-]*:(//[^/]*)?", "")
     val dels = spark.read.parquet(deleteDirs: _*)
-      .select(norm(col("file_path")).as("__del_fp"), col("pos").as("__del_pos"))
+      .select(normPathCol(col("file_path")).as("__del_fp"), col("pos").as("__del_pos"))
     df.join(dels,
-      norm(df(fpCol)) === col("__del_fp") && df(posCol) === col("__del_pos"), "left_anti")
+      normPathCol(df(fpCol)) === col("__del_fp") && df(posCol) === col("__del_pos"), "left_anti")
   }
 
-  /** Strip any `scheme:[//authority]` prefix from `c` (see
-    * [[antiJoinDeletes]] — `_metadata.file_path` carries `file:` through
-    * `spark.read` but not through a custom FileIndex).
+  /** A path's `scheme:[//authority]` prefix (see [[antiJoinDeletes]] —
+    * `_metadata.file_path` carries `file:` through `spark.read` but not
+    * through a custom FileIndex, so paths compare with it stripped).
     */
-  private def normPathCol(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][\\w+.-]*:(//[^/]*)?", "")
+  private[table] val SchemePrefix = "^[a-zA-Z][\\w+.-]*:(//[^/]*)?"
 
-  /** [[normPathCol]] for the companion class (Scala object-private members
-    * are visible to the companion, but keep the intent explicit).
-    */
-  private[table] def normPathColPub(c: Column): Column = normPathCol(c)
-
-  /** Driver-held cache of equality-delete KEY SETS, keyed by delete-dir
-    * path. Safe because delete dirs are IMMUTABLE: [[Icebox.writeEqDeleteFile]]
-    * writes each commit's keys under a fresh uuid-named dir that is never
-    * modified afterwards (expiry deletes whole dirs, never rewrites them).
-    *
-    * Why: every merge-on-read read broadcasts each attached dir's keys, and
-    * a broadcast whose child is a parquet SCAN launches one Spark job per
-    * dir per read — the MV/merge/delete lifecycle queries re-read their
-    * MoR tables several times, paying that scheduling constant over and
-    * over for a few-KB key file. Serving the keys as a [[LocalRelation]]
-    * (already deduplicated) makes every subsequent broadcast jobless.
-    *
-    * Bounded both ways — this is metadata caching (the Iceberg manifest-
-    * cache analog), never a result cache: an entry is only admitted when
-    * the key set fits [[EqKeyCacheMaxRows]] (oversize key sets stay fully
-    * distributed, zero driver footprint), and the map is cleared when it
-    * reaches [[EqKeyCacheMaxEntries]] distinct dirs.
-    */
-  private val eqKeyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (StructType, Seq[Row])]()
-  private[table] val EqKeyCacheMaxRows = 100000
-  private[table] val EqKeyCacheMaxEntries = 512
-
-  /** The deduplicated key tuples of one equality-delete dir — from the
-    * driver cache (a jobless LocalRelation) when the set is small, a plain
-    * distributed read otherwise.
-    */
-  private[graft] def eqDeleteKeys(spark: SparkSession, dir: String): DataFrame = {
-    val hit = eqKeyCache.get(dir)
-    if (hit != null) return spark.createDataFrame(hit._2.asJava, hit._1)
-    val df = spark.read.parquet(dir).dropDuplicates()
-    val rows = df.limit(EqKeyCacheMaxRows + 1).collect().toSeq
-    if (rows.length > EqKeyCacheMaxRows) df
-    else {
-      if (eqKeyCache.size >= EqKeyCacheMaxEntries) eqKeyCache.clear()
-      eqKeyCache.put(dir, (df.schema, rows))
-      spark.createDataFrame(rows.asJava, df.schema)
-    }
-  }
+  /** `c` without its [[SchemePrefix]]. */
+  private[table] def normPathCol(c: Column): Column = regexp_replace(c, SchemePrefix, "")
 
   /** Apply EQUALITY deletes to a file-relation DataFrame: a row is removed
     * iff its key tuple appears in an equality-delete file AND its data file
@@ -3968,12 +3921,16 @@ object Icebox {
     * rows survive even on key match). Each delete dir's schema names its
     * equality columns, so one table can mix deletes on different keys.
     *
-    * Plan shape: per delete dir, TWO broadcast left joins (key tuples +
-    * attached-file list, both small by construction) and one codegen'd
-    * filter — never an `isin` literal list, never a keys×files blow-up.
-    * Rows with a NULL in any key column are never deleted (SQL equality
-    * semantics — conservative). A no-op (zero plan overhead) when no file
-    * carries equality deletes.
+    * Plan shape: ONE filter, `NOT (hit_1 OR ... OR hit_n)`, where each
+    * `hit_i` is a membership test of the row's key tuple in the dir's
+    * driver-held key set AND of its file in the dir's attach set, both
+    * shipped as broadcast variables ([[EqualityDeletes.deletedBy]]) — no
+    * join and no Spark job beyond the scan itself. A dir whose key set is
+    * over [[EqualityDeletes.EqKeyCacheMaxRows]] adds one broadcast-hinted
+    * left join for its keys. Never an `isin` literal list, never a
+    * keys×files blow-up. Rows with a NULL in any key column are never
+    * deleted (SQL equality semantics — conservative). A no-op (zero plan
+    * overhead) when no file carries equality deletes.
     *
     * `fpCol`: pass a pre-materialized file-path column when the caller
     * already carries one; otherwise `_metadata.file_path` is materialized
@@ -3987,22 +3944,15 @@ object Icebox {
     val withFp =
       if (fpCol.isDefined) base
       else base.select(col("*"), col("_metadata.file_path").as(fp))
-    val out = dirs.zipWithIndex.foldLeft(withFp) { case (df, (dir, i)) =>
-      val attached = files.filter(_.eqDeletes.contains(dir)).map(_.path).distinct
-      // LocalRelation, not parallelize: broadcasting an RDD-backed frame
-      // launches one single-task Spark job per dir per read just to collect
-      // a driver-held path list back to the driver
-      val attDf = spark.createDataFrame(attached.map(Row(_)).asJava,
-        StructType(Seq(StructField(s"__eq_att_fp$i", StringType))))
-      val keys = eqDeleteKeys(spark, dir)
-      val hit = s"__eq_hit$i"
-      val att = s"__eq_att$i"
-      df.join(broadcast(keys.withColumn(hit, lit(true))), keys.columns.toSeq, "left")
-        .join(broadcast(attDf.withColumn(att, lit(true))),
-          normPathCol(col(fp)) === normPathCol(col(s"__eq_att_fp$i")), "left")
-        .filter(!(coalesce(col(hit), lit(false)) && coalesce(col(att), lit(false))))
-        .drop(hit, att, s"__eq_att_fp$i")
+    val paths = files.map(_.path)
+    val tmps = dirs.indices.map(i => s"__eq_hit$i")
+    val (joined, hits) = dirs.zip(tmps).foldLeft((withFp, Vector.empty[Column])) {
+      case ((df, hs), (dir, tmp)) =>
+        val attached = files.filter(_.eqDeletes.contains(dir)).map(_.path)
+        val (j, hit) = EqualityDeletes.deletedBy(spark, df, dir, attached, paths, fp, tmp)
+        (j, hs :+ hit)
     }
+    val out = joined.filter(!hits.reduce(_ || _)).drop(tmps: _*)
     if (fpCol.isDefined) out else out.drop(fp)
   }
 

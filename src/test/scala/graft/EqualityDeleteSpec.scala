@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.Upsert
-import graft.table.Icebox
+import graft.table.{EqualityDeletes, Icebox}
 
 /** Equality-delete merge-on-read (Iceberg v2's second delete type): a CDC
   * upsert or key-delete writes one small key file instead of reading or
@@ -175,5 +178,132 @@ class EqualityDeleteSpec extends SparkSpec {
     ids.contains(21L) shouldBe false
     ids.count(_ % 4 == 1) shouldBe 0
     t.read(spark).count() shouldBe 44L // 60 - 15 (grp=1 incl. 21) - {20}
+  }
+
+  /** Spark jobs `body` runs on this thread: a listener counts job starts
+    * tagged with a fresh job group; a marker job in a second group, seen
+    * last, proves every earlier event has been delivered.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"eqdel-jobs-${java.util.UUID.randomUUID()}"
+    val seen = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => seen.incrementAndGet()
+          case g if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      marker.await(30, TimeUnit.SECONDS) shouldBe true
+      seen.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().toSeq.sorted
+
+  test("a row with a NULL key column survives a delete of that key") {
+    val t = Icebox(tmpDir("eqdel-null"))
+    t.append(Seq((Some(1L), "a"), (None, "n"), (Some(2L), "b"), (None, "m"))
+      .toDF("id", "s"))
+    t.deleteByKeys(Seq(Some(1L), None).toDF("id"))
+    t.read(spark).select("s").as[String].collect().sorted shouldBe Array("b", "m", "n")
+    t.readIndexed(spark).filter($"id".isNull).count() shouldBe 2L
+  }
+
+  test("a composite two-column key deletes exactly its tuples") {
+    val t = Icebox(tmpDir("eqdel-composite"))
+    t.append((for (a <- 1 to 3; b <- 1 to 3) yield (a.toLong, s"b$b", a * 10 + b))
+      .toDF("a", "b", "v"))
+    t.deleteByKeys(Seq((1L, "b2"), (3L, "b1"), (9L, "b9")).toDF("a", "b"))
+    val left = t.read(spark).select("v").as[Int].collect().sorted
+    left shouldBe Array(11, 13, 21, 22, 23, 32, 33) // (1,1),(2,2) etc. survive
+    t.readIndexed(spark).select("v").as[Int].collect().sorted shouldBe left
+  }
+
+  test("a matching key in a file that is not attached survives on every read path") {
+    val t = freshTable("eqdel-unattached")
+    val from = t.currentSnapshotId
+    t.deleteByKeys(Seq(10L, 11L).toDF("id"))
+    t.append(Seq((10L, "reborn", 0), (11L, "reborn", 0)).toDF("id", "s", "grp"))
+    val files = t.currentSnapshot.get.files
+    files.exists(_.eqDeletes.isEmpty) shouldBe true
+    files.exists(_.eqDeletes.nonEmpty) shouldBe true
+    ids(t.read(spark).filter($"id".between(9L, 12L))) shouldBe Seq(9L, 10L, 11L, 12L)
+    val reborn = t.readIndexed(spark).filter($"id".between(9L, 12L))
+    ids(reborn) shouldBe Seq(9L, 10L, 11L, 12L)
+    reborn.filter($"s" === "reborn").count() shouldBe 2L
+    val diff = t.changeDiff(spark, from, t.currentSnapshotId)
+    diff.filter($"_change_type" === "delete").select("s").as[String].collect().sorted shouldBe
+      Array("v10", "v11")
+    diff.filter($"_change_type" === "insert").select("s").as[String].collect() shouldBe
+      Array("reborn", "reborn")
+  }
+
+  test("an oversize key set (distributed join) deletes the same rows as the set path") {
+    val cap = EqualityDeletes.EqKeyCacheMaxRows
+    val big = freshTable("eqdel-oversize", n = 200)
+    val small = freshTable("eqdel-undersize", n = 200)
+    // cap + 1 distinct keys, of which only the table's multiples of 7 match
+    big.deleteByKeys(spark.range(7L, 7L * (cap + 2), 7L).toDF("id"))
+    small.deleteByKeys(spark.range(7L, 201L, 7L).toDF("id"))
+    val bigDir = big.currentSnapshot.get.files.flatMap(_.eqDeletes).head
+    val smallDir = small.currentSnapshot.get.files.flatMap(_.eqDeletes).head
+    EqualityDeletes.isDriverHeld(bigDir) shouldBe false
+    EqualityDeletes.isDriverHeld(smallDir) shouldBe true
+    ids(big.read(spark)) shouldBe ids(small.read(spark))
+    ids(big.readIndexed(spark)) shouldBe ids(small.read(spark))
+    ids(small.read(spark)).size shouldBe 200 - 28
+  }
+
+  test("key types the set cannot compare by value take the join path and still delete") {
+    val bin = Icebox(tmpDir("eqdel-binary"))
+    bin.append((1 to 6).map(i => (Array[Byte](i.toByte, 7), i)).toDF("k", "v"))
+    bin.deleteByKeys(Seq(Array[Byte](2, 7), Array[Byte](5, 7)).toDF("k"))
+    EqualityDeletes.isDriverHeld(bin.currentSnapshot.get.files.flatMap(_.eqDeletes).head) shouldBe
+      false
+    bin.read(spark).select("v").as[Int].collect().sorted shouldBe Array(1, 3, 4, 6)
+    bin.readIndexed(spark).select("v").as[Int].collect().sorted shouldBe Array(1, 3, 4, 6)
+    // keys typed narrower than the column (int keys, bigint column)
+    val t = freshTable("eqdel-narrow")
+    t.deleteByKeys(Seq(3, 4).toDF("id"))
+    t.read(spark).filter($"id".isin(3L, 4L)).count() shouldBe 0L
+    t.readIndexed(spark).count() shouldBe 58L
+  }
+
+  test("a read right after a merge-on-read upsert runs no key-file job") {
+    val t = freshTable("eqdel-seeded")
+    t.setProperties(Map("write.upsert.mode" -> "merge-on-read"))
+    Upsert.intoTable(t, Seq((5L, "NEW5", 9), (6L, "NEW6", 9)).toDF("id", "s", "grp"), Seq("id"))
+    val dirs = t.currentSnapshot.get.files.flatMap(_.eqDeletes).distinct
+    dirs should have size 1
+    EqualityDeletes.isDriverHeld(dirs.head) shouldBe true
+    def read() = t.readIndexed(spark).filter($"grp" === 9).collect()
+    val first = jobsOf(read())
+    first shouldBe jobsOf(read())
+    read().map(_.getAs[String]("s")).sorted shouldBe Array("NEW5", "NEW6")
+  }
+
+  test("reads with equality deletes attached run no more Spark jobs than without") {
+    val t = freshTable("eqdel-jobs")
+    // every delete hits the 31..45 file the point read lands on
+    Seq(Seq(3L, 33L), Seq(34L), Seq(35L, 17L)).foreach(k => t.deleteByKeys(k.toDF("id")))
+    t.currentSnapshot.get.files.map(_.eqDeletes.size).max shouldBe 3
+    def point() = t.readIndexed(spark).filter($"id" === 40L).collect()
+    point().length shouldBe 1
+    val withDeletes = jobsOf(point())
+    t.compact(spark)
+    t.currentSnapshot.get.files.forall(_.eqDeletes.isEmpty) shouldBe true
+    point().length shouldBe 1
+    withDeletes shouldBe jobsOf(point())
   }
 }

@@ -106,6 +106,23 @@ class MaterializedViewSpec extends SparkSpec {
     assertSameRows(mv.read(spark), fullAgg(src))
   }
 
+  test("an incremental-path error that is not an expired cursor propagates") {
+    val src = Icebox(tmpDir("mvsrcE"))
+    src.append((1 to 10).map(i => (i.toLong, i % 2, i * 3L)).toDF("id", "g", "v"))
+    src.append((11 to 20).map(i => (i.toLong, i % 2, i * 3L)).toDF("id", "g", "v"))
+    val mv = Icebox(tmpDir("mvtgtE"))
+    MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v"))
+    val before = src.currentSnapshot.get.files.map(_.path)
+    src.compact(spark)
+    before.toSet.intersect(src.currentSnapshot.get.files.map(_.path).toSet) shouldBe Set.empty
+    // the cursor snapshot survives, but a file only the diff reads is gone:
+    // a full rebuild would hide the damage
+    java.nio.file.Files.delete(java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(before.head).toUri.getPath))
+    an[Exception] should be thrownBy
+      MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v"))
+  }
+
   test("WHERE predicate filters both the build and every change diff") {
     val src = Icebox(tmpDir("mvsrcW"))
     src.append(Seq((1L, 0, 10L, "keep"), (2L, 0, 20L, "drop"), (3L, 1, 30L, "keep"))

@@ -49,6 +49,16 @@ class StarMvSpec extends SparkSpec {
     refresh(fact, cust, prod, mv) shouldBe MaterializedView.NoOp
   }
 
+  test("expired cursor on a dim falls back to a full rebuild") {
+    val (fact, cust, prod, mv) = mkTables("x")
+    refresh(fact, cust, prod, mv)
+    cust.append(Seq((8, "seg9")).toDF("c_id", "seg"))
+    cust.append(Seq((9, "seg9")).toDF("c_id", "seg"))
+    cust.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1000000L, retainLast = 1)
+    refresh(fact, cust, prod, mv) shouldBe MaterializedView.FullBuild
+    assertSameRows(mv.read(spark), starAgg(fact, cust, prod))
+  }
+
   test("appends on fact AND both dims in one cycle refresh incrementally") {
     val (fact, cust, prod, mv) = mkTables("2")
     refresh(fact, cust, prod, mv)
