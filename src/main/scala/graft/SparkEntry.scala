@@ -319,8 +319,8 @@ object SparkEntry {
       val snap = table.currentSnapshot.get
       val total = snap.files.size
       val probe = o.agg(min("o_orderkey")).head.getLong(0)
-      val idx = new graft.plans.IceboxFileIndex(s, table.tableDir, snap,
-        org.apache.spark.sql.types.StructType(Nil))
+      val idx = new graft.plans.IceboxFileIndex(s, table, snap.files, snap.schemaJson,
+        Some(snap.id), org.apache.spark.sql.types.StructType(Nil))
       val kept = idx.listFiles(Nil, Seq(
         org.apache.spark.sql.catalyst.expressions.EqualTo(
           org.apache.spark.sql.catalyst.expressions.AttributeReference(
@@ -1162,8 +1162,8 @@ object SparkEntry {
       val o = t(s, dir, "orders")
       table.appendTransformed(o.repartition(8), "bucket(16, o_custkey)")
       val snap = table.currentSnapshot.get
-      val idx = new graft.plans.IceboxFileIndex(s, table.tableDir, snap,
-        new org.apache.spark.sql.types.StructType())
+      val idx = new graft.plans.IceboxFileIndex(s, table, snap.files, snap.schemaJson,
+        Some(snap.id), new org.apache.spark.sql.types.StructType())
       val attr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
         "o_custkey", org.apache.spark.sql.types.LongType)()
       val kept = idx.listFiles(Nil, Seq(
@@ -1459,8 +1459,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       table.appendTransformed(ev.repartition(4), "days(ts)")
       val snap = table.currentSnapshot.get
-      val idx = new graft.plans.IceboxFileIndex(s, table.tableDir, snap,
-        new org.apache.spark.sql.types.StructType())
+      val idx = new graft.plans.IceboxFileIndex(s, table, snap.files, snap.schemaJson,
+        Some(snap.id), new org.apache.spark.sql.types.StructType())
       val attr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
         "ts", org.apache.spark.sql.types.TimestampNTZType)()
       val kept = idx.listFiles(Nil, Seq(
@@ -1690,8 +1690,8 @@ object SparkEntry {
       table.append(o.filter(col("o_orderdate") >= "1997-01-01" && col("o_orderdate") < "1999-01-01"))
       table.append(o.filter(col("o_orderdate") >= "1999-01-01")) // sticky stats continue
       val snap = table.currentSnapshot.get
-      val idx = new graft.plans.IceboxFileIndex(s, table.tableDir, snap,
-        new org.apache.spark.sql.types.StructType())
+      val idx = new graft.plans.IceboxFileIndex(s, table, snap.files, snap.schemaJson,
+        Some(snap.id), new org.apache.spark.sql.types.StructType())
       val attr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
         "o_orderdate", org.apache.spark.sql.types.TimestampNTZType)()
       val kept = idx.listFiles(Nil, Seq(org.apache.spark.sql.catalyst.expressions.LessThan(

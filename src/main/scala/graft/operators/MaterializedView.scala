@@ -345,7 +345,7 @@ object MaterializedView {
         // small-side fast path: when the pinned side is a few MB the
         // bounds-probe job costs more than the IO it saves
         def pinnedRead(t: Icebox, snap: graft.table.Snapshot, keys: => DataFrame): DataFrame =
-          if (snap.totalBytes <= SmallDimBytes) t.readPinned(spark, snap)
+          if (snap.totalBytes <= SmallDimBytes) t.readSnapshotData(spark, Some(snap))
           else t.readForKeysAt(spark, keys, Some(snap))
         // ΔA⋈B@new — right read pruned to files admitting ΔA's join keys
         val termA = dl.map(d => joined(d, pinnedRead(right, rSnap,
@@ -549,7 +549,7 @@ object MaterializedView {
               // scale the typical star has exactly this shape: one big
               // fact, dims that fit in a broadcast.
               val dimDf =
-                if (snap.totalBytes <= SmallDimBytes) dm.table.readPinned(spark, snap)
+                if (snap.totalBytes <= SmallDimBytes) dm.table.readSnapshotData(spark, Some(snap))
                 else {
                   val pruneSrc = if (dm.parent < 0) pruneBase else cache(acc)
                   dm.table.readForKeysAt(spark,

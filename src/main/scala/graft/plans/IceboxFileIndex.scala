@@ -2,7 +2,9 @@ package graft.plans
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Expression, GenericInternalRow, Literal, Predicate => CatalystPredicate}
 import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -28,11 +30,11 @@ import graft.table.{DataFile, Icebox, Snapshot}
   */
 final class IceboxFileIndex(
     spark: SparkSession,
-    tableDir: String,
-    snap: Snapshot,
+    table: Icebox,
+    files: Seq[DataFile],
+    private[graft] val schemaJson: String,
+    private[graft] val snapshotId: Option[Long],
     val partitionSchema: StructType) extends FileIndex {
-
-  private val files: Seq[DataFile] = snap.files
 
   /** Manifest entries backing this relation — the CBO stats bridge
     * ([[IceboxStats]]) folds row counts / min-max / NDV pointers from
@@ -40,14 +42,16 @@ final class IceboxFileIndex(
     */
   private[graft] def manifestFiles: Seq[DataFile] = files
 
-  /** Identity for plan-level matching (e.g. the MV rewrite rule): which
-    * table this relation reads, pinned at which snapshot.
+  /** Identity for plan-level matching (CBO stats, the MV rewrite rule):
+    * which table this relation reads and, when it holds a snapshot's
+    * WHOLE file set, which snapshot. A file subset (an incremental read,
+    * a key-pruned read, one layout generation of a mixed snapshot) has
+    * `snapshotId = None`: no snapshot-level stats describe it, and no
+    * view over a snapshot may replace it.
     */
-  private[graft] def tableDirString: String = tableDir
-  private[graft] def snapshotId: Long = snap.id
-  private[graft] def snapshotSchemaJson: String = snap.schemaJson
+  private[graft] def tableDirString: String = table.tableDir
 
-  override def rootPaths: Seq[HPath] = Seq(new HPath(s"$tableDir/data"))
+  override def rootPaths: Seq[HPath] = Seq(new HPath(s"${table.tableDir}/data"))
 
   override def refresh(): Unit = ()
 
@@ -76,13 +80,15 @@ final class IceboxFileIndex(
     * `Cast` — the same string→type semantics Spark's own partition-value
     * inference uses, so Date/Timestamp/Decimal partitions round-trip
     * correctly (this row is BOTH the predicate input and the partition
-    * values appended to scan output). Unsupported or unparseable values
-    * fail loudly instead of silently mistyping the row.
+    * values appended to scan output). A null value's directory segment
+    * (the hive default partition name) reads back as NULL, of any type.
+    * Unsupported or unparseable values fail loudly instead of silently
+    * mistyping the row.
     */
   private def partitionRow(pvals: Map[String, String]): InternalRow = {
     val values = partitionSchema.fields.map { f =>
       val raw = pvals.get(f.name).orNull
-      if (raw == null) null
+      if (raw == null || raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
       else f.dataType match {
         case StringType => UTF8String.fromString(raw)
         case dt =>
@@ -130,7 +136,7 @@ final class IceboxFileIndex(
     */
   private lazy val transforms: Seq[graft.table.PartitionTransform] =
     try graft.table.PartitionTransform.parseSpec(
-        new Icebox(tableDir).properties.getOrElse("partition.spec", ""))
+        table.properties.getOrElse("partition.spec", ""))
       .filterNot(_.isInstanceOf[graft.table.IdentityTransform])
     catch { case _: Exception => Nil }
 
@@ -248,19 +254,6 @@ final class IceboxFileIndex(
     }
   }
 
-  /** Manifest-level bloom probe for a point lookup: a pushed
-    * `col = literal` (or each IN literal) tests the file's bloom side
-    * file — no false negatives, so a miss EXCLUDES the file exactly;
-    * min/max can't do this for high-cardinality unsorted columns, where
-    * every file's range spans the whole domain. The literal is hashed
-    * with the same `xxhash64` (seed 42) the writer's build job applied to
-    * the column values, on the same physical type (the pushed filter was
-    * planned against the stored schema, so the types agree by
-    * construction). Missing blooms, null literals, or any load failure
-    * keep the file (conservative).
-    */
-  private lazy val bloomTable = new Icebox(tableDir)
-
   /** Plan-time probe budget: each UNCACHED side-file load is one driver
     * metadata read, and on a table where min/max admits everything a point
     * lookup would probe EVERY file — O(files) object-store requests inside
@@ -272,9 +265,20 @@ final class IceboxFileIndex(
     * probe the full table once warm.
     */
   private lazy val bloomProbeBudget = new java.util.concurrent.atomic.AtomicLong(
-    try bloomTable.properties.get("bloom.plan.max-probes").map(_.toLong).getOrElse(10000L)
+    try table.properties.get("bloom.plan.max-probes").map(_.toLong).getOrElse(10000L)
     catch { case _: Exception => 10000L })
 
+  /** Manifest-level bloom probe for a point lookup: a pushed
+    * `col = literal` (or each IN literal) tests the file's bloom side
+    * file — no false negatives, so a miss EXCLUDES the file exactly;
+    * min/max can't do this for high-cardinality unsorted columns, where
+    * every file's range spans the whole domain. The literal is hashed
+    * with the same `xxhash64` (seed 42) the writer's build job applied to
+    * the column values, on the same physical type (the pushed filter was
+    * planned against the stored schema, so the types agree by
+    * construction). Missing blooms, null literals, or any load failure
+    * keep the file (conservative).
+    */
   private def bloomAdmit(a: Attribute, l: Literal, f: DataFile): Boolean = {
     if (l.value == null) return true
     f.blooms.get(a.name) match {
@@ -284,7 +288,7 @@ final class IceboxFileIndex(
           val cached = Icebox.cachedBloom(sha)
           val bf =
             if (cached.isDefined) cached
-            else if (bloomProbeBudget.getAndDecrement() > 0) bloomTable.loadBloom(sha)
+            else if (bloomProbeBudget.getAndDecrement() > 0) table.loadBloom(sha)
             else None // budget exhausted: admit conservatively
           bf match {
             case Some(b) =>
@@ -318,14 +322,108 @@ object IceboxFileIndex {
     readSnapshot(spark, table,
       table.currentSnapshot.getOrElse(sys.error(s"no table at ${table.tableDir}")))
 
+  /** Same, pinned to an arbitrary snapshot (time travel reads plan through
+    * the same index). Partition columns come from the snapshot's own files,
+    * so an old snapshot with a different layout still reads correctly.
+    */
+  def readSnapshot(spark: SparkSession, table: Icebox, snap: Snapshot): DataFrame =
+    scan(spark, table, snap.files, snap.schemaJson, Some(snap.id))
+
+  /** Position hook of [[scan]]: each row's `_metadata.file_path` and
+    * `_metadata.row_index` are kept as `fpCol`/`posCol` next to the logical
+    * columns, and `after` runs per layout generation over the
+    * delete-applied, still physically named rows — the place for a
+    * caller's own extra delete logic (e.g. flagging rows that newly
+    * attached delete files remove).
+    */
+  private[graft] final case class Positions(fpCol: String, posCol: String,
+      after: (DataFrame, Seq[DataFile]) => DataFrame = (df, _) => df)
+
+  /** `files` grouped by directory-layout generation, each with its
+    * partition schema taken from `full` (physical names). Partition-spec
+    * evolution leaves files of several generations live at once, each
+    * generation with its own partition keys; hidden (transform-derived)
+    * partition dirs are not schema columns and stay out of the partition
+    * schema. No files is one empty generation.
+    */
+  private def generations(files: Seq[DataFile],
+      full: StructType): Seq[(Seq[DataFile], StructType)] = {
+    val gens = if (files.isEmpty) Seq(files) else files.groupBy(_.partition.keys.toSet).values.toSeq
+    gens.map { g =>
+      val partCols = g.headOption.toSeq.flatMap(_.partition.keys).sorted
+        .filter(full.fieldNames.contains)
+      (g, StructType(partCols.map(c => full(c))))
+    }
+  }
+
+  /** The one way Icebox opens its data files: any file set of the table —
+    * a whole snapshot, an incremental delta, a key-pruned subset, DML
+    * candidates — read with `schemaJson` (the snapshot schema the files
+    * belong to). One manifest-backed relation per layout generation (so
+    * each keeps its own partition pruning; the generation count is the
+    * number of spec changes since the last full compaction, i.e. small),
+    * position and equality deletes applied per generation (`_metadata`
+    * only resolves on the file relation itself), physical names aliased
+    * back to logical ones, generations unioned. Opening the data files
+    * lists no storage and runs no Spark job; only delete files, when any
+    * are attached, are read while the plan is built.
+    *
+    * `snapshotId` names the snapshot when `files` is its whole file set;
+    * the relation then carries that identity (CBO stats, MV rewrite) and
+    * may declare a bucketed scan. Only a relation that holds every file
+    * of the snapshot carries it — one generation of a mixed snapshot is a
+    * subset like any other.
+    */
+  private[graft] def scan(spark: SparkSession, table: Icebox, files: Seq[DataFile],
+      schemaJson: String, snapshotId: Option[Long] = None,
+      positions: Option[Positions] = None): DataFrame = {
+    // nullable-normalize like DataFrameReader does to user schemas — files
+    // written before a column was added must read as nulls, not fail. The
+    // RELATION uses physical names (files and partition dirs store those);
+    // the final projection aliases back to the logical names, and Catalyst
+    // rewrites pushed filters through the aliases — pruning below sees
+    // physical names only.
+    val logical = nullable(DataType.fromJson(schemaJson).asInstanceOf[StructType])
+    val full = Icebox.physicalSchema(logical)
+    val gens = generations(files, full)
+    val (fp, pos) = positions.fold(("__icx_fp", "__icx_pos"))(p => (p.fpCol, p.posCol))
+    val out = logical.fields.toSeq.map(f => col(Icebox.physicalName(f)).as(f.name)) ++
+      positions.toSeq.flatMap(_ => Seq(col(fp), col(pos)))
+    gens.map { case (g, partSchema) =>
+      val dataSchema = StructType(full.fields.filterNot(f => partSchema.fieldNames.contains(f.name)))
+      val relation = HadoopFsRelation(
+        location = new IceboxFileIndex(spark, table, g, schemaJson,
+          if (gens.size == 1) snapshotId else None, partSchema),
+        partitionSchema = partSchema,
+        dataSchema = dataSchema,
+        bucketSpec = if (snapshotId.isDefined) bucketSpecFor(table, g, dataSchema) else None,
+        fileFormat = new ParquetFileFormat(),
+        options = Map.empty)(spark)
+      val base = spark.baseRelationToDataFrame(relation)
+      // merge-on-read: position- and equality-deleted rows go away here
+      // (no extra plan when no file carries a delete and no caller asked
+      // for positions)
+      val live =
+        if (positions.isEmpty && !g.exists(f => f.deletes.nonEmpty || f.eqDeletes.nonEmpty)) base
+        else {
+          val withPos = base.select(col("*"), col("_metadata.file_path").as(fp),
+            col("_metadata.row_index").as(pos))
+          val applied = Icebox.applyDeletes(spark, withPos, g, fp, pos)
+          positions.fold(applied)(_.after(applied, g))
+        }
+      live.select(out: _*)
+    }.reduce(_.unionByName(_))
+  }
+
   /** Split `snap`'s files by whether they may hold rows matching the filter
     * in `filtered` (a DataFrame whose plan contains the predicate over this
     * snapshot's read): returns `(candidates, untouched)`. Classification
-    * reuses the index's own planning logic — conjuncts referencing only
-    * partition columns prune via manifest partition values, the rest via
-    * manifest min/max stats; unparseable conjuncts or missing stats keep
-    * the file in `candidates` (conservative, so a copy-on-write DELETE /
-    * UPDATE that rewrites only `candidates` is always correct).
+    * reuses the index's own planning logic, per layout generation —
+    * conjuncts referencing only that generation's partition columns prune
+    * via manifest partition values, the rest via manifest min/max stats;
+    * unparseable conjuncts or missing stats keep the file in `candidates`
+    * (conservative, so a copy-on-write DELETE / UPDATE that rewrites only
+    * `candidates` is always correct).
     */
   def splitByPredicate(spark: SparkSession, table: Icebox, snap: Snapshot,
       filtered: DataFrame): (Seq[DataFile], Seq[DataFile]) = {
@@ -338,17 +436,14 @@ object IceboxFileIndex {
     val preds = filtered.queryExecution.optimizedPlan.collect {
       case f: LogicalFilter => conjuncts(f.condition)
     }.flatten
-    // HIDDEN partition dirs (transform-derived) are not schema columns —
-    // they prune via transformAdmit, not the partition schema
-    val full = nullable(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType])
-    val partCols = snap.files.headOption.map(_.partition.keys.toSeq.sorted).getOrElse(Nil)
-      .filter(full.fieldNames.contains)
-    val partSchema = StructType(partCols.map(c => full(c)))
-    val index = new IceboxFileIndex(spark, table.tableDir, snap, partSchema)
-    val (partFilters, dataFilters) = preds.partition(p =>
-      p.references.nonEmpty && p.references.forall(a => partCols.contains(a.name)))
-    val kept = index.listFiles(partFilters, dataFilters)
-      .flatMap(_.files.map(_.getPath.toString)).toSet
+    val full = Icebox.physicalSchema(
+      nullable(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]))
+    val kept = generations(snap.files, full).flatMap { case (g, partSchema) =>
+      val index = new IceboxFileIndex(spark, table, g, snap.schemaJson, None, partSchema)
+      val (partFilters, dataFilters) = preds.partition(p => p.references.nonEmpty &&
+        p.references.forall(a => partSchema.fieldNames.contains(a.name)))
+      index.listFiles(partFilters, dataFilters).flatMap(_.files.map(_.getPath.toString))
+    }.toSet
     snap.files.partition(f => kept(new HPath(f.path).toString))
   }
 
@@ -367,7 +462,7 @@ object IceboxFileIndex {
     * produce a wrong plan. Bucket pruning on `col = lit` filters comes
     * free from Spark's own bucketed-scan machinery.
     */
-  private def bucketSpecFor(table: Icebox, snap: Snapshot,
+  private def bucketSpecFor(table: Icebox, files: Seq[DataFile],
       dataSchema: StructType): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
     if (table.properties.get("read.bucketed.enabled").contains("false")) return None
     val bts =
@@ -377,7 +472,7 @@ object IceboxFileIndex {
     val b = bts.head
     val phys = table.toPhysical(b.source)
     if (!dataSchema.fieldNames.contains(phys)) return None
-    val allStamped = snap.files.nonEmpty && snap.files.forall { f =>
+    val allStamped = files.nonEmpty && files.forall { f =>
       f.partition.get(b.name).flatMap(_.toIntOption).exists(dirId =>
         dirId >= 0 && dirId < b.n &&
           Icebox.bucketIdFromName(new HPath(f.path).getName).contains(dirId))
@@ -397,47 +492,5 @@ object IceboxFileIndex {
         .map(table.toPhysical).filter(dataSchema.fieldNames.contains)
       Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(b.n, Seq(phys), sortCols))
     } else None
-  }
-
-  /** Same, pinned to an arbitrary snapshot (time travel reads plan through
-    * the same index). Partition columns come from the snapshot's own files,
-    * so an old snapshot with a different layout still reads correctly.
-    */
-  def readSnapshot(spark: SparkSession, table: Icebox, snap: Snapshot): DataFrame = {
-    // partition-spec evolution: one manifest-backed relation per directory-
-    // layout generation (each keeps its own partition pruning), unioned
-    val layouts = snap.files.groupBy(_.partition.keys.toSet)
-    if (layouts.size > 1)
-      return layouts.values.map { g =>
-        readSnapshot(spark, table, Snapshot(snap.id, snap.parentId, snap.timestampMs,
-          snap.operation, g, snap.schemaJson))
-      }.reduce(_.unionByName(_))
-    // nullable-normalize like DataFrameReader does to user schemas — files
-    // written before a column was added must read as nulls, not fail.
-    // Hidden (transform-derived) partition dirs are not schema columns and
-    // stay out of the relation entirely. The RELATION uses physical names
-    // (files and partition dirs store those); the final projection aliases
-    // back to the snapshot's logical names, and Catalyst rewrites pushed
-    // filters through the aliases — pruning below sees physical names only.
-    val logical = nullable(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType])
-    val full = Icebox.physicalSchema(logical)
-    val partCols = snap.files.headOption.map(_.partition.keys.toSeq.sorted).getOrElse(Nil)
-      .filter(full.fieldNames.contains)
-    val partSchema = StructType(partCols.map(c => full(c)))
-    val dataSchema = StructType(full.fields.filterNot(f => partCols.contains(f.name)))
-    val index = new IceboxFileIndex(spark, table.tableDir, snap, partSchema)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = partSchema,
-      dataSchema = dataSchema,
-      bucketSpec = bucketSpecFor(table, snap, dataSchema),
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
-    val base = spark.baseRelationToDataFrame(relation)
-    // merge-on-read: anti-join away position- and equality-deleted rows
-    // (no-op plan when the snapshot carries no delete files of either kind)
-    Icebox.applyDeletes(spark, base, snap.files)
-      .select(logical.fields.map(f => org.apache.spark.sql.functions
-        .col(Icebox.physicalName(f)).as(f.name)).toIndexedSeq: _*)
   }
 }

@@ -87,19 +87,23 @@ object IceboxStats {
     case _ => false
   }
 
+  /** Only a relation that holds a snapshot's whole file set carries its
+    * id; a file subset (a delta, one layout generation) gets no stats.
+    */
   def statsFor(index: IceboxFileIndex): Option[CatalogStatistics] = {
-    val key = (index.tableDirString, index.snapshotId)
+    val snapId = index.snapshotId.getOrElse(return None)
+    val key = (index.tableDirString, snapId)
     val hit = cache.get(key)
     if (hit != null) return hit
     val computed =
-      try compute(index)
+      try compute(index, snapId)
       catch { case scala.util.control.NonFatal(_) => None } // stats are advisory
     if (cache.size >= MaxCache) cache.clear()
     cache.put(key, computed)
     computed
   }
 
-  private def compute(index: IceboxFileIndex): Option[CatalogStatistics] = {
+  private def compute(index: IceboxFileIndex, snapId: Long): Option[CatalogStatistics] = {
     val fs = index.manifestFiles
     // EQUALITY deletes: matched cardinality genuinely needs a scan — refuse
     // everything. POSITION deletes: manifests record exact per-file
@@ -117,11 +121,11 @@ object IceboxStats {
     // what broadcast/join-side decisions need, and those are exact.
     val hasPosDeletes = fs.exists(_.deletes.nonEmpty)
     val table = Icebox(index.tableDirString)
-    val schema = DataType.fromJson(index.snapshotSchemaJson).asInstanceOf[StructType]
+    val schema = DataType.fromJson(index.schemaJson).asInstanceOf[StructType]
     val colStats = if (hasPosDeletes) Map.empty[String, CatalogColumnStat]
     else schema.fields.flatMap { f =>
       val phys = Icebox.physicalName(f)
-      val ndv = ndvFor(table, index, phys)
+      val ndv = ndvFor(table, snapId, phys)
       val mm: Option[(String, String)] =
         if (!minMaxSafe(f.dataType)) None
         else {
@@ -139,7 +143,7 @@ object IceboxStats {
         val perFile = fs.map(_.nullCounts.get(phys))
         if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
       }
-      val hist = histogramFor(table, index, phys, ndv)
+      val hist = histogramFor(table, snapId, phys, ndv)
       if (ndv.isEmpty && mm.isEmpty && nulls.isEmpty && hist.isEmpty) None
       else Some(phys -> CatalogColumnStat(
         distinctCount = ndv.map(BigInt(_)),
@@ -154,10 +158,10 @@ object IceboxStats {
     * the snapshot this relation reads — a rollup for any other snapshot
     * (older head, or the read is time travel) is not this data's NDV.
     */
-  private def ndvFor(table: Icebox, index: IceboxFileIndex, phys: String): Option[Long] =
+  private def ndvFor(table: Icebox, snapId: Long, phys: String): Option[Long] =
     table.properties.get(s"sketch.ndv.rollup.$phys").flatMap { v =>
       v.split(':') match {
-        case Array(sid, sha) if scala.util.Try(sid.toLong).toOption.contains(index.snapshotId) =>
+        case Array(sid, sha) if scala.util.Try(sid.toLong).toOption.contains(snapId) =>
           table.loadSketch(sha).map(graft.functions.Hll.estimate)
         case _ => None
       }
@@ -248,12 +252,12 @@ object IceboxStats {
     * equality estimates) is approximated as an equal share of the
     * table-level NDV when the sketch rollup knows it.
     */
-  private def histogramFor(table: Icebox, index: IceboxFileIndex, phys: String,
+  private def histogramFor(table: Icebox, snapId: Long, phys: String,
       tableNdv: Option[Long]): Option[org.apache.spark.sql.catalyst.plans.logical.Histogram] =
     table.properties.get(s"hist.$phys").flatMap { v =>
       val parts = v.split(':')
       if (parts.length != 4 ||
-        !scala.util.Try(parts(0).toLong).toOption.contains(index.snapshotId)) None
+        !scala.util.Try(parts(0).toLong).toOption.contains(snapId)) None
       else {
         val (lo, hi) = (parts(1).toDouble, parts(2).toDouble)
         val counts = parts(3).split(',').map(_.toLong)
@@ -302,7 +306,7 @@ object IceboxStats {
     statsFor(index).map { st =>
       CatalogTable(
         identifier = TableIdentifier(
-          s"icebox_${java.lang.Long.toHexString(index.tableDirString.hashCode & 0xffffffffL)}_${index.snapshotId}"),
+          s"icebox_${java.lang.Long.toHexString(index.tableDirString.hashCode & 0xffffffffL)}_${index.snapshotId.mkString}"),
         tableType = CatalogTableType.EXTERNAL,
         storage = CatalogStorageFormat.empty,
         schema = rel.schema,

@@ -85,7 +85,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // physical→logical name map from the snapshot schema (project aliases
     // re-map too, but a filter pushed below a pruned projection can
     // reference relation attrs the projection no longer carries)
-    val snapSchema = DataType.fromJson(index.snapshotSchemaJson).asInstanceOf[StructType]
+    val snapSchema = DataType.fromJson(index.schemaJson).asInstanceOf[StructType]
     val physToLogical = snapSchema.fields.map(f => Icebox.physicalName(f) -> f.name).toMap
     val idToLogical: Map[Long, String] = projList.flatMap {
       case a @ Alias(ar: AttributeReference, n) => Seq(ar.exprId.id -> n, a.exprId.id -> n)
@@ -206,7 +206,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     def sideMaps(index: IceboxFileIndex, proj: Seq[NamedExpression])
         : (Map[Long, String], Map[String, String]) = {
-      val snapSchema = DataType.fromJson(index.snapshotSchemaJson).asInstanceOf[StructType]
+      val snapSchema = DataType.fromJson(index.schemaJson).asInstanceOf[StructType]
       val physToLogical = snapSchema.fields.map(f => Icebox.physicalName(f) -> f.name).toMap
       val idTo: Map[Long, String] = proj.flatMap {
         case a @ Alias(ar: AttributeReference, n) => Seq(ar.exprId.id -> n, a.exprId.id -> n)
@@ -308,10 +308,9 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // freshness: both scans pinned at their sources' heads, and the view's
     // two-source cursor sits exactly on that pair
     val id = props.get("mv.id").getOrElse(return None)
-    if (qs1.snapshotId != Icebox(src1).currentSnapshotId) return None
-    if (qs2.snapshotId != Icebox(src2).currentSnapshotId) return None
-    if (!MaterializedView.lastRefreshedSources(target, id)
-      .contains((qs1.snapshotId, qs2.snapshotId))) return None
+    val (h1, h2) = (Icebox(src1).currentSnapshotId, Icebox(src2).currentSnapshotId)
+    if (!qs1.snapshotId.contains(h1) || !qs2.snapshotId.contains(h2)) return None
+    if (!MaterializedView.lastRefreshedSources(target, id).contains((h1, h2))) return None
 
     Some(buildReplacement(target, translate(filters, idToLogical, physToLogical),
       specs, keys, exactKeys))
@@ -361,7 +360,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     // per-leaf logical-name maps; all leaves' namespaces must be disjoint
     val maps = leaves.map { lf =>
-      val snapSchema = DataType.fromJson(lf.index.snapshotSchemaJson).asInstanceOf[StructType]
+      val snapSchema = DataType.fromJson(lf.index.schemaJson).asInstanceOf[StructType]
       val physToLogical = snapSchema.fields.map(f => Icebox.physicalName(f) -> f.name).toMap
       val idTo: Map[Long, String] = lf.proj.flatMap {
         case a @ Alias(ar: AttributeReference, n) => Seq(ar.exprId.id -> n, a.exprId.id -> n)
@@ -481,7 +480,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val id = props.get("mv.id").getOrElse(return None)
     val srcHeads = (factDir +: dimDirs).map(Icebox(_).currentSnapshotId)
     val leafSnaps = (factLeaf +: dimLeaves).map(i => leaves(i).index.snapshotId)
-    if (leafSnaps != srcHeads) return None
+    if (leafSnaps != srcHeads.map(Some(_))) return None
     if (!MaterializedView.lastRefreshedStar(target, id, dimDirs.size)
       .contains(srcHeads)) return None
 
@@ -613,7 +612,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // sits exactly there
     val id = props.get("mv.id").getOrElse(return None)
     val srcHead = Icebox(vdSourceDir).currentSnapshotId
-    if (index.snapshotId != srcHead) return None
+    if (!index.snapshotId.contains(srcHead)) return None
     if (!MaterializedView.lastRefreshedSource(target, id).contains(srcHead)) return None
 
     // build the replacement through the DataFrame API (analysis handles

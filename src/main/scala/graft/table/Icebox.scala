@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
+import graft.plans.IceboxFileIndex
 
 /** One committed table state: an immutable file manifest + lineage.
   *
@@ -126,16 +127,17 @@ final case class DataFile(path: String, sizeBytes: Long, partition: Map[String, 
   * deployments would swap this for a conditional-PUT — driver-side metadata is
   * tiny either way, data files are never rewritten in place.)
   *
-  * '''Single-relation reads at any commit count.''' The commit id is itself a
-  * hive-style path segment (`graft_commit=<id>`), so an arbitrary set of files
-  * from many commits reads as ONE parquet relation with `basePath = data/`:
-  * Spark rebuilds both the synthetic commit column and the user partition
-  * columns from paths, then we drop the commit column. A table with thousands
-  * of commits still plans a single scan node (vs a per-commit union, whose
-  * plan grows linearly with commit count). The snapshot's recorded schema is
-  * passed to the reader explicitly, which (a) pins partition-column types (no
-  * re-inference: a string partition value "01" stays "01") and (b) makes
-  * schema evolution safe — files missing a newly added column read as nulls.
+  * '''One manifest-backed scan for every file set.''' Full reads, time
+  * travel, incremental reads, diffs, key-pruned reads and DML candidate reads
+  * all open their files through [[graft.plans.IceboxFileIndex.scan]]: the
+  * relation lists exactly the manifest's files (no storage listing, no Spark
+  * job to build it), so files from thousands of commits still plan a single
+  * scan node per layout generation. Partition values come from the manifest
+  * and are typed by the snapshot's recorded schema (no re-inference: a
+  * string partition value "01" stays "01"), and that schema is the read
+  * schema, so files missing a newly added column read as nulls. The
+  * `graft_commit=<id>` dir segment only keeps commits' files apart on
+  * storage; no read sees it as a column.
   *
   * Scale note: the reconstructed manifest lists file paths only; a 100 TB
   * table at 512 MB/file is ~200k entries — a few MB on the driver (held in
@@ -1213,7 +1215,8 @@ final class Icebox(val tableDir: String) {
     // use the newer snapshot's column set; evolution-added columns read as
     // nulls from older files)
     val delFromRest =
-      if (removedRest.nonEmpty) Some(readFiles(spark, removedRest, Some(to.schemaJson)))
+      if (removedRest.nonEmpty)
+        Some(IceboxFileIndex.scan(spark, this, removedRest, to.schemaJson))
       else None
     val delFromGrowth = growthDeleteRows(spark, strictGrowth, to.schemaJson)
     val delSide = (delFromRest, delFromGrowth) match {
@@ -1221,11 +1224,12 @@ final class Icebox(val tableDir: String) {
       case (a, b)             => a.orElse(b)
     }
     val insSide =
-      if (addedRest.nonEmpty) Some(readFiles(spark, addedRest, Some(to.schemaJson)))
+      if (addedRest.nonEmpty)
+        Some(IceboxFileIndex.scan(spark, this, addedRest, to.schemaJson))
       else None
     def tag(df: DataFrame, t: String) = df.withColumn("_change_type", lit(t))
     (insSide, delSide) match {
-      case (None, None) => tag(readFiles(spark, Nil, Some(to.schemaJson)), "insert")
+      case (None, None) => tag(IceboxFileIndex.scan(spark, this, Nil, to.schemaJson), "insert")
       // one-sided ranges (the steady-state CDC shapes: pure append, pure
       // delete) skip the net-out entirely — exceptAll(X, ∅) = X
       case (Some(i), None) => tag(i, "insert")
@@ -1250,55 +1254,44 @@ final class Icebox(val tableDir: String) {
   private def growthDeleteRows(spark: SparkSession, pairs: Seq[(DataFile, DataFile)],
       schemaJson: String): Option[DataFrame] = {
     if (pairs.isEmpty) return None
-    val layouts = pairs.groupBy(_._1.partition.keys.toSet)
-    if (layouts.size > 1)
-      return Some(layouts.values.toSeq
-        .flatMap(g => growthDeleteRows(spark, g, schemaJson))
-        .reduce(_.unionByName(_)))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val olds = pairs.map(_._1)
-    val phys = Icebox.physicalSchema(schema)
-    val readSchema = StructType(phys.fields :+ StructField(CommitCol, StringType))
+    val byOld = pairs.map(p => p._1.path -> p).toMap
     val fp = "__icx_gfp"; val pos = "__icx_gpos"
-    val raw = spark.read
-      .schema(readSchema)
-      .option("basePath", store.render(dataDir))
-      .parquet(olds.map(_.path): _*)
-      .select(col("*"), col("_metadata.file_path").as(fp),
-        col("_metadata.row_index").as(pos))
-    // content visible at the FROM snapshot: the old delete sets applied
-    val oldPosApplied =
-      Icebox.antiJoinDeletes(spark, raw, olds.flatMap(_.deletes).distinct, fp, pos)
-    val base = Icebox.applyEqualityDeletes(spark, oldPosApplied, olds, Some(fp))
-    var flagged = base
-    val flags = scala.collection.mutable.ArrayBuffer.empty[Column]
-    val newPosDirs = pairs.flatMap { case (o, n) =>
-      n.deletes.filterNot(o.deletes.toSet) }.distinct
-    if (newPosDirs.nonEmpty) {
-      val dels = spark.read.parquet(newPosDirs: _*)
-        .select(Icebox.normPathCol(col("file_path")).as("__gd_fp"),
-          col("pos").as("__gd_pos"))
-        .dropDuplicates() // a position listed twice must not duplicate its row
-      flagged = flagged.join(broadcast(dels),
-        Icebox.normPathCol(flagged(fp)) === col("__gd_fp") &&
-          flagged(pos) === col("__gd_pos"), "left")
-      flags += col("__gd_fp").isNotNull
+    // per layout generation, over content visible at the FROM snapshot (the
+    // scan applies the old delete sets): keep the rows the newly attached
+    // delete files remove
+    def newlyDeleted(visible: DataFrame, olds: Seq[DataFile]): DataFrame = {
+      val genPairs = olds.map(f => byOld(f.path))
+      var flagged = visible
+      val flags = scala.collection.mutable.ArrayBuffer.empty[Column]
+      val newPosDirs = genPairs.flatMap { case (o, n) =>
+        n.deletes.filterNot(o.deletes.toSet) }.distinct
+      if (newPosDirs.nonEmpty) {
+        val dels = spark.read.parquet(newPosDirs: _*)
+          .select(Icebox.normPathCol(col("file_path")).as("__gd_fp"),
+            col("pos").as("__gd_pos"))
+          .dropDuplicates() // a position listed twice must not duplicate its row
+        flagged = flagged.join(broadcast(dels),
+          Icebox.normPathCol(flagged(fp)) === col("__gd_fp") &&
+            flagged(pos) === col("__gd_pos"), "left")
+        flags += col("__gd_fp").isNotNull
+      }
+      val newEqDirs = genPairs.flatMap { case (o, n) =>
+        n.eqDeletes.filterNot(o.eqDeletes.toSet) }.distinct
+      newEqDirs.zipWithIndex.foreach { case (dir, i) =>
+        // attach semantics mirror applyEqualityDeletes: a row is removed by
+        // this dir iff its key tuple matches AND its file newly attaches it
+        val attached = genPairs.collect { case (o, n)
+          if n.eqDeletes.contains(dir) && !o.eqDeletes.contains(dir) => o.path }
+        val (joined, hit) = EqualityDeletes.deletedBy(spark, flagged, dir, attached,
+          olds.map(_.path), fp, s"__g_hit$i")
+        flagged = joined
+        flags += hit
+      }
+      flagged.filter(flags.reduce(_ || _))
     }
-    val newEqDirs = pairs.flatMap { case (o, n) =>
-      n.eqDeletes.filterNot(o.eqDeletes.toSet) }.distinct
-    newEqDirs.zipWithIndex.foreach { case (dir, i) =>
-      // attach semantics mirror applyEqualityDeletes: a row is removed by
-      // this dir iff its key tuple matches AND its file newly attaches it
-      val attached = pairs.collect { case (o, n)
-        if n.eqDeletes.contains(dir) && !o.eqDeletes.contains(dir) => o.path }
-      val (joined, hit) = EqualityDeletes.deletedBy(spark, flagged, dir, attached,
-        olds.map(_.path), fp, s"__g_hit$i")
-      flagged = joined
-      flags += hit
-    }
-    Some(flagged.filter(flags.reduce(_ || _))
-      .select(schema.fields.map(f =>
-        col(Icebox.physicalName(f)).as(f.name)).toIndexedSeq: _*))
+    Some(IceboxFileIndex.scan(spark, this, pairs.map(_._1), schemaJson,
+      positions = Some(IceboxFileIndex.Positions(fp, pos, newlyDeleted)))
+      .drop(fp, pos))
   }
 
   /** Partition column names of the current snapshot, as LOGICAL names
@@ -1359,7 +1352,7 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def changesBetween(spark: SparkSession, fromId: Long,
       to: Snapshot): DataFrame =
-    readFiles(spark, addedFilesBetween(fromId, to), Some(to.schemaJson))
+    IceboxFileIndex.scan(spark, this, addedFilesBetween(fromId, to), to.schemaJson)
 
   /** Manifest-only emptiness probe for [[changesBetween]]: lets the
     * serializable dedup ingest skip building the uncovered-delta plan
@@ -1556,7 +1549,7 @@ final class Icebox(val tableDir: String) {
     val replaced: Set[String] = df
       .select(concat_ws(sep, partitionBy.map(rendered): _*).as("__pv"))
       .distinct().collect().map(_.getString(0)).toSet // one row per touched partition
-    val carry = readFiles(spark, nonConforming, snap.map(_.schemaJson))
+    val carry = IceboxFileIndex.scan(spark, this, nonConforming, snap.get.schemaJson)
       .filter(!concat_ws(sep, partitionBy.map(rendered): _*).isin(replaced.toSeq: _*))
     val retired = nonConforming.map(_.path).toSet
     commit(df.unionByName(carry), partitionBy, "overwrite") { (parent, newFiles) =>
@@ -1597,10 +1590,11 @@ final class Icebox(val tableDir: String) {
   }
 
   /** Read a specific subset of the current snapshot's files (current table
-    * schema applies).
+    * schema applies; no table reads as the empty DataFrame).
     */
   private[graft] def readDataFiles(spark: SparkSession, files: Seq[DataFile]): DataFrame =
-    readFiles(spark, files, currentSnapshot.map(_.schemaJson))
+    currentSnapshot.fold(spark.emptyDataFrame)(s =>
+      IceboxFileIndex.scan(spark, this, files, s.schemaJson))
 
   // ------------------------------------------------------------------- reads
 
@@ -1626,7 +1620,7 @@ final class Icebox(val tableDir: String) {
     * listing, no caller opt-in. The native-table-format read path.
     */
   def readIndexed(spark: SparkSession): DataFrame =
-    graft.plans.IceboxFileIndex.readIndexed(spark, this)
+    IceboxFileIndex.readIndexed(spark, this)
 
   /** Register this table under `name` on the session's SQL-text surface: a
     * temp view over the indexed read (so `spark.sql("SELECT ... FROM
@@ -1659,7 +1653,7 @@ final class Icebox(val tableDir: String) {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     val old = readSnapshot(sinceSnapshotId).files.map(_.path).toSet
     val added = cur.files.filterNot(f => old(f.path))
-    readFiles(spark, added, Some(cur.schemaJson))
+    IceboxFileIndex.scan(spark, this, added, cur.schemaJson)
   }
 
   /** Incremental scan from a wall-clock watermark: delta vs the latest
@@ -1699,7 +1693,7 @@ final class Icebox(val tableDir: String) {
     * still apply the exact filter on the result (stats are a superset).
     */
   def readWhereStats(spark: SparkSession, column: String, lo: Option[Double], hi: Option[Double]): DataFrame =
-    readFiles(spark, prunedFilesByStats(column, lo, hi), currentSnapshot.map(_.schemaJson))
+    readDataFiles(spark, prunedFilesByStats(column, lo, hi))
 
   /** String-range variant of [[prunedFilesByStats]]: bounds compare in
     * unsigned-byte UTF8 order — the order Spark's string min/max, parquet
@@ -1747,7 +1741,7 @@ final class Icebox(val tableDir: String) {
   def readPartitions(spark: SparkSession, column: String, values: Set[String]): DataFrame = {
     val key = toPhysical(column)
     val files = prunedFiles(column, values)
-    val base = readFiles(spark, files, currentSnapshot.map(_.schemaJson))
+    val base = readDataFiles(spark, files)
     if (files.forall(_.partition.contains(key))) base
     else {
       // exact filter compares in the SAME rendering the manifest records for
@@ -1871,7 +1865,7 @@ final class Icebox(val tableDir: String) {
       val hotFiles = hot.values.flatten.toSeq
       val bytes = hotFiles.map(_.sizeBytes).sum
       val n = math.max(1, math.ceil(bytes / (targetFileMb * 1024.0 * 1024.0)).toInt)
-      val df = withHiddenPartitions(readFiles(spark, hotFiles, Some(snap.schemaJson)))
+      val df = withHiddenPartitions(IceboxFileIndex.scan(spark, this, hotFiles, snap.schemaJson))
         .repartition(n, partCols.map(col): _*)
       commit(df, partCols, "overwrite") { (parent, newFiles) =>
         if (!parent.map(_.id).contains(snap.id)) throw Icebox.StaleCommitState // see compact()
@@ -2135,76 +2129,24 @@ final class Icebox(val tableDir: String) {
     * stats-based file skipping happen in the planner for EVERY read — no
     * caller opt-in, no storage listing.
     */
-  private[table] def readSnapshotData(spark: SparkSession, snap: Option[Snapshot]): DataFrame =
+  private[graft] def readSnapshotData(spark: SparkSession, snap: Option[Snapshot]): DataFrame =
     snap match {
       case None    => spark.emptyDataFrame
-      case Some(s) => graft.plans.IceboxFileIndex.readSnapshot(spark, this, s)
+      case Some(s) => IceboxFileIndex.readSnapshot(spark, this, s)
     }
-
-  /** ONE parquet relation over any file set (see class doc): explicit stored
-    * schema + a synthetic `graft_commit` string partition column that the
-    * hive-style commit dirs provide, dropped after the scan. Filter pushdown
-    * and partition pruning behave exactly as on a native parquet table.
-    */
-  private def readFiles(spark: SparkSession, files: Seq[DataFile], schemaJson: Option[String]): DataFrame = {
-    val schema = schemaJson
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(new StructType())
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(schema.fields.map(f => f.copy(metadata =
-          org.apache.spark.sql.types.Metadata.empty))))
-    // PARTITION-SPEC EVOLUTION: files from different spec generations have
-    // different directory layouts, which one parquet relation can't span —
-    // read one relation per layout generation and union (generation count
-    // is the number of spec changes since the last full compaction, i.e.
-    // small)
-    val layouts = files.groupBy(_.partition.keys.toSet)
-    if (layouts.size > 1)
-      return layouts.values.map(g => readFiles(spark, g, schemaJson))
-        .reduce(_.unionByName(_))
-    // scan with PHYSICAL names (what the files store); the final projection
-    // aliases back to the snapshot's logical names — pushed-down filters are
-    // rewritten through the aliases by Catalyst, so pruning sees physical
-    val phys = Icebox.physicalSchema(schema)
-    val readSchema = StructType(phys.fields :+ StructField(CommitCol, StringType))
-    val base = spark.read
-      .schema(readSchema)
-      .option("basePath", store.render(dataDir))
-      .parquet(files.map(_.path): _*)
-    Icebox.applyDeletes(spark, base, files)
-      .drop(CommitCol)
-      .select(schema.fields.map(f => col(Icebox.physicalName(f)).as(f.name)).toIndexedSeq: _*)
-  }
 
   /** Like [[readDataFiles]] but with each row's physical position exposed
     * (`fpCol` = `_metadata.file_path`, `posCol` = `_metadata.row_index`),
-    * existing position deletes already applied — the input to merge-on-read
-    * DML, which must evaluate predicates over LIVE rows only (re-deleting a
-    * dead position is harmless, but an UPDATE must never resurrect one).
+    * existing position and equality deletes already applied — the input to
+    * merge-on-read DML, which must evaluate predicates over LIVE rows only
+    * (re-deleting a dead position is harmless, but an UPDATE must never
+    * resurrect one).
     */
   private[graft] def readDataFilesWithPos(spark: SparkSession, files: Seq[DataFile],
-      fpCol: String, posCol: String): DataFrame = {
-    val schema = currentSnapshot.map(s =>
-      DataType.fromJson(s.schemaJson).asInstanceOf[StructType]).getOrElse(new StructType())
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(schema.fields ++ Seq(StructField(fpCol, StringType), StructField(posCol,
-          org.apache.spark.sql.types.LongType))))
-    val phys = Icebox.physicalSchema(schema)
-    val readSchema = StructType(phys.fields :+ StructField(CommitCol, StringType))
-    val base = spark.read
-      .schema(readSchema)
-      .option("basePath", store.render(dataDir))
-      .parquet(files.map(_.path): _*)
-      .select(col("*"), col("_metadata.file_path").as(fpCol), col("_metadata.row_index").as(posCol))
-    val posApplied =
-      Icebox.antiJoinDeletes(spark, base, files.flatMap(_.deletes).distinct, fpCol, posCol)
-    Icebox.applyEqualityDeletes(spark, posApplied, files, Some(fpCol))
-      .drop(CommitCol)
-      .select((schema.fields.map(f => col(Icebox.physicalName(f)).as(f.name)) ++
-        Seq(col(fpCol), col(posCol))).toIndexedSeq: _*)
-  }
+      fpCol: String, posCol: String): DataFrame =
+    IceboxFileIndex.scan(spark, this, files,
+      currentSnapshot.getOrElse(sys.error(s"no table at $tableDir")).schemaJson,
+      positions = Some(IceboxFileIndex.Positions(fpCol, posCol)))
 
   /** Write `positions` — `(file_path, pos)` rows in `_metadata` form — as
     * ONE position-delete parquet dir under `deletes/` and return its path.
@@ -2414,16 +2356,8 @@ final class Icebox(val tableDir: String) {
         val logicalKeyCols = keys.columns.toSeq
         val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
         val disjoint = keyDisjoint(cur.files, keysPhys)
-        readFiles(spark, cur.files.filterNot(disjoint), Some(cur.schemaJson))
+        IceboxFileIndex.scan(spark, this, cur.files.filterNot(disjoint), cur.schemaJson)
     }
-
-  /** Plain pinned-snapshot read with NO pruning pass — for callers that
-    * know pruning can't pay (e.g. the MV refreshers' small-dim fast path:
-    * the keyDisjoint bounds probe is a Spark job, and skipping IO on a
-    * one-file dim saves nothing).
-    */
-  private[graft] def readPinned(spark: SparkSession, snap: Snapshot): DataFrame =
-    readFiles(spark, snap.files, Some(snap.schemaJson))
 
   /** EQUALITY-delete commit (Iceberg v2's other merge-on-read delete type):
     * records `keys` as an equality-delete file attached to every data file
@@ -2478,7 +2412,7 @@ final class Icebox(val tableDir: String) {
         val spark = keys.sparkSession
         // survivors of the over-depth files: stacked deletes applied by the
         // read, the NEW keys anti-joined here
-        Some(readFiles(spark, overFiles, Some(cur.schemaJson))
+        Some(IceboxFileIndex.scan(spark, this, overFiles, cur.schemaJson)
           .join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"))
       }
     val dir = writeEqDeleteFile(keysPhys)
@@ -2520,16 +2454,14 @@ final class Icebox(val tableDir: String) {
     */
   def deleteByKeys(keys: DataFrame): Snapshot = commitEqualityDeletes("eqdelete", keys)
 
-  /** Distinct data files hit by `positions`, as SCHEME-FREE paths (bounded
-    * driver collect: ≤ one row per candidate FILE, not per row). Compare
-    * manifest paths through [[pathOnly]] — `_metadata.file_path` carries a
-    * scheme through `spark.read` but manifests may or may not, depending on
-    * the table's filesystem.
-    */
-  /** Per-file position count of one DML batch's `(file_path, pos)` frame —
-    * one aggregate over a small frame; positions are per-file distinct by
-    * construction (each physical row contributes at most one pair to a
-    * DELETE/UPDATE match), so counts subtract exactly from manifest rows.
+  /** Per-file position count of one DML batch's `(file_path, pos)` frame,
+    * keyed by SCHEME-FREE path (compare manifest paths through
+    * [[pathOnly]]: a manifest records a path with or without a scheme,
+    * depending on the table's filesystem) — one aggregate over a small
+    * frame, a bounded driver collect of ≤ one row per candidate FILE;
+    * positions are per-file distinct by construction (each physical row
+    * contributes at most one pair to a DELETE/UPDATE match), so counts
+    * subtract exactly from manifest rows.
     */
   private def affectedPathCounts(positions: DataFrame): Map[String, Long] =
     positions.groupBy("file_path").count().collect()
@@ -3865,36 +3797,30 @@ object Icebox {
   def logicalToPhysical(schema: StructType): Map[String, String] =
     schema.fields.map(f => f.name -> physicalName(f)).toMap
 
-  /** Apply BOTH delete kinds — position then equality — to a raw
-    * file-relation DataFrame. Position deletes anti-join on
-    * `(_metadata.file_path, _metadata.row_index)`; the delete side is
-    * small by construction, so Spark broadcasts the join (an oversized
-    * set degrades to a shuffled join, never to an error). Equality deletes
-    * filter by set membership ([[applyEqualityDeletes]]). `_metadata` is
-    * only reachable on the file relation itself, so the file-path/row-index
-    * columns are materialized ONCE here and shared by both passes — must
-    * run BEFORE any projection. Zero plan overhead when the snapshot
-    * carries no delete files of either kind.
+  /** Apply BOTH delete kinds — position then equality — to a file-relation
+    * DataFrame carrying each row's `_metadata.file_path` / `row_index` as
+    * `fpCol` / `posCol` (`_metadata` only resolves on the file relation
+    * itself, so [[graft.plans.IceboxFileIndex.scan]] materializes them once
+    * and both passes share them). Position deletes anti-join on
+    * `(file path, row index)`; the delete side is small by construction,
+    * so Spark broadcasts the join (an oversized set degrades to a shuffled
+    * join, never to an error). Equality deletes filter by set membership
+    * ([[applyEqualityDeletes]]). Each pass is a no-op when no file carries
+    * a delete of its kind.
     */
-  private[graft] def applyDeletes(spark: SparkSession, base: DataFrame,
-      files: Seq[DataFile]): DataFrame = {
-    val posDirs = files.flatMap(_.deletes).distinct
-    val hasEq = files.exists(_.eqDeletes.nonEmpty)
-    if (posDirs.isEmpty && !hasEq) return base
-    val outCols = base.columns.toIndexedSeq
-    val withMeta = base.select(col("*"), col("_metadata.file_path").as("__icx_fp"),
-      col("_metadata.row_index").as("__icx_pos"))
-    val posApplied = antiJoinDeletes(spark, withMeta, posDirs, "__icx_fp", "__icx_pos")
-    applyEqualityDeletes(spark, posApplied, files, Some("__icx_fp"))
-      .select(outCols.map(col): _*)
-  }
+  private[graft] def applyDeletes(spark: SparkSession, df: DataFrame,
+      files: Seq[DataFile], fpCol: String, posCol: String): DataFrame =
+    applyEqualityDeletes(spark,
+      antiJoinDeletes(spark, df, files.flatMap(_.deletes).distinct, fpCol, posCol),
+      files, fpCol)
 
   /** Anti-join `df` (carrying materialized `fpCol`/`posCol` position
-    * columns) against the `(file_path, pos)` rows of `deleteDirs`.
-    * `_metadata.file_path` renders with a scheme through `spark.read`
-    * (`file:/...`) but WITHOUT one through a custom FileIndex (`/...`), so
-    * both join keys normalize away the `scheme:[//authority]` prefix —
-    * matching on the filesystem path, which is identical either way.
+    * columns) against the `(file_path, pos)` rows of `deleteDirs`. Both
+    * join keys normalize away the `scheme:[//authority]` prefix, matching
+    * on the filesystem path: position-delete files already on disk were
+    * written from relations that rendered `_metadata.file_path` with a
+    * scheme (`file:/...`), while the manifest-backed scan renders each path
+    * as the manifest records it.
     */
   private[graft] def antiJoinDeletes(spark: SparkSession, df: DataFrame,
       deleteDirs: Seq[String], fpCol: String, posCol: String): DataFrame = {
@@ -3906,15 +3832,16 @@ object Icebox {
   }
 
   /** A path's `scheme:[//authority]` prefix (see [[antiJoinDeletes]] —
-    * `_metadata.file_path` carries `file:` through `spark.read` but not
-    * through a custom FileIndex, so paths compare with it stripped).
+    * position-delete files on disk hold `file:`-prefixed paths, manifests
+    * may not, so paths compare with it stripped).
     */
   private[table] val SchemePrefix = "^[a-zA-Z][\\w+.-]*:(//[^/]*)?"
 
   /** `c` without its [[SchemePrefix]]. */
   private[table] def normPathCol(c: Column): Column = regexp_replace(c, SchemePrefix, "")
 
-  /** Apply EQUALITY deletes to a file-relation DataFrame: a row is removed
+  /** Apply EQUALITY deletes to a file-relation DataFrame carrying each
+    * row's `_metadata.file_path` as `fpCol`: a row is removed
     * iff its key tuple appears in an equality-delete file AND its data file
     * carries that delete in `eqDeletes` (the attach list IS the sequence
     * semantics — files appended after the delete never carry it, so their
@@ -3931,29 +3858,20 @@ object Icebox {
     * keys×files blow-up. Rows with a NULL in any key column are never
     * deleted (SQL equality semantics — conservative). A no-op (zero plan
     * overhead) when no file carries equality deletes.
-    *
-    * `fpCol`: pass a pre-materialized file-path column when the caller
-    * already carries one; otherwise `_metadata.file_path` is materialized
-    * (requires `base` to still be the file relation, like [[applyDeletes]]).
     */
   private[graft] def applyEqualityDeletes(spark: SparkSession, base: DataFrame,
-      files: Seq[DataFile], fpCol: Option[String] = None): DataFrame = {
+      files: Seq[DataFile], fpCol: String): DataFrame = {
     val dirs = files.flatMap(_.eqDeletes).distinct
     if (dirs.isEmpty) return base
-    val fp = fpCol.getOrElse("__icx_eqfp")
-    val withFp =
-      if (fpCol.isDefined) base
-      else base.select(col("*"), col("_metadata.file_path").as(fp))
     val paths = files.map(_.path)
     val tmps = dirs.indices.map(i => s"__eq_hit$i")
-    val (joined, hits) = dirs.zip(tmps).foldLeft((withFp, Vector.empty[Column])) {
+    val (joined, hits) = dirs.zip(tmps).foldLeft((base, Vector.empty[Column])) {
       case ((df, hs), (dir, tmp)) =>
         val attached = files.filter(_.eqDeletes.contains(dir)).map(_.path)
-        val (j, hit) = EqualityDeletes.deletedBy(spark, df, dir, attached, paths, fp, tmp)
+        val (j, hit) = EqualityDeletes.deletedBy(spark, df, dir, attached, paths, fpCol, tmp)
         (j, hs :+ hit)
     }
-    val out = joined.filter(!hits.reduce(_ || _)).drop(tmps: _*)
-    if (fpCol.isDefined) out else out.drop(fp)
+    joined.filter(!hits.reduce(_ || _)).drop(tmps: _*)
   }
 
   /** Checkpoint cadence: a full manifest is forced once a delta chain

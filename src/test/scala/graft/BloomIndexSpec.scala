@@ -50,7 +50,8 @@ class BloomIndexSpec extends SparkSpec {
   test("point lookup prunes to the one holding file; min/max alone cannot") {
     val t = mkTable("bloom2")
     val snap = t.currentSnapshot.get
-    val index = new IceboxFileIndex(spark, t.tableDir, snap, StructType(Nil))
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      StructType(Nil))
     val k = AttributeReference("k", LongType)()
 
     // key 707 (=101*7+0) lives in exactly one row of one file; every
@@ -110,7 +111,9 @@ class BloomIndexSpec extends SparkSpec {
     after.foreach(sha => onDisk should contain(sha))
     (onDisk intersect before) shouldBe empty
     // and the compacted table still answers point lookups through blooms
-    val index = new IceboxFileIndex(spark, t.tableDir, t.currentSnapshot.get, StructType(Nil))
+    val snap = t.currentSnapshot.get
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      StructType(Nil))
     val k = AttributeReference("k", LongType)()
     index.listFiles(Nil, Seq(EqualTo(k, Literal(999999L)))).map(_.files.size).sum shouldBe 0
   }
@@ -123,7 +126,8 @@ class BloomIndexSpec extends SparkSpec {
         .repartition(4, col("n"))
     t.append(slice(0)); t.append(slice(1)); t.append(slice(2))
     val snap = t.currentSnapshot.get
-    val index = new IceboxFileIndex(spark, t.tableDir, snap, StructType(Nil))
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      StructType(Nil))
     val sk = AttributeReference("sk", StringType)()
     def kept(lit: Any) = index.listFiles(Nil, Seq(EqualTo(sk,
       Literal(org.apache.spark.unsafe.types.UTF8String.fromString(lit.toString),
@@ -149,7 +153,8 @@ class BloomIndexSpec extends SparkSpec {
         .repartition(4, col("v"))
     t.append(slice(0)); t.append(slice(1))
     val snap = t.currentSnapshot.get
-    val index = new IceboxFileIndex(spark, t.tableDir, snap, StructType(Nil))
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      StructType(Nil))
     val k = AttributeReference("k", LongType)()
     val probe = 9000000L + 101 * 7
     // zero budget + cold cache: nothing probed, every min/max-admitted

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.Upsert
 import graft.table.{EqualityDeletes, Icebox}
@@ -178,34 +175,6 @@ class EqualityDeleteSpec extends SparkSpec {
     ids.contains(21L) shouldBe false
     ids.count(_ % 4 == 1) shouldBe 0
     t.read(spark).count() shouldBe 44L // 60 - 15 (grp=1 incl. 21) - {20}
-  }
-
-  /** Spark jobs `body` runs on this thread: a listener counts job starts
-    * tagged with a fresh job group; a marker job in a second group, seen
-    * last, proves every earlier event has been delivered.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"eqdel-jobs-${java.util.UUID.randomUUID()}"
-    val seen = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => seen.incrementAndGet()
-          case g if g == group + "-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      marker.await(30, TimeUnit.SECONDS) shouldBe true
-      seen.get
-    } finally sc.removeSparkListener(listener)
   }
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =

@@ -54,8 +54,9 @@ class HadoopStoreSpec extends SparkSpec {
     val t2 = Icebox(t.tableDir)
     files.foreach(f => t2.loadBloom(f.blooms("id")) shouldBe defined)
     // point lookup prunes through the index on mockfs
-    val idx = new graft.plans.IceboxFileIndex(spark, t.tableDir,
-      t.currentSnapshot.get, org.apache.spark.sql.types.StructType(Nil))
+    val snap = t.currentSnapshot.get
+    val idx = new graft.plans.IceboxFileIndex(spark, t, snap.files, snap.schemaJson,
+      Some(snap.id), org.apache.spark.sql.types.StructType(Nil))
     val k = org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "id", org.apache.spark.sql.types.LongType)()
     idx.listFiles(Nil, Seq(org.apache.spark.sql.catalyst.expressions.EqualTo(k,

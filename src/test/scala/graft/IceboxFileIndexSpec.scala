@@ -39,7 +39,8 @@ class IceboxFileIndexSpec extends SparkSpec {
     val snap = t.currentSnapshot.get
     val partSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("parity", StringType)))
-    val index = new IceboxFileIndex(spark, t.tableDir, snap, partSchema)
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      partSchema)
 
     val all = index.listFiles(Nil, Nil)
     all.map(_.files.size).sum shouldBe snap.files.size
@@ -68,7 +69,7 @@ class IceboxFileIndexSpec extends SparkSpec {
     t.append(df.filter($"id" <= 2), collectStats = Seq("fruit"))  // [apple, banana]
     t.append(df.filter($"id" > 2), collectStats = Seq("fruit"))   // [cherry, plum]
     val snap = t.currentSnapshot.get
-    val index = new IceboxFileIndex(spark, t.tableDir, snap,
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
       new org.apache.spark.sql.types.StructType())
     val fruitAttr = AttributeReference("fruit", StringType)()
     def nFiles(filter: org.apache.spark.sql.catalyst.expressions.Expression): Int =
@@ -90,7 +91,7 @@ class IceboxFileIndexSpec extends SparkSpec {
     (1 to 3).foreach(m => t.append(month(m), collectStats = Seq("d", "ts")))
     val snap = t.currentSnapshot.get
     all(snap.files.map(_.stats.keySet)) should contain allOf ("d", "ts")
-    val index = new IceboxFileIndex(spark, t.tableDir, snap,
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
       new org.apache.spark.sql.types.StructType())
     def nFiles(filter: org.apache.spark.sql.catalyst.expressions.Expression): Int =
       index.listFiles(Nil, Seq(filter)).map(_.files.size).sum
@@ -133,7 +134,7 @@ class IceboxFileIndexSpec extends SparkSpec {
     Seq((base + 1, "x")).toDF("big", "v").collect()
     t.append(Seq((base + 1, "x")).toDF("big", "v"), collectStats = Seq("big"))
     val snap = t.currentSnapshot.get
-    val index = new IceboxFileIndex(spark, t.tableDir, snap,
+    val index = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
       new org.apache.spark.sql.types.StructType())
     val bigAttr = AttributeReference("big", org.apache.spark.sql.types.LongType)()
     val kept = index.listFiles(Nil,
@@ -199,5 +200,37 @@ class IceboxFileIndexSpec extends SparkSpec {
       df.filter($"b".between(10.0, 12.0)))
     // the default planner read agrees as well (stats skipping is in-plan)
     t.read(spark).filter($"b" === 20.0).count() shouldBe 64
+  }
+
+  test("a null partition value reads as NULL on every read path, string or int typed") {
+    val strT = Icebox(tmpDir("fidx-null-str"))
+    strT.append(Seq((1L, Option("a"))).toDF("id", "p"), partitionBy = Seq("p"))
+    val strSince = strT.currentSnapshotId
+    strT.append(Seq((2L, Option.empty[String]), (3L, Option("b"))).toDF("id", "p"),
+      partitionBy = Seq("p"))
+    val intT = Icebox(tmpDir("fidx-null-int"))
+    intT.append(Seq((1L, Option(10))).toDF("id", "p"), partitionBy = Seq("p"))
+    val intSince = intT.currentSnapshotId
+    intT.append(Seq((2L, Option.empty[Int]), (3L, Option(20))).toDF("id", "p"),
+      partitionBy = Seq("p"))
+    for ((t, since) <- Seq(strT -> strSince, intT -> intSince)) {
+      val reads = Seq(t.read(spark), t.readIndexed(spark), t.changesSince(spark, since))
+      reads.foreach { df =>
+        df.filter($"p".isNull).select("id").as[Long].collect() shouldBe Array(2L)
+      }
+      assertSameRows(t.readIndexed(spark), t.read(spark))
+      assertSameRows(t.changesSince(spark, since), t.read(spark).filter($"id" > 1L))
+    }
+  }
+
+  test("changesSince over more than 32 added files builds its DataFrame with no Spark job") {
+    val t = Icebox(tmpDir("fidx-nojob"))
+    t.append(spark.range(0, 10).toDF("id"))
+    val since = t.currentSnapshotId
+    t.append(spark.range(10, 410).toDF("id").repartition(40))
+    t.currentSnapshot.get.files.size should be > 33
+    var df: org.apache.spark.sql.DataFrame = null
+    jobsOf { df = t.changesSince(spark, since) } shouldBe 0
+    df.count() shouldBe 400L
   }
 }

@@ -369,4 +369,20 @@ class IceboxStatsSpec extends SparkSpec {
     zStats("ts").min shouldBe Some(zmicros(zrows.head._2))
     zStats("ts").max shouldBe Some(zmicros(zrows.last._2))
   } }
+
+  test("each layout generation's relation reports its own row count or none") { withCbo {
+    import cboSpark.implicits._
+    val t = Icebox(tmpDir("stats-gens"))
+    t.append(Seq((1L, "a")).toDF("id", "grp"), Seq("grp"), collectStats = Seq("id"))
+    t.setPartitionSpec(Nil)
+    t.append((2L to 4L).map(i => (i, "b")).toDF("id", "grp"), collectStats = Seq("id"))
+    val rels = t.read(cboSpark).queryExecution.optimizedPlan.collect {
+      case lr @ org.apache.spark.sql.execution.datasources.LogicalRelation(
+          r: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
+        (r.location.asInstanceOf[graft.plans.IceboxFileIndex].manifestFiles.map(_.rows).sum,
+          lr.stats.rowCount)
+    }
+    rels.map(_._1).sorted shouldBe Seq(1L, 3L)
+    rels.foreach { case (rows, rowCount) => rowCount.foreach(_ shouldBe BigInt(rows)) }
+  } }
 }

@@ -55,16 +55,25 @@ class PartitionEvolutionSpec extends SparkSpec {
   }
 
   test("evolution to unpartitioned and DML across generations") {
-    val t = Icebox(tmpDir("pevo-dml"))
-    t.append((1 to 30).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"), Seq("grp"))
-    t.setPartitionSpec(Nil)
-    t.append((31 to 40).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"))
-    t.read(spark).count() shouldBe 40L
     import graft.sql.{DmlSql, MergeSql}
-    MergeSql.register("pevo_dml", t)
-    DmlSql.delete(spark, "DELETE FROM pevo_dml WHERE id <= 5 OR id > 35")
-    t.read(spark).count() shouldBe 30L
-    t.read(spark).agg(min("id"), max("id")).as[(Long, Long)].head() shouldBe ((6L, 35L))
+    Seq("copy-on-write", "merge-on-read").foreach { mode =>
+      val t = Icebox(tmpDir("pevo-dml"))
+      t.append((1 to 30).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"), Seq("grp"))
+      t.setPartitionSpec(Nil)
+      t.append((31 to 40).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"))
+      t.setProperties(Map("write.delete.mode" -> mode))
+      t.read(spark).count() shouldBe 40L
+      MergeSql.register("pevo_dml", t)
+      // a predicate on the old partition column: the partitioned generation
+      // prunes by partition value, the unpartitioned one by its data
+      DmlSql.delete(spark, "DELETE FROM pevo_dml WHERE grp = 'g0'")
+      t.read(spark).filter($"grp" === "g0").count() shouldBe 0L
+      t.read(spark).count() shouldBe 27L
+      // candidates in both generations (ids 1-5 partitioned, 36-40 not)
+      DmlSql.delete(spark, "DELETE FROM pevo_dml WHERE id <= 5 OR id > 35")
+      t.read(spark).count() shouldBe 20L
+      t.read(spark).agg(min("id"), max("id")).as[(Long, Long)].head() shouldBe ((7L, 35L))
+    }
   }
 
   test("write.distribution-mode=hash bounds files per partition") {

@@ -43,7 +43,8 @@ class PartitionTransformSpec extends SparkSpec {
     snap.files.flatMap(_.partition.keys).distinct shouldBe Seq("id_bucket")
     snap.files.map(_.partition("id_bucket")).distinct.size should be > 4
     // planner prunes: id = 42 keeps only bucket(42)'s files
-    val idx = new IceboxFileIndex(spark, t.tableDir, snap, new StructType())
+    val idx = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      new StructType())
     val a = AttributeReference("id", LongType)()
     val kept = idx.listFiles(Nil, Seq(EqualTo(a, Literal(42L, LongType))))
       .map(_.files.size).sum
@@ -68,7 +69,8 @@ class PartitionTransformSpec extends SparkSpec {
     t.appendTransformed(month(3), "days(ts)")
     val snap = t.currentSnapshot.get
     snap.files.flatMap(_.partition.keys).distinct shouldBe Seq("ts_day")
-    val idx = new IceboxFileIndex(spark, t.tableDir, snap, new StructType())
+    val idx = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      new StructType())
     val a = AttributeReference("ts", TimestampNTZType)()
     def micros(s: String) =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
@@ -94,7 +96,8 @@ class PartitionTransformSpec extends SparkSpec {
     val snap = t.currentSnapshot.get
     snap.files.map(_.partition("name_trunc")).distinct.sorted shouldBe
       Seq("ap", "ba", "bl", "ch", "ci")
-    val idx = new IceboxFileIndex(spark, t.tableDir, snap, new StructType())
+    val idx = new IceboxFileIndex(spark, t, snap.files, snap.schemaJson, Some(snap.id),
+      new StructType())
     val a = AttributeReference("name", StringType)()
     import org.apache.spark.unsafe.types.UTF8String
     val kept = idx.listFiles(Nil, Seq(EqualTo(a,

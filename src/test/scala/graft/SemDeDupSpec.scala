@@ -201,7 +201,8 @@ class SemDeDupSpec extends SparkSpec {
     val partSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("cluster_id",
         org.apache.spark.sql.types.LongType)))
-    val index = new graft.plans.IceboxFileIndex(spark, corpus.tableDir, snap, partSchema)
+    val index = new graft.plans.IceboxFileIndex(spark, corpus, snap.files, snap.schemaJson, Some(snap.id),
+      partSchema)
     val attr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "cluster_id", org.apache.spark.sql.types.LongType)()
     val pruned = index.listFiles(Seq(

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,5 +38,33 @@ abstract class SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAl
 
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     canon(a) shouldBe canon(b)
+  }
+
+  /** Spark jobs `body` runs on this thread: a listener counts job starts
+    * tagged with a fresh job group; a marker job in a second group, seen
+    * last, proves every earlier event has been delivered.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => seen.incrementAndGet()
+          case g if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      marker.await(30, TimeUnit.SECONDS) shouldBe true
+      seen.get
+    } finally sc.removeSparkListener(listener)
   }
 }
