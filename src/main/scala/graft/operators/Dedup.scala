@@ -92,7 +92,7 @@ object Dedup {
         }
         return n
       } catch {
-        case e if e eq graft.table.Icebox.SupersededCommit =>
+        case e if e eq graft.table.IceboxCommit.SupersededCommit =>
           attempt += 1
           if (attempt > maxRetries) throw e
       } finally fresh.unpersist(blocking = false)
@@ -303,7 +303,7 @@ object Dedup {
               index.setProperties(markerProps)
             return n
           } catch {
-            case e if e eq graft.table.Icebox.SupersededCommit =>
+            case e if e eq graft.table.IceboxCommit.SupersededCommit =>
               attempt += 1
               if (attempt > maxRetries) throw e
           } finally fresh.unpersist(blocking = false)
@@ -1434,7 +1434,7 @@ object Dedup {
               index.setProperties(markerProps)
             return n
           } catch {
-            case e if e eq graft.table.Icebox.SupersededCommit =>
+            case e if e eq graft.table.IceboxCommit.SupersededCommit =>
               attempt += 1
               if (attempt > maxRetries) throw e
           } finally fresh.unpersist(blocking = false)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.Icebox
+import graft.table.{Icebox, IceboxCommit}
 
 /** Incrementally maintained materialized aggregate: a target Icebox table
   * holding `GROUP BY keys` counts and sums over a source Icebox table
@@ -627,7 +627,7 @@ object MaterializedView {
     * current values of the touched groups, and publish ONE atomic
     * merge-on-read commit whose op string carries the cursor. Empty
     * delta → marker-only cursor advance. A concurrent refresher moving
-    * the target head aborts the commit ([[Icebox.SupersededCommit]]) and
+    * the target head aborts the commit ([[IceboxCommit.SupersededCommit]]) and
     * control re-enters via `onSuperseded`.
     */
   private def applyDelta(spark: SparkSession, target: Icebox, op: String,
@@ -695,7 +695,7 @@ object MaterializedView {
           delta.select(keys.map(col): _*), Some(updated), expectHeadId = tgtHead)
         Incremental
         } catch {
-          case Icebox.SupersededCommit =>
+          case IceboxCommit.SupersededCommit =>
             // a concurrent refresher won the commit race: release OUR
             // cached delta first (the finally below is idempotent), then
             // re-enter with a fresh cursor (usually a NoOp) — so stacked

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.table.Icebox
+import graft.table.{Icebox, IceboxCommit}
 
 /** Real upsert/MERGE semantics.
   *
@@ -57,9 +57,9 @@ object Upsert {
     */
   def intoTable(table: Icebox, incoming: DataFrame, pk: Seq[String],
       orderCol: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
-      Icebox.retryingStaleHead {
+      IceboxCommit.retryingStaleHead {
     val spark = incoming.sparkSession
-    val parts = if (partitionBy.nonEmpty) partitionBy else table.partitionColumns
+    val parts = if (partitionBy.nonEmpty) partitionBy else table.currentPartitionSpec
     val mode = table.properties.getOrElse("write.upsert.mode", "copy-on-write")
     require(mode == "copy-on-write" || mode == "merge-on-read",
       s"write.upsert.mode=$mode (expected copy-on-write | merge-on-read)")
@@ -95,8 +95,8 @@ object Upsert {
     */
   def intoTableMor(table: Icebox, incoming: DataFrame, pk: Seq[String],
       orderCol: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
-      Icebox.retryingStaleHead {
-    val parts = if (partitionBy.nonEmpty) partitionBy else table.partitionColumns
+      IceboxCommit.retryingStaleHead {
+    val parts = if (partitionBy.nonEmpty) partitionBy else table.currentPartitionSpec
     val src = orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
     // expectHeadId = −1: computed against "no table" — a creation racing in
     // between the exists check and the publish must force a re-merge (the
@@ -115,7 +115,7 @@ object Upsert {
     */
   def intoTablePartitions(table: Icebox, incoming: DataFrame, pk: Seq[String],
       partitionCol: String, orderCol: Option[String] = None): Unit =
-      Icebox.retryingStaleHead {
+      IceboxCommit.retryingStaleHead {
     val spark = incoming.sparkSession
     if (!table.exists) {
       val src = orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))

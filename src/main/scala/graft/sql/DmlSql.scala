@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumns, As
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.table.{DataFile, Icebox, Snapshot}
+import graft.table.{DataFile, Icebox, IceboxCommit, Snapshot}
 
 /** SQL-text row-level `DELETE FROM` / `UPDATE` over Icebox tables, executed
   * as FILE-PRUNED copy-on-write — the Iceberg copy-on-write model:
@@ -553,7 +553,7 @@ object DmlSql {
     }
 
   private def executeDelete(spark: SparkSession, d: DeleteFromTable): DmlResult =
-      Icebox.retryingStaleHead {
+      IceboxCommit.retryingStaleHead {
     val (name, alias, icebox, snap, schema) = target(spark, d.table)
     val deleteMode = dmlMode(icebox, "write.delete.mode")
     if (deleteMode != "copy-on-write") {
@@ -589,7 +589,7 @@ object DmlSql {
   }
 
   private def executeUpdate(spark: SparkSession, u: UpdateTable): DmlResult =
-      Icebox.retryingStaleHead {
+      IceboxCommit.retryingStaleHead {
     val (name, alias, icebox, snap, schema) = target(spark, u.table)
     u.assignments.foreach(a => noSubquery(a.value, "UPDATE SET"))
     validateAssignments(u.assignments, schema)
@@ -614,7 +614,7 @@ object DmlSql {
             }
           }: _*)
           val s2 = icebox.commitPositionDeletesWithData("update", positions, newRows,
-            icebox.partitionColumns)
+            icebox.currentPartitionSpec)
           if (spark.catalog.tableExists(name)) icebox.registerView(spark, name)
           return DmlResult(s2, 0, candidates.size + untouched.size)
         }
@@ -722,7 +722,7 @@ object DmlSql {
         col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    val parts = icebox.partitionColumns
+    val parts = icebox.currentPartitionSpec
     val snap =
       if (!ins.overwrite) icebox.append(out, parts)
       else if (parts.nonEmpty) icebox.overwritePartitions(out, parts)
@@ -758,7 +758,7 @@ object DmlSql {
     // pass the head the classification ran against: a cross-process commit
     // landing mid-DML makes rewriteFiles throw StaleCommitState, and the
     // executeDelete/executeUpdate retry loop re-classifies from scratch
-    val snap = icebox.rewriteFiles(op, candidates, replacement, icebox.partitionColumns,
+    val snap = icebox.rewriteFiles(op, candidates, replacement, icebox.currentPartitionSpec,
       expectHeadId = classifiedHeadId)
     if (spark.catalog.tableExists(name)) icebox.registerView(spark, name)
     DmlResult(snap, candidates.size, untouched.size)

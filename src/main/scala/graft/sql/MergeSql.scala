@@ -217,14 +217,14 @@ object MergeSql {
       case _ if insertOnlyMor =>
         // no matched/by-source action → matched target rows stay in place;
         // the merge degenerates to an append of the unmatched source rows
-        icebox.append(inserts.get, icebox.partitionColumns)
+        icebox.append(inserts.get, icebox.currentPartitionSpec)
       case Some(keys) =>
         val newData = inserts.foldLeft(mergedMatched)(_ unionByName _)
         icebox.commitEqualityDeletes("merge-mor", keys, Some(newData),
-          icebox.partitionColumns)
+          icebox.currentPartitionSpec)
       case None =>
         val result = inserts.foldLeft(mergedMatched.unionByName(mergedUnmatched))(_ unionByName _)
-        icebox.overwrite(result, icebox.partitionColumns)
+        icebox.overwrite(result, icebox.currentPartitionSpec)
     }
     // a registerView temp view is pinned to the pre-merge snapshot's file
     // set — repoint it so SELECT → MERGE → SELECT composes on one name

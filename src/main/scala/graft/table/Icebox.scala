@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
 import graft.plans.IceboxFileIndex
@@ -117,12 +117,13 @@ final case class DataFile(path: String, sizeBytes: Long, partition: Map[String, 
   * checkpoints are GC'd by [[expireSnapshots]] only when NO surviving
   * manifest references them.
   *
-  * '''Atomic commit''' (SURVEY §7.4 highest-risk component): data files are
+  * '''Atomic commit''' ([[IceboxCommit]]; SURVEY §7.4 highest-risk component): data files are
   * written to a fresh `data/graft_commit=<id>/` dir, the snapshot JSON is
   * written, and only then is `_current` flipped via write-temp + atomic rename.
   * A crash at any earlier point leaves the table at its previous snapshot;
   * manifests not reachable from `_current` via the parent chain are treated as
-  * uncommitted garbage (never read) and collected by `expireSnapshots`. (On a
+  * uncommitted garbage (never read) and collected by [[IceboxCommit.reclaim]]
+  * (`expireSnapshots`, `removeOrphans`). (On a
   * real cluster `_current` lives on HDFS where rename is equally atomic; S3
   * deployments would swap this for a conditional-PUT — driver-side metadata is
   * tiny either way, data files are never rewritten in place.)
@@ -148,7 +149,7 @@ final class Icebox(val tableDir: String) {
 
   import Icebox.{CommitCol, unescapePathSegment}
 
-  private val mapper = new ObjectMapper()
+  private[table] val mapper = new ObjectMapper()
 
   /** All metadata/maintenance I/O resolves through the Hadoop FileSystem
     * API from the table URI ([[TableStore]]): `tableDir` may be a plain
@@ -162,16 +163,16 @@ final class Icebox(val tableDir: String) {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration()))
 
-  private def snapshotsDir: HPath = store.child("_snapshots")
-  private def currentPtr: HPath = store.child("_current")
-  private def dataDir: HPath = store.child("data")
-  private def deletesDir: HPath = store.child("deletes")
-  private def manifestPath(id: Long): HPath = new HPath(snapshotsDir, s"$id.json")
-  private def shardsDir: HPath = new HPath(snapshotsDir, "shards")
+  private[table] def snapshotsDir: HPath = store.child("_snapshots")
+  private[table] def currentPtr: HPath = store.child("_current")
+  private[table] def dataDir: HPath = store.child("data")
+  private[table] def deletesDir: HPath = store.child("deletes")
+  private[table] def manifestPath(id: Long): HPath = new HPath(snapshotsDir, s"$id.json")
+  private[table] def shardsDir: HPath = new HPath(snapshotsDir, "shards")
   private def shardPath(sha: String): HPath = new HPath(shardsDir, s"$sha.json")
-  private def bloomsDir: HPath = new HPath(snapshotsDir, "blooms")
+  private[table] def bloomsDir: HPath = new HPath(snapshotsDir, "blooms")
   private def bloomPath(sha: String): HPath = new HPath(bloomsDir, s"$sha.bloom")
-  private def sketchesDir: HPath = new HPath(snapshotsDir, "sketches")
+  private[table] def sketchesDir: HPath = new HPath(snapshotsDir, "sketches")
   private def sketchPath(sha: String): HPath = new HPath(sketchesDir, s"$sha.hll")
 
   /** Parsed manifests, keyed by snapshot id. Manifests are immutable once
@@ -179,13 +180,13 @@ final class Icebox(val tableDir: String) {
     * content-equivalent full form), so caching across the handle's lifetime
     * is safe and makes chain walks O(1) parse after first touch.
     */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[Long, Icebox.Manifest]()
+  private[table] val manifestCache = new java.util.concurrent.ConcurrentHashMap[Long, Icebox.Manifest]()
 
   /** Reconstructed live file sets, small access-order LRU: the head is hit
     * on every commit/read; history walks (expiry, time travel) churn the
     * tail. Bounded so a long history never holds O(snapshots × files).
     */
-  private val filesCache = java.util.Collections.synchronizedMap(
+  private[table] val filesCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[Long, Seq[DataFile]](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[Long, Seq[DataFile]]): Boolean =
         size > 4
@@ -204,7 +205,10 @@ final class Icebox(val tableDir: String) {
 
   // ---------------------------------------------------------------- metadata
 
-  private def propsPath: HPath = store.child("_properties.json")
+  private[table] def propsPath: HPath = store.child("_properties.json")
+
+  /** The commit unit: every metadata mutation of this table goes through it. */
+  private[table] lazy val commits = new IceboxCommit(this)
 
   /** Iceberg-style table properties (flat string map). Recognized keys:
     * `write.bloom.columns` — comma-separated columns for which every data
@@ -233,109 +237,33 @@ final class Icebox(val tableDir: String) {
   }
 
   /** Merge `kv` into the table properties. Concurrency-safe ACROSS handles
-    * and processes, not just within one (snapshot commits already are): the
-    * read-merge-write runs under a CREATE_NEW lock-file claim — the same
-    * atomic primitive the commit path uses — so two concurrent setProperties
-    * calls serialize instead of losing one's update. A lock left by a
-    * crashed holder is broken after 10 s.
+    * and processes, not just within one: the read-merge-write runs under
+    * the table lock ([[IceboxCommit.updateProperties]]), so two concurrent
+    * setProperties calls serialize instead of losing one's update.
     */
-  def setProperties(kv: Map[String, String]): Unit = {
-    commitEvents.incrementAndGet()
-    updateProperties(_ ++ kv)
-  }
+  def setProperties(kv: Map[String, String]): Unit = commits.updateProperties(_ ++ kv)
 
   /** Remove table properties (no-op for absent keys). Same locking as
     * [[setProperties]].
     */
-  def removeProperties(keys: Seq[String]): Unit = {
-    commitEvents.incrementAndGet()
-    updateProperties(_ -- keys)
-  }
+  def removeProperties(keys: Seq[String]): Unit = commits.updateProperties(_ -- keys)
 
   /** Remove `remove` and merge `set` in ONE locked read-merge-write — for
     * key-set swaps (e.g. re-recording an index's residual references)
     * where a crash between a separate remove and set would leave a
     * half-cleared state that reads as "never recorded".
     */
-  def replaceProperties(remove: Seq[String], set: Map[String, String]): Unit = {
-    commitEvents.incrementAndGet()
-    updateProperties(p => (p -- remove) ++ set)
-  }
+  def replaceProperties(remove: Seq[String], set: Map[String, String]): Unit =
+    commits.updateProperties(p => (p -- remove) ++ set)
 
   /** Count of fsync-bearing publication events performed THROUGH THIS
-    * HANDLE: successful snapshot publications (each = a lock claim + head
-    * CAS + manifest write) plus standalone property writes (each = a lock
-    * claim + props replace). Diagnostic — specs assert commit budgets
+    * HANDLE: successful snapshot publications and fast-forwards (each = a
+    * lock claim + head CAS, plus a manifest write for a new snapshot) and
+    * standalone property writes (each = a lock claim + props replace). Diagnostic — specs assert commit budgets
     * (e.g. the dedup ingest's ≤2-commits-per-wave contract) against it;
     * never persisted, never read by any operator.
     */
   private[graft] val commitEvents = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def updateProperties(f: Map[String, String] => Map[String, String]): Unit =
-    withTableLock {
-      val merged = f(properties)
-      val node = mapper.createObjectNode()
-      merged.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-      store.atomicReplace(propsPath, mapper.writeValueAsBytes(node))
-    }
-
-  /** Run `body` under the table's cross-process lock file (CREATE_NEW
-    * claim — the same atomic primitive the commit path uses). Serializes
-    * property updates, branch-pointer CAS, and main-head publication
-    * across handles and processes. A lock left by a crashed holder is
-    * broken after 10 s; the lock carries its owner's token so a breaker
-    * can verify WHICH lock instance it is removing.
-    */
-  private def withTableLock[T](body: => T): T = this.synchronized {
-    store.mkdirs(store.root)
-    val lock = store.child("_properties.lock")
-    val myToken = UUID.randomUUID().toString
-    var attempt = 0
-    while (attempt < 4000) {
-      val claimed = store.createNew(lock, myToken.getBytes(StandardCharsets.UTF_8))
-      if (!claimed) {
-        attempt += 1
-        breakStaleLock(lock)
-        Thread.sleep(5)
-      } else
-        try return body
-        finally {
-          // only delete the lock if it is still OURS — if we stalled >10 s a
-          // breaker may have replaced it, and deleting blindly would evict
-          // the new holder's live lock
-          try {
-            val owner = new String(store.readBytes(lock), StandardCharsets.UTF_8)
-            if (owner == myToken) store.deleteIfExists(lock)
-          } catch { case _: java.io.IOException => () }
-        }
-    }
-    sys.error(s"table lock contention exhausted at $tableDir")
-  }
-
-  /** Break a lock whose holder appears dead (mtime >10 s old) WITHOUT the
-    * check-then-delete race: the lock is first atomically renamed to a
-    * unique grave name — only one contender can win the rename, and once
-    * renamed no new waiter can observe it — then its owner token is compared
-    * against the token read during the staleness check. A mismatch means a
-    * fresh lock replaced the stale one between check and rename (we stole a
-    * live lock); it is atomically restored.
-    */
-  private def breakStaleLock(lock: HPath): Unit = {
-    try {
-      if (!store.exists(lock) ||
-          System.currentTimeMillis() - store.mtime(lock) <= 10000) return
-      val observed = new String(store.readBytes(lock), StandardCharsets.UTF_8)
-      val grave = new HPath(lock.getParent,
-        s"_properties.lock.broken.${UUID.randomUUID().toString.take(8)}")
-      if (!store.renameNoReplace(lock, grave)) return // lost the break race
-      val moved = new String(store.readBytes(grave), StandardCharsets.UTF_8)
-      if (moved == observed) store.deleteIfExists(grave) // confirmed stale — broken
-      else {
-        // a fresh lock slid in after the staleness check; put it back
-        if (!store.renameNoReplace(grave, lock)) store.deleteIfExists(grave)
-      }
-    } catch { case _: java.io.IOException => () } // lost a race — retry loop handles it
-  }
 
   def exists: Boolean = store.exists(currentPtr)
 
@@ -404,7 +332,7 @@ final class Icebox(val tableDir: String) {
       // schema rides the RESOLVED parent, not the pre-scan snapshot: an
       // ALTER TABLE landing during the (potentially long) sketch pass must
       // not be reverted by this metadata-only commit
-      commitMetaResolvedFn("analyze",
+      commits.publish("analyze",
         parent => parent.map(_.files).getOrElse(Nil).map { f =>
           shas.get(pathOnly(f.path)) match {
             case Some(m) => f.copy(sketches = f.sketches ++ m)
@@ -511,277 +439,6 @@ final class Icebox(val tableDir: String) {
     }
   }
 
-  // ------------------------------------------------ exact frequency index
-
-  private def freqKey(physCol: String) = s"freq:$physCol"
-  private def freqRollupProp(physCol: String) = s"freq.rollup.$physCol"
-  private def freqPath(sha: String): HPath = new HPath(sketchesDir, s"$sha.freq")
-  private def freqFileCap: Int =
-    properties.get("freq.max-values").map(_.toInt).getOrElse(256)
-  private def freqTableCap: Int =
-    properties.get("freq.table.max-values").map(_.toInt).getOrElse(4096)
-
-  /** Build the EXACT per-file FREQUENCY index for low-cardinality
-    * `columns` — the mergeable sibling of the NDV sketch index: each data
-    * file gets a side file holding its exact (value → count) table
-    * (content-addressed `.freq` files under `_snapshots/sketches/`,
-    * pointer in the manifest under a `freq:`-prefixed key), and a
-    * table-level rollup
-    * (exact map merge — unlike equi-width histograms, frequency tables
-    * merge EXACTLY, so the index survives appends and compaction with
-    * O(changed files) maintenance, never a full re-scan). A file whose
-    * distinct count exceeds `freq.max-values` (default 256) records an
-    * overflow marker instead — serving then refuses for the whole column,
-    * the usual metadata contract. Sticky: later commits index their own
-    * new files inline (same rule as NDV/bloom/stats), so one ANALYZE keeps
-    * the column servable table-wide. Supported types: integral, float,
-    * double, decimal, string; others are skipped.
-    */
-  def analyzeFreq(spark: SparkSession, columns: Seq[String]): Unit = {
-    require(columns.nonEmpty, "analyzeFreq needs at least one column")
-    val existing = properties.get("freq.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val phys = columns.map(toPhysical)
-    setProperties(Map("freq.columns" -> (existing ++ phys).distinct.mkString(",")))
-    val snap = currentSnapshot.getOrElse(return) // empty table: sticky property only
-    val missing = snap.files.filter(f => phys.exists(c => !f.sketches.contains(freqKey(c))))
-    if (missing.nonEmpty) {
-      val shas = buildFileFreqs(spark, missing.map(_.path), phys, freqFileCap)
-      commitMetaResolvedFn("analyze",
-        parent => parent.map(_.files).getOrElse(Nil).map { f =>
-          shas.get(pathOnly(f.path)) match {
-            case Some(m) => f.copy(sketches = f.sketches ++ m)
-            case None => f
-          }
-        }, parent => parent.map(_.schemaJson).getOrElse(snap.schemaJson))
-    }
-    phys.foreach(refreshFreqRollup)
-  }
-
-  /** The exact merged (value, count) table for `column`, metadata-only —
-    * rendered values (see [[analyzeFreq]]), ascending by rendered string.
-    * None whenever the index can't answer EXACTLY: a file without an
-    * entry, an overflowed file, pending merge-on-read deletes (a deleted
-    * row would still be counted), or a merged table over
-    * `freq.table.max-values`. Cached rollup serves in one side-file read
-    * when current; otherwise a per-file fold (and [[analyzeFreq]]
-    * refreshes the rollup O(delta) under appends).
-    */
-  def frequencyMeta(column: String): Option[Seq[(String, Long)]] = {
-    val key = toPhysical(column)
-    currentSnapshot.flatMap { snap =>
-      val fs = snap.files
-      if (fs.exists(f => f.deletes.nonEmpty || f.eqDeletes.nonEmpty)) None
-      else if (fs.isEmpty) Some(Nil)
-      else properties.get(freqRollupProp(key)) match {
-        case Some(v) if v.split(':').headOption.flatMap(s =>
-            scala.util.Try(s.toLong).toOption).contains(snap.id) =>
-          loadFreq(v.split(':')(1))
-        case _ => foldFreqs(fs.map(_.sketches.get(freqKey(key))))
-      }
-    }
-  }
-
-  /** Discrete percentiles (same definition as [[percentileMeta]]) served
-    * EXACTLY from the frequency index for any NUMERIC low-cardinality
-    * column — no histogram-width restriction: where [[percentileMeta]]
-    * needs an integral column whose range fits the bucket count, this
-    * serves doubles, decimals, and wide integral domains as long as the
-    * frequency index covers the column. Refusals compose: everything
-    * [[frequencyMeta]] refuses, plus non-numeric columns and values that
-    * do not round-trip through Double (a > 2^53 long). Zero data I/O,
-    * zero Spark jobs.
-    */
-  def percentileFromFreq(column: String, ps: Seq[Double]): Option[Seq[Double]] = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentiles must lie in [0,1], got $ps")
-    val key = toPhysical(column)
-    for {
-      snap <- currentSnapshot
-      field <- DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-        .fields.find(_.name.equalsIgnoreCase(key))
-      if field.dataType.isInstanceOf[NumericType]
-      freq <- frequencyMeta(column)
-      parsed <- {
-        val vs = freq.map { case (s, c) => (scala.util.Try(s.toDouble).toOption, c) }
-        val exact = field.dataType match {
-          case LongType => freq.forall { case (s, _) =>
-            scala.util.Try(s.toLong).toOption.exists(l => l.toDouble.toLong == l) }
-          case _ => true
-        }
-        if (!exact || vs.exists(_._1.isEmpty)) None
-        else Some(vs.map { case (v, c) => (v.get, c) }.sortBy(_._1))
-      }
-      out <- {
-        val n = parsed.map(_._2).sum
-        if (n == 0L) None
-        else {
-          val cum = parsed.scanLeft(0L)(_ + _._2).tail
-          Some(ps.map { p =>
-            val r = math.max(1L, (BigDecimal(p.toString) * n)
-              .setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
-            parsed(cum.indexWhere(_ >= r))._1
-          })
-        }
-      }
-    } yield out
-  }
-
-  /** Fold per-file frequency pointers into one exact merged table; None on
-    * any missing pointer, overflow marker, unreadable side file, or a
-    * merge past the table cap.
-    */
-  private def foldFreqs(shas: Seq[Option[String]]): Option[Seq[(String, Long)]] = {
-    if (shas.exists(s => s.isEmpty || s.contains(Icebox.FreqOverflow))) return None
-    val loaded = shas.flatten.map(loadFreq)
-    if (loaded.exists(_.isEmpty)) return None
-    val merged = new scala.collection.mutable.HashMap[String, Long]
-    loaded.flatten.flatten.foreach { case (v, c) =>
-      merged.update(v, merged.getOrElse(v, 0L) + c)
-      if (merged.size > freqTableCap) return None
-    }
-    Some(merged.toSeq.sortBy(_._1))
-  }
-
-  /** Refresh the table-level frequency rollup side file +
-    * `freq.rollup.<col>` property (`<snapshotId>:<sha>`) — incremental
-    * when every file the previous rollup covered is still live (pure
-    * appends fold only the new files' tables), full re-fold otherwise.
-    * No rollup is written when the index can't serve (overflow, cap,
-    * missing files) — the property stays absent rather than wrong.
-    */
-  private def refreshFreqRollup(physCol: String): Unit = {
-    val snap = currentSnapshot.getOrElse(return)
-    val fs = snap.files
-    val prev = properties.get(freqRollupProp(physCol)).flatMap { v =>
-      v.split(':') match {
-        case Array(sid, sha) => scala.util.Try(sid.toLong).toOption.map(_ -> sha)
-        case _ => None
-      }
-    }
-    if (prev.exists(_._1 == snap.id)) return // already current
-    def merge(tables: Seq[Seq[(String, Long)]]): Option[Seq[(String, Long)]] = {
-      val m = new scala.collection.mutable.HashMap[String, Long]
-      tables.flatten.foreach { case (v, c) =>
-        m.update(v, m.getOrElse(v, 0L) + c)
-        if (m.size > freqTableCap) return None
-      }
-      Some(m.toSeq.sortBy(_._1))
-    }
-    def tablesFor(files: Seq[DataFile]): Option[Seq[Seq[(String, Long)]]] = {
-      val shas = files.map(_.sketches.get(freqKey(physCol)))
-      if (shas.exists(s => s.isEmpty || s.contains(Icebox.FreqOverflow))) None
-      else {
-        val loaded = shas.flatten.map(loadFreq)
-        if (loaded.exists(_.isEmpty)) None else Some(loaded.flatten)
-      }
-    }
-    val mergedOpt = (prev match {
-      case Some((oldId, oldSha)) =>
-        val oldPaths = scala.util.Try(snapshot(oldId).files.map(_.path).toSet).toOption
-        oldPaths match {
-          case Some(op) if op.subsetOf(fs.map(_.path).toSet) =>
-            (for {
-              seed <- loadFreq(oldSha)
-              fresh <- tablesFor(fs.filterNot(f => op(f.path)))
-              m <- merge(seed +: fresh)
-            } yield m).orElse(tablesFor(fs).flatMap(merge))
-          case _ => tablesFor(fs).flatMap(merge)
-        }
-      case None => tablesFor(fs).flatMap(merge)
-    })
-    mergedOpt.foreach { table =>
-      val bytes = Icebox.freqSerialize(table)
-      store.mkdirs(sketchesDir)
-      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
-        .map("%02x".format(_)).mkString
-      if (!store.exists(freqPath(sha))) store.atomicReplace(freqPath(sha), bytes)
-      setProperties(Map(freqRollupProp(physCol) -> s"${snap.id}:$sha"))
-    }
-  }
-
-  /** Load one frequency side file by content sha (process-wide cache). */
-  private[graft] def loadFreq(sha: String): Option[Seq[(String, Long)]] = {
-    val cached = Icebox.sketchCache.get(s"freq:$sha")
-    val bytes =
-      if (cached != null) cached
-      else {
-        val p = freqPath(sha)
-        if (!store.exists(p)) return None
-        val b = store.readBytes(p)
-        Icebox.sketchCache.put(s"freq:$sha", b)
-        b
-      }
-    Icebox.freqDeserialize(bytes)
-  }
-
-  /** Executor-fanned per-file frequency build: one (file, value) count
-    * shuffle per column, overflowing files detected from their distinct
-    * counts BEFORE any `collect_list` materializes (so a high-cardinality
-    * file costs its aggregation but never an unbounded driver row), side
-    * files written executor-side like the bloom/sketch builds. Returns
-    * path → (freq-key → sha | overflow marker).
-    */
-  private def buildFileFreqs(spark: SparkSession, paths: Seq[String],
-      cols: Seq[String], cap: Int): Map[String, Map[String, String]] = {
-    if (paths.isEmpty || cols.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.{col => fcol, input_file_name, count => fcount, collect_list, struct, lit}
-    val base = spark.read.parquet(paths: _*)
-    val out = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.HashMap[String, String]]
-    def put(path: String, c: String, v: String): Unit =
-      out.getOrElseUpdate(path, scala.collection.mutable.HashMap.empty)
-        .update(freqKey(c), v)
-    val confBc = spark.sparkContext.broadcast(
-      new Icebox.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    store.mkdirs(sketchesDir)
-    val dirStr = sketchesDir.toString
-    cols.filter(base.columns.contains).foreach { c =>
-      val dt = base.schema(base.schema.fieldIndex(c)).dataType
-      if (Icebox.freqRenderable(dt)) {
-        val counted = base.select(input_file_name().as("__file"), fcol(c).as("__v"))
-          .filter(fcol("__v").isNotNull)
-          .groupBy(fcol("__file"), fcol("__v")).agg(fcount(lit(1)).as("__c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val sizes = counted.groupBy("__file").agg(fcount(lit(1)).as("__n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          sizes.collect { case (f, n) if n > cap => f }
-            .foreach(f => put(pathOnly(f), c, Icebox.FreqOverflow))
-          val okFiles = sizes.collect { case (f, n) if n <= cap => f }.toSet
-          if (okFiles.nonEmpty) {
-            val okBc = spark.sparkContext.broadcast(okFiles)
-            val dtLocal = dt
-            import spark.implicits._
-            val pairs = counted
-              .filter(r => okBc.value.contains(r.getString(0)))
-              .groupBy("__file")
-              .agg(collect_list(struct(fcol("__v"), fcol("__c"))).as("__entries"))
-              .mapPartitions { it =>
-                it.map { r =>
-                  val table = r.getSeq[Row](1).map { e =>
-                    Icebox.freqRender(e.get(0), dtLocal) -> e.getLong(1)
-                  }.sortBy(_._1)
-                  (r.getString(0), Icebox.writeSideFile(confBc.value.value, dirStr,
-                    Icebox.freqSerialize(table), "freq"))
-                }
-              }.collect()
-            pairs.foreach { case (f, sha) => put(pathOnly(f), c, sha) }
-          }
-          // a file ALL of whose values are null never appears in `counted`
-          // — record an empty table for it so coverage checks pass
-          val seen = sizes.keySet.map(pathOnly)
-          paths.map(pathOnly).filterNot(seen.contains).foreach { p =>
-            val sha = Icebox.writeSideFile(confBc.value.value, dirStr,
-              Icebox.freqSerialize(Nil), "freq")
-            put(p, c, sha)
-          }
-        } finally counted.unpersist(blocking = false)
-      }
-    }
-    out.map { case (k, v) => k -> v.toMap }.toMap
-  }
-
   /** Equi-width HISTOGRAM stats for a numeric column: bucket bounds are
     * FIXED from the manifest's min/max (so the arithmetic is exact and
     * data-independent — bucket counts are plain integers any engine can
@@ -868,18 +525,18 @@ final class Icebox(val tableDir: String) {
           val w = (hi - lo) / buckets
           if (w > 1.0) None
           else {
-            val freq = (lo.toLong to hi.toLong).map { v =>
+            val valueCounts = (lo.toLong to hi.toLong).map { v =>
               val b = math.min(buckets - 1L,
                 math.max(0L, math.floor((v - lo) / w).toLong)).toInt
               v -> counts(b)
             }
-            if (freq.map(_._2).sum != n) None // bucket not uniquely claimed
+            if (valueCounts.map(_._2).sum != n) None // bucket not uniquely claimed
             else {
-              val cum = freq.scanLeft(0L)(_ + _._2).tail
+              val cum = valueCounts.scanLeft(0L)(_ + _._2).tail
               Some(ps.map { p =>
                 val r = math.max(1L, (BigDecimal(p.toString) * n)
                   .setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
-                freq(cum.indexWhere(_ >= r))._1
+                valueCounts(cum.indexWhere(_ >= r))._1
               })
             }
           }
@@ -967,7 +624,7 @@ final class Icebox(val tableDir: String) {
   // -------------------------------------------------------- refs (branches/tags)
 
   private val TagPrefix = "ref.tag."
-  private val BranchPrefix = "ref.branch."
+  private[table] val BranchPrefix = "ref.branch."
 
   /** Named snapshot refs (Iceberg branches/tags): `name → Ref(kind, id)`.
     * TAGS are immutable bookmarks; BRANCHES accept [[appendToBranch]]
@@ -1075,12 +732,12 @@ final class Icebox(val tableDir: String) {
     * head to be an ancestor of the branch head (no history is discarded —
     * the branch's commits extend the main chain linearly).
     */
-  def fastForward(name: String): Snapshot = withTableLock {
+  def fastForward(name: String): Snapshot = IceboxCommit.retryingStaleHead {
     val target = branchSnapshot(name)
     val cur = currentSnapshotId
     require(cur < 0 || isAncestor(cur, target.id),
       s"cannot fast-forward: current head $cur is not an ancestor of branch '$name' head ${target.id}")
-    store.atomicReplace(currentPtr, target.id.toString.getBytes(StandardCharsets.UTF_8))
+    commits.moveHead(Some(cur).filter(_ >= 0), target.id)
     target
   }
 
@@ -1266,7 +923,7 @@ final class Icebox(val tableDir: String) {
       val newPosDirs = genPairs.flatMap { case (o, n) =>
         n.deletes.filterNot(o.deletes.toSet) }.distinct
       if (newPosDirs.nonEmpty) {
-        val dels = spark.read.parquet(newPosDirs: _*)
+        val dels = Icebox.readPositionDeletes(spark, newPosDirs)
           .select(Icebox.normPathCol(col("file_path")).as("__gd_fp"),
             col("pos").as("__gd_pos"))
           .dropDuplicates() // a position listed twice must not duplicate its row
@@ -1330,7 +987,7 @@ final class Icebox(val tableDir: String) {
 
   /** Append expecting the head the caller's read observed — the
     * serializable-ingest commit: if ANY commit moved the head past
-    * `expectHeadId` (−1 = the caller saw no table), [[Icebox
+    * `expectHeadId` (−1 = the caller saw no table), [[IceboxCommit
     * .SupersededCommit]] escapes so the caller re-runs its probe against
     * the new state instead of publishing a decision computed from a stale
     * one (the dedup-insert TOCTOU: two concurrent writers both probing,
@@ -1339,7 +996,7 @@ final class Icebox(val tableDir: String) {
   private[graft] def appendIfHead(df: DataFrame, expectHeadId: Long,
       collectStats: Seq[String] = Nil): Snapshot =
     commit(df, effectiveParts(Nil), "append", collectStats) { (parent, newFiles) =>
-      if (parent.map(_.id).getOrElse(-1L) != expectHeadId) throw Icebox.SupersededCommit
+      if (parent.map(_.id).getOrElse(-1L) != expectHeadId) throw IceboxCommit.SupersededCommit
       parent.map(_.files).getOrElse(Nil) ++ newFiles
     }
 
@@ -1498,14 +1155,14 @@ final class Icebox(val tableDir: String) {
     * `expectHeadId` (−2 = unguarded): the head the caller's merge was
     * computed against — read-merge-replace callers pass it so a
     * cross-process commit landing mid-merge forces a re-merge instead of
-    * being silently replaced (see `retryOnStaleHead`); −1 means "computed
+    * being silently replaced (see `IceboxCommit.retryingStaleHead`); −1 means "computed
     * against an empty table".
     */
   private[graft] def overwriteAs(op: String, df: DataFrame, partitionBy: Seq[String],
       expectHeadId: Long = -2L): Snapshot =
     commit(df, partitionBy, op) { (parent, newFiles) =>
       if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-        throw Icebox.StaleCommitState
+        throw IceboxCommit.StaleCommitState
       newFiles
     }
 
@@ -1528,7 +1185,7 @@ final class Icebox(val tableDir: String) {
         // guarded read-merge-replace (see overwriteAs): a concurrent commit
         // touching the partitions this merge read must force a re-merge
         if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-          throw Icebox.StaleCommitState
+          throw IceboxCommit.StaleCommitState
         val touched = newFiles.map(_.partition).toSet
         parent.map(_.files).getOrElse(Nil).filterNot(f => touched(f.partition)) ++ newFiles
       }
@@ -1554,7 +1211,7 @@ final class Icebox(val tableDir: String) {
     val retired = nonConforming.map(_.path).toSet
     commit(df.unionByName(carry), partitionBy, "overwrite") { (parent, newFiles) =>
       if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-        throw Icebox.StaleCommitState
+        throw IceboxCommit.StaleCommitState
       // conforming files drop iff their partition tuple was replaced by DF
       // (carry's partitions are disjoint from df's by construction, so the
       // written-files partition set must NOT be the drop rule here)
@@ -1582,9 +1239,9 @@ final class Icebox(val tableDir: String) {
       // that head — a cross-process commit in between (an eq-delete attach
       // on a candidate, a compaction replacing one) would make this rewrite
       // resurrect deleted rows or duplicate compacted ones. Throwing makes
-      // the caller re-run its whole classification (see retryOnStaleHead).
+      // the caller re-run its whole classification (see IceboxCommit.retryingStaleHead).
       if (expectHeadId != -2L && !parent.map(_.id).contains(expectHeadId))
-        throw Icebox.StaleCommitState
+        throw IceboxCommit.StaleCommitState
       parent.map(_.files).getOrElse(Nil).filterNot(f => removedPaths(f.path)) ++ newFiles
     }
   }
@@ -1767,7 +1424,7 @@ final class Icebox(val tableDir: String) {
     * collapsing into one (skew safety at scale); the writer's `partitionBy`
     * re-routes rows to their partition dirs regardless.
     */
-  def compact(spark: SparkSession, targetFileMb: Int = 512): Snapshot = retryOnStaleHead {
+  def compact(spark: SparkSession, targetFileMb: Int = 512): Snapshot = IceboxCommit.retryingStaleHead {
     val snap = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     // a declared table sort order (`write.sort.columns`) makes the plain
     // compaction a SORTED rewrite — Iceberg's "rewrite honors the table
@@ -1791,7 +1448,7 @@ final class Icebox(val tableDir: String) {
       // computed from `snap` — if the head moved (a delete landed mid-
       // rewrite), publishing newFiles-only would silently discard it.
       // Recompute from the new head instead (Iceberg's rewrite-validation).
-      if (!parent.map(_.id).contains(snap.id)) throw Icebox.StaleCommitState
+      if (!parent.map(_.id).contains(snap.id)) throw IceboxCommit.StaleCommitState
       newFiles
     }
   }
@@ -1817,7 +1474,7 @@ final class Icebox(val tableDir: String) {
     * numeric nor string.
     */
   def compactSorted(spark: SparkSession, sortBy: Seq[String],
-      targetFileMb: Int = 512, numFiles: Option[Int] = None): Snapshot = retryOnStaleHead {
+      targetFileMb: Int = 512, numFiles: Option[Int] = None): Snapshot = IceboxCommit.retryingStaleHead {
     require(sortBy.nonEmpty, "compactSorted needs sort columns")
     val snap = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     val totalBytes = snap.files.map(_.sizeBytes).sum
@@ -1841,7 +1498,7 @@ final class Icebox(val tableDir: String) {
           .drop("__z")
       }
     commit(df, currentPartitionSpec, "compact", collectStats = sortBy) { (parent, newFiles) =>
-      if (!parent.map(_.id).contains(snap.id)) throw Icebox.StaleCommitState // see compact()
+      if (!parent.map(_.id).contains(snap.id)) throw IceboxCommit.StaleCommitState // see compact()
       newFiles
     }
   }
@@ -1854,7 +1511,7 @@ final class Icebox(val tableDir: String) {
     * partitions rewritten.
     */
   def compactPartitions(spark: SparkSession, targetFileMb: Int = 512,
-      minFiles: Int = 4): Seq[Map[String, String]] = retryOnStaleHead {
+      minFiles: Int = 4): Seq[Map[String, String]] = IceboxCommit.retryingStaleHead {
     val snap = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     val partCols = partitionColumns
     require(partCols.nonEmpty, "compactPartitions needs a partitioned table; use compact()")
@@ -1868,7 +1525,7 @@ final class Icebox(val tableDir: String) {
       val df = withHiddenPartitions(IceboxFileIndex.scan(spark, this, hotFiles, snap.schemaJson))
         .repartition(n, partCols.map(col): _*)
       commit(df, partCols, "overwrite") { (parent, newFiles) =>
-        if (!parent.map(_.id).contains(snap.id)) throw Icebox.StaleCommitState // see compact()
+        if (!parent.map(_.id).contains(snap.id)) throw IceboxCommit.StaleCommitState // see compact()
         val touched = newFiles.map(_.partition).toSet
         parent.map(_.files).getOrElse(Nil).filterNot(f => touched(f.partition)) ++ newFiles
       }
@@ -1912,7 +1569,7 @@ final class Icebox(val tableDir: String) {
       i < retainLast || s.timestampMs >= cutoffMs || s.id == currentId || refIds(s.id)
     }.map(_._1).toList
     val keepIds = keep.map(_.id).toSet
-    val reachable = all.map(_.id).toSet ++ refIds
+    val live = keep ++ refChains
     val expired = all.filterNot(s => keepIds(s.id))
     val expiredIds = expired.map(_.id).toSet
     // Rebase to a full manifest every LIVE snapshot whose parent is being
@@ -1923,7 +1580,7 @@ final class Icebox(val tableDir: String) {
     // point can make the set non-contiguous. Content-equivalent rewrite
     // via write-temp + atomic rename (caches stay valid).
     if (expired.nonEmpty)
-      (keep ++ refChains).filter(s => s.parentId >= 0 && expiredIds(s.parentId))
+      live.filter(s => s.parentId >= 0 && expiredIds(s.parentId))
         .distinctBy(_.id)
       .foreach { oldest =>
       val m = manifest(oldest.id)
@@ -1949,151 +1606,34 @@ final class Icebox(val tableDir: String) {
     }
     // resolve kept file sets BEFORE deleting any expired manifest a delta
     // replay might still walk through
-    val liveFiles = (keep ++ refChains).flatMap(_.files.map(_.path)).toSet
-    // delete expired manifests, plus unreachable (crash-orphaned) manifests old enough
+    live.foreach(_.files)
+    // newest first: a crash part-way leaves the chain from the head ending
+    // at the oldest kept (rebased) snapshot, never a chain with a hole;
+    // the expired manifests left below it are unreachable residue
     expired.foreach { s =>
       store.deleteIfExists(manifestPath(s.id))
       manifestCache.remove(s.id) // expired ids must fail reads like a fresh handle's
       filesCache.remove(s.id)
     }
-    if (store.exists(snapshotsDir)) {
-      store.list(snapshotsDir).filter { st =>
-        val name = st.getPath.getName
-        st.isFile && name.endsWith(".json") &&
-          name.stripSuffix(".json").toLongOption.exists(!reachable(_)) &&
-          st.getModificationTime < cutoffMs
-      }.foreach { st =>
-        store.deleteIfExists(st.getPath)
-        st.getPath.getName.stripSuffix(".json").toLongOption.foreach { mid =>
-          manifestCache.remove(mid); filesCache.remove(mid)
-        }
-      }
-    }
-    // Checkpoint-shard GC: a shard file is live while ANY surviving
-    // manifest references its sha (content-addressed shards are shared
-    // across checkpoints, so per-snapshot deletion would corrupt later
-    // checkpoints that reuse an expired one's shards). mtime-gated like
-    // data files — an in-flight commit writes its shards BEFORE claiming
-    // the manifest.
-    if (store.exists(shardsDir)) {
-      val liveShas = store.list(snapshotsDir).flatMap { st =>
-        val name = st.getPath.getName
-        if (!st.isFile || !name.endsWith(".json")) Nil
-        else name.stripSuffix(".json").toLongOption.toSeq.flatMap { mid =>
-          scala.util.Try(manifest(mid).shards.map(_.sha)).getOrElse(Nil)
-        }
-      }.toSet
-      store.list(shardsDir).filter { st =>
-        val name = st.getPath.getName
-        st.isFile && name.endsWith(".json") &&
-          !liveShas(name.stripSuffix(".json")) &&
-          st.getModificationTime < cutoffMs
-      }.foreach(st => store.deleteIfExists(st.getPath))
-    }
-    // Bloom side-file GC: live while any kept snapshot's file references
-    // the sha (content-addressed — compaction rewrites drop the old files'
-    // blooms, appends never share them, so reference = file liveness).
-    // mtime-gated like data files: an in-flight commit writes its blooms
-    // BEFORE claiming the manifest.
-    if (store.exists(bloomsDir)) {
-      val liveBloomShas = (keep ++ refChains).flatMap(_.files.flatMap(_.blooms.values)).toSet
-      store.list(bloomsDir).filter { st =>
-        val name = st.getPath.getName
-        st.isFile && name.endsWith(".bloom") &&
-          !liveBloomShas(name.stripSuffix(".bloom")) &&
-          st.getModificationTime < cutoffMs
-      }.foreach(st => store.deleteIfExists(st.getPath))
-    }
-    // NDV-sketch side-file GC: same liveness rule as blooms (a sha is live
-    // while any kept snapshot's file entry — or the table-level rollup
-    // property — references it), same mtime grace.
-    if (store.exists(sketchesDir)) {
-      // freq side files share the dir and liveness rule (their shas ride
-      // the same manifest map, their rollups the freq.rollup.* properties)
-      val rollupShas = properties.collect {
-        case (k, v) if k.startsWith("sketch.ndv.rollup.") ||
-            k.startsWith("freq.rollup.") =>
-          v.split(':').lift(1)
-      }.flatten.toSet
-      val liveSketchShas =
-        (keep ++ refChains).flatMap(_.files.flatMap(_.sketches.values)).toSet ++ rollupShas
-      store.list(sketchesDir).filter { st =>
-        val name = st.getPath.getName
-        st.isFile && (name.endsWith(".hll") || name.endsWith(".freq")) &&
-          !liveSketchShas(name.stripSuffix(".hll").stripSuffix(".freq")) &&
-          st.getModificationTime < cutoffMs
-      }.foreach(st => store.deleteIfExists(st.getPath))
-    }
-    // delete data files not referenced by any kept snapshot (incl. orphans),
-    // with an mtime grace period so an in-flight commit is never corrupted
-    deleteUnreferenced(liveFiles, cutoffMs)
-    deleteUnreferencedDeleteDirs(
-      (keep ++ refChains).flatMap(_.files.flatMap(f => f.deletes ++ f.eqDeletes)).toSet,
-      cutoffMs)
+    // files no kept snapshot references (incl. crash residue), mtime-gated
+    // so an in-flight commit is never corrupted
+    commits.reclaim(live, cutoffMs)
     expired.map(_.id)
   }
 
-  /** Remove position-delete dirs under `deletes/` referenced by no kept
-    * snapshot, mtime-gated like data files (an in-flight merge-on-read
-    * commit writes its delete file BEFORE publishing the manifest).
-    */
-  private def deleteUnreferencedDeleteDirs(referenced: Set[String], cutoffMs: Long): Seq[String] = {
-    if (!store.exists(deletesDir)) return Nil
-    store.list(deletesDir)
-      .filter(st => !referenced(store.render(st.getPath)) &&
-        st.getModificationTime < cutoffMs)
-      .map { st => store.deleteRecursive(st.getPath); store.render(st.getPath) }
-  }
-
-  /** Delete files under data/ that are dead relative to `referenced`, if
-    * older than `cutoffMs`: data files (*.parquet) not referenced, and
-    * AUXILIARY files (_SUCCESS markers, Hadoop .crc checksums) only when
-    * their directory holds no referenced file — a live commit's markers
-    * and checksums are never touched. Empty directories are pruned.
-    */
-  private def deleteUnreferenced(referenced: Set[String], cutoffMs: Long): Seq[String] = {
-    if (!store.exists(dataDir)) return Nil
-    val dataDirStr = store.render(dataDir)
-    def underData(d: String): Boolean =
-      d == dataDirStr || d.startsWith(dataDirStr + "/")
-    // every ancestor directory between a referenced file and dataDir is
-    // live: partitioned writes put parquet in data/__commit=N/part=v/ while
-    // _SUCCESS markers sit at the commit root data/__commit=N/
-    val refDirs = referenced.flatMap { p =>
-      Iterator.iterate(new HPath(p).getParent)(_.getParent)
-        .takeWhile(d => d != null && underData(store.render(d)))
-        .map(store.render)
-    }
-    val deleted = Seq.newBuilder[String]
-    store.walk(dataDir).reverse.foreach { st =>
-      val p = st.getPath
-      if (st.isFile && st.getModificationTime < cutoffMs) {
-        val dead =
-          if (p.getName.endsWith(".parquet")) !referenced(store.render(p))
-          else !refDirs(store.render(p.getParent))
-        if (dead) { store.deleteIfExists(p); deleted += store.render(p) }
-      } else if (st.isDirectory && store.render(p) != dataDirStr && store.list(p).isEmpty)
-        store.deleteIfExists(p)
-    }
-    deleted.result()
-  }
-
-  /** Remove ORPHAN data files: files under the table's data directory that
-    * no live snapshot references — debris from writes whose metadata commit
-    * never landed (the crash window between parquet write and manifest
-    * publish). Unlike [[expireSnapshots]] this retires no history: every
-    * snapshot's file set stays intact. `graceMs` protects in-flight
+  /** Remove commit residue no snapshot references ([[IceboxCommit.reclaim]]):
+    * data and delete files whose commit never landed (the crash window
+    * between the data write and the manifest publish), unpublished
+    * manifests, checkpoint shards, side files, and the temps of interrupted
+    * metadata writes. Unlike [[expireSnapshots]] this retires no history:
+    * every snapshot's file set stays intact. `graceMs` protects in-flight
     * commits (a freshly written commit dir whose manifest hasn't published
     * YET looks orphaned); Iceberg's `remove_orphan_files` defaults to 3
     * days for the same reason. Returns deleted paths.
     */
   def removeOrphans(graceMs: Long = 3L * 24 * 3600 * 1000): Seq[String] = this.synchronized {
-    val snaps = allSnapshots ++ refs.values.toSeq.flatMap(r => chainFrom(r.snapshotId))
-    val referenced = snaps.flatMap(_.files.map(_.path)).toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    deleteUnreferenced(referenced, cutoff) ++
-      deleteUnreferencedDeleteDirs(
-        snaps.flatMap(_.files.flatMap(f => f.deletes ++ f.eqDeletes)).toSet, cutoff)
+    commits.reclaim(allSnapshots ++ refs.values.toSeq.flatMap(r => chainFrom(r.snapshotId)),
+      System.currentTimeMillis() - graceMs)
   }
 
   /** M5: rollback — repoint the table at an earlier snapshot's file set,
@@ -2103,7 +1643,7 @@ final class Icebox(val tableDir: String) {
     */
   def rollbackTo(snapshotId: Long): Snapshot = {
     val target = readSnapshot(snapshotId)
-    commitMeta("rollback", target.files, target.schemaJson)
+    commits.publish("rollback", _ => target.files, _ => target.schemaJson)
   }
 
   /** M6: cherry-pick — re-apply an (append) snapshot's added files on top of
@@ -2117,9 +1657,11 @@ final class Icebox(val tableDir: String) {
       if (target.parentId < 0) Set.empty
       else readSnapshot(target.parentId).files.map(_.path).toSet
     val delta = target.files.filterNot(f => parentFiles(f.path))
-    val cur = currentSnapshot.map(_.files).getOrElse(Nil)
-    val have = cur.map(_.path).toSet
-    commitMeta("cherrypick", cur ++ delta.filterNot(f => have(f.path)), target.schemaJson)
+    commits.publish("cherrypick", { parent =>
+      val cur = parent.map(_.files).getOrElse(Nil)
+      val have = cur.map(_.path).toSet
+      cur ++ delta.filterNot(f => have(f.path))
+    }, _ => target.schemaJson)
   }
 
   // --------------------------------------------------------------- internals
@@ -2148,19 +1690,6 @@ final class Icebox(val tableDir: String) {
       currentSnapshot.getOrElse(sys.error(s"no table at $tableDir")).schemaJson,
       positions = Some(IceboxFileIndex.Positions(fpCol, posCol)))
 
-  /** Write `positions` — `(file_path, pos)` rows in `_metadata` form — as
-    * ONE position-delete parquet dir under `deletes/` and return its path.
-    * Merge-on-read deletes are small by construction (the mode is chosen
-    * when the hit set is a small fraction of the candidate files), so one
-    * output file keeps the read-side anti-join broadcastable.
-    */
-  private def writeDeleteFile(positions: DataFrame): String = {
-    store.mkdirs(deletesDir)
-    val dir = store.render(new HPath(deletesDir, s"delete-${UUID.randomUUID().toString.take(12)}"))
-    positions.coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
-  }
-
   /** Merge-on-read row-level DELETE: records `positions` (in
     * `_metadata.file_path` URI form + row ordinal) as a position-delete
     * file and commits a snapshot where each affected data file references
@@ -2178,87 +1707,92 @@ final class Icebox(val tableDir: String) {
       newData: DataFrame, partitionBy: Seq[String]): Snapshot =
     commitPositionDeletesImpl(newData.sparkSession, op, positions, Some(newData), partitionBy)
 
-  /** Shared position-delete commit. The same READ-AMPLIFICATION BOUND as
-    * equality deletes: a file whose `deletes` list would exceed
-    * `write.merge-on-read.max-delete-files` is rewritten copy-on-write in
-    * this commit (stacked position deletes + the new positions applied),
-    * so the per-read count of delete dirs to open stays bounded no matter
-    * how many sparse DMLs hit a hot file.
+  /** Shared position-delete commit ([[commitMergeOnRead]]). `positions`
+    * (`(file_path, pos)` rows in `_metadata` form) are written as ONE
+    * position-delete dir: merge-on-read deletes are small by construction
+    * (the mode is chosen when the hit set is a small fraction of the
+    * candidate files), so one output file keeps the read-side anti-join
+    * broadcastable. Per-file position counts ride the manifest
+    * (`DataFile.deleteRows`), so metadata row counts and the CBO stats
+    * bridge stay EXACT: live rows = rows - deleteRows.
     */
   private def commitPositionDeletesImpl(spark: SparkSession, op: String,
       positions: DataFrame, newData: Option[DataFrame],
-      partitionBy: Seq[String]): Snapshot = retryOnStaleHead {
+      partitionBy: Seq[String]): Snapshot = IceboxCommit.retryingStaleHead {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
-    val schemaJson = cur.schemaJson
-    // per-file position counts ride the manifest (DataFile.deleteRows) so
-    // metadata row counts and the CBO stats bridge stay EXACT under
-    // merge-on-read position deletes: live rows = rows - deleteRows
-    val affectedCounts = affectedPathCounts(positions)
-    val affected = affectedCounts.keySet
+    val affected = affectedPathCounts(positions)
     if (affected.isEmpty) // no matching rows: commit an explicit no-op snapshot
-      commitMetaResolved(op, p => p.map(_.files).getOrElse(Nil), schemaJson)
-    else {
-    val maxDepth = properties.get("write.merge-on-read.max-delete-files")
-      .map(_.toInt).getOrElse(8)
-    val overFiles = cur.files.filter(f =>
-      affected(pathOnly(f.path)) && f.deletes.size >= maxDepth)
-    val overPaths = overFiles.map(_.path).toSet
-    val rewritten: Option[DataFrame] =
-      if (overFiles.isEmpty) None
-      else {
-        // survivors of the over-depth files: stacked deletes applied by the
-        // read, the NEW positions anti-joined here
-        val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      commits.publish(op, p => p.map(_.files).getOrElse(Nil), _ => cur.schemaJson)
+    else commitMergeOnRead(op, cur, f => affected.contains(pathOnly(f.path)), _.deletes.size,
+      survivors = { overFiles =>
+        // stacked deletes applied by the read, the NEW positions anti-joined
+        val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
         val withPos = readDataFilesWithPos(spark, overFiles, "__icx_rw_fp", "__icx_rw_pos")
         val dels = positions.select(Icebox.normPathCol(col("file_path")).as("__del_fp"),
           col("pos").as("__del_pos"))
-        Some(withPos.join(dels,
+        withPos.join(dels,
             Icebox.normPathCol(col("__icx_rw_fp")) === col("__del_fp") &&
               col("__icx_rw_pos") === col("__del_pos"), "left_anti")
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*))
-      }
-    val dir = writeDeleteFile(positions)
+          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      },
+      kind = "delete", writeDeletes = positions.coalesce(1).write.mode("overwrite").parquet(_),
+      attachTo = (f, dir) => f.copy(deletes = f.deletes :+ dir,
+        deleteRows = // unknown stays unknown; never fabricate exactness
+          if (f.deleteRows < 0L) -1L else f.deleteRows + affected(pathOnly(f.path))),
+      newData, partitionBy)
+  }
+
+  /** The merge-on-read commit both delete kinds share: write ONE delete dir
+    * of `kind` under `deletes/`, attach it to every `hit` file of `cur`
+    * (`attachTo`), and add `newData`'s files in the SAME atomic snapshot —
+    * no data file is read or rewritten.
+    *
+    * READ-AMPLIFICATION BOUND: every attached delete adds work to each read
+    * of its file, so a hit file whose `depth` (stacked deletes of this kind)
+    * reached `write.merge-on-read.max-delete-files` is instead rewritten
+    * copy-on-write in this commit (`survivors`: its rows with every delete,
+    * the new one included, applied), resetting its depth to zero. O(batch)
+    * writes for the common case and bounded delete fan-in forever (Delta's
+    * DV-compaction analog).
+    */
+  private def commitMergeOnRead(op: String, cur: Snapshot, hit: DataFile => Boolean,
+      depth: DataFile => Int, survivors: Seq[DataFile] => DataFrame, kind: String,
+      writeDeletes: String => Unit, attachTo: (DataFile, String) => DataFile,
+      newData: Option[DataFrame], partitionBy: Seq[String]): Snapshot = {
+    val maxDepth = properties.get("write.merge-on-read.max-delete-files")
+      .map(_.toInt).getOrElse(8)
+    val overFiles = cur.files.filter(f => hit(f) && depth(f) >= maxDepth)
+    val overPaths = overFiles.map(_.path).toSet
+    val payload = (newData ++ Option.when(overFiles.nonEmpty)(survivors(overFiles)))
+      .reduceOption(_ unionByName _)
+    store.mkdirs(deletesDir)
+    val dir = store.render(new HPath(deletesDir, s"$kind-${UUID.randomUUID().toString.take(12)}"))
+    writeDeletes(dir)
     def attach(parent: Option[Snapshot]): Seq[DataFile] = {
-      // DRIFT GUARD: affected/overPaths and the rewrite payload were all
-      // derived from `cur` — a cross-process commit that moved the head
-      // (e.g. a compaction replacing an over-depth file) would make the
-      // attach double-commit rewritten rows; recompute from scratch instead
-      if (!parent.map(_.id).contains(cur.id)) throw Icebox.StaleCommitState
+      // DRIFT GUARD: the hit set, the over-depth files and the rewrite were
+      // all derived from `cur` — if a cross-process commit moved the head
+      // (a compaction replacing an over-depth file, an append whose rows
+      // match a deleted key), attaching against the new parent would
+      // double-commit rewritten rows or let matching rows escape the
+      // delete; recompute everything against the new head instead. It
+      // also keeps the attach list to files that existed at `cur`: this
+      // commit's own new files never carry its delete (sequence semantics)
+      if (!parent.map(_.id).contains(cur.id)) throw IceboxCommit.StaleCommitState
       parent.map(_.files).getOrElse(Nil).flatMap {
         case f if overPaths(f.path) => None // replaced by this commit's rewrite
-        case f if affected(pathOnly(f.path)) => Some(f.copy(
-          deletes = f.deletes :+ dir,
-          deleteRows = // unknown stays unknown; never fabricate exactness
-            if (f.deleteRows < 0L) -1L
-            else f.deleteRows + affectedCounts(pathOnly(f.path))))
+        case f if hit(f) => Some(attachTo(f, dir))
         case f => Some(f)
       }
     }
-    val payload: Option[DataFrame] = (newData, rewritten) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b)             => a.orElse(b)
-    }
-    val payloadParts = if (partitionBy.nonEmpty) partitionBy else partitionColumns
     payload match {
-      case None => commitMetaResolved(op, attach(_), schemaJson)
-      case Some(df) => commit(df, payloadParts, op) { (parent, newFiles) =>
-        attach(parent) ++ newFiles
-      }
+      case None => commits.publish(op, attach, _ => cur.schemaJson)
+      // rewritten rows land in the table's current layout even when the
+      // caller (deleteByKeys) passes no partitioning
+      case Some(df) =>
+        commit(df, if (partitionBy.nonEmpty) partitionBy else currentPartitionSpec, op) {
+          (parent, newFiles) => attach(parent) ++ newFiles
+        }
     }
-    }
-  }
-
-  /** Write `keys` — distinct key tuples whose column set IS the equality
-    * columns — as ONE equality-delete parquet dir under `deletes/` and
-    * return its path. Small by construction (one CDC batch's keys), so the
-    * key set is usually driver-held and seeds the read-side key cache
-    * ([[EqualityDeletes.write]]).
-    */
-  private def writeEqDeleteFile(keys: DataFrame): String = {
-    store.mkdirs(deletesDir)
-    val dir = store.render(new HPath(deletesDir, s"eqdelete-${UUID.randomUUID().toString.take(12)}"))
-    EqualityDeletes.write(keys, dir)
-    dir
   }
 
   /** Build the "provably holds NONE of the batch's keys" predicate over
@@ -2359,31 +1893,27 @@ final class Icebox(val tableDir: String) {
         IceboxFileIndex.scan(spark, this, cur.files.filterNot(disjoint), cur.schemaJson)
     }
 
-  /** EQUALITY-delete commit (Iceberg v2's other merge-on-read delete type):
-    * records `keys` as an equality-delete file attached to every data file
-    * that existed when the deleter read the table — minus files whose
-    * manifest stats PROVE they contain no batch key — and, for
-    * merge-on-read upsert, appends `newData`'s files in the SAME atomic
-    * snapshot. No data file is read or rewritten: a CDC upsert/delete costs
-    * one tiny parquet write regardless of table size. Readers anti-join the
-    * keys away ([[Icebox.applyEqualityDeletes]]); compaction materializes.
-    *
-    * Sequence semantics live in the attach list: `newData`'s own files and
-    * any concurrently committed append are NOT attached (the pre-existing
-    * file set is captured before the optimistic-commit loop), so re-inserts
-    * of a deleted key survive.
+  /** EQUALITY-delete commit (Iceberg v2's other merge-on-read delete type,
+    * [[commitMergeOnRead]]): records `keys` as an equality-delete file
+    * attached to every data file of the head the deleter read — minus files
+    * whose manifest stats and blooms PROVE they contain no batch key — and,
+    * for merge-on-read upsert, appends `newData`'s files in the SAME atomic
+    * snapshot. A CDC upsert/delete costs one tiny parquet write regardless
+    * of table size. Readers filter the keys away
+    * ([[Icebox.applyEqualityDeletes]]); compaction materializes. Neither
+    * `newData`'s own files nor a concurrently committed append are
+    * attached, so re-inserts of a deleted key survive.
     */
   private[graft] def commitEqualityDeletes(op: String, keys: DataFrame,
       newData: Option[DataFrame] = None, partitionBy: Seq[String] = Nil,
-      expectHeadId: Long = -2L): Snapshot =
-      retryOnStaleHead {
+      expectHeadId: Long = -2L): Snapshot = IceboxCommit.retryingStaleHead {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     // expected-head contract: the caller derived `keys`/`newData` from a
     // specific head snapshot — if ANY commit (including a concurrent run
     // of the same caller) moved the head past it, publishing would apply
     // a stale computation; SupersededCommit escapes the internal retry so
     // the caller re-runs its whole cycle
-    if (expectHeadId != -2L && cur.id != expectHeadId) throw Icebox.SupersededCommit
+    if (expectHeadId != -2L && cur.id != expectHeadId) throw IceboxCommit.SupersededCommit
     val tableCols = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType].fieldNames.toSet
     val logicalKeyCols = keys.columns.toSeq
     require(logicalKeyCols.nonEmpty && logicalKeyCols.forall(tableCols.contains),
@@ -2392,58 +1922,13 @@ final class Icebox(val tableDir: String) {
     // join runs below the logical aliasing, and a later column rename must
     // not orphan older delete files
     val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
-    val preExisting = cur.files.map(_.path).toSet
     val disjoint = keyDisjoint(cur.files, keysPhys)
-    // READ-AMPLIFICATION BOUND: every attached eq-delete adds a membership
-    // test (a key join, for an oversize key set) to reads of that file, so
-    // depth must not grow without limit on a hot file. Files whose depth
-    // would EXCEED `write.merge-on-read.max-delete-files` are rewritten
-    // copy-on-write in this same commit (all stacked deletes + the new keys
-    // applied), resetting their depth to zero — the hybrid that keeps O(batch) writes for the common case
-    // and bounded delete fan-in forever (Delta's DV-compaction analog).
-    val maxDepth = properties.get("write.merge-on-read.max-delete-files")
-      .map(_.toInt).getOrElse(8)
-    val wouldAttach = cur.files.filter(f => !disjoint(f))
-    val overFiles = wouldAttach.filter(_.eqDeletes.size >= maxDepth)
-    val overPaths = overFiles.map(_.path).toSet
-    val rewritten: Option[DataFrame] =
-      if (overFiles.isEmpty) None
-      else {
-        val spark = keys.sparkSession
-        // survivors of the over-depth files: stacked deletes applied by the
-        // read, the NEW keys anti-joined here
-        Some(IceboxFileIndex.scan(spark, this, overFiles, cur.schemaJson)
-          .join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"))
-      }
-    val dir = writeEqDeleteFile(keysPhys)
-    def attach(parent: Option[Snapshot]): Seq[DataFile] = {
-      // DRIFT GUARD: preExisting/overPaths and the rewrite payload were all
-      // derived from `cur` — if a cross-process commit moved the head (a
-      // compaction already replacing an over-depth file, an append whose
-      // rows match a batch key), attaching against the new parent would
-      // double-commit rewritten rows or let matching rows escape the
-      // delete; recompute everything against the new head instead
-      if (!parent.map(_.id).contains(cur.id)) throw Icebox.StaleCommitState
-      parent.map(_.files).getOrElse(Nil).flatMap {
-        case f if overPaths(f.path) => None // replaced by this commit's rewrite
-        case f if preExisting(f.path) && !disjoint(f) =>
-          Some(f.copy(eqDeletes = f.eqDeletes :+ dir))
-        case f => Some(f)
-      }
-    }
-    val payload: Option[DataFrame] = (newData, rewritten) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b)             => a.orElse(b)
-    }
-    // rewritten rows must land in the table's partition layout even when
-    // the caller (deleteByKeys) passes no partitioning
-    val payloadParts = if (partitionBy.nonEmpty) partitionBy else partitionColumns
-    payload match {
-      case None => commitMetaResolved(op, attach(_), cur.schemaJson)
-      case Some(df) => commit(df, payloadParts, op) { (parent, newFiles) =>
-        attach(parent) ++ newFiles
-      }
-    }
+    commitMergeOnRead(op, cur, f => !disjoint(f), _.eqDeletes.size,
+      // stacked deletes applied by the read, the NEW keys anti-joined
+      survivors = overFiles => IceboxFileIndex.scan(keys.sparkSession, this, overFiles,
+        cur.schemaJson).join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"),
+      kind = "eqdelete", writeDeletes = EqualityDeletes.write(keysPhys, _),
+      attachTo = (f, dir) => f.copy(eqDeletes = f.eqDeletes :+ dir), newData, partitionBy)
   }
 
   /** CDC hard-delete by key: remove every row whose key tuple appears in
@@ -2475,17 +1960,9 @@ final class Icebox(val tableDir: String) {
   private def pathOnly(s: String): String =
     new org.apache.hadoop.fs.Path(s).toUri.getPath
 
-  /** Re-run `body` when a merge-on-read commit observes that the head moved
-    * past the state its delete computation captured (cross-process only —
-    * in-process commits serialize on the handle). Each retry recomputes
-    * everything against the new head; data files written by an abandoned
-    * attempt become orphans and are collected by [[removeOrphans]].
-    */
-  private[graft] def retryOnStaleHead[T](body: => T): T =
-    Icebox.retryingStaleHead(body)
-
-  /** Write `df` as a fresh commit dir, then commit the snapshot whose file
-    * set is derived by `resolve(parent, newFiles)`.
+  /** Write `df` as a fresh commit dir, then publish the snapshot whose
+    * file set is derived by `resolve(parent, newFiles)`
+    * ([[IceboxCommit.publish]]).
     */
   private def commit(df0: DataFrame, partitionBy: Seq[String], op: String,
       collectStats: Seq[String] = Nil, onBranch: Option[String] = None,
@@ -2643,19 +2120,6 @@ final class Icebox(val tableDir: String) {
       else buildFileSketches(df.sparkSession, listedRaw.map(_.path), sketchCols,
         props.get("sketch.ndv.precision").map(_.toInt)
           .getOrElse(graft.functions.Hll.DefaultP))
-    // Exact frequency index (`freq.columns`, usually set via analyzeFreq):
-    // sticky exactly like the NDV sketches above, so one ANALYZE keeps the
-    // exact (value, count) table servable across appends at O(new files)
-    val freqSticky = base.map(_.files.flatMap(_.sketches.keys)
-      .filter(_.startsWith("freq:")).map(_.stripPrefix("freq:")).distinct
-      .filter(df.columns.contains)).getOrElse(Nil)
-    val freqCols = (props.get("freq.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .map(phys).filter(df.columns.contains) ++ freqSticky).distinct
-    val freqShas: Map[String, Map[String, String]] =
-      if (freqCols.isEmpty) Map.empty
-      else buildFileFreqs(df.sparkSession, listedRaw.map(_.path), freqCols,
-        props.get("freq.max-values").map(_.toInt).getOrElse(256))
     val (emptyFiles, keptRaw) = listedRaw.partition(f =>
       meta.get(f.path).exists(_._1 == 0L))
     // ZERO-ROW part files (an empty upstream partition can emit one):
@@ -2670,10 +2134,9 @@ final class Icebox(val tableDir: String) {
         f.path, (-1L, Map.empty[String, (String, String)], Map.empty[String, Long]))
       f.copy(rows = rows, stats = stats, nullCounts = nulls,
         blooms = bloomShas.getOrElse(pathOnly(f.path), Map.empty),
-        sketches = sketchShas.getOrElse(pathOnly(f.path), Map.empty) ++
-          freqShas.getOrElse(pathOnly(f.path), Map.empty))
+        sketches = sketchShas.getOrElse(pathOnly(f.path), Map.empty))
     }
-    commitMetaResolved(op, parent => resolve(parent, newFiles), schemaJsonStored, onBranch,
+    commits.publish(op, parent => resolve(parent, newFiles), _ => schemaJsonStored, onBranch,
       alsoSetProperties)
   }
 
@@ -2748,7 +2211,7 @@ final class Icebox(val tableDir: String) {
         .withMetadata(f.metadata)
         .putString(Icebox.PhysicalKey, Icebox.physicalName(f)).build())
     val next = StructType(schema.fields.map(x => if (x eq f) renamed else x))
-    val snap = commitMetaResolved("alter", p => p.map(_.files).getOrElse(Nil), next.json)
+    val snap = commits.publish("alter", p => p.map(_.files).getOrElse(Nil), _ => next.json)
     // an evolved identity spec (`partition.columns`) speaks LOGICAL names —
     // carry the rename, or the next append would auto-apply a ghost column
     // and die AFTER the schema commit landed. The property write follows
@@ -2782,7 +2245,7 @@ final class Icebox(val tableDir: String) {
     require(!currentPartitionSpec.exists(_.equalsIgnoreCase(name)),
       s"cannot drop $name: named by the evolved partition.columns spec")
     val next = StructType(schema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    commitMetaResolved("alter", p => p.map(_.files).getOrElse(Nil), next.json)
+    commits.publish("alter", p => p.map(_.files).getOrElse(Nil), _ => next.json)
   }
 
   /** Add a nullable column — metadata-only: files written before it read
@@ -2800,8 +2263,8 @@ final class Icebox(val tableDir: String) {
           new org.apache.spark.sql.types.MetadataBuilder()
             .putString(Icebox.PhysicalKey, s"${name}__r${currentSnapshotId + 1}").build())
       else StructField(name, dataType, nullable = true)
-    commitMetaResolved("alter", p => p.map(_.files).getOrElse(Nil),
-      StructType(schema.fields :+ field).json)
+    commits.publish("alter", p => p.map(_.files).getOrElse(Nil),
+      _ => StructType(schema.fields :+ field).json)
   }
 
   /** Widen a column's type in place — metadata-only. Allowed promotions are
@@ -2836,18 +2299,9 @@ final class Icebox(val tableDir: String) {
     }
     val next = StructType(schema.fields.map(x =>
       if (x eq f) x.copy(dataType = newType) else x))
-    commitMetaResolved("alter", p => p.map(_.files).getOrElse(Nil), next.json)
+    commits.publish("alter", p => p.map(_.files).getOrElse(Nil), _ => next.json)
   }
 
-  /** Metadata commit with optimistic concurrency across table handles: the
-    * snapshot id is CLAIMED by atomically creating `<id>.json` (CREATE_NEW)
-    * — two processes/handles racing on the same parent cannot both win an
-    * id; the loser observes the new head, RE-RESOLVES its file set on top
-    * of it (so a concurrent commit's files are never dropped from an
-    * append), and retries — Iceberg's commit model. The manifest written is
-    * the delta vs the parent unless a full checkpoint is due. Single-handle
-    * writes also stay `synchronized` for in-process callers.
-    */
   /** Metadata-only commit: a new snapshot with the SAME file set whose op
     * string carries a marker (e.g. a materialized view advancing its
     * processed-source cursor past data-neutral commits like compactions).
@@ -2855,117 +2309,11 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def commitMarker(op: String, expectHeadId: Long = -2L): Snapshot = {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
-    commitMetaResolved(op, { parent =>
+    commits.publish(op, { parent =>
       if (expectHeadId != -2L && !parent.map(_.id).contains(expectHeadId))
-        throw Icebox.SupersededCommit
+        throw IceboxCommit.SupersededCommit
       parent.map(_.files).getOrElse(Nil)
-    }, cur.schemaJson)
-  }
-
-  private def commitMetaResolved(op: String, resolve: Option[Snapshot] => Seq[DataFile],
-      schemaJson: String, onBranch: Option[String] = None,
-      alsoSetProperties: Map[String, String] = Map.empty): Snapshot =
-    commitMetaResolvedFn(op, resolve, _ => schemaJson, onBranch, alsoSetProperties)
-
-  /** Core of the metadata commit loop. `schemaJsonOf` is re-evaluated
-    * against the freshly-resolved parent on EVERY retry, so a commit whose
-    * schema should just carry the head's schema forward (analyze, rollup
-    * refresh) names the schema of the snapshot it actually lands on — not
-    * one captured before a long scan, which would silently revert a
-    * concurrent ALTER TABLE.
-    *
-    * `alsoSetProperties` merges into the table properties INSIDE the same
-    * lock window that publishes the head, AFTER the pointer moves — one
-    * commit carries both, sparing a second fsync-bearing lock/write cycle
-    * (the dedup ingest's covered-marker advance). A crash between pointer
-    * and props leaves the properties STALE relative to the published
-    * commit, which every rider must tolerate (the covered marker does:
-    * stale = conservative re-band of the delta, never under-coverage).
-    */
-  private def commitMetaResolvedFn(op: String, resolve: Option[Snapshot] => Seq[DataFile],
-      schemaJsonOf: Option[Snapshot] => String,
-      onBranch: Option[String] = None,
-      alsoSetProperties: Map[String, String] = Map.empty): Snapshot = this.synchronized {
-    store.mkdirs(snapshotsDir)
-    var attempt = 0
-    // Snapshot ids are claimed across ALL lineages by CREATE_NEW on
-    // `<id>.json`, so a collision has two causes: a concurrent commit on
-    // OUR lineage (head moved — re-resolve on top of it) or a commit on
-    // ANOTHER lineage that took the number (head unchanged — bump the
-    // candidate id past it; ids need not be consecutive, parentId carries
-    // the lineage).
-    var bumpId = 0L
-    while (attempt < 1000) {
-      val parent = onBranch match {
-        case Some(b) => Some(branchSnapshot(b))
-        case None    => currentSnapshot
-      }
-      val id = math.max(parent.map(_.id + 1).getOrElse(0L), bumpId)
-      val (m, canonical) = buildManifest(id, parent, op, resolve(parent), schemaJsonOf(parent))
-      val claimed = store.createNew(manifestPath(id),
-        manifestJson(m).getBytes(StandardCharsets.UTF_8))
-      if (!claimed) { attempt += 1; bumpId = id + 1 }
-      if (claimed) {
-        val published = onBranch match {
-          case None =>
-            // publish the main head ONLY if it still equals our parent —
-            // a guarded compare-and-set under the table lock. Snapshot ids
-            // are no longer consecutive per lineage (branches share the id
-            // space), so the id claim alone doesn't linearize main commits:
-            // without this check, two same-parent committers could both
-            // claim (different) ids and the second _current move would
-            // orphan the first commit.
-            val expected = parent.map(_.id).getOrElse(-1L)
-            val ok = withTableLock {
-              if (currentSnapshotId != expected) false
-              else {
-                store.atomicReplace(currentPtr, id.toString.getBytes(StandardCharsets.UTF_8))
-                // rider properties: same lock claim, pointer FIRST (see
-                // the method doc's crash contract); withTableLock is not
-                // reentrant, so write the props file inline here
-                if (alsoSetProperties.nonEmpty) {
-                  val merged = properties ++ alsoSetProperties
-                  val node = mapper.createObjectNode()
-                  merged.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-                  store.atomicReplace(propsPath, mapper.writeValueAsBytes(node))
-                }
-                true
-              }
-            }
-            if (!ok) { // head moved: release the claim, rebuild on the new head
-              store.deleteIfExists(manifestPath(id))
-              attempt += 1; bumpId = id + 1
-            }
-            ok
-          case Some(b) =>
-            // advance the branch pointer ONLY if it still points at our
-            // parent (guarded read-merge-write under the properties lock);
-            // a concurrent branch commit wins the race and we re-resolve
-            val expected = parent.map(_.id.toString)
-            var ok = false
-            updateProperties { props =>
-              if (props.get(s"$BranchPrefix$b") != expected) props
-              else {
-                ok = true
-                props + (s"$BranchPrefix$b" -> id.toString) ++ alsoSetProperties
-              }
-            }
-            if (!ok) { // orphaned claim: release the manifest and retry
-              store.deleteIfExists(manifestPath(id))
-              attempt += 1; bumpId = id + 1
-            }
-            ok
-        }
-        if (published) {
-          commitEvents.incrementAndGet()
-          manifestCache.put(id, m)
-          filesCache.put(id, canonical)
-          return new Snapshot(id, m.parentId, m.timestampMs, op, schemaJsonOf(parent),
-            m.fileCount, m.totalBytes, () => canonical)
-        }
-      }
-    }
-    sys.error(s"commit contention exhausted at $tableDir")
+    }, _ => cur.schemaJson)
   }
 
   /** Per-file metadata for freshly written files: ROW COUNT (always) plus
@@ -3176,9 +2524,6 @@ final class Icebox(val tableDir: String) {
       }.toMap
   }
 
-  private def commitMeta(op: String, files: Seq[DataFile], schemaJson: String): Snapshot =
-    commitMetaResolved(op, _ => files, schemaJson)
-
   private def sha256Hex(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
       .map("%02x".format(_)).mkString
@@ -3195,7 +2540,7 @@ final class Icebox(val tableDir: String) {
     * an untouched partition's shard is recognized by its sha and NOT
     * rewritten). Shard files are immutable once written; a losing commit
     * attempt's shards are either re-referenced by the retry or collected
-    * by expiry's mtime-gated shard GC.
+    * by the mtime-gated [[IceboxCommit.reclaim]].
     */
   private def writeShardedCheckpoint(
       resolved: Seq[DataFile]): (Seq[Icebox.ShardRef], Seq[DataFile]) = {
@@ -3257,7 +2602,7 @@ final class Icebox(val tableDir: String) {
     * so the in-memory snapshot matches what a fresh handle reconstructs by
     * replaying the chain from disk.
     */
-  private def buildManifest(id: Long, parent: Option[Snapshot], op: String,
+  private[table] def buildManifest(id: Long, parent: Option[Snapshot], op: String,
       resolved: Seq[DataFile], schemaJson: String): (Icebox.Manifest, Seq[DataFile]) = {
     val parentFiles = parent.map(_.files).getOrElse(Nil)
     val parentDepth = parent.map(p => manifest(p.id).deltaDepth).getOrElse(0)
@@ -3437,7 +2782,7 @@ final class Icebox(val tableDir: String) {
           else if (deletes.nonEmpty) -1L else 0L)
     }.toSeq).getOrElse(Nil)
 
-  private def manifestJson(m: Icebox.Manifest): String = {
+  private[table] def manifestJson(m: Icebox.Manifest): String = {
     val root = mapper.createObjectNode()
     root.put("id", m.id).put("parentId", m.parentId)
       .put("timestampMs", m.timestampMs).put("operation", m.operation)
@@ -3466,7 +2811,7 @@ final class Icebox(val tableDir: String) {
   }
 
   /** Parse (and cache) the manifest of snapshot `id`. */
-  private def manifest(id: Long): Icebox.Manifest = {
+  private[table] def manifest(id: Long): Icebox.Manifest = {
     val cached = manifestCache.get(id)
     if (cached != null) return cached
     val node = mapper.readTree(store.readBytes(manifestPath(id)))
@@ -3660,50 +3005,12 @@ object Icebox {
     * write under a task-unique temp name, rename into place, return the
     * sha. Racing writers of the same sha produce byte-identical files, so
     * a failed rename-because-exists is success; a crashed task leaves only
-    * a temp file the expiry GC removes as an unreferenced side file.
+    * a temp file [[IceboxCommit.reclaim]] removes as an unreferenced side
+    * file.
     */
   private[table] def writeBloomSideFile(conf: org.apache.hadoop.conf.Configuration,
       bloomsDir: String, bytes: Array[Byte]): String =
     writeSideFile(conf, bloomsDir, bytes, "bloom")
-
-  /** Shared content-addressed side-file write (blooms, NDV sketches). */
-  /** Pointer value marking a file whose distinct count exceeded the
-    * per-file frequency cap — serving refuses on sight of it.
-    */
-  private[table] val FreqOverflow = "!"
-
-  /** Frequency-index value types: ones whose rendered string round-trips
-    * exactly (integrals, float/double via their shortest-repr toString,
-    * decimals via plain string, raw strings).
-    */
-  private[table] def freqRenderable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | StringType => true
-    case _: org.apache.spark.sql.types.DecimalType => true
-    case _ => false
-  }
-
-  private[table] def freqRender(v: Any, dt: DataType): String = (v, dt) match {
-    case (d: java.math.BigDecimal, _) => d.toPlainString
-    case (d: BigDecimal, _) => d.bigDecimal.toPlainString
-    case _ => v.toString
-  }
-
-  private[table] def freqSerialize(table: Seq[(String, Long)]): Array[Byte] = {
-    val m = new ObjectMapper()
-    val root = m.createObjectNode()
-    val vs = root.putArray("v"); val cs = root.putArray("c")
-    table.foreach { case (v, c) => vs.add(v); cs.add(c) }
-    m.writeValueAsBytes(root)
-  }
-
-  private[table] def freqDeserialize(bytes: Array[Byte]): Option[Seq[(String, Long)]] =
-    scala.util.Try {
-      val root = new ObjectMapper().readTree(bytes)
-      val vs = root.get("v"); val cs = root.get("c")
-      require(vs != null && cs != null && vs.size == cs.size)
-      (0 until vs.size).map(i => vs.get(i).asText -> cs.get(i).asLong)
-    }.toOption
 
   private[table] def writeSideFile(conf: org.apache.hadoop.conf.Configuration,
       dirStr: String, bytes: Array[Byte], ext: String): String = {
@@ -3723,51 +3030,6 @@ object Icebox {
 
   /** A named snapshot ref: `kind` is "tag" (immutable) or "branch" (writable). */
   final case class Ref(kind: String, snapshotId: Long)
-
-  /** Control signal thrown by a merge-on-read commit's resolve closure when
-    * the head moved past the state its delete computation captured; the
-    * commit recomputes against the new head (see `retryOnStaleHead`).
-    */
-  private[graft] object StaleCommitState extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  /** Thrown by commits carrying an `expectHeadId` when the table head is no
-    * longer that snapshot: the caller's whole read-compute-commit cycle was
-    * superseded by a concurrent committer and must re-run from its own
-    * entry point. Deliberately NOT caught by `retryOnStaleHead` — the
-    * recompute lives at the caller (e.g. a materialized-view refresh
-    * re-reading its cursor, where the concurrent refresh usually makes the
-    * re-run a NoOp).
-    */
-  private[graft] object SupersededCommit extends RuntimeException("superseded commit") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  /** Static face of the stale-head retry loop for callers outside the
-    * handle (the SQL DML executors re-run their whole classify → rewrite
-    * computation when a cross-process commit moves the head mid-statement).
-    * Jittered linear backoff: each recomputation is a Spark job, so under a
-    * maintenance storm (compactions racing deletes) immediate retries can
-    * ping-pong; the pause lets the competing committer finish. Exhaustion
-    * fails LOUDLY — never with a wrong commit.
-    */
-  private[graft] def retryingStaleHead[T](body: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case StaleCommitState if attempt < 20 =>
-          attempt += 1
-          Thread.sleep(math.min(500L, 20L * attempt) +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(40))
-        case StaleCommitState =>
-          sys.error("commit retries exhausted: the table head kept moving during " +
-            "recomputation (concurrent maintenance storm) — rerun when quieter")
-      }
-    }
-    sys.error("unreachable")
-  }
 
   /** StructField metadata key holding a column's PHYSICAL (on-disk) name.
     * Column-mapping schema evolution (Delta's name-mapping / Iceberg's
@@ -3825,11 +3087,19 @@ object Icebox {
   private[graft] def antiJoinDeletes(spark: SparkSession, df: DataFrame,
       deleteDirs: Seq[String], fpCol: String, posCol: String): DataFrame = {
     if (deleteDirs.isEmpty) return df
-    val dels = spark.read.parquet(deleteDirs: _*)
+    val dels = readPositionDeletes(spark, deleteDirs)
       .select(normPathCol(col("file_path")).as("__del_fp"), col("pos").as("__del_pos"))
     df.join(dels,
       normPathCol(df(fpCol)) === col("__del_fp") && df(posCol) === col("__del_pos"), "left_anti")
   }
+
+  /** The `(file_path, pos)` rows of position-delete dirs, read with the
+    * schema they are written with (`_metadata.file_path` string,
+    * `_metadata.row_index` long), so building a read's plan runs no
+    * schema-inference job.
+    */
+  private[table] def readPositionDeletes(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema("file_path STRING, pos BIGINT").parquet(dirs: _*)
 
   /** A path's `scheme:[//authority]` prefix (see [[antiJoinDeletes]] —
     * position-delete files on disk hold `file:`-prefixed paths, manifests

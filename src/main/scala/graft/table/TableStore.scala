@@ -296,4 +296,10 @@ object TableStore {
     * refusal. local/hdfs/conditional-PUT-S3 never need declaring.
     */
   val AtomicSchemesKey = "graft.cas.atomic.schemes"
+
+  /** Whether `name` is an [[TableStore.atomicReplace]] temp
+    * (`.<target>.tmp.<id>`): residue once its writer is gone.
+    */
+  private[table] def isTemp(name: String): Boolean =
+    name.startsWith(".") && name.contains(".tmp.")
 }

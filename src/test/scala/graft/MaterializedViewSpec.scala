@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.MaterializedView
-import graft.table.Icebox
+import graft.table.{Icebox, IceboxCommit}
 
 /** Incremental materialized aggregate: O(delta) refresh from the change
   * feed, exactly-once cursor in the commit op string, merge-on-read
@@ -220,10 +220,10 @@ class MaterializedViewSpec extends SparkSpec {
     // the loser's commits, pinned to the superseded head, must ABORT —
     // not attach a stale delta on top of the winner's state
     intercept[RuntimeException](mv.commitMarker("mv-refresh:m:999",
-      expectHeadId = staleHead)) shouldBe Icebox.SupersededCommit
+      expectHeadId = staleHead)) shouldBe IceboxCommit.SupersededCommit
     intercept[RuntimeException](mv.commitEqualityDeletes("mv-refresh:m:999",
       Seq(0).toDF("g"), None, Nil, expectHeadId = staleHead)) shouldBe
-      Icebox.SupersededCommit
+      IceboxCommit.SupersededCommit
     // with the CURRENT head the same commit goes through (an op OUTSIDE
     // the mv-refresh marker namespace, so the cursor stays untouched)
     mv.commitMarker("maintenance-noop", expectHeadId = mv.currentSnapshotId)
@@ -395,7 +395,7 @@ class MaterializedViewSpec extends SparkSpec {
     mv.commitMarker("maintenance-noop", expectHeadId = staleHead)
     intercept[RuntimeException](mv.commitEqualityDeletes("mv-refresh:j:9:9",
       Seq("g1").toDF("g"), None, Nil, expectHeadId = staleHead)) shouldBe
-      Icebox.SupersededCommit
+      IceboxCommit.SupersededCommit
     // the operator's own path re-enters on the fresh head and lands exactly
     joinMv(fact, dim, mv) shouldBe MaterializedView.Incremental
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))

@@ -49,6 +49,16 @@ class MergeOnReadSpec extends SparkSpec {
     t.read(spark).agg(min("id")).as[Long].head() shouldBe 3L
   }
 
+  test("building the read of a table with position deletes runs no Spark job") {
+    val (t, name) = freshTable("mor-plan")
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    DmlSql.delete(spark, s"DELETE FROM $name WHERE id = 1")
+    DmlSql.delete(spark, s"DELETE FROM $name WHERE id = 2")
+    val fresh = Icebox(t.tableDir)
+    jobsOf(fresh.read(spark)) shouldBe 0
+    fresh.read(spark).count() shouldBe 78L
+  }
+
   test("position-delete depth is bounded: over-threshold files rewrite copy-on-write") {
     val (t, name) = freshTable("mor-depth")
     t.setProperties(Map("write.delete.mode" -> "merge-on-read",

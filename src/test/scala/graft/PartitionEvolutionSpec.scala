@@ -76,6 +76,23 @@ class PartitionEvolutionSpec extends SparkSpec {
     }
   }
 
+  test("merge-on-read UPDATE after evolving to unpartitioned writes the current layout") {
+    import graft.sql.{DmlSql, MergeSql}
+    val t = Icebox(tmpDir("pevo-mor-update"))
+    t.append((1 to 30).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"), Seq("grp"))
+    t.setPartitionSpec(Nil)
+    t.append((31 to 40).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp"))
+    t.setProperties(Map("write.update.mode" -> "merge-on-read"))
+    MergeSql.register("pevo_mor_update", t)
+    val before = t.currentSnapshot.get.files.map(_.path).toSet
+    DmlSql.update(spark, "UPDATE pevo_mor_update SET grp = 'gx' WHERE id IN (2, 35)")
+    val added = t.currentSnapshot.get.files.filterNot(f => before(f.path))
+    added should not be empty
+    added.flatMap(_.partition.keys) shouldBe empty
+    t.read(spark).filter($"grp" === "gx").select("id").as[Long].collect().sorted shouldBe
+      Array(2L, 35L)
+  }
+
   test("write.distribution-mode=hash bounds files per partition") {
     val t = Icebox(tmpDir("pevo-dist"))
     val df = (1 to 4000).map(i => (i.toLong, s"p${i % 4}")).toDF("id", "p")

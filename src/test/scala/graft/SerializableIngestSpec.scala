@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.table.Icebox
+import graft.table.{Icebox, IceboxCommit}
 
 /** Serializable dedup ingest: the probe→append TOCTOU window under
   * concurrent writers is closed by head-CAS appends (`appendIfHead`), and
@@ -32,7 +32,7 @@ class SerializableIngestSpec extends SparkSpec {
     val ex = intercept[RuntimeException] {
       t.appendIfHead(Seq((3L, "c")).toDF("id", "s"), expectHeadId = head)
     }
-    assert(ex eq Icebox.SupersededCommit)
+    assert(ex eq IceboxCommit.SupersededCommit)
     t.read(spark).count() shouldBe 2L
   }
 
