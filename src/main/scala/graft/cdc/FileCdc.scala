@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.table.Icebox
 import graft.operators.Upsert
 
@@ -48,9 +49,7 @@ object FileCdc {
       lastCheckTime: Long,
       processedFiles: Seq[String],
       totalFilesProcessed: Long,
-      partitions: Map[String, PartitionState]) {
-    def isInitial: Boolean = lastCheckTime == 0 && processedFiles.isEmpty
-  }
+      partitions: Map[String, PartitionState])
 
   object Checkpoint {
     val initial: Checkpoint = Checkpoint(0L, Nil, 0L, Map.empty)
@@ -224,8 +223,12 @@ object FileCdc {
 
     val byPartition = changed.groupBy(f => f.partition)
     val allByPartition = files.groupBy(f => extractPartition(f.path, partitionPrefix))
-    var rows = 0L
     val touched = Seq.newBuilder[String]
+    // the row count rides the write's own job; it is not the committed
+    // files' rows, which on a mixed-generation table also count the rows
+    // `overwritePartitions` carries over
+    val counted = Observation()
+    def observed(df: DataFrame): DataFrame = df.observe(counted, count(lit(1)).as("rows"))
 
     val hasPartitions = byPartition.keys.exists(_.isDefined)
     if (hasPartitions) {
@@ -235,14 +238,13 @@ object FileCdc {
       val df = spark.read.format(format)
         .option("basePath", sourceDir)
         .load(partFiles.map(_.path): _*)
-      rows = df.count()
-      table.overwritePartitions(df, Seq(partitionPrefix))
+      table.overwritePartitions(observed(df), Seq(partitionPrefix))
       touched ++= touchedVals
     } else {
-      val df = spark.read.format(format).load(changed.map(_.path): _*)
-      rows = df.count()
+      val df = observed(spark.read.format(format).load(changed.map(_.path): _*))
       if (table.exists) table.append(df) else table.overwrite(df)
     }
+    val rows = counted.get("rows").asInstanceOf[Long]
 
     store.save(advanceCheckpoint(checkpoint, changed, files, method,
       partitionPrefix, System.currentTimeMillis()))

@@ -449,8 +449,8 @@ object IceboxFileIndex {
 
   /** BUCKETED (shuffle-free) reads: when the table's spec carries exactly
     * one `bucket(n, col)` transform and EVERY live data file's name parses
-    * that file's bucket id (stamped at commit — see
-    * `Icebox.renameBucketedFiles`), the relation declares a V1
+    * that file's bucket id (named so at creation — see
+    * `DataFileCommitter`), the relation declares a V1
     * `BucketSpec(n, col)`. The scan then reports
     * `HashPartitioning(col, n)` — bit-identical to the dir derivation
     * `pmod(hash(col), n)` — so a join of two tables co-bucketed on the

@@ -101,7 +101,9 @@ private[graft] object EqualityDeletes {
     * that fits [[EqKeyCacheMaxRows]] is collected ONCE, written from that
     * local copy and admitted to the cache under `dir`, so no reader ever
     * runs a key-file job for it; a larger set is written distributed and
-    * marked as not driver-held.
+    * marked as not driver-held. Spark's committer writes it, not
+    * `DataFileCommitter`: a delete dir is read back as a directory, so a
+    * failed task attempt's file would become visible.
     */
   private[table] def write(keys: DataFrame, dir: String): Unit = {
     val distinct = keys.dropDuplicates()

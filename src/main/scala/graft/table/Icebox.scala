@@ -1118,13 +1118,6 @@ final class Icebox(val tableDir: String) {
     append(df, ts.map(_.name), collectStats)
   }
 
-  /** Overwrite variant of [[appendTransformed]]. */
-  def overwriteTransformed(df: DataFrame, spec: String): Snapshot = {
-    val ts = PartitionTransform.parseSpec(spec)
-    setProperties(Map("partition.spec" -> PartitionTransform.renderSpec(ts)))
-    overwrite(df, ts.map(_.name))
-  }
-
   /** Add any spec-derived hidden partition columns missing from `df` (the
     * write-side derivation every committer shares; sources absent from the
     * frame are skipped — commit's partitioning check catches real misuse).
@@ -1735,6 +1728,8 @@ final class Icebox(val tableDir: String) {
               col("__icx_rw_pos") === col("__del_pos"), "left_anti")
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       },
+      // Spark's committer, not DataFileCommitter: delete dirs are read back as
+      // directories, so a failed task attempt's file would become visible
       kind = "delete", writeDeletes = positions.coalesce(1).write.mode("overwrite").parquet(_),
       attachTo = (f, dir) => f.copy(deletes = f.deletes :+ dir,
         deleteRows = // unknown stays unknown; never fabricate exactness
@@ -1962,7 +1957,12 @@ final class Icebox(val tableDir: String) {
 
   /** Write `df` as a fresh commit dir, then publish the snapshot whose
     * file set is derived by `resolve(parent, newFiles)`
-    * ([[IceboxCommit.publish]]).
+    * ([[IceboxCommit.publish]]). The write is one Spark job through
+    * [[DataFileCommitter]]: each task writes its files under their final
+    * names (bucket-stamped when the spec has one bucket transform) and
+    * returns them with their footer's row count, min/max and null counts,
+    * its zero-row files deleted. Only footer-undecodable stats columns,
+    * blooms and NDV sketches re-read the written files afterwards.
     */
   private def commit(df0: DataFrame, partitionBy: Seq[String], op: String,
       collectStats: Seq[String] = Nil, onBranch: Option[String] = None,
@@ -1994,26 +1994,23 @@ final class Icebox(val tableDir: String) {
         df1.select(df1.columns.toIndexedSeq.map(c => col(c).as(phys(c))): _*)
       else df1
     val partitionByPhys = partitionBy.map(phys)
-    // An append must use either the parent files' layout or the table's
-    // EVOLVED spec (`partition.columns` property) — anything else is a
-    // caller error. Mixed layout generations are supported on read (one
-    // relation per generation), so spec evolution doesn't rewrite history.
-    // Compare case-insensitively on BOTH sides: directory names preserve
-    // the column's written case, so lowercasing only one side spuriously
-    // rejects every append after the first for uppercase partition columns.
-    base.filter(_ => op == "append").foreach { parent =>
-      val existing = parent.files.headOption
-        .map(_.partition.keys.toSeq.map(_.toLowerCase).sorted).getOrElse(Nil)
+    // An append must use the table's current spec: the EVOLVED spec
+    // (`partition.columns` property) if one is set, otherwise the parent's
+    // single layout — anything else is a caller error. Mixed layout
+    // generations are supported on read (one relation per generation), so
+    // spec evolution doesn't rewrite history. Compare case-insensitively on
+    // BOTH sides: directory names preserve the column's written case, so
+    // lowercasing only one side spuriously rejects every append after the
+    // first for uppercase partition columns.
+    base.filter(p => op == "append" && p.files.nonEmpty).foreach { parent =>
+      val expected = properties.get("partition.columns")
+        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(layoutColumns(Some(parent)))
       val mine = partitionByPhys.map(_.toLowerCase).sorted
-      val spec = properties.get("partition.columns")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-          .map(c => phys(c).toLowerCase).sorted)
-      if (parent.files.nonEmpty)
-        require(mine == existing || spec.contains(mine),
-          s"append partitioning ${partitionByPhys.mkString(",")} matches neither the " +
-            s"table layout ${existing.mkString(",")} nor an evolved partition.columns spec")
+      require(mine == expected.map(c => phys(c).toLowerCase).sorted,
+        s"append partitioning ${partitionByPhys.mkString(",")} does not match the table's " +
+          s"current partition spec ${expected.mkString(",")}")
     }
-    store.mkdirs(dataDir)
     val commitId = UUID.randomUUID().toString.take(12)
     val commitDir = new HPath(dataDir, s"$CommitCol=$commitId")
     // rider properties act as if already set: write shaping (sort/bloom/
@@ -2053,18 +2050,8 @@ final class Icebox(val tableDir: String) {
             .map(col): _*)
       case _ => distributed
     }
-    val bloomCols = props.get("write.bloom.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val writer = bloomCols.foldLeft(
-      shaped.write.mode("overwrite")
-        .option("compression", props.getOrElse("write.compression", "zstd"))) { // reference: spark_builder.py:248
-      (w, c) => w.option(s"parquet.bloom.filter.enabled#${phys(c)}", "true")
-    }
-    (if (partitionByPhys.nonEmpty) writer.partitionBy(partitionByPhys: _*) else writer)
-      .parquet(store.render(commitDir))
-    val listedRaw = renameBucketedFiles(listDataFiles(commitDir))
-    // Footer-decodable primitive columns are stats-tracked BY DEFAULT: the
-    // footer pass already runs once per commit for row counts, so their
+    // Footer-decodable primitive columns are stats-tracked BY DEFAULT: each
+    // write task reads its files' footers for row counts anyway, so their
     // min/max is metadata-free — every table gets file skipping and
     // file-pruned DML without writer opt-in (Iceberg records metrics for
     // all columns by default for the same reason). Scan-fallback types
@@ -2078,16 +2065,33 @@ final class Icebox(val tableDir: String) {
     val footerDefaults = df0.schema.fields.toSeq
       .filter(f => Icebox.footerDecodable(f.dataType)).map(f => phys(f.name))
     val statsCols = (collectStats.map(phys) ++ sticky ++ footerDefaults).distinct
-    // ONE footer pass per commit collects row counts (always — COUNT(*) as
-    // a manifest read) AND min/max for footer-decodable stats columns;
-    // only footer-undecodable types pay the data-scan fallback
-    val meta = collectFileStats(df.sparkSession, listedRaw.map(_.path), statsCols, df.schema)
+      .flatMap(c => df.schema.fields.find(_.name.equalsIgnoreCase(c)).map(c -> _.dataType))
+    // footer-undecodable types (decimals, timestamps, nested) can't be
+    // decoded with exact string parity to the scan path: they pay a
+    // data-scan aggregation over the written files
+    val (footerStats, scanStats) = statsCols.partition(c => Icebox.footerDecodable(c._2))
+    val bloomCols = props.get("write.bloom.columns")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val options = Map("compression" -> props.getOrElse("write.compression", "zstd")) ++ // reference: spark_builder.py:248
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#${phys(c)}" -> "true")
+    val bucket = partitionSpec.collect { case b: BucketTransform => b.name -> b.n } match {
+      case Seq(b) => Some(b)
+      case _ => None
+    }
+    val written = DataFileCommitter.write(shaped, store.render(commitDir), partitionByPhys,
+      options, commitId, bucket, footerStats.toMap)
+      .map(f => f.copy(path = store.render(new HPath(f.path))))
+    val scanned =
+      if (scanStats.isEmpty || written.isEmpty) Map.empty[String, Map[String, (String, String)]]
+      else fileStats(df.sparkSession, written.map(_.path), scanStats.map(_._1))
     // Manifest-level bloom index (`manifest.bloom.columns`): per-file
     // membership filters as content-addressed side files, sized from the
-    // EXACT per-file row counts the footer pass just produced. Sticky like
-    // stats columns: once any live file blooms a column, later commits
-    // keep blooming it without re-opting-in, so planning-time point-lookup
-    // pruning stays effective table-wide across appends and compactions.
+    // EXACT per-file row counts the write tasks read from the footers. It
+    // stays a post-write job: sizing needs the largest row count in the
+    // commit, which no single task knows. Sticky like stats columns: once
+    // any live file blooms a column, later commits keep blooming it
+    // without re-opting-in, so planning-time point-lookup pruning stays
+    // effective table-wide across appends and compactions.
     val bloomSticky = base.map(_.files.flatMap(_.blooms.keys).distinct
       .filter(df.columns.contains)).getOrElse(Nil)
     val manifestBloomCols = (props.get("manifest.bloom.columns")
@@ -2096,12 +2100,9 @@ final class Icebox(val tableDir: String) {
     val bloomShas: Map[String, Map[String, String]] =
       if (manifestBloomCols.isEmpty) Map.empty
       else {
-        val maxRows = meta.values.map(_._1).filter(_ > 0) match {
-          case rs if rs.nonEmpty => rs.max
-          case _ => 1L
-        }
+        val maxRows = written.map(_.rows).maxOption.getOrElse(1L)
         val fpp = props.get("manifest.bloom.fpp").map(_.toDouble).getOrElse(0.03)
-        buildFileBlooms(df.sparkSession, listedRaw.map(_.path), manifestBloomCols, maxRows, fpp)
+        buildFileBlooms(df.sparkSession, written.map(_.path), manifestBloomCols, maxRows, fpp)
       }
     // Manifest NDV index (`sketch.ndv.columns`, usually set via ANALYZE
     // TABLE): per-file HyperLogLog sketches as content-addressed side
@@ -2117,25 +2118,13 @@ final class Icebox(val tableDir: String) {
       .map(phys).filter(df.columns.contains) ++ sketchSticky).distinct
     val sketchShas: Map[String, Map[String, String]] =
       if (sketchCols.isEmpty) Map.empty
-      else buildFileSketches(df.sparkSession, listedRaw.map(_.path), sketchCols,
+      else buildFileSketches(df.sparkSession, written.map(_.path), sketchCols,
         props.get("sketch.ndv.precision").map(_.toInt)
           .getOrElse(graft.functions.Hll.DefaultP))
-    val (emptyFiles, keptRaw) = listedRaw.partition(f =>
-      meta.get(f.path).exists(_._1 == 0L))
-    // ZERO-ROW part files (an empty upstream partition can emit one):
-    // never enter the manifest — they hold no data, and a stats-less
-    // empty file would disable metadata-only MIN/MAX for the whole table
-    // ("a stats-less file could hide the extremum" is false when the file
-    // provably has no rows). Delete the physical files too.
-    emptyFiles.foreach(f =>
-      try store.deleteIfExists(new HPath(f.path)) catch { case _: Exception => () })
-    val newFiles = keptRaw.map { f =>
-      val (rows, stats, nulls) = meta.getOrElse(
-        f.path, (-1L, Map.empty[String, (String, String)], Map.empty[String, Long]))
-      f.copy(rows = rows, stats = stats, nullCounts = nulls,
+    val newFiles = written.map(f =>
+      f.copy(stats = f.stats ++ scanned.getOrElse(f.path, Map.empty),
         blooms = bloomShas.getOrElse(pathOnly(f.path), Map.empty),
-        sketches = sketchShas.getOrElse(pathOnly(f.path), Map.empty))
-    }
+        sketches = sketchShas.getOrElse(pathOnly(f.path), Map.empty)))
     commits.publish(op, parent => resolve(parent, newFiles), _ => schemaJsonStored, onBranch,
       alsoSetProperties)
   }
@@ -2316,32 +2305,6 @@ final class Icebox(val tableDir: String) {
     }, _ => cur.schemaJson)
   }
 
-  /** Per-file metadata for freshly written files: ROW COUNT (always) plus
-    * min/max of `cols`, in ONE parquet-footer pass — a few KB of metadata
-    * per file, fanned out over executors — instead of re-scanning the data:
-    * at 100 TB a stat-tracked commit would otherwise pay a second full read
-    * of everything it just wrote. Columns whose footer statistics can't be
-    * decoded with exact string parity to the scan path (decimals,
-    * timestamps, nested types) fall back to the data-scan aggregation; a
-    * column with absent/untrustworthy statistics in any row group yields no
-    * entry (pruning then keeps the file — conservative).
-    */
-  private def collectFileStats(spark: SparkSession, paths: Seq[String], cols: Seq[String],
-      schema: StructType)
-      : Map[String, (Long, Map[String, (String, String)], Map[String, Long])] = {
-    def fieldType(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-    val (footerCols, scanCols) = cols.partition(c => fieldType(c).exists(Icebox.footerDecodable))
-    val fromFooters = footerMeta(spark, paths, footerCols,
-      footerCols.map(c => c -> fieldType(c).get).toMap)
-    val fromScan = if (scanCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
-                   else fileStats(spark, paths, scanCols)
-    paths.map { p =>
-      val (rows, fstats, nulls) = fromFooters.getOrElse(
-        p, (-1L, Map.empty[String, (String, String)], Map.empty[String, Long]))
-      p -> (rows, fstats ++ fromScan.getOrElse(p, Map.empty), nulls)
-    }.toMap
-  }
-
   /** Per-file bloom filters for `cols` (physical names) over a fresh
     * commit's files, written as content-addressed side files under
     * `_snapshots/blooms/<sha256>.bloom` — the manifest entry carries only
@@ -2464,29 +2427,6 @@ final class Icebox(val tableDir: String) {
     val bytes = store.readBytes(p)
     Icebox.sketchCache.put(sha, bytes)
     Some(bytes)
-  }
-
-  /** One executor-fanned footer read per file: block row counts + row-group
-    * min/max for `cols`. No data pages are read.
-    */
-  private def footerMeta(spark: SparkSession, paths: Seq[String], cols: Seq[String],
-      colTypes: Map[String, DataType])
-      : Map[String, (Long, Map[String, (String, String)], Map[String, Long])] = {
-    if (paths.isEmpty) return Map.empty
-    val conf = new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val colsV = cols.toVector
-    // SMALL commits read footers ON THE DRIVER: launching a Spark job costs
-    // more in scheduling than reading a handful of footers does (the
-    // mirror of connectedComponents' driver-vs-distributed threshold), and
-    // every commit pays this pass — ~100 such jobs per bench suite. The
-    // Hadoop FS API works identically from the driver, so remote stores
-    // are covered; commits at 100-TB scale have thousands of files and
-    // take the executor-fanned branch below unchanged.
-    if (paths.size <= Icebox.DriverFooterMax)
-      return paths.map(Icebox.footerMetaOne(conf, colsV, colTypes)).toMap
-    val slices = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism * 2))
-    spark.sparkContext.parallelize(paths, slices)
-      .map(Icebox.footerMetaOne(conf, colsV, colTypes)).collect().toMap
   }
 
   /** Data-scan stats (fallback for footer-undecodable column types) — one
@@ -2636,66 +2576,6 @@ final class Icebox(val tableDir: String) {
         canonical.map(_.sizeBytes).sum, parentDepth + 1, None, added, removedPaths),
         canonical)
     }
-  }
-
-  /** V1-BUCKETED FILE NAMES: when the table's spec carries exactly one
-    * bucket transform, stamp each just-written data file's bucket id (its
-    * `<col>_bucket` dir value — already Spark's `pmod(hash(col), n)`, see
-    * [[PartitionTransform]]) into the file NAME using Spark's bucketed-file
-    * convention (a `_NNNNN` suffix before the extension, the shape
-    * `BucketingUtils.getBucketId` parses). Reads can then declare a V1
-    * `BucketSpec`, and a join or aggregation keyed on the bucket column
-    * runs with ZERO shuffle on this side — at 100 TB the single biggest
-    * exchange eliminated. The rename is commit-private (files are invisible
-    * until the manifest lands) and metadata-only on file:// and HDFS;
-    * object-store renames copy bytes, so `write.bucket-filenames=false`
-    * turns the stamping off (reads just fall back to non-bucketed plans).
-    * A rename failure keeps the original name — the read-side gate admits
-    * bucketed plans only when EVERY live file parses, so a partial stamp
-    * degrades to a normal scan, never to a wrong plan.
-    */
-  private def renameBucketedFiles(files: Seq[DataFile]): Seq[DataFile] = {
-    val bts =
-      try partitionSpec.collect { case b: BucketTransform => b }
-      catch { case _: Exception => Nil }
-    if (bts.size != 1 || properties.get("write.bucket-filenames").contains("false"))
-      return files
-    val b = bts.head
-    files.map { f =>
-      f.partition.get(b.name).flatMap(_.toIntOption) match {
-        case Some(id) if id >= 0 && id < b.n =>
-          val p = new HPath(f.path)
-          val name = p.getName
-          if (Icebox.bucketIdFromName(name).contains(id)) f // already stamped
-          else {
-            val dot = name.indexOf('.')
-            val stamped =
-              if (dot < 0) f"${name}_$id%05d"
-              else f"${name.substring(0, dot)}_$id%05d${name.substring(dot)}"
-            val np = new HPath(p.getParent, stamped)
-            if (store.renamePlain(p, np)) f.copy(path = store.render(np)) else f
-          }
-        case _ => f
-      }
-    }
-  }
-
-  private def listDataFiles(commitDir: HPath): Seq[DataFile] = {
-    if (!store.exists(commitDir)) return Nil
-    val prefix = store.render(commitDir)
-    store.walk(commitDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val rel = store.render(st.getPath).stripPrefix(prefix).stripPrefix("/")
-        val segs = rel.split('/')
-        val partition = segs.dropRight(1).toSeq
-          .filter(_.contains("="))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> unescapePathSegment(v)
-          }.toMap
-        DataFile(store.render(st.getPath), st.getLen, partition)
-      }.sortBy(_.path)
   }
 
   // ------------------------------------------------- manifest serialization
@@ -3157,48 +3037,38 @@ object Icebox {
     */
   private[table] val MaxStringStatBytes = 64
 
-  /** Commits at or below this many files read parquet footers on the
-    * DRIVER instead of launching a Spark job: reading a footer is ~1-5 ms
-    * of metadata IO while a job costs tens of ms of scheduling, and every
-    * commit pays the pass. Large commits (the 100-TB shape) fan out to
-    * executors unchanged.
+  /** One written file's footer → a [[DataFile]] with its size, row count,
+    * and the min/max and null counts of `colTypes`' columns. No data pages
+    * are read. Lives on the OBJECT so the write task's committer captures
+    * only its arguments, never an Icebox instance.
     */
-  private[table] val DriverFooterMax = 16
-
-  /** One file's footer → (rows, min/max per stats column, null counts).
-    * Shared verbatim by the driver fast path and the executor fan-out —
-    * lives on the OBJECT so the executor closure captures only its
-    * arguments, never an Icebox instance.
-    */
-  private[table] def footerMetaOne(conf: org.apache.spark.util.SerializableConfiguration,
-      colsV: Vector[String], colTypes: Map[String, DataType])(p: String)
-      : (String, (Long, Map[String, (String, String)], Map[String, Long])) = {
-    val footer = Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p), conf.value)))(_.getFooter)
+  private[table] def footerMetaOne(conf: org.apache.hadoop.conf.Configuration,
+      colTypes: Map[String, DataType])(p: HPath): DataFile = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+    val footer = Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(in))(_.getFooter)
     val blocks = footer.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
-    val st = colsV.flatMap { c =>
-      val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString.equalsIgnoreCase(c)))
-      val ss = chunks.map(_.getStatistics)
-      if (chunks.size != blocks.size || ss.exists(s => s == null || s.isEmpty)) None
+    def chunksOf(c: String) =
+      blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString.equalsIgnoreCase(c)))
+    val st = colTypes.toSeq.flatMap { case (c, t) =>
+      val ss = chunksOf(c).map(_.getStatistics)
+      if (ss.size != blocks.size || ss.exists(s => s == null || s.isEmpty)) None
       else {
         val nonNull = ss.filter(_.hasNonNullValue)
         if (nonNull.isEmpty) None
-        else Icebox.decodeFooterMinMax(colTypes(c), nonNull).map(c -> _)
+        else Icebox.decodeFooterMinMax(t, nonNull).map(c -> _)
       }
     }.toMap
     // EXACT per-column null counts — same footer pass, no extra IO. Only
     // recorded when every block's chunk carries the count (a single
     // unset chunk would understate); the CBO bridge folds these into
     // ColumnStat.nullCount with the same all-files-covered refusal rule.
-    val nc = colsV.flatMap { c =>
-      val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString.equalsIgnoreCase(c)))
-      val ss = chunks.map(_.getStatistics)
-      if (chunks.size != blocks.size || ss.exists(s => s == null || !s.isNumNullsSet)) None
+    val nc = colTypes.keys.toSeq.flatMap { c =>
+      val ss = chunksOf(c).map(_.getStatistics)
+      if (ss.size != blocks.size || ss.exists(s => s == null || !s.isNumNullsSet)) None
       else Some(c -> ss.map(_.getNumNulls).sum)
     }.toMap
-    p -> (rows, st, nc)
+    DataFile(p.toString, in.getLength, Map.empty, st, rows, nullCounts = nc)
   }
 
   /** Above this many live files a full checkpoint is written SHARDED

@@ -247,9 +247,10 @@ private[table] final class IceboxCommit(t: Icebox) {
   }
 
   /** Delete files under data/ that are dead relative to `referenced`:
-    * data files (*.parquet) not referenced, and AUXILIARY files (_SUCCESS
-    * markers, Hadoop .crc checksums) only when their directory holds no
-    * referenced file — a live commit's markers and checksums are never
+    * data files (*.parquet) not referenced, and AUXILIARY files (Hadoop
+    * .crc checksums, and the `_SUCCESS` markers of commits written through
+    * Spark's committer by earlier versions) only when their directory
+    * holds no referenced file — a live commit's checksums are never
     * touched. Empty directories are pruned.
     */
   private def deleteUnreferenced(referenced: Set[String], cutoffMs: Long): Seq[String] = {
@@ -259,7 +260,7 @@ private[table] final class IceboxCommit(t: Icebox) {
       d == dataDirStr || d.startsWith(dataDirStr + "/")
     // every ancestor directory between a referenced file and dataDir is
     // live: partitioned writes put parquet in data/__commit=N/part=v/ while
-    // _SUCCESS markers sit at the commit root data/__commit=N/
+    // an earlier version's _SUCCESS marker sits at the commit root
     val refDirs = referenced.flatMap { p =>
       Iterator.iterate(new HPath(p).getParent)(_.getParent)
         .takeWhile(d => d != null && underData(store.render(d)))

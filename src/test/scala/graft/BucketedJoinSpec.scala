@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -95,16 +96,45 @@ class BucketedJoinSpec extends SparkSpec {
       t.setProperties(Map("read.bucketed.enabled" -> "false"))
       bucketedScans(t.readIndexed(spark).groupBy("id").count()) shouldBe 0
 
-      // a table whose files were never stamped (write-side off) reads fine
-      val u = Icebox(tmpDir("bj-unstamped"))
-      u.setProperties(Map("write.bucket-filenames" -> "false"))
-      u.appendTransformed(df.repartition(2), "bucket(4, id)")
-      u.currentSnapshot.get.files.foreach { f =>
-        Icebox.bucketIdFromName(new org.apache.hadoop.fs.Path(f.path).getName) shouldBe None
-      }
+      // a legacy table holding a file that was written unstamped reads fine
+      val dir = tmpDir("bj-unstamped")
+      Icebox(dir).appendTransformed(df.repartition(2), "bucket(4, id)")
+      val stamped = Paths.get(Icebox(dir).currentSnapshot.get.files.head.path)
+      val unstamped = stamped.resolveSibling(
+        stamped.getFileName.toString.replaceFirst("_\\d{5}(?=\\.)", ""))
+      Files.move(stamped, unstamped)
+      val manifest = Paths.get(dir, "_snapshots", "0.json")
+      Files.writeString(manifest,
+        Files.readString(manifest).replace(stamped.toString, unstamped.toString))
+      val u = Icebox(dir)
+      u.currentSnapshot.get.files.map(f => Icebox.bucketIdFromName(
+        new org.apache.hadoop.fs.Path(f.path).getName)) should contain(None)
       bucketedScans(u.readIndexed(spark).groupBy("id").count()) shouldBe 0
       assertSameRows(u.readIndexed(spark), df)
     }
+  }
+
+  test("a bucketed append names every file stamped at creation, with no rename") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    spark.sparkContext.hadoopConfiguration.set(
+      graft.table.TableStore.AtomicSchemesKey, "mockfs,faultfs")
+    val t = Icebox("faultfs://" + tmpDir("bj-trace"))
+    val df = (1L to 400L).map(i => (i, s"v$i")).toDF("id", "s")
+    t.appendTransformed(df.repartition(4), "bucket(8, id)")
+    FaultFs.reset()
+    t.appendTransformed(df.repartition(4), "bucket(8, id)")
+    val trace = FaultFs.trace
+    FaultFs.reset()
+    val added = t.currentSnapshot.get.files.filterNot(f =>
+      t.snapshot(t.currentSnapshot.get.parentId).files.contains(f))
+    added.foreach { f =>
+      Icebox.bucketIdFromName(new org.apache.hadoop.fs.Path(f.path).getName) shouldBe
+        Some(f.partition("id_bucket").toInt)
+    }
+    val data = trace.filter(_.contains("/data/"))
+    data.map(_.takeWhile(_ != ' ')).distinct shouldBe Seq("create")
+    data.size shouldBe added.size
+    trace.filter(_.startsWith("rename")).foreach(_ should not include "/data/")
   }
 
   test("bucketed reads survive merge-on-read deletes and compaction re-stamps") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{concat, lit, udf}
 import graft.operators.Upsert
 import graft.sql.{DmlSql, MergeSql}
 import graft.table.Icebox
@@ -72,7 +73,6 @@ class CrashSweepSpec extends SparkSpec {
     val snaps = t.allSnapshots
     val files = snaps.flatMap(_.files)
     val data = files.map(f => local(f.path)).toSet
-    val dataDirs = data.flatMap(p => Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null))
     val deleteDirs = files.flatMap(f => f.deletes ++ f.eqDeletes).map(local)
     val meta = root.resolve("_snapshots")
     val kept = Set(root.resolve("_current"), root.resolve("_properties.json"),
@@ -80,17 +80,17 @@ class CrashSweepSpec extends SparkSpec {
       files.flatMap(_.blooms.values).map(sha => meta.resolve(s"blooms/$sha.bloom")) ++
       files.flatMap(_.sketches.values).map(sha => meta.resolve(s"sketches/$sha.hll"))
     walk(root).filter(Files.isRegularFile(_)).filterNot { p =>
-      kept(p) || data(p) || deleteDirs.exists(d => p.startsWith(d)) ||
-        (p.startsWith(root.resolve("data")) && dataDirs(p.getParent))
+      kept(p) || data(p) || deleteDirs.exists(d => p.startsWith(d))
     }.map(_.toString)
   }
 
   /** One operation under the sweep: `setup` builds the pre-operation table
     * once (restored byte-for-byte before every run), `run` performs the
-    * operation on a handle.
+    * operation on a handle; `next` is the append that must commit after a
+    * crash left the post-operation state.
     */
   private final case class Op(name: String, setup: Icebox => Unit, run: Icebox => Unit,
-      isStream: Boolean = false)
+      isStream: Boolean = false, next: DataFrame = rows(99 to 99, "z"))
 
   private def sweep(op: Op): Unit = {
     val dir = "faultfs://" + tmpDir(s"sweep-${op.name}")
@@ -106,6 +106,12 @@ class CrashSweepSpec extends SparkSpec {
     FaultFs.reset()
     op.run(Icebox(dir))
     val steps = FaultFs.count
+    // data files are created under their final names: no committer
+    // staging, marker or rename under data/
+    FaultFs.trace.filter(_.contains(s"${root}/data/")).foreach { call =>
+      call should not startWith "rename"
+      Seq("_temporary", "_SUCCESS", ".spark-staging").foreach(call should not include _)
+    }
     val post = observe(Icebox(dir))
     post should not be pre
     info(s"${op.name}: $steps mutating steps")
@@ -131,9 +137,9 @@ class CrashSweepSpec extends SparkSpec {
           (again.rows, again.ids.size) shouldBe ((post.rows, post.ids.size))
         } else {
           if (op.isStream) t.appendStreamBatch("s1", 7L, rows(90 to 91, "x")) shouldBe None
-          t.append(rows(99 to 99, "z"))
+          t.append(op.next)
           val next = observe(Icebox(dir))
-          next.rows shouldBe (post.rows ++ canon(rows(99 to 99, "z"))).sorted
+          next.rows shouldBe (post.rows ++ canon(op.next)).sorted
           next.ids.size shouldBe post.ids.size + 1
         }
         Files.exists(lock) shouldBe false
@@ -150,6 +156,31 @@ class CrashSweepSpec extends SparkSpec {
 
   test("crash at every step of an append") {
     quiet(sweep(Op("append", seeded, _.append(rows(5 to 6, "b")))))
+  }
+
+  // one task writing two partitions: two data files
+  private def parted(ids: Range, tag: String): DataFrame =
+    ids.map(i => (i.toLong, s"$tag$i", i % 2)).toDF("id", "s", "p").coalesce(1)
+
+  test("crash at every step of a two-file append") {
+    quiet(sweep(Op("append-2-files", _.append(parted(1 to 4, "a"), Seq("p")),
+      _.append(parted(5 to 6, "b")), next = parted(99 to 99, "z"))))
+  }
+
+  test("a failed write task aborts the commit and leaves only reclaimable files") {
+    val dir = "faultfs://" + tmpDir("sweep-task-failure")
+    seeded(Icebox(dir))
+    val pre = observe(Icebox(dir))
+    val failOn6 = udf { (id: Long) => require(id != 6L, "injected task failure"); id }
+    // two tasks, ids 0-3 and 4-7: the second throws part-way through
+    val df = spark.range(0, 8, 1, 2)
+      .select(failOn6($"id").as("id"), concat(lit("f"), $"id".cast("string")).as("s"))
+    quiet(an[Exception] should be thrownBy Icebox(dir).append(df))
+    val t = Icebox(dir)
+    observe(t) shouldBe pre
+    Thread.sleep(2)
+    t.removeOrphans(0L)
+    unreferenced(t) shouldBe empty
   }
 
   test("crash at every step of a merge-on-read DELETE") {
@@ -208,6 +239,10 @@ class CrashSweepSpec extends SparkSpec {
     val trace = FaultFs.trace
     steps(trace).takeRight(5) shouldBe tail.updated(0, "create" -> "2.json")
     all(trace.dropRight(5)) should include(s"${local(t.tableDir)}/data/")
+    // one task, one file: the data write is a single create
+    FaultFs.reset()
+    t.append(rows(7 to 7, "c"))
+    steps(FaultFs.trace).map(_._1) shouldBe "create" +: tail.map(_._1)
     FaultFs.reset()
   }
 

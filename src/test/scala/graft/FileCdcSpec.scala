@@ -133,6 +133,22 @@ class FileCdcSpec extends SparkSpec {
     table.read(spark).count() shouldBe 2
   }
 
+  test("rowsWritten counts the source rows, not the rows a mixed-generation overwrite carries") {
+    // an unpartitioned old generation holding a month the source lacks
+    val archive = tmpDir("cdc-archive")
+    writePartFile(archive, "2023-12-31", "f0.parquet", Seq((7L, "old")))
+    val table = Icebox(tmpDir("cdc-table7"))
+    table.append(spark.read.parquet(archive))
+    table.setPartitionSpec(Seq("dt"))
+    val src = tmpDir("cdc-src7")
+    writePartFile(src, "2024-01-01", "f1.parquet", Seq((1L, "a"), (2L, "b")))
+    val r = FileCdc.runCycle(spark, src, table, new FileCheckpointStore(tmpDir("cdc-cp7") + "/cp.json"))
+    // the commit rewrites the carried archive row beside the two source rows
+    r.rowsWritten shouldBe 2L
+    table.currentSnapshot.get.files.map(_.rows).sum shouldBe 3L
+    table.read(spark).count() shouldBe 3L
+  }
+
   test("file utils: exists / stat / read bytes (S6-S8)") {
     val src = tmpDir("cdc-src4")
     val f = writePartFile(src, "2024-01-01", "f1.parquet", Seq((1L, "a")))

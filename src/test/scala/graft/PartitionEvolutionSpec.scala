@@ -93,6 +93,17 @@ class PartitionEvolutionSpec extends SparkSpec {
       Array(2L, 35L)
   }
 
+  test("an append is checked against the current spec, not the first-listed file's layout") {
+    val t = Icebox(tmpDir("pevo-append-check"))
+    val df = (1 to 6).map(i => (i.toLong, s"g${i % 2}")).toDF("id", "grp")
+    t.append(df, Seq("grp"))
+    t.setPartitionSpec(Nil)
+    t.append(df)
+    // the old generation's grp layout is listed first, but it is not the spec
+    an[IllegalArgumentException] should be thrownBy t.append(df, Seq("grp"))
+    t.read(spark).count() shouldBe 12L
+  }
+
   test("write.distribution-mode=hash bounds files per partition") {
     val t = Icebox(tmpDir("pevo-dist"))
     val df = (1 to 4000).map(i => (i.toLong, s"p${i % 4}")).toDF("id", "p")
