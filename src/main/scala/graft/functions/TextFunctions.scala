@@ -364,12 +364,6 @@ object TextFunctions {
         .otherwise(array_distinct(transform(sequence(lit(1), count), i => norm.substr(i, lit(n)))))
     }
 
-  /** 64-bit rolling-content hashes: one xxhash64 per shingle (the
-    * "rolling hash document fingerprint" building block — feed to MinHash).
-    */
-  def shingleHashes(text: Column, n: Int = 5): Column =
-    transform(shingles(text, n), s => xxhash64(s))
-
   /** Okapi BM25 relevance of every document against a bag of query terms —
     * the standard corpus-relevance score for retrieval-style filtering of
     * training data. Output: (`idCol`, `bm25` double; 0.0 for docs matching

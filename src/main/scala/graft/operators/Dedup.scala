@@ -802,27 +802,15 @@ object Dedup {
     df.join(dups, df(idCol) === col("__dup"), "left_anti")
   }
 
-  /** Full SimHash dedup: drop every doc whose simhash is within `maxHamming`
-    * bits of a lower-id doc (same min-id-representative resolution as
-    * `minHashDedup`). Hash-only: simhash equality is a necessary but not
-    * sufficient condition for content equality, so this CAN drop docs whose
-    * token distributions merely collide — use `simHashDedupVerified` when
-    * false positives matter.
-    */
-  def simHashDedup(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
-    val dups = simHashCandidates(df, textCol, idCol, maxHamming, maxBucketSize)
-      .select(col("idB").as("__dup")).distinct()
-    df.join(dups, df(idCol) === col("__dup"), "left_anti")
-  }
-
-  /** SimHash dedup with exact verification — the standard candidates→verify
-    * shape: banded simhash candidates at Hamming ≤ `maxHamming`, then the
-    * drop requires exact token-multiset equality (simhash is a function of
-    * the token multiset, so every multiset-equal pair is a Hamming-0
-    * candidate; the verify stage rejects distribution collisions). Survivors
-    * are exactly the min-id representative per token multiset. The verify
-    * join touches candidates only — never all-pairs.
+  /** SimHash dedup: drop every doc whose token multiset equals that of a
+    * lower-id doc, found in the candidates→verify shape. Banded simhash
+    * candidates at Hamming ≤ `maxHamming` come first; a drop then requires
+    * exact token-multiset equality. Simhash is a function of the token
+    * multiset, so every multiset-equal pair is a Hamming-0 candidate, and
+    * the verify stage rejects pairs whose simhashes merely collide.
+    * Survivors are exactly the min-id representative per token multiset
+    * (the resolution `minHashDedup` uses). The verify join touches
+    * candidates only — never all-pairs.
     */
   def simHashDedupVerified(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {

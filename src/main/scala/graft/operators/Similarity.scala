@@ -43,21 +43,8 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplanes (driver-side seeded constants),
     * packed sign bits: bit p = [vec · plane_p > 0]. Used for LSH bucketing.
-    */
-  def hyperplaneSignature(vec: Column, dim: Int, planes: Int, seed: Long): Column = {
-    val rnd = new scala.util.Random(seed)
-    val planeVecs = Array.fill(planes, dim)(rnd.nextGaussian())
-    (0 until planes).map { p =>
-      val plane = array(planeVecs(p).map(lit).toIndexedSeq: _*)
-      val dot = aggregate(zip_with(vec, plane, (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(dot > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** Session-aware variant using the native codegen'd dot product — the
-    * planes become array<float> literals and each per-plane dot is a tight
-    * primitive loop instead of an interpreted HOF chain.
+    * The planes are array<float> literals and each per-plane dot is the
+    * native codegen'd dot product, a tight primitive loop.
     */
   def hyperplaneSignatureFast(spark: org.apache.spark.sql.SparkSession,
       vec: Column, dim: Int, planes: Int, seed: Long): Column = {

@@ -391,15 +391,9 @@ object IceboxFileIndex {
       positions.toSeq.flatMap(_ => Seq(col(fp), col(pos)))
     gens.map { case (g, partSchema) =>
       val dataSchema = StructType(full.fields.filterNot(f => partSchema.fieldNames.contains(f.name)))
-      val relation = HadoopFsRelation(
-        location = new IceboxFileIndex(spark, table, g, schemaJson,
-          if (gens.size == 1) snapshotId else None, partSchema),
-        partitionSchema = partSchema,
-        dataSchema = dataSchema,
-        bucketSpec = if (snapshotId.isDefined) bucketSpecFor(table, g, dataSchema) else None,
-        fileFormat = new ParquetFileFormat(),
-        options = Map.empty)(spark)
-      val base = spark.baseRelationToDataFrame(relation)
+      val base = relation(spark, table, g, schemaJson, if (gens.size == 1) snapshotId else None,
+        partSchema, dataSchema,
+        if (snapshotId.isDefined) bucketSpecFor(table, g, dataSchema) else None)
       // merge-on-read: position- and equality-deleted rows go away here
       // (no extra plan when no file carries a delete and no caller asked
       // for positions)
@@ -414,6 +408,31 @@ object IceboxFileIndex {
       live.select(out: _*)
     }.reduce(_.unionByName(_))
   }
+
+  /** `files` as stored: the physical columns of `schemaJson` that the
+    * files hold (every column but their partition keys), with no
+    * partition columns and no deletes applied. Like [[scan]], it lists no
+    * storage and infers no schema: the manifest knows both.
+    */
+  private[graft] def rawScan(spark: SparkSession, table: Icebox, files: Seq[DataFile],
+      schemaJson: String): DataFrame = {
+    val partCols = files.flatMap(_.partition.keys).map(_.toLowerCase).toSet
+    val full = Icebox.physicalSchema(nullable(DataType.fromJson(schemaJson).asInstanceOf[StructType]))
+    relation(spark, table, files, schemaJson, None, StructType(Nil),
+      StructType(full.fields.filterNot(f => partCols(f.name.toLowerCase))), None)
+  }
+
+  private def relation(spark: SparkSession, table: Icebox, files: Seq[DataFile],
+      schemaJson: String, snapshotId: Option[Long], partSchema: StructType,
+      dataSchema: StructType,
+      bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      location = new IceboxFileIndex(spark, table, files, schemaJson, snapshotId, partSchema),
+      partitionSchema = partSchema,
+      dataSchema = dataSchema,
+      bucketSpec = bucketSpec,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark))
 
   /** Split `snap`'s files by whether they may hold rows matching the filter
     * in `filtered` (a DataFrame whose plan contains the predicate over this

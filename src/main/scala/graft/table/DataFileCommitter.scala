@@ -11,8 +11,9 @@ import org.apache.spark.sql.execution.datasources.FileFormatWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.DataType
 
-/** The commit protocol of an Icebox data write: each task writes its files
-  * straight to their final names under the commit dir and reports them,
+/** The commit protocol of every Icebox file write, data files and
+  * merge-on-read delete files alike: each task writes its files straight
+  * to their final names under the write's dir and reports them,
   * footer facts included, as [[DataFile]]s. Nothing is staged or renamed,
   * and the job hooks do nothing: the manifest [[IceboxCommit.publish]]
   * writes afterwards is the commit, and `IceboxCommit.reclaim` collects

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
 
 /** Read side of equality deletes (Iceberg v2's merge-on-read delete type,
   * written by [[Icebox.commitEqualityDeletes]]): a row is deleted by a
-  * delete dir iff its key tuple is in the dir's key set AND its data file
-  * carries the dir in its attach list (the attach list IS the sequence
-  * semantics — files appended after the delete never carry it).
+  * delete file iff its key tuple is in the file's key set AND its data
+  * file carries the delete in its attach list (the attach list IS the
+  * sequence semantics — files appended after the delete never carry it).
   *
   * Both sets are driver-held and ship as driver-created broadcast
   * VARIABLES behind one membership predicate ([[deletedBy]]) — the way
@@ -31,7 +31,7 @@ private[graft] object EqualityDeletes {
   private[graft] val EqKeyCacheMaxRows = 100000
   private val EqKeyCacheMaxEntries = 512
 
-  /** One delete dir's deduplicated key tuples as Catalyst-internal values,
+  /** One delete file's deduplicated key tuples as Catalyst-internal values,
     * plus the broadcast that ships them (created once per SparkContext).
     */
   private final class KeySet(val schema: StructType, val keys: Set[Any]) {
@@ -42,25 +42,27 @@ private[graft] object EqualityDeletes {
     }
   }
 
-  /** Driver-held key sets, keyed by delete-dir path; `None` marks a dir
-    * whose set is not driver-held (over the cap, or a key type the set
-    * cannot compare by value). Safe because delete dirs are IMMUTABLE:
-    * each commit writes its keys under a fresh uuid-named dir that is never
-    * modified afterwards (expiry deletes whole dirs, never rewrites them).
+  /** Driver-held key sets, keyed by the path a manifest's `eqDeletes`
+    * entry names (a delete file, or a delete dir in manifests written
+    * before delete files were single files); `None` marks one whose set is
+    * not driver-held (over the cap, or a key type the set cannot compare by
+    * value). Safe because delete files are IMMUTABLE: each commit writes
+    * its keys under a fresh uuid-named file that is never modified
+    * afterwards (expiry deletes whole files, never rewrites them).
     * Metadata caching (the Iceberg manifest-cache analog), never a result
-    * cache; cleared when it reaches [[EqKeyCacheMaxEntries]] dirs.
+    * cache; cleared when it reaches [[EqKeyCacheMaxEntries]] entries.
     */
   private val cache = new ConcurrentHashMap[String, Option[KeySet]]()
 
-  private def admit(dir: String, entry: Option[KeySet]): Option[KeySet] = {
+  private def admit(path: String, entry: Option[KeySet]): Option[KeySet] = {
     if (cache.size >= EqKeyCacheMaxEntries) cache.clear()
-    cache.put(dir, entry)
+    cache.put(path, entry)
     entry
   }
 
-  /** Whether `dir`'s key set is in the cache (no key-file job to read it). */
-  private[graft] def isDriverHeld(dir: String): Boolean =
-    Option(cache.get(dir)).exists(_.isDefined)
+  /** Whether `path`'s key set is in the cache (no key-file job to read it). */
+  private[graft] def isDriverHeld(path: String): Boolean =
+    Option(cache.get(path)).exists(_.isDefined)
 
   /** Types whose Catalyst-internal values are equal exactly when the SQL
     * values are (binary arrays compare by identity; floating point differs
@@ -97,40 +99,35 @@ private[graft] object EqualityDeletes {
   private def keySetOf(schema: StructType, rows: Seq[Row]): KeySet =
     new KeySet(schema, rows.iterator.map(keyOf).filter(_ != null).toSet)
 
-  /** Write `keys` (distinct tuples of the equality columns) to `dir`. A set
-    * that fits [[EqKeyCacheMaxRows]] is collected ONCE, written from that
-    * local copy and admitted to the cache under `dir`, so no reader ever
-    * runs a key-file job for it; a larger set is written distributed and
-    * marked as not driver-held. Spark's committer writes it, not
-    * `DataFileCommitter`: a delete dir is read back as a directory, so a
-    * failed task attempt's file would become visible.
+  /** Write `keys` (distinct tuples of the equality columns) as one delete
+    * file through `writeFile`, which returns its path (None when it holds
+    * no rows). A set that fits [[EqKeyCacheMaxRows]] is collected ONCE,
+    * written from that local copy and admitted to the cache under the
+    * file's path, so no reader ever runs a key-file job for it; a larger
+    * set is written distributed and marked as not driver-held.
     */
-  private[table] def write(keys: DataFrame, dir: String): Unit = {
+  private[table] def write(keys: DataFrame,
+      writeFile: DataFrame => Option[String]): Option[String] = {
     val distinct = keys.dropDuplicates()
     val held = Some(keys.schema).filter(comparable)
       .map(_ => distinct.limit(EqKeyCacheMaxRows + 1).collect().toSeq)
       .filter(_.length <= EqKeyCacheMaxRows)
-    held match {
-      case Some(rows) =>
-        keys.sparkSession.createDataFrame(rows.asJava, keys.schema)
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-        admit(dir, Some(keySetOf(keys.schema, rows)))
-      case None =>
-        distinct.coalesce(1).write.mode("overwrite").parquet(dir)
-        admit(dir, None)
-    }
+    val file = writeFile(held.fold(distinct)(rows =>
+      keys.sparkSession.createDataFrame(rows.asJava, keys.schema)))
+    file.foreach(admit(_, held.map(keySetOf(keys.schema, _))))
+    file
   }
 
-  /** `dir`'s key set when it is driver-held: from the cache, else one
+  /** `path`'s key set when it is driver-held: from the cache, else one
     * schema read plus one bounded collect, admitted for every later read.
     */
-  private def keySet(spark: SparkSession, dir: String): Option[KeySet] = {
-    val hit = cache.get(dir)
+  private def keySet(spark: SparkSession, path: String): Option[KeySet] = {
+    val hit = cache.get(path)
     if (hit != null) return hit
-    val df = spark.read.parquet(dir)
-    if (!comparable(df.schema)) return admit(dir, None)
+    val df = spark.read.parquet(path)
+    if (!comparable(df.schema)) return admit(path, None)
     val rows = df.dropDuplicates().limit(EqKeyCacheMaxRows + 1).collect().toSeq
-    admit(dir, if (rows.length > EqKeyCacheMaxRows) None else Some(keySetOf(df.schema, rows)))
+    admit(path, if (rows.length > EqKeyCacheMaxRows) None else Some(keySetOf(df.schema, rows)))
   }
 
   private val SchemePrefix = java.util.regex.Pattern.compile(Icebox.SchemePrefix)
@@ -138,7 +135,7 @@ private[graft] object EqualityDeletes {
   /** `p` without its [[Icebox.SchemePrefix]], as [[Icebox.normPathCol]] does. */
   private def normPath(p: String): String = SchemePrefix.matcher(p).replaceFirst("")
 
-  /** `df` and its "deleted by `dir`" flag: key tuple ∈ the dir's keys ∧
+  /** `df` and its "deleted by `path`" flag: key tuple ∈ the delete's keys ∧
     * `fpCol`'s file ∈ `attached`, each a membership test against a
     * broadcast set, the key test first so the path is only normalized on a
     * key hit. Only the broadcast HANDLE travels with the plan, and each
@@ -150,7 +147,7 @@ private[graft] object EqualityDeletes {
     * gains a broadcast-hinted left join adding column `tmp`; callers drop
     * it.
     */
-  private[table] def deletedBy(spark: SparkSession, df: DataFrame, dir: String,
+  private[table] def deletedBy(spark: SparkSession, df: DataFrame, path: String,
       attached: Seq[String], files: Seq[String], fpCol: String, tmp: String): (DataFrame, Column) = {
     val attachedSet = attached.toSet
     val inFile: Option[Column] =
@@ -160,14 +157,14 @@ private[graft] object EqualityDeletes {
         Some(udf((p: String) => p != null && paths.value.contains(normPath(p))).apply(col(fpCol)))
       }
     val colTypes = df.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    val (out, keyHit) = keySet(spark, dir)
+    val (out, keyHit) = keySet(spark, path)
       .filter(_.schema.forall(f => colTypes.get(f.name.toLowerCase).contains(f.dataType))) match {
       case Some(ks) =>
         val keys = ks.broadcastOn(spark.sparkContext)
         val member = udf { (r: Row) => val k = keyOf(r); k != null && keys.value.contains(k) }
         (df, member(struct(ks.schema.fieldNames.toSeq.map(col): _*)))
       case None =>
-        val keys = spark.read.parquet(dir).dropDuplicates()
+        val keys = spark.read.parquet(path).dropDuplicates()
         (df.join(broadcast(keys.withColumn(tmp, lit(true))), keys.columns.toSeq, "left"),
           coalesce(col(tmp), lit(false)))
     }

@@ -52,10 +52,10 @@ object Snapshot {
   * `stats` values are stored as strings and compared numerically by
   * `prunedFilesByStats` (numeric columns only).
   * `deletes` lists POSITION-DELETE files (Iceberg v2 merge-on-read analog)
-  * applying to this data file: each is a parquet dir of
+  * applying to this data file: each is a parquet file of
   * `(file_path, pos)` rows; readers anti-join them away.
   * `eqDeletes` lists EQUALITY-DELETE files (Iceberg v2's other delete
-  * type): each is a parquet dir whose SCHEMA names the equality columns
+  * type): each is a parquet file whose SCHEMA names the equality columns
   * and whose rows are the deleted key tuples. Applicability is the attach
   * list itself — a delete file committed at snapshot N is attached only to
   * files that already existed at N (minus stats-pruned ones), so rows
@@ -71,7 +71,7 @@ final case class DataFile(path: String, sizeBytes: Long, partition: Map[String, 
     sketches: Map[String, String] = Map.empty,
     nullCounts: Map[String, Long] = Map.empty,
     // exact count of this file's rows removed by its attached position-
-    // delete dirs (positions are per-file distinct at write; in-process
+    // delete files (positions are per-file distinct at write; in-process
     // commits serialize on the handle). -1 = unknown (manifest written
     // before counts were recorded) — consumers refuse, never estimate.
     // Always 0 when `deletes` is empty; equality deletes are NOT counted
@@ -90,6 +90,7 @@ final case class DataFile(path: String, sizeBytes: Long, partition: Map[String, 
   *   _snapshots/<id>.json                 one manifest per commit (append-only)
   *   _current                             text file holding the current snapshot id
   *   data/graft_commit=<id>/[k=v/...]part-*.parquet
+  *   deletes/<delete|eqdelete>-<id>/part-*.parquet   one merge-on-read delete file
   * }}}
   *
   * '''O(delta) manifests.''' A commit's manifest stores only the files it
@@ -324,21 +325,14 @@ final class Icebox(val tableDir: String) {
     val merged = (existing ++ phys).distinct
     setProperties(Map("sketch.ndv.columns" -> merged.mkString(",")))
     val snap = currentSnapshot.getOrElse(return) // empty table: sticky property only
-    val p = properties.get("sketch.ndv.precision").map(_.toInt)
-      .getOrElse(graft.functions.Hll.DefaultP)
     val missing = snap.files.filter(f => phys.exists(c => !f.sketches.contains(c)))
     if (missing.nonEmpty) {
-      val shas = buildFileSketches(spark, missing.map(_.path), phys, p)
+      val sketched = sideData(spark, missing, snap.schemaJson, properties, Nil, Nil, phys)
       // schema rides the RESOLVED parent, not the pre-scan snapshot: an
       // ALTER TABLE landing during the (potentially long) sketch pass must
       // not be reverted by this metadata-only commit
-      commits.publish("analyze",
-        parent => parent.map(_.files).getOrElse(Nil).map { f =>
-          shas.get(pathOnly(f.path)) match {
-            case Some(m) => f.copy(sketches = f.sketches ++ m)
-            case None => f
-          }
-        }, parent => parent.map(_.schemaJson).getOrElse(snap.schemaJson))
+      commits.publish("analyze", parent => parent.map(_.files).getOrElse(Nil).map(sketched),
+        parent => parent.map(_.schemaJson).getOrElse(snap.schemaJson))
     }
     phys.foreach(refreshRollup)
     // the sketch build's reads cached pre-NDV stats for this snapshot
@@ -903,7 +897,7 @@ final class Icebox(val tableDir: String) {
     * for each same-path entry pair whose delete sets strictly grew, the
     * rows visible under the OLD delete sets that the NEWLY attached
     * position/equality delete files match. One read of the paired files,
-    * flag-joined against only the new delete dirs — the exceptAll-free
+    * flag-joined against only the new delete files — the exceptAll-free
     * complement of [[changeDiff]]'s net-out, exact as a multiset because
     * position deletes address physical rows and equality flags mirror
     * [[Icebox.applyEqualityDeletes]]'s hit∧attached semantics.
@@ -920,10 +914,10 @@ final class Icebox(val tableDir: String) {
       val genPairs = olds.map(f => byOld(f.path))
       var flagged = visible
       val flags = scala.collection.mutable.ArrayBuffer.empty[Column]
-      val newPosDirs = genPairs.flatMap { case (o, n) =>
+      val newPos = genPairs.flatMap { case (o, n) =>
         n.deletes.filterNot(o.deletes.toSet) }.distinct
-      if (newPosDirs.nonEmpty) {
-        val dels = Icebox.readPositionDeletes(spark, newPosDirs)
+      if (newPos.nonEmpty) {
+        val dels = Icebox.readPositionDeletes(spark, newPos)
           .select(Icebox.normPathCol(col("file_path")).as("__gd_fp"),
             col("pos").as("__gd_pos"))
           .dropDuplicates() // a position listed twice must not duplicate its row
@@ -932,14 +926,14 @@ final class Icebox(val tableDir: String) {
             flagged(pos) === col("__gd_pos"), "left")
         flags += col("__gd_fp").isNotNull
       }
-      val newEqDirs = genPairs.flatMap { case (o, n) =>
+      val newEq = genPairs.flatMap { case (o, n) =>
         n.eqDeletes.filterNot(o.eqDeletes.toSet) }.distinct
-      newEqDirs.zipWithIndex.foreach { case (dir, i) =>
+      newEq.zipWithIndex.foreach { case (del, i) =>
         // attach semantics mirror applyEqualityDeletes: a row is removed by
-        // this dir iff its key tuple matches AND its file newly attaches it
+        // this delete iff its key tuple matches AND its file newly attaches it
         val attached = genPairs.collect { case (o, n)
-          if n.eqDeletes.contains(dir) && !o.eqDeletes.contains(dir) => o.path }
-        val (joined, hit) = EqualityDeletes.deletedBy(spark, flagged, dir, attached,
+          if n.eqDeletes.contains(del) && !o.eqDeletes.contains(del) => o.path }
+        val (joined, hit) = EqualityDeletes.deletedBy(spark, flagged, del, attached,
           olds.map(_.path), fp, s"__g_hit$i")
         flagged = joined
         flags += hit
@@ -1702,7 +1696,7 @@ final class Icebox(val tableDir: String) {
 
   /** Shared position-delete commit ([[commitMergeOnRead]]). `positions`
     * (`(file_path, pos)` rows in `_metadata` form) are written as ONE
-    * position-delete dir: merge-on-read deletes are small by construction
+    * position-delete file: merge-on-read deletes are small by construction
     * (the mode is chosen when the hit set is a small fraction of the
     * candidate files), so one output file keeps the read-side anti-join
     * broadcastable. Per-file position counts ride the manifest
@@ -1728,19 +1722,19 @@ final class Icebox(val tableDir: String) {
               col("__icx_rw_pos") === col("__del_pos"), "left_anti")
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       },
-      // Spark's committer, not DataFileCommitter: delete dirs are read back as
-      // directories, so a failed task attempt's file would become visible
-      kind = "delete", writeDeletes = positions.coalesce(1).write.mode("overwrite").parquet(_),
-      attachTo = (f, dir) => f.copy(deletes = f.deletes :+ dir,
+      deleteFile = writeDeleteFile(positions, "delete"),
+      attachTo = (f, file) => f.copy(deletes = f.deletes :+ file,
         deleteRows = // unknown stays unknown; never fabricate exactness
           if (f.deleteRows < 0L) -1L else f.deleteRows + affected(pathOnly(f.path))),
       newData, partitionBy)
   }
 
-  /** The merge-on-read commit both delete kinds share: write ONE delete dir
-    * of `kind` under `deletes/`, attach it to every `hit` file of `cur`
-    * (`attachTo`), and add `newData`'s files in the SAME atomic snapshot —
-    * no data file is read or rewritten.
+  /** The merge-on-read commit both delete kinds share: write ONE delete
+    * file (`deleteFile`, its path, or None when it holds no rows), attach it
+    * to every `hit` file of `cur` (`attachTo`), and add `newData`'s files in
+    * the SAME atomic snapshot — no data file is read or rewritten. A delete
+    * that holds no rows attaches and rewrites nothing: the snapshot carries
+    * only `newData`, or is a no-op.
     *
     * READ-AMPLIFICATION BOUND: every attached delete adds work to each read
     * of its file, so a hit file whose `depth` (stacked deletes of this kind)
@@ -1751,18 +1745,17 @@ final class Icebox(val tableDir: String) {
     * DV-compaction analog).
     */
   private def commitMergeOnRead(op: String, cur: Snapshot, hit: DataFile => Boolean,
-      depth: DataFile => Int, survivors: Seq[DataFile] => DataFrame, kind: String,
-      writeDeletes: String => Unit, attachTo: (DataFile, String) => DataFile,
+      depth: DataFile => Int, survivors: Seq[DataFile] => DataFrame,
+      deleteFile: => Option[String], attachTo: (DataFile, String) => DataFile,
       newData: Option[DataFrame], partitionBy: Seq[String]): Snapshot = {
     val maxDepth = properties.get("write.merge-on-read.max-delete-files")
       .map(_.toInt).getOrElse(8)
-    val overFiles = cur.files.filter(f => hit(f) && depth(f) >= maxDepth)
+    val file = deleteFile
+    val overFiles = file.fold(Seq.empty[DataFile])(_ =>
+      cur.files.filter(f => hit(f) && depth(f) >= maxDepth))
     val overPaths = overFiles.map(_.path).toSet
     val payload = (newData ++ Option.when(overFiles.nonEmpty)(survivors(overFiles)))
       .reduceOption(_ unionByName _)
-    store.mkdirs(deletesDir)
-    val dir = store.render(new HPath(deletesDir, s"$kind-${UUID.randomUUID().toString.take(12)}"))
-    writeDeletes(dir)
     def attach(parent: Option[Snapshot]): Seq[DataFile] = {
       // DRIFT GUARD: the hit set, the over-depth files and the rewrite were
       // all derived from `cur` — if a cross-process commit moved the head
@@ -1775,7 +1768,7 @@ final class Icebox(val tableDir: String) {
       if (!parent.map(_.id).contains(cur.id)) throw IceboxCommit.StaleCommitState
       parent.map(_.files).getOrElse(Nil).flatMap {
         case f if overPaths(f.path) => None // replaced by this commit's rewrite
-        case f if hit(f) => Some(attachTo(f, dir))
+        case f if hit(f) => Some(file.fold(f)(attachTo(f, _)))
         case f => Some(f)
       }
     }
@@ -1922,8 +1915,20 @@ final class Icebox(val tableDir: String) {
       // stacked deletes applied by the read, the NEW keys anti-joined
       survivors = overFiles => IceboxFileIndex.scan(keys.sparkSession, this, overFiles,
         cur.schemaJson).join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"),
-      kind = "eqdelete", writeDeletes = EqualityDeletes.write(keysPhys, _),
-      attachTo = (f, dir) => f.copy(eqDeletes = f.eqDeletes :+ dir), newData, partitionBy)
+      deleteFile = EqualityDeletes.write(keysPhys, writeDeleteFile(_, "eqdelete")),
+      attachTo = (f, file) => f.copy(eqDeletes = f.eqDeletes :+ file), newData, partitionBy)
+  }
+
+  /** Write `df` as ONE delete file (one task, so one file) through
+    * [[DataFileCommitter]], like a data file: created under its final
+    * name in a fresh `deletes/<kind>-<id>/` dir (as a data commit's files
+    * sit in theirs), nothing staged or renamed. Its path, or None when it
+    * holds no rows (the committer drops a zero-row file).
+    */
+  private def writeDeleteFile(df: DataFrame, kind: String): Option[String] = {
+    val id = UUID.randomUUID().toString.take(12)
+    DataFileCommitter.write(df.coalesce(1), store.render(new HPath(deletesDir, s"$kind-$id")),
+      Nil, Map.empty, id, None, Map.empty).headOption.map(f => store.render(new HPath(f.path)))
   }
 
   /** CDC hard-delete by key: remove every row whose key tuple appears in
@@ -1961,8 +1966,9 @@ final class Icebox(val tableDir: String) {
     * [[DataFileCommitter]]: each task writes its files under their final
     * names (bucket-stamped when the spec has one bucket transform) and
     * returns them with their footer's row count, min/max and null counts,
-    * its zero-row files deleted. Only footer-undecodable stats columns,
-    * blooms and NDV sketches re-read the written files afterwards.
+    * its zero-row files deleted. Footer-undecodable stats columns, blooms
+    * and NDV sketches then take one pass over the written files
+    * ([[sideData]]).
     */
   private def commit(df0: DataFrame, partitionBy: Seq[String], op: String,
       collectStats: Seq[String] = Nil, onBranch: Option[String] = None,
@@ -2081,50 +2087,21 @@ final class Icebox(val tableDir: String) {
     val written = DataFileCommitter.write(shaped, store.render(commitDir), partitionByPhys,
       options, commitId, bucket, footerStats.toMap)
       .map(f => f.copy(path = store.render(new HPath(f.path))))
-    val scanned =
-      if (scanStats.isEmpty || written.isEmpty) Map.empty[String, Map[String, (String, String)]]
-      else fileStats(df.sparkSession, written.map(_.path), scanStats.map(_._1))
-    // Manifest-level bloom index (`manifest.bloom.columns`): per-file
-    // membership filters as content-addressed side files, sized from the
-    // EXACT per-file row counts the write tasks read from the footers. It
-    // stays a post-write job: sizing needs the largest row count in the
-    // commit, which no single task knows. Sticky like stats columns: once
-    // any live file blooms a column, later commits keep blooming it
-    // without re-opting-in, so planning-time point-lookup pruning stays
+    // Manifest-level bloom index (`manifest.bloom.columns`) and NDV index
+    // (`sketch.ndv.columns`, usually set via ANALYZE TABLE): per-file side
+    // files, built after the write because bloom sizing needs the largest
+    // row count in the commit, which no single task knows. Both are sticky
+    // like stats columns: once any live file blooms or sketches a column,
+    // later commits keep doing so for their new files without re-opting-in,
+    // so point-lookup pruning and metadata-only approx COUNT(DISTINCT) stay
     // effective table-wide across appends and compactions.
-    val bloomSticky = base.map(_.files.flatMap(_.blooms.keys).distinct
-      .filter(df.columns.contains)).getOrElse(Nil)
-    val manifestBloomCols = (props.get("manifest.bloom.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .map(phys).filter(df.columns.contains) ++ bloomSticky).distinct
-    val bloomShas: Map[String, Map[String, String]] =
-      if (manifestBloomCols.isEmpty) Map.empty
-      else {
-        val maxRows = written.map(_.rows).maxOption.getOrElse(1L)
-        val fpp = props.get("manifest.bloom.fpp").map(_.toDouble).getOrElse(0.03)
-        buildFileBlooms(df.sparkSession, written.map(_.path), manifestBloomCols, maxRows, fpp)
-      }
-    // Manifest NDV index (`sketch.ndv.columns`, usually set via ANALYZE
-    // TABLE): per-file HyperLogLog sketches as content-addressed side
-    // files. Sticky like blooms/stats: once any live file sketches a
-    // column, every later commit keeps sketching its new files — so after
-    // one ANALYZE the table-level approx COUNT(DISTINCT) stays answerable
-    // from metadata across appends/compactions with O(new files) build
-    // cost per commit, never a second full pass.
-    val sketchSticky = base.map(_.files.flatMap(_.sketches.keys).distinct
-      .filter(df.columns.contains)).getOrElse(Nil)
-    val sketchCols = (props.get("sketch.ndv.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .map(phys).filter(df.columns.contains) ++ sketchSticky).distinct
-    val sketchShas: Map[String, Map[String, String]] =
-      if (sketchCols.isEmpty) Map.empty
-      else buildFileSketches(df.sparkSession, written.map(_.path), sketchCols,
-        props.get("sketch.ndv.precision").map(_.toInt)
-          .getOrElse(graft.functions.Hll.DefaultP))
-    val newFiles = written.map(f =>
-      f.copy(stats = f.stats ++ scanned.getOrElse(f.path, Map.empty),
-        blooms = bloomShas.getOrElse(pathOnly(f.path), Map.empty),
-        sketches = sketchShas.getOrElse(pathOnly(f.path), Map.empty)))
+    def indexed(keys: DataFile => Iterable[String], prop: String): Seq[String] =
+      (props.get(prop).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+        .map(phys) ++ base.toSeq.flatMap(_.files.flatMap(keys))).distinct.filter(df.columns.contains)
+    val withSideData = sideData(df.sparkSession, written, schemaJsonStored, props,
+      scanStats.map(_._1), indexed(_.blooms.keys, "manifest.bloom.columns"),
+      indexed(_.sketches.keys, "sketch.ndv.columns"))
+    val newFiles = written.map(withSideData)
     commits.publish(op, parent => resolve(parent, newFiles), _ => schemaJsonStored, onBranch,
       alsoSetProperties)
   }
@@ -2305,59 +2282,85 @@ final class Icebox(val tableDir: String) {
     }, _ => cur.schemaJson)
   }
 
-  /** Per-file bloom filters for `cols` (physical names) over a fresh
-    * commit's files, written as content-addressed side files under
-    * `_snapshots/blooms/<sha256>.bloom` — the manifest entry carries only
-    * the column→sha pointer (Iceberg keeps big per-file stats out of
-    * manifests the same way, in puffin side files). Returns path →
-    * (column → sha).
+  /** A commit's per-file side data, built in ONE pass over `files`' raw
+    * content (no deletes applied), read through the manifest-backed
+    * [[IceboxFileIndex.rawScan]] with `schemaJson`: no listing job and no
+    * schema-inference job. One `groupBy(file)` aggregation computes, over
+    * the physical columns the files store:
+    *  - `statsCols`' min/max (the data-scan fallback for footer-undecodable
+    *    types); a rendering over [[Icebox.MaxStringStatBytes]] is dropped,
+    *    as the footer path does, and the file is then kept by pruning;
+    *  - a bloom filter per `bloomCols` column over `xxhash64` longs,
+    *    [[graft.functions.BloomBuildAgg]] sized EXACTLY per commit:
+    *    `expectedItems` = the largest footer row count among `files`
+    *    (smaller files get a lower fpp than `manifest.bloom.fpp` asks,
+    *    never a higher one);
+    *  - an NDV (HyperLogLog) sketch per `sketchCols` column at
+    *    `sketch.ndv.precision`, nulls excluded BEFORE hashing (xxhash64
+    *    maps null to the seed, and COUNT(DISTINCT) excludes null).
+    * The hashes stay in whole-stage codegen below the aggregate, partial
+    * buffers merge, and the shuffle ships one filter or sketch per (file,
+    * column). Blooms and sketches become content-addressed side files
+    * (`_snapshots/blooms/<sha>.bloom`, `_snapshots/sketches/<sha>.hll`;
+    * the manifest entry carries only the column→sha pointer, the way
+    * Iceberg keeps big per-file stats in puffin side files), written FROM
+    * THE EXECUTORS that hold each merged buffer: temp name + rename, and
+    * content addressing makes a concurrent double write byte-identical.
+    * The driver receives shas and bounded stat strings, never the buffers.
     *
-    * One distributed job: `groupBy(input_file_name)` over
-    * `xxhash64(col)` longs into [[graft.functions.BloomBuildAgg]] — the
-    * hash stays in whole-stage codegen, partial buffers OR-merge, and the
-    * shuffle ships one filter per (file, column). Sizing is EXACT per
-    * commit: `expectedItems` = the largest per-file row count from the
-    * footer pass that already ran (smaller files get a lower fpp than
-    * asked — never a higher one).
-    *
-    * Side files are written FROM THE EXECUTORS that hold each merged
-    * filter (temp-name + rename; content addressing makes a concurrent
-    * double-write of the same sha byte-identical, so whichever rename
-    * lands is correct). The driver receives only the (file, column, sha)
-    * triples — O(commit files) strings, never the filter bytes, so a
-    * 1000-file 512 MB-file commit does not stage ~GBs of filters in
-    * driver memory.
+    * Returns the merge of a file's side data into its entry (identity for
+    * a file the pass did not cover).
     */
-  private def buildFileBlooms(spark: SparkSession, paths: Seq[String], cols: Seq[String],
-      expectedItems: Long, fpp: Double): Map[String, Map[String, String]] = {
-    if (paths.isEmpty || cols.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.{col => fcol, input_file_name, xxhash64}
-    val base = spark.read.parquet(paths: _*)
-    val present = cols.filter(base.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val hashed = base.select(
-      input_file_name().as("__file") +: present.map(c => xxhash64(fcol(c)).as(c)): _*)
-    val aggs = present.map(c =>
-      graft.functions.BloomBuild.agg(spark, fcol(c), math.max(1L, expectedItems), fpp).as(c))
-    store.mkdirs(bloomsDir)
+  private def sideData(spark: SparkSession, files: Seq[DataFile], schemaJson: String,
+      props: Map[String, String], statsCols: Seq[String], bloomCols: Seq[String],
+      sketchCols: Seq[String]): DataFile => DataFile = {
+    import org.apache.spark.sql.functions.{col => fcol, input_file_name, when, xxhash64}
+    if (files.isEmpty || statsCols.isEmpty && bloomCols.isEmpty && sketchCols.isEmpty)
+      return identity
+    val raw = IceboxFileIndex.rawScan(spark, this, files, schemaJson)
+    val stored = raw.columns.toSet
+    val (st, bl, sk) = (statsCols.filter(stored), bloomCols.filter(stored), sketchCols.filter(stored))
+    if (st.isEmpty && bl.isEmpty && sk.isEmpty) return identity
+    val values = raw.select(input_file_name().as("__file") +: (
+      st.zipWithIndex.map { case (c, i) => fcol(c).as(s"__v$i") } ++
+      bl.zipWithIndex.map { case (c, i) => xxhash64(fcol(c)).as(s"__b$i") } ++
+      sk.zipWithIndex.map { case (c, i) =>
+        when(fcol(c).isNotNull, xxhash64(fcol(c))).as(s"__h$i") }): _*)
+    val expectedItems = math.max(1L, files.map(_.rows).max)
+    val fpp = props.get("manifest.bloom.fpp").map(_.toDouble).getOrElse(0.03)
+    val p = props.get("sketch.ndv.precision").map(_.toInt).getOrElse(graft.functions.Hll.DefaultP)
+    val aggs = st.indices.flatMap(i => Seq(min(s"__v$i"), max(s"__v$i"))) ++
+      bl.indices.map(i => graft.functions.BloomBuild.agg(spark, fcol(s"__b$i"), expectedItems, fpp)) ++
+      sk.indices.map(i => graft.functions.HllBuild.agg(spark, fcol(s"__h$i"), p))
     val confBc = spark.sparkContext.broadcast(
       new Icebox.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    val bloomsDirStr = bloomsDir.toString
-    val presentLocal = present
+    val (bloomsDirStr, sketchesDirStr) = (bloomsDir.toString, sketchesDir.toString)
     import spark.implicits._
-    val triples = hashed.groupBy("__file").agg(aggs.head, aggs.tail: _*)
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          val file = r.getString(0)
-          presentLocal.zipWithIndex.flatMap { case (c, i) =>
-            Option(r.getAs[Array[Byte]](i + 1)).map { bytes =>
-              (file, c, Icebox.writeBloomSideFile(confBc.value.value, bloomsDirStr, bytes))
-            }
+    val perFile = values.groupBy("__file").agg(aggs.head, aggs.tail: _*)
+      .map { r =>
+        def sides(cols: Seq[String], at: Int, dir: String, ext: String): Map[String, String] =
+          cols.zipWithIndex.flatMap { case (c, i) =>
+            Option(r.getAs[Array[Byte]](at + i)).map(bytes =>
+              c -> Icebox.writeSideFile(confBc.value.value, dir, bytes, ext))
+          }.toMap
+        val stats = st.zipWithIndex.flatMap { case (c, i) =>
+          (Option(r.get(1 + 2 * i)).map(_.toString), Option(r.get(2 + 2 * i)).map(_.toString)) match {
+            case (Some(mn), Some(mx))
+              if mn.getBytes(StandardCharsets.UTF_8).length <= Icebox.MaxStringStatBytes &&
+                 mx.getBytes(StandardCharsets.UTF_8).length <= Icebox.MaxStringStatBytes =>
+              Some(c -> (mn, mx))
+            case _ => None
           }
-        }
+        }.toMap
+        (r.getString(0), stats, sides(bl, 1 + 2 * st.size, bloomsDirStr, "bloom"),
+          sides(sk, 1 + 2 * st.size + bl.size, sketchesDirStr, "hll"))
       }.collect()
-    triples.groupBy(t => pathOnly(t._1))
-      .map { case (p, ts) => p -> ts.map(t => t._2 -> t._3).toMap }
+      // input_file_name renders a URI; key by the decoded filesystem path
+      .map { case (file, stats, blooms, sketches) =>
+        new java.net.URI(file).getPath -> (stats, blooms, sketches) }.toMap
+    f => perFile.get(pathOnly(f.path)).fold(f) { case (stats, blooms, sketches) =>
+      f.copy(stats = f.stats ++ stats, blooms = f.blooms ++ blooms, sketches = f.sketches ++ sketches)
+    }
   }
 
   /** Load one bloom side file by content sha (process-wide cache — shas
@@ -2375,47 +2378,6 @@ final class Icebox(val tableDir: String) {
     Some(bf)
   }
 
-  /** Per-file NDV (HyperLogLog) sketches for `cols`, written as content-
-    * addressed side files under `_snapshots/sketches/` — the manifest
-    * entry carries only the sha. Same executor-side write discipline as
-    * [[buildFileBlooms]]: the driver receives (file, column, sha) triples,
-    * never the sketch bytes. One parquet pass over `paths` covers every
-    * column; nulls are excluded BEFORE hashing (xxhash64 maps null to the
-    * seed, which would otherwise count null as a value — COUNT(DISTINCT)
-    * excludes it).
-    */
-  private def buildFileSketches(spark: SparkSession, paths: Seq[String], cols: Seq[String],
-      p: Int): Map[String, Map[String, String]] = {
-    if (paths.isEmpty || cols.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.{col => fcol, input_file_name, when, xxhash64}
-    val base = spark.read.parquet(paths: _*)
-    val present = cols.filter(base.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val hashed = base.select(
-      input_file_name().as("__file") +:
-        present.map(c => when(fcol(c).isNotNull, xxhash64(fcol(c))).as(c)): _*)
-    val aggs = present.map(c => graft.functions.HllBuild.agg(spark, fcol(c), p).as(c))
-    store.mkdirs(sketchesDir)
-    val confBc = spark.sparkContext.broadcast(
-      new Icebox.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    val sketchesDirStr = sketchesDir.toString
-    val presentLocal = present
-    import spark.implicits._
-    val triples = hashed.groupBy("__file").agg(aggs.head, aggs.tail: _*)
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          val file = r.getString(0)
-          presentLocal.zipWithIndex.flatMap { case (c, i) =>
-            Option(r.getAs[Array[Byte]](i + 1)).map { bytes =>
-              (file, c, Icebox.writeSideFile(confBc.value.value, sketchesDirStr, bytes, "hll"))
-            }
-          }
-        }
-      }.collect()
-    triples.groupBy(t => pathOnly(t._1))
-      .map { case (p0, ts) => p0 -> ts.map(t => t._2 -> t._3).toMap }
-  }
-
   /** Load one NDV sketch side file by content sha (process-wide cache —
     * sketches are 2-4 KB and immutable).
     */
@@ -2427,41 +2389,6 @@ final class Icebox(val tableDir: String) {
     val bytes = store.readBytes(p)
     Icebox.sketchCache.put(sha, bytes)
     Some(bytes)
-  }
-
-  /** Data-scan stats (fallback for footer-undecodable column types) — one
-    * distributed aggregation grouped by input_file_name. The collected
-    * result is one row per file with values bounded by
-    * [[Icebox.MaxStringStatBytes]] (oversized renderings are DROPPED, the
-    * same policy the footer path applies — the file is then kept
-    * conservatively by pruning), so the driver payload is the same order
-    * as the manifest entries it populates.
-    */
-  private def fileStats(spark: SparkSession, paths: Seq[String],
-      cols: Seq[String]): Map[String, Map[String, (String, String)]] = {
-    if (paths.isEmpty) return Map.empty
-    // input_file_name renders a URI; manifest paths may or may not carry a
-    // scheme — key the result by the CALLER's path form so lookups hit
-    val byPathOnly = paths.map(p => pathOnly(p) -> p).toMap
-    val aggs = cols.flatMap(c => Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    spark.read.parquet(paths: _*)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val uriPath = new java.net.URI(r.getAs[String]("__f")).getPath
-        val file = byPathOnly.getOrElse(uriPath, uriPath)
-        val st = cols.flatMap { c =>
-          (Option(r.getAs[Any](s"__mn_$c")), Option(r.getAs[Any](s"__mx_$c"))) match {
-            case (Some(mn), Some(mx))
-              if mn.toString.getBytes(StandardCharsets.UTF_8).length <= Icebox.MaxStringStatBytes &&
-                 mx.toString.getBytes(StandardCharsets.UTF_8).length <= Icebox.MaxStringStatBytes =>
-              Some(c -> (mn.toString, mx.toString))
-            case _ => None
-          }
-        }.toMap
-        file -> st
-      }.toMap
   }
 
   private def sha256Hex(bytes: Array[Byte]): String =
@@ -2888,10 +2815,6 @@ object Icebox {
     * a temp file [[IceboxCommit.reclaim]] removes as an unreferenced side
     * file.
     */
-  private[table] def writeBloomSideFile(conf: org.apache.hadoop.conf.Configuration,
-      bloomsDir: String, bytes: Array[Byte]): String =
-    writeSideFile(conf, bloomsDir, bytes, "bloom")
-
   private[table] def writeSideFile(conf: org.apache.hadoop.conf.Configuration,
       dirStr: String, bytes: Array[Byte], ext: String): String = {
     val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
@@ -2957,7 +2880,7 @@ object Icebox {
       files, fpCol)
 
   /** Anti-join `df` (carrying materialized `fpCol`/`posCol` position
-    * columns) against the `(file_path, pos)` rows of `deleteDirs`. Both
+    * columns) against the `(file_path, pos)` rows of `deletes`. Both
     * join keys normalize away the `scheme:[//authority]` prefix, matching
     * on the filesystem path: position-delete files already on disk were
     * written from relations that rendered `_metadata.file_path` with a
@@ -2965,21 +2888,21 @@ object Icebox {
     * as the manifest records it.
     */
   private[graft] def antiJoinDeletes(spark: SparkSession, df: DataFrame,
-      deleteDirs: Seq[String], fpCol: String, posCol: String): DataFrame = {
-    if (deleteDirs.isEmpty) return df
-    val dels = readPositionDeletes(spark, deleteDirs)
+      deletes: Seq[String], fpCol: String, posCol: String): DataFrame = {
+    if (deletes.isEmpty) return df
+    val dels = readPositionDeletes(spark, deletes)
       .select(normPathCol(col("file_path")).as("__del_fp"), col("pos").as("__del_pos"))
     df.join(dels,
       normPathCol(df(fpCol)) === col("__del_fp") && df(posCol) === col("__del_pos"), "left_anti")
   }
 
-  /** The `(file_path, pos)` rows of position-delete dirs, read with the
+  /** The `(file_path, pos)` rows of position-delete files, read with the
     * schema they are written with (`_metadata.file_path` string,
     * `_metadata.row_index` long), so building a read's plan runs no
     * schema-inference job.
     */
-  private[table] def readPositionDeletes(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    spark.read.schema("file_path STRING, pos BIGINT").parquet(dirs: _*)
+  private[table] def readPositionDeletes(spark: SparkSession, deletes: Seq[String]): DataFrame =
+    spark.read.schema("file_path STRING, pos BIGINT").parquet(deletes: _*)
 
   /** A path's `scheme:[//authority]` prefix (see [[antiJoinDeletes]] —
     * position-delete files on disk hold `file:`-prefixed paths, manifests
@@ -2995,14 +2918,14 @@ object Icebox {
     * iff its key tuple appears in an equality-delete file AND its data file
     * carries that delete in `eqDeletes` (the attach list IS the sequence
     * semantics — files appended after the delete never carry it, so their
-    * rows survive even on key match). Each delete dir's schema names its
+    * rows survive even on key match). Each delete file's schema names its
     * equality columns, so one table can mix deletes on different keys.
     *
     * Plan shape: ONE filter, `NOT (hit_1 OR ... OR hit_n)`, where each
-    * `hit_i` is a membership test of the row's key tuple in the dir's
-    * driver-held key set AND of its file in the dir's attach set, both
+    * `hit_i` is a membership test of the row's key tuple in the delete's
+    * driver-held key set AND of its file in the delete's attach set, both
     * shipped as broadcast variables ([[EqualityDeletes.deletedBy]]) — no
-    * join and no Spark job beyond the scan itself. A dir whose key set is
+    * join and no Spark job beyond the scan itself. A delete whose key set is
     * over [[EqualityDeletes.EqKeyCacheMaxRows]] adds one broadcast-hinted
     * left join for its keys. Never an `isin` literal list, never a
     * keys×files blow-up. Rows with a NULL in any key column are never
@@ -3011,14 +2934,14 @@ object Icebox {
     */
   private[graft] def applyEqualityDeletes(spark: SparkSession, base: DataFrame,
       files: Seq[DataFile], fpCol: String): DataFrame = {
-    val dirs = files.flatMap(_.eqDeletes).distinct
-    if (dirs.isEmpty) return base
+    val deletes = files.flatMap(_.eqDeletes).distinct
+    if (deletes.isEmpty) return base
     val paths = files.map(_.path)
-    val tmps = dirs.indices.map(i => s"__eq_hit$i")
-    val (joined, hits) = dirs.zip(tmps).foldLeft((base, Vector.empty[Column])) {
-      case ((df, hs), (dir, tmp)) =>
-        val attached = files.filter(_.eqDeletes.contains(dir)).map(_.path)
-        val (j, hit) = EqualityDeletes.deletedBy(spark, df, dir, attached, paths, fpCol, tmp)
+    val tmps = deletes.indices.map(i => s"__eq_hit$i")
+    val (joined, hits) = deletes.zip(tmps).foldLeft((base, Vector.empty[Column])) {
+      case ((df, hs), (del, tmp)) =>
+        val attached = files.filter(_.eqDeletes.contains(del)).map(_.path)
+        val (j, hit) = EqualityDeletes.deletedBy(spark, df, del, attached, paths, fpCol, tmp)
         (j, hs :+ hit)
     }
     joined.filter(!hits.reduce(_ || _)).drop(tmps: _*)

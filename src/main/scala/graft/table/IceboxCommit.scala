@@ -10,7 +10,9 @@ import org.apache.hadoop.fs.{Path => HPath}
   * behind.
   *
   * '''One protocol.''' [[publish]] is the entry point for every commit; a
-  * data commit calls it after writing its files. Its steps:
+  * data or merge-on-read commit calls it after writing its data and delete
+  * files through [[DataFileCommitter]], which creates each file under its
+  * final name (nothing staged, marked or renamed). Its steps:
   *
   *  1. '''claim''' — resolve the file set against the parent it will land
   *     on (`resolve(parent)`, the branch head or the main head), build the
@@ -196,8 +198,9 @@ private[table] final class IceboxCommit(t: Icebox) {
   /** Delete every kind of commit residue older than `cutoffMs` that the
     * `live` snapshots do not reference: manifests no live snapshot is,
     * checkpoint shards no surviving manifest names, bloom and sketch side
-    * files (rollups named by `sketch.ndv.rollup.*` stay), data files, delete
-    * dirs, and the temps and lock graves of interrupted metadata writes.
+    * files (rollups named by `sketch.ndv.rollup.*` stay), data and delete
+    * files (with the delete dirs older manifests name), and the temps and
+    * lock graves of interrupted metadata writes.
     * Returns the deleted paths. Data, delete, shard and side files are
     * written BEFORE their commit's manifest, so the mtime gate is what
     * keeps an in-flight commit's files.
@@ -234,48 +237,39 @@ private[table] final class IceboxCommit(t: Icebox) {
     val liveSketches = (files.flatMap(_.sketches.values) ++ rollups).map(_ + ".hll").toSet
     root ++ manifests ++ sweep(t.shardsDir)(liveShards) ++ sweep(t.bloomsDir)(liveBlooms) ++
       sweep(t.sketchesDir)(liveSketches) ++
-      deleteUnreferenced(files.map(_.path).toSet, cutoffMs) ++
-      deleteUnreferencedDeleteDirs(files.flatMap(f => f.deletes ++ f.eqDeletes).toSet, cutoffMs)
+      deleteUnreferenced(files.flatMap(f => f.path +: (f.deletes ++ f.eqDeletes)).toSet, cutoffMs)
   }
 
-  /** Remove delete dirs under `deletes/` that are not `referenced`. */
-  private def deleteUnreferencedDeleteDirs(referenced: Set[String], cutoffMs: Long): Seq[String] = {
-    if (!store.exists(t.deletesDir)) return Nil
-    store.list(t.deletesDir)
-      .filter(st => !referenced(store.render(st.getPath)) && st.getModificationTime < cutoffMs)
-      .map { st => store.deleteRecursive(st.getPath); store.render(st.getPath) }
-  }
-
-  /** Delete files under data/ that are dead relative to `referenced`:
-    * data files (*.parquet) not referenced, and AUXILIARY files (Hadoop
-    * .crc checksums, and the `_SUCCESS` markers of commits written through
-    * Spark's committer by earlier versions) only when their directory
-    * holds no referenced file — a live commit's checksums are never
-    * touched. Empty directories are pruned.
+  /** Delete the files under `data/` and `deletes/` that no `live` path
+    * covers, and prune the dirs this empties. A live path covers itself
+    * and, when it names a dir, everything under it: manifests written
+    * before delete files were single files name delete DIRS. An uncovered
+    * AUXILIARY file (not `.parquet`: Hadoop `.crc` checksums, and the
+    * `_SUCCESS` markers Spark's committer left in earlier versions'
+    * commit and delete dirs) stays while its dir leads to a live path, so
+    * a live file's checksum is never touched.
     */
-  private def deleteUnreferenced(referenced: Set[String], cutoffMs: Long): Seq[String] = {
-    if (!store.exists(t.dataDir)) return Nil
-    val dataDirStr = store.render(t.dataDir)
-    def underData(d: String): Boolean =
-      d == dataDirStr || d.startsWith(dataDirStr + "/")
-    // every ancestor directory between a referenced file and dataDir is
-    // live: partitioned writes put parquet in data/__commit=N/part=v/ while
-    // an earlier version's _SUCCESS marker sits at the commit root
-    val refDirs = referenced.flatMap { p =>
-      Iterator.iterate(new HPath(p).getParent)(_.getParent)
-        .takeWhile(d => d != null && underData(store.render(d)))
-        .map(store.render)
-    }
+  private def deleteUnreferenced(live: Set[String], cutoffMs: Long): Seq[String] = {
+    val roots = Seq(t.dataDir, t.deletesDir).filter(store.exists)
+    val rootStrs = roots.map(store.render)
+    // a path's dirs below its root: partitioned writes put parquet in
+    // data/graft_commit=<id>/part=v/ while an earlier version's _SUCCESS
+    // marker sits at the commit dir
+    def dirsOf(p: String): Iterator[String] =
+      Iterator.iterate(new HPath(p).getParent)(_.getParent).takeWhile(_ != null)
+        .map(store.render).takeWhile(d => rootStrs.exists(r => d.startsWith(r + "/")))
+    val liveDirs = live.flatMap(dirsOf)
     val deleted = Seq.newBuilder[String]
-    store.walk(t.dataDir).reverse.foreach { st =>
-      val p = st.getPath
-      if (st.isFile && st.getModificationTime < cutoffMs) {
-        val dead =
-          if (p.getName.endsWith(".parquet")) !referenced(store.render(p))
-          else !refDirs(store.render(p.getParent))
-        if (dead) { store.deleteIfExists(p); deleted += store.render(p) }
-      } else if (st.isDirectory && store.render(p) != dataDirStr && store.list(p).isEmpty)
-        store.deleteIfExists(p)
+    roots.zip(rootStrs).foreach { case (root, rootStr) =>
+      store.walk(root).reverse.foreach { st =>
+        val p = store.render(st.getPath)
+        if (st.isFile && st.getModificationTime < cutoffMs) {
+          val dead = !live(p) && !dirsOf(p).exists(live) &&
+            (st.getPath.getName.endsWith(".parquet") || !liveDirs(store.render(st.getPath.getParent)))
+          if (dead) { store.deleteIfExists(st.getPath); deleted += p }
+        } else if (st.isDirectory && p != rootStr && store.list(st.getPath).isEmpty)
+          store.deleteIfExists(st.getPath)
+      }
     }
     deleted.result()
   }

@@ -126,20 +126,6 @@ final class TableStore(val root: HPath, conf: Configuration) {
     r
   }
 
-  def deleteRecursive(p: HPath): Boolean =
-    try mfs.delete(p, true)
-    catch { case _: java.io.FileNotFoundException => false }
-
-  /** Plain rename for COMMIT-PRIVATE files (e.g. stamping bucket ids into
-    * just-written data file names): no CAS semantics — the commit dir is
-    * invisible to every other writer until its manifest publishes, so there
-    * is nothing to race. Metadata-only on file:// and HDFS; object stores
-    * implement rename as copy, so callers gate it off there.
-    */
-  def renamePlain(src: HPath, dst: HPath): Boolean =
-    try mfs.rename(src, dst)
-    catch { case _: java.io.FileNotFoundException => false }
-
   def mtime(p: HPath): Long = mfs.getFileStatus(p).getModificationTime
 
   def list(p: HPath): Seq[FileStatus] = mfs.listStatus(p).toSeq

@@ -200,4 +200,25 @@ class BloomIndexSpec extends SparkSpec {
     val files = t.currentSnapshot.get.files
     all(files.map(_.blooms.keySet)) shouldBe Set("k")
   }
+
+  test("a bloom + sketch append of 40 files builds its side data in one pass, no listing") {
+    val t = Icebox(tmpDir("bloom-side-pass"))
+    t.setProperties(Map("manifest.bloom.columns" -> "k", "sketch.ndv.columns" -> "k"))
+    // 40 tasks, 40 files: past the 32-path parallel-listing threshold
+    val df = spark.range(0, 4000, 1, 40).select(col("id").as("k"), (col("id") % 7).as("v"))
+    val jobs = jobNamesOf(t.append(df))
+    info(jobs.mkString("\n"))
+    jobs.foreach { j =>
+      j should not include "Listing leaf files"
+      j should not include "parquet at " // a schema-inferring DataFrameReader.parquet
+    }
+    // the write, then one aggregation (its shuffle stage and its result)
+    jobs should have size 3
+    val files = t.currentSnapshot.get.files
+    files should have size 40
+    files.foreach { f =>
+      f.blooms.keySet shouldBe Set("k")
+      f.sketches.keySet shouldBe Set("k")
+    }
+  }
 }

@@ -11,7 +11,7 @@ import graft.table.Icebox
   *  - pure append: added rows ARE the inserts, no Except node, only added
   *    files read;
   *  - merge-on-read delete attach: newly-deleted rows computed by flag
-  *    joins against only the new delete dirs, no Except node;
+  *    joins against only the new delete files, no Except node;
   *  - metadata-only manifest change (ANALYZE sketches): empty diff with
   *    ZERO file I/O;
   * while mixed ranges keep the exact net semantics (a row appended and an

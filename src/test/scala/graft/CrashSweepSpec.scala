@@ -73,14 +73,14 @@ class CrashSweepSpec extends SparkSpec {
     val snaps = t.allSnapshots
     val files = snaps.flatMap(_.files)
     val data = files.map(f => local(f.path)).toSet
-    val deleteDirs = files.flatMap(f => f.deletes ++ f.eqDeletes).map(local)
+    val deletes = files.flatMap(f => f.deletes ++ f.eqDeletes).map(local)
     val meta = root.resolve("_snapshots")
     val kept = Set(root.resolve("_current"), root.resolve("_properties.json"),
       root.resolve("_properties.lock")) ++ snaps.map(s => meta.resolve(s"${s.id}.json")) ++
       files.flatMap(_.blooms.values).map(sha => meta.resolve(s"blooms/$sha.bloom")) ++
       files.flatMap(_.sketches.values).map(sha => meta.resolve(s"sketches/$sha.hll"))
     walk(root).filter(Files.isRegularFile(_)).filterNot { p =>
-      kept(p) || data(p) || deleteDirs.exists(d => p.startsWith(d))
+      kept(p) || data(p) || deletes.exists(d => p.startsWith(d))
     }.map(_.toString)
   }
 
@@ -106,11 +106,13 @@ class CrashSweepSpec extends SparkSpec {
     FaultFs.reset()
     op.run(Icebox(dir))
     val steps = FaultFs.count
-    // data files are created under their final names: no committer
-    // staging, marker or rename under data/
-    FaultFs.trace.filter(_.contains(s"${root}/data/")).foreach { call =>
-      call should not startWith "rename"
+    // data and delete files are created under their final names: no
+    // committer staging or marker anywhere in the table, and no rename of
+    // a table file (renames publish metadata only)
+    FaultFs.trace.foreach { call =>
       Seq("_temporary", "_SUCCESS", ".spark-staging").foreach(call should not include _)
+      if (call.startsWith("rename"))
+        Seq(s"$root/data/", s"$root/deletes/").foreach(call should not include _)
     }
     val post = observe(Icebox(dir))
     post should not be pre
@@ -181,6 +183,21 @@ class CrashSweepSpec extends SparkSpec {
     Thread.sleep(2)
     t.removeOrphans(0L)
     unreferenced(t) shouldBe empty
+    // a merge-on-read DELETE whose delete-file task throws
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    MergeSql.register("sweep_task_failure", t)
+    FaultFs.reset()
+    FaultFs.before(_.toUri.getPath.contains("/deletes/")) {
+      throw new java.io.IOException("injected task failure")
+    }
+    try quiet(an[Exception] should be thrownBy
+      DmlSql.delete(spark, "DELETE FROM sweep_task_failure WHERE id = 2"))
+    finally FaultFs.reset()
+    val u = Icebox(dir)
+    observe(u) shouldBe pre
+    Thread.sleep(2)
+    u.removeOrphans(0L)
+    unreferenced(u) shouldBe empty
   }
 
   test("crash at every step of a merge-on-read DELETE") {
@@ -243,7 +260,15 @@ class CrashSweepSpec extends SparkSpec {
     FaultFs.reset()
     t.append(rows(7 to 7, "c"))
     steps(FaultFs.trace).map(_._1) shouldBe "create" +: tail.map(_._1)
+    // a one-row merge-on-read DELETE: its delete file is a single create
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    MergeSql.register("sweep_publish", t)
     FaultFs.reset()
+    DmlSql.delete(spark, "DELETE FROM sweep_publish WHERE id = 7")
+    val delete = FaultFs.trace
+    FaultFs.reset()
+    steps(delete).map(_._1) shouldBe "create" +: tail.map(_._1)
+    delete.head should include(s"${local(t.tableDir)}/deletes/")
   }
 
   test("cherrypick resolves its files against the head it lands on") {

@@ -32,6 +32,17 @@ class EqualityDeleteSpec extends SparkSpec {
     t.rowCount shouldBe None // manifest counts are upper bounds now
   }
 
+  test("deleteByKeys of an empty key frame commits a no-op snapshot") {
+    val t = freshTable("eqdel-empty")
+    val before = t.currentSnapshot.get
+    val rows = canon(t.read(spark))
+    val after = t.deleteByKeys(Seq.empty[Long].toDF("id"))
+    after.id shouldBe before.id + 1
+    after.files shouldBe before.files
+    after.files.flatMap(_.eqDeletes) shouldBe empty
+    canon(t.read(spark)) shouldBe rows
+  }
+
   test("merge-on-read upsert: new images win, unmatched rows survive, zero rewrite") {
     val t = freshTable("eqdel-upsert")
     val before = t.currentSnapshot.get.files.map(_.path).toSet

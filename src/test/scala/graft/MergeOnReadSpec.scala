@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sql.{DmlSql, MergeSql}
 import graft.table.Icebox
@@ -195,5 +197,43 @@ class MergeOnReadSpec extends SparkSpec {
     r.rewrittenFiles shouldBe 0
     t.currentSnapshot.get.files shouldBe before
     t.read(spark).count() shouldBe 80L
+  }
+
+  test("a manifest naming a legacy delete dir still reads, and reclaim keeps the dir") {
+    val (t, name) = freshTable("mor-legacy-dir")
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    DmlSql.delete(spark, s"DELETE FROM $name WHERE id = 1")
+    t.deleteByKeys(Seq(2L).toDF("id"))
+    // the layout earlier versions wrote: the manifest names the delete's
+    // dir, which holds its part file and Spark's _SUCCESS marker
+    val files = t.currentSnapshot.get.files.flatMap(f => f.deletes ++ f.eqDeletes).distinct
+    files should have size 2
+    val dirs = files.map(f => Paths.get(f).getParent)
+    dirs.foreach(d => Files.createFile(d.resolve("_SUCCESS")))
+    Files.list(Paths.get(t.tableDir, "_snapshots")).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".json")).foreach { m =>
+        Files.writeString(m, files.zip(dirs).foldLeft(Files.readString(m)) {
+          case (json, (f, d)) => json.replace(f, d.toString)
+        })
+      }
+    graft.plans.IceboxStats.invalidate(t.tableDir)
+    val u = Icebox(t.tableDir)
+    u.currentSnapshot.get.files.flatMap(f => f.deletes ++ f.eqDeletes).distinct.toSet shouldBe
+      dirs.map(_.toString).toSet
+    val expected = (3 to 80).map(_.toLong)
+    u.read(spark).select("id").as[Long].collect().sorted shouldBe expected
+    u.readIndexed(spark).select("id").as[Long].collect().sorted shouldBe expected
+    Thread.sleep(2)
+    u.removeOrphans(0L)
+    dirs.foreach { d =>
+      Files.exists(d.resolve("_SUCCESS")) shouldBe true
+      Files.list(d).iterator.asScala.count(_.toString.endsWith(".parquet")) shouldBe 1
+    }
+    u.read(spark).count() shouldBe 78L
+    // once no snapshot names them, the dirs go whole
+    u.compact(spark, targetFileMb = 1)
+    u.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1000, retainLast = 1)
+    dirs.foreach(d => Files.exists(d) shouldBe false)
+    u.read(spark).count() shouldBe 78L
   }
 }

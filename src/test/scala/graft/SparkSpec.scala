@@ -1,8 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
@@ -44,15 +44,22 @@ abstract class SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAl
     * tagged with a fresh job group; a marker job in a second group, seen
     * last, proves every earlier event has been delivered.
     */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobNamesOf(body).size
+
+  /** [[jobsOf]]'s jobs, each named by the description Spark gave it (such
+    * as a file-listing job's) and its stages' call sites, e.g.
+    * `measured: collect at Icebox.scala:12`.
+    */
+  def jobNamesOf(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val seen = new AtomicInteger
+    val seen = new ConcurrentLinkedQueue[String]
     val marker = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => seen.incrementAndGet()
+          case `group` => seen.add(e.properties.getProperty("spark.job.description") + ": " +
+            e.stageInfos.map(_.name).mkString(", "))
           case g if g == group + "-marker" => marker.countDown()
           case _ =>
         }
@@ -64,7 +71,7 @@ abstract class SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAl
       sc.setJobGroup(group + "-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       marker.await(30, TimeUnit.SECONDS) shouldBe true
-      seen.get
+      seen.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 }
