@@ -585,11 +585,9 @@ object SparkEntry {
       val srcDir = tmp("qmvs_files")
       val table = Icebox(tmp("qmvs_tbl"))
       val mv = Icebox(tmp("qmvs_mv"))
-      mv.setProperties(Map(
-        "mv.id" -> "qmvs#0",
-        "mv.source.dir" -> table.tableDir,
-        "mv.keys" -> "o_orderstatus",
-        "mv.sums" -> "o_totalprice"))
+      mv.setProperties(graft.operators.MvDefinition.write("qmvs#0",
+        graft.operators.MvDefinition("", table.tableDir, Nil, Seq("o_orderstatus"),
+          Seq("o_totalprice"))))
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").cast("decimal(12,2)").as("o_totalprice"))
       (0 until 3).foreach { i =>
@@ -611,8 +609,9 @@ object SparkEntry {
     }),
 
     // Materialized view over an INNER EQUI-JOIN (fact orders ⋈ dim
-    // customer, grouped by the dim's segment), maintained through changes
-    // on BOTH sides via the bilinear delta rule Δ(A⋈B) = ΔA⋈B₂ + A₁⋈ΔB:
+    // customer, grouped by the dim's segment — a star with one dim),
+    // maintained through changes on BOTH sides via the bilinear delta
+    // rule Δ(A⋈B) = ΔA⋈B₂ + A₁⋈ΔB:
     // each refresh joins the fact diff against the dim at its new
     // snapshot plus the fact at its old (cursor) snapshot against the
     // dim diff — both non-delta sides stats/bloom-PRUNED to the files
@@ -859,12 +858,15 @@ object SparkEntry {
     }),
 
     // Catalyst rewrite over a JOIN materialized view: an unchanged
-    // fact⋈dim GROUP BY in spark.sql text is served from the join view —
-    // the rule certifies BOTH scans as pinned-snapshot Icebox reads,
-    // matches the equi-join condition to the view's definition, absorbs
-    // the optimizer's pushed-down isnotnull(joinkey) filters, rolls the
-    // key-subset grouping up, and gates on the TWO-source cursor sitting
-    // at both heads. Proven the same way: every scanned file under _mv.
+    // fact⋈dim GROUP BY in spark.sql text is served from the join view
+    // by the same star rule that serves 3+-table stars (a two-table join
+    // is a star with one dim) — the rule certifies BOTH scans as
+    // pinned-snapshot Icebox reads, matches the leaves to the view's fact
+    // and dim by table dir and the equi-join condition to its join pairs,
+    // absorbs the optimizer's pushed-down isnotnull(joinkey) filters,
+    // rolls the key-subset grouping up, and gates on the 2-part cursor
+    // sitting at both heads. Proven the same way: every scanned file
+    // under _mv.
     "q_mv_join_catalyst" -> ((s, dir) => {
       import s.implicits._
       val wh = tmp("qmvjc_wh")

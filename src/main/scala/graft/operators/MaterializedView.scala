@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.{Icebox, IceboxCommit}
+import graft.table.{Icebox, IceboxCommit, Snapshot}
 
 /** Incrementally maintained materialized aggregate: a target Icebox table
   * holding `GROUP BY keys` counts and sums over a source Icebox table
@@ -10,7 +10,10 @@ import graft.table.{Icebox, IceboxCommit}
   * rows) from the source's change feed instead of O(source) full
   * recomputation — the classic incremental-view-maintenance move (delta
   * processing over an insert/delete change stream), expressed on the
-  * engine's own table format.
+  * engine's own table format. A view reads one source table
+  * ([[MaterializedView.refresh]]) or an inner equi-join of a fact and its
+  * dims ([[MaterializedView.refreshStar]]; a two-table join is a star
+  * with one dim). Its stored definition is an [[MvDefinition]].
   *
   * Maintained aggregates per group: `row_count` (COUNT(*)), and for each
   * requested column `c`: `sum_c` (SUM(c), null when the group holds no
@@ -89,8 +92,8 @@ object MaterializedView {
   }
 
   /** The raw cursor text of the newest refresh marker — `<snap>` for a
-    * single-table view, `<left>:<right>` for a join view. Display/
-    * introspection surface; the typed accessors below parse it.
+    * single-table view, `<fact>:<dim1>:...:<dimk>` for a join view.
+    * Display/introspection surface; the typed accessors parse it.
     */
   def lastRefreshCursor(target: Icebox, mvId: String): Option[String] = {
     val prefix = opPrefix(mvId)
@@ -100,81 +103,29 @@ object MaterializedView {
     }
   }
 
-  /** Two-source cursor of a JOIN view: the (left, right) source snapshot
-    * pair the last committed refresh processed (`mv-refresh:<id>:<l>:<r>`
-    * markers — a target maintains exactly one definition, so single- and
-    * two-source markers never mix under one mvId).
-    */
-  def lastRefreshedSources(target: Icebox, mvId: String): Option[(Long, Long)] = {
-    val prefix = opPrefix(mvId)
-    if (!target.exists) return None
-    target.allSnapshots.iterator.map(_.operation).collectFirst {
-      case op if op.startsWith(prefix) =>
-        op.stripPrefix(prefix).split(':') match {
-          case Array(l, r) => (l.toLong, r.toLong)
-          case other => sys.error(
-            s"mv '$mvId': marker '$op' is not a two-source cursor")
-        }
-    }
-  }
-
   /** Refresh a target from its PERSISTED MvSql definition (`mv.*` table
     * properties), if it carries one — the shared entry point for the
     * maintenance service's tick and the streaming after-commit hook, so
     * every scheduled surface reads one canonical definition. None when
     * the target holds no definition.
     */
-  def refreshFromProperties(spark: SparkSession, target: Icebox): Option[Mode] = {
-    val props = target.properties
-    def list(k: String) =
-      props.get(k).map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    def pairs(s: String) = s.split(',').filter(_.nonEmpty).toSeq.map { pair =>
-      val Array(l, r) = pair.split('='); (l, r) }
-    for {
-      id <- props.get("mv.id")
-      srcDir <- props.get("mv.source.dir")
-      keys <- props.get("mv.keys")
-    } yield (props.get("mv.star.dims"), props.get("mv.source2.dir")) match {
-      case (Some(dimDirs), _) =>
-        // star view: fact + N dims (`mv.star.dims` = ';'-joined dirs,
-        // `mv.star.on` = ';'-joined per-dim 'p=d,p=d' pair lists,
-        // `mv.star.parents` = ';'-joined parent indexes, absent = all fact)
-        val dirsSeq = dimDirs.split(';').filter(_.nonEmpty).toSeq
-        val parents = props.get("mv.star.parents")
-          .map(_.split(';').filter(_.nonEmpty).toSeq.map(_.toInt))
-          .getOrElse(dirsSeq.map(_ => -1))
-        // zip silently truncates — a corrupt/hand-edited `mv.star.parents`
-        // shorter than the dim list would otherwise drop dims and refresh
-        // a WRONG view; fail loudly instead
-        val onSeq = props("mv.star.on").split(';').filter(_.nonEmpty).toSeq
-        require(parents.length == dirsSeq.length && onSeq.length == dirsSeq.length,
-          s"corrupt star-view properties: ${dirsSeq.length} dims but " +
-          s"${parents.length} parents / ${onSeq.length} join lists " +
-          "(mv.star.dims / mv.star.parents / mv.star.on out of sync)")
-        val dims = dirsSeq
-          .zip(onSeq)
-          .zip(parents)
-          .map { case ((dir, on), par) => StarDim(Icebox(dir), pairs(on), par) }
-        refreshStar(spark, Icebox(srcDir), dims, target, id,
-          keys.split(',').toSeq, list("mv.sums"),
-          props.get("mv.where").filter(_.nonEmpty))
-      case (None, Some(dir2)) =>
-        refreshJoin(spark, Icebox(srcDir), Icebox(dir2), target, id,
-          pairs(props.getOrElse("mv.join.on", "")),
-          keys.split(',').toSeq, list("mv.sums"),
-          props.get("mv.where").filter(_.nonEmpty))
-      case (None, None) =>
-        refresh(spark, Icebox(srcDir), target, id, keys.split(',').toSeq,
-          list("mv.sums"), props.get("mv.where").filter(_.nonEmpty),
-          list("mv.minmaxs"), list("mv.distincts"))
-    }
-  }
+  def refreshFromProperties(spark: SparkSession, target: Icebox): Option[Mode] =
+    MvDefinition.read(target.properties).map { case (id, d) =>
+      refreshDefinition(spark, target, id, d) }
 
-  /** Refresh `target` to reflect `source`'s current snapshot. Returns the
-    * mode the refresh ran in. `mvId` names the view (no ':'); a target
-    * maintains exactly one view definition — changing `keys`/`sums`/
-    * `where`/`minmaxs` for an existing target requires a new target table.
+  /** Refresh `target` as view `mvId` of definition `d`: [[refresh]] for a
+    * single-table view, [[refreshStar]] for a join view.
     */
+  private[graft] def refreshDefinition(spark: SparkSession, target: Icebox,
+      mvId: String, d: MvDefinition): Mode =
+    if (d.dims.isEmpty)
+      refresh(spark, Icebox(d.sourceDir), target, mvId, d.keys, d.sums, d.where,
+        d.minmaxs, d.distincts)
+    else
+      refreshStar(spark, Icebox(d.sourceDir),
+        d.dims.map(m => StarDim(Icebox(m.dir), m.on, m.parent)), target, mvId,
+        d.keys, d.sums, d.where)
+
   /** Input-skew spread for a change diff / pruned source read backed by a
     * SMALL table (guide §2.5): scan map-parallelism is bounded by parquet
     * row groups — roughly one task per small file — so on a table of a few
@@ -192,6 +143,20 @@ object MaterializedView {
     if (backingFiles > 0 && backingFiles < p) df.repartition(p) else df
   }
 
+  /** `t` at the pinned `snap`: read outright when the snapshot is at most
+    * [[SmallDimBytes]], else only the files whose stats/blooms admit
+    * `keys` (the bounds probe runs only on that path).
+    */
+  private def pinnedRead(spark: SparkSession, t: Icebox, snap: Snapshot,
+      keys: => DataFrame): DataFrame =
+    if (snap.totalBytes <= SmallDimBytes) t.readSnapshotData(spark, Some(snap))
+    else t.readForKeysAt(spark, keys, Some(snap))
+
+  /** Refresh `target` to reflect `source`'s current snapshot. Returns the
+    * mode the refresh ran in. `mvId` names the view (no ':'); a target
+    * maintains exactly one view definition — changing `keys`/`sums`/
+    * `where`/`minmaxs` for an existing target requires a new target table.
+    */
   def refresh(spark: SparkSession, source: Icebox, target: Icebox, mvId: String,
       keys: Seq[String], sums: Seq[String], where: Option[String] = None,
       minmaxs: Seq[String] = Nil, distincts: Seq[String] = Nil): Mode = {
@@ -255,130 +220,6 @@ object MaterializedView {
     }
   }
 
-  /** Incrementally maintained aggregate over an INNER EQUI-JOIN of two
-    * Icebox tables — the bilinear delta rule, in its asymmetric form:
-    *
-    * {{{ A2⋈B2 − A1⋈B1 = ΔA⋈B2 + A1⋈ΔB }}}
-    *
-    * so a refresh joins (1) the LEFT change diff against the RIGHT table
-    * at its NEW snapshot and (2) the LEFT table at its OLD (cursor)
-    * snapshot against the RIGHT change diff; each joined row carries the
-    * sign of its diff row, and the signed union feeds the exact same
-    * group-delta arithmetic as the single-table path. Both non-delta
-    * sides are PRUNED READS: only files whose stats/blooms admit the
-    * diff's join-key values are scanned ([[Icebox.readForKeysAt]], pinned
-    * to the head/cursor snapshot respectively) — at 100 TB a refresh
-    * costs O(Δ × files matching Δ's join keys), never a full scan of
-    * either table. Updates arrive as delete+insert versions on either
-    * side, so join-key CHANGES (a row re-pointing at a new dimension
-    * key) maintain exactly: the delete joins its old partner, the insert
-    * its new one.
-    *
-    * Naming contract (enforced by the SQL surface): apart from the join
-    * pair columns, the two tables' column names must be DISJOINT — the
-    * joined row exposes the left columns plus the right's non-join
-    * columns, all unqualified. MIN/MAX are not offered over joins
-    * (touched-group recompute would need a two-sided re-join; use a
-    * single-table MV over the join's materialization instead). The
-    * cursor is the snapshot PAIR, riding the refresh commit's op string
-    * — same exactly-once and concurrent-refresher story as [[refresh]].
-    */
-  def refreshJoin(spark: SparkSession, left: Icebox, right: Icebox,
-      target: Icebox, mvId: String, joinOn: Seq[(String, String)],
-      keys: Seq[String], sums: Seq[String], where: Option[String] = None): Mode = {
-    require(mvId.nonEmpty && !mvId.contains(":"), s"mvId must be non-empty without ':' (got '$mvId')")
-    require(keys.nonEmpty, "materialized view needs at least one group key")
-    require(joinOn.nonEmpty, "join view needs at least one equi-join column pair")
-    val lSnap = left.currentSnapshot.getOrElse(
-      sys.error(s"left source ${left.tableDir} has no snapshot"))
-    val rSnap = right.currentSnapshot.getOrElse(
-      sys.error(s"right source ${right.tableDir} has no snapshot"))
-    // same TOCTOU discipline as refresh(): head before cursor
-    val tgtHead = if (target.exists) target.currentSnapshotId else -1L
-    val last = lastRefreshedSources(target, mvId)
-    if (last.contains((lSnap.id, rSnap.id))) return NoOp
-    val op = opPrefix(mvId) + s"${lSnap.id}:${rSnap.id}"
-
-    def filtered(df: DataFrame): DataFrame =
-      where.map(w => df.filter(expr(w))).getOrElse(df)
-    // inner equi-join exposing left columns + right non-join columns:
-    // right join columns ride under collision-proof temp names and drop
-    // after the join (their values equal the left pair column's anyway)
-    def joined(a: DataFrame, b0: DataFrame): DataFrame = {
-      val tmps = joinOn.indices.map(i => s"__mvj_$i")
-      val b = joinOn.zip(tmps).foldLeft(b0) { case (df, ((_, rc), tmp)) =>
-        df.withColumnRenamed(rc, tmp) }
-      val cond = joinOn.zip(tmps).map { case ((lc, _), tmp) =>
-        col(lc) === col(tmp) }.reduce(_ && _)
-      a.join(b, cond, "inner").drop(tmps: _*)
-    }
-    def fullAggs: Seq[Column] =
-      count(lit(1)).as("row_count") +: sums.flatMap(c =>
-        Seq(sum(col(c)).as(s"sum_$c"), count(col(c)).as(s"nn_$c")))
-
-    def fullBuild(): Mode = {
-      val df = filtered(joined(left.read(spark), right.read(spark)))
-        .groupBy(keys.map(col): _*).agg(fullAggs.head, fullAggs.tail: _*)
-      target.overwriteAs(op, df, Nil)
-      FullBuild
-    }
-
-    last match {
-      case None => fullBuild()
-      case Some((fromL, fromR)) =>
-        // a side whose cursor already sits at its head (metadata compare,
-        // zero I/O) has an empty diff — its whole term vanishes. The
-        // steady-state fact-only refresh runs ONE term, not two.
-        // a cursor expired on either source: only a full rebuild can catch up
-        if (!left.snapshotExists(fromL) || !right.snapshotExists(fromR)) return fullBuild()
-        val dl0 =
-          if (fromL != lSnap.id) Some(left.changeDiff(spark, fromL, lSnap.id)) else None
-        val dr0 =
-          if (fromR != rSnap.id) Some(right.changeDiff(spark, fromR, rSnap.id)) else None
-        // each diff feeds its term's join AND the other side's pruning-key
-        // collection (a separate collect job) — persist so each diff's
-        // scan runs once (same move as refreshStar)
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val dl = dl0.map(d => spreadIfNarrow(d, lSnap.files.size).persist(lvl))
-        val dr = dr0.map(d => spreadIfNarrow(d, rSnap.files.size).persist(lvl))
-        try {
-        // small-side fast path: when the pinned side is a few MB the
-        // bounds-probe job costs more than the IO it saves
-        def pinnedRead(t: Icebox, snap: graft.table.Snapshot, keys: => DataFrame): DataFrame =
-          if (snap.totalBytes <= SmallDimBytes) t.readSnapshotData(spark, Some(snap))
-          else t.readForKeysAt(spark, keys, Some(snap))
-        // ΔA⋈B@new — right read pruned to files admitting ΔA's join keys
-        val termA = dl.map(d => joined(d, pinnedRead(right, rSnap,
-          d.select(joinOn.map { case (lc, rc) => col(lc).as(rc) }: _*))))
-        // A@old⋈ΔB — left read pruned likewise, pinned to the CURSOR snapshot;
-        // the streamed (fact-sized) side gets the narrow-scan spread
-        val termB = dr.map { d =>
-          val fromSnap = left.snapshot(fromL)
-          joined(spreadIfNarrow(pinnedRead(left, fromSnap,
-            d.select(joinOn.map { case (lc, rc) => col(rc).as(lc) }: _*)),
-            fromSnap.files.size), d)
-        }
-        val terms = termA.toSeq ++ termB
-        if (terms.isEmpty) { // unreachable when last != heads — guard
-          target.commitMarker(op, expectHeadId = tgtHead)
-          return MarkerOnly
-        }
-        // schema evolution between the two cursors: term A reads the NEW
-        // schema, term B's left side is pinned to the OLD snapshot — a
-        // column added (or dropped) mid-stream exists on one side only.
-        // allowMissingColumns null-fills it, which IS evolution's read
-        // semantics (pre-evolution rows surface the added column as null)
-        val diff = filtered(terms.reduce(_.unionByName(_, allowMissingColumns = true)))
-        applyDelta(spark, target, op, tgtHead, diff, keys, sums, Nil,
-          _ => sys.error("min/max not maintained over joins"),
-          () => refreshJoin(spark, left, right, target, mvId, joinOn, keys, sums, where))
-        } finally {
-          dl.foreach(_.unpersist(blocking = false))
-          dr.foreach(_.unpersist(blocking = false))
-        }
-    }
-  }
-
   /** One dimension of a STAR (or SNOWFLAKE) view: the dim table plus the
     * parent→dim join pairs (`parentCol = dimCol`). `parent` is -1 when the
     * dim joins the FACT (the star shape), or the index of an EARLIER dim
@@ -404,10 +245,11 @@ object MaterializedView {
     }
   }
 
-  /** Incrementally maintained aggregate over a STAR JOIN — one fact table
-    * inner-equi-joined to `dims` dimension tables, each on its own
-    * fact-column = dim-column pairs. The 2-way bilinear rule telescopes:
-    * with old/new marked 1/2,
+  /** Incrementally maintained aggregate over an INNER EQUI-JOIN — one fact
+    * table joined to `dims` dimension tables, each on its own
+    * parent-column = dim-column pairs. Every join view runs here: a
+    * two-table join is a star with one dim. The bilinear delta rule
+    * Δ(A⋈B) = ΔA⋈B₂ + A₁⋈ΔB telescopes: with old/new marked 1/2,
     *
     * {{{
     * Δ(F⋈D¹⋈…⋈Dᵏ) = ΔF ⋈ D¹₂ ⋈ … ⋈ Dᵏ₂
@@ -417,7 +259,10 @@ object MaterializedView {
     * i.e. each term swaps exactly one source for its change diff, reading
     * the sources BEFORE it at their NEW snapshots and the ones AFTER it at
     * their OLD (cursor) snapshots — the signed union then feeds the same
-    * group-delta arithmetic as every other view.
+    * group-delta arithmetic as every other view. Updates arrive as
+    * delete+insert versions on any side, so a row re-pointing at a new
+    * dim key maintains exactly: the delete joins its old partner, the
+    * insert its new one.
     *
     * '''Pruning.''' Every non-delta read is key-pruned ([[Icebox.readForKeysAt]],
     * pinned to the term's snapshot): in the ΔF term each dim is pruned to
@@ -426,8 +271,11 @@ object MaterializedView {
     * by the join-key values of that already-pruned fact slice. A refresh
     * therefore costs O(Δ × files the deltas touch transitively), never a
     * full scan of the fact or any dim — the star-schema warehouse shape
-    * at 100 TB. Same N-part-cursor exactly-once and concurrent-refresher
-    * guarantees as [[refreshJoin]] (which is the k=1 special case).
+    * at 100 TB. A pinned snapshot of at most [[SmallDimBytes]], fact or
+    * dim, is read outright instead. The cursor is the N-part snapshot
+    * list (`mv-refresh:<id>:<f>:<d1>:...:<dk>`) riding the refresh
+    * commit's op string: the same exactly-once and concurrent-refresher
+    * guarantees as [[refresh]].
     *
     * '''Snowflake chains''' ([[StarDim.parent]] >= 0, e.g.
     * customer→nation→region): the telescoped delta rule is join-shape
@@ -438,9 +286,9 @@ object MaterializedView {
     * parent joined), and a ΔDʲ term's fact pruning maps ΔDʲ's keys up the
     * chain level by level (dim slice → parent keys → … → fact files).
     *
-    * MIN/MAX/COUNT(DISTINCT) are not offered over stars (same contract as
-    * 2-way joins); dim column names beyond the join pairs must be disjoint
-    * from the fact's and each other's.
+    * MIN/MAX/COUNT(DISTINCT) are not offered over joins (touched-group
+    * recompute would need a re-join); dim column names beyond the join
+    * pairs must be disjoint from the fact's and each other's.
     */
   def refreshStar(spark: SparkSession, fact: Icebox, dims: Seq[StarDim],
       target: Icebox, mvId: String, keys: Seq[String], sums: Seq[String],
@@ -468,7 +316,7 @@ object MaterializedView {
     def filtered(df: DataFrame): DataFrame =
       where.map(w => df.filter(expr(w))).getOrElse(df)
     // inner equi-join hiding the dim-side join columns (values equal the
-    // fact pair column's) — same rename trick as refreshJoin's joined()
+    // parent pair column's): they ride under collision-proof temp names
     def joinDim(a: DataFrame, b0: DataFrame, joinOn: Seq[(String, String)]): DataFrame = {
       val tmps = joinOn.indices.map(i => s"__mvs_$i")
       val b = joinOn.zip(tmps).foldLeft(b0) { case (df, ((_, rc), tmp)) =>
@@ -529,7 +377,7 @@ object MaterializedView {
           o.map(d => cache(spreadIfNarrow(d, snap.files.size))) }
         // snapshot of dim m as seen by term j: before the swapped source at
         // NEW, at-or-after it at OLD (term 0 = the ΔF term sees all-new)
-        def dimSnapInTerm(m: Int, j: Int): graft.table.Snapshot =
+        def dimSnapInTerm(m: Int, j: Int): Snapshot =
           if (m < j) dSnaps(m) else dims(m).table.snapshot(fromD(m))
         // term 0: ΔF ⋈ every dim at its NEW snapshot. Star dims prune by
         // ΔF's keys directly; CHAIN dims (parent >= 0) prune by the
@@ -548,13 +396,8 @@ object MaterializedView {
               // saves nothing — read it outright, the join filters. At
               // scale the typical star has exactly this shape: one big
               // fact, dims that fit in a broadcast.
-              val dimDf =
-                if (snap.totalBytes <= SmallDimBytes) dm.table.readSnapshotData(spark, Some(snap))
-                else {
-                  val pruneSrc = if (dm.parent < 0) pruneBase else cache(acc)
-                  dm.table.readForKeysAt(spark,
-                    dimKeysOf(pruneSrc, dm.joinOn), Some(snap))
-                }
+              val dimDf = pinnedRead(spark, dm.table, snap, dimKeysOf(
+                if (dm.parent < 0) pruneBase else cache(acc), dm.joinOn))
               joinDim(acc, dimDf, dm.joinOn)
             }
           }
@@ -578,8 +421,13 @@ object MaterializedView {
             p = dp.parent
           }
           val fromSnap = fact.snapshot(fromF)
-          val fPruned = cache(spreadIfNarrow(
-            fact.readForKeysAt(spark, keysUp, Some(fromSnap)), fromSnap.files.size))
+          val fRead = spreadIfNarrow(pinnedRead(spark, fact, fromSnap, keysUp),
+            fromSnap.files.size)
+          // persisted only when another fact-joined dim prunes from it too
+          // (one pruning probe job reads it before the term's own job)
+          val prunedAgain = dims.zipWithIndex.exists { case (dm, m) =>
+            m != j && dm.parent < 0 && dimSnapInTerm(m, j).totalBytes > SmallDimBytes }
+          val fPruned = if (prunedAgain) cache(fRead) else fRead
           foldDims(fPruned, fPruned, j, acc => joinDim(acc, dDiff, dj.joinOn))
         }
         val changedTerms = dims.zipWithIndex.flatMap { case (dj, j) =>

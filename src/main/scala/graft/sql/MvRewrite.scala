@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, max, min, sum}
 import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
-import graft.operators.MaterializedView
+import graft.operators.{MaterializedView, MvDefinition}
 import graft.plans.IceboxFileIndex
 import graft.table.Icebox
 
@@ -26,7 +26,9 @@ import graft.table.Icebox
   * `SET spark.graft.mv.rewrite.enabled=false`.
   *
   * The rule fires only on plans it can CERTIFY as a plain aggregate of
-  * one Icebox table read at one pinned snapshot:
+  * one Icebox table read at one pinned snapshot, or of an inner
+  * equi-join of such reads served from a join view (see
+  * `tryStarRewrite`; a join view never answers a single-table query):
   *
   *  - the scan subtree must be `[Project(attr/alias-only)] ⇄ [Filter]`
   *    over a single `LogicalRelation(IceboxFileIndex)` — the shape
@@ -68,8 +70,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val wh = DmlSql.currentWarehouse.getOrElse(return plan)
     plan.transformDown {
       case agg: Aggregate =>
-        tryRewrite(agg, wh).orElse(tryJoinRewrite(agg, wh))
-          .orElse(tryStarRewrite(agg, wh)).getOrElse(agg)
+        tryRewrite(agg, wh).orElse(tryStarRewrite(agg, wh)).getOrElse(agg)
     }
   }
 
@@ -180,142 +181,6 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     Some((keys, specs, hasDistinct))
   }
 
-  /** The JOIN flavor: an aggregate over `[Project] Join(Inner, a.x = b.y)`
-    * of two certifiable pinned-snapshot Icebox scans is answered from a
-    * fresh JOIN materialized view whose sources, join condition, and
-    * column coverage subsume the query. Post-pushdown reality the
-    * certification must absorb: the optimizer has already pushed the
-    * query's WHERE into the join sides and planted `isnotnull` on the
-    * join keys — so side filters are accepted iff each conjunct is (a) an
-    * IsNotNull on a join-key column (implied by the inner join the view
-    * already performed — dropped), or (b) a predicate over view KEY
-    * columns only (re-applied on the view's rows). Freshness is the
-    * two-source cursor: both scans pinned at their sources' heads AND the
-    * view's last refresh processed exactly that head pair.
-    */
-  private def tryJoinRewrite(agg: Aggregate, warehouse: String): Option[LogicalPlan] = {
-    val (projAbove, joinPlan) = agg.child match {
-      case Project(pl, j: Join) if attrsOnly(pl) => (pl, j)
-      case j: Join => (Seq.empty[NamedExpression], j)
-      case _ => return None
-    }
-    if (joinPlan.joinType != Inner) return None
-    val cond = joinPlan.condition.getOrElse(return None)
-    val (lFilters, lProj, lIndex) = unwrapScan(joinPlan.left).getOrElse(return None)
-    val (rFilters, rProj, rIndex) = unwrapScan(joinPlan.right).getOrElse(return None)
-
-    def sideMaps(index: IceboxFileIndex, proj: Seq[NamedExpression])
-        : (Map[Long, String], Map[String, String]) = {
-      val snapSchema = DataType.fromJson(index.schemaJson).asInstanceOf[StructType]
-      val physToLogical = snapSchema.fields.map(f => Icebox.physicalName(f) -> f.name).toMap
-      val idTo: Map[Long, String] = proj.flatMap {
-        case a @ Alias(ar: AttributeReference, n) => Seq(ar.exprId.id -> n, a.exprId.id -> n)
-        case ar: AttributeReference =>
-          Seq(ar.exprId.id -> physToLogical.getOrElse(ar.name, ar.name))
-        case _ => Nil
-      }.toMap
-      (idTo, physToLogical)
-    }
-    val (lIds, lPhys) = sideMaps(lIndex, lProj)
-    val (rIds, rPhys) = sideMaps(rIndex, rProj)
-    // disjoint logical namespaces (the join-MV DDL contract) — a collision
-    // would make name-based resolution ambiguous, so refuse
-    if (lPhys.values.toSet.intersect(rPhys.values.toSet).nonEmpty) return None
-    val lOut = joinPlan.left.outputSet
-    val rOut = joinPlan.right.outputSet
-    def sideNameOf(ar: AttributeReference): Option[(String, Boolean)] =
-      if (lOut.contains(ar))
-        Some((lIds.getOrElse(ar.exprId.id, lPhys.getOrElse(ar.name, ar.name)), true))
-      else if (rOut.contains(ar))
-        Some((rIds.getOrElse(ar.exprId.id, rPhys.getOrElse(ar.name, ar.name)), false))
-      else None
-    def nameOf(ar: AttributeReference): Option[String] = sideNameOf(ar).map(_._1)
-
-    // join condition: conjunction of left-col = right-col pairs only
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case x => Seq(x)
-    }
-    val joinPairs: Set[(String, String)] = conjuncts(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        (sideNameOf(a), sideNameOf(b)) match {
-          case (Some((an, true)), Some((bn, false))) => (an, bn)
-          case (Some((an, false)), Some((bn, true))) => (bn, an)
-          case _ => return None
-        }
-      case _ => return None
-    }.toSet
-    val lJoinCols = joinPairs.map(_._1)
-    val rJoinCols = joinPairs.map(_._2)
-
-    val (keys, specs, hasDistinct) = classify(agg, nameOf).getOrElse(return None)
-    if (hasDistinct) return None // join views carry no nd_ columns
-
-    // side filters: drop implied isnotnull(joinkey); the rest must be
-    // view-key-only predicates, re-applied on the view's rows
-    def splitSide(filters: Seq[Expression], joinCols: Set[String]): Seq[Expression] =
-      filters.flatMap(conjuncts).flatMap {
-        case IsNotNull(ar: AttributeReference)
-            if nameOf(ar).exists(joinCols.contains) => None
-        case other => Some(other)
-      }
-    val residual = splitSide(lFilters, lJoinCols) ++ splitSide(rFilters, rJoinCols)
-    val filterNames = residual.flatMap(_.collect { case ar: AttributeReference =>
-      nameOf(ar).getOrElse(return None) })
-
-    val mergedIds = lIds ++ rIds
-    val mergedPhys = lPhys ++ rPhys
-
-    MvRewrite.mvDirs(spark, warehouse)
-      .view.flatMap { d =>
-        try serveJoinFrom(Icebox(d), lIndex, rIndex, joinPairs, keys,
-          filterNames, specs, residual, mergedIds, mergedPhys)
-        catch { case scala.util.control.NonFatal(_) => None } // racing DROP
-      }.headOption
-  }
-
-  private def serveJoinFrom(target: Icebox, lIndex: IceboxFileIndex,
-      rIndex: IceboxFileIndex, joinPairs: Set[(String, String)],
-      keys: Seq[String], filterNames: Seq[String], specs: Seq[OutSpec],
-      filters: Seq[Expression], idToLogical: Map[Long, String],
-      physToLogical: Map[String, String]): Option[LogicalPlan] = {
-    val props = target.properties
-    val src1 = props.get("mv.source.dir").getOrElse(return None)
-    val src2 = props.get("mv.source2.dir").getOrElse(return None)
-    if (props.get("mv.where").exists(_.nonEmpty)) return None
-    // orient the query's sides onto the view's (source, source2)
-    val (qs1, qs2, pairsOriented) =
-      if (lIndex.tableDirString == src1 && rIndex.tableDirString == src2)
-        (lIndex, rIndex, joinPairs)
-      else if (lIndex.tableDirString == src2 && rIndex.tableDirString == src1)
-        (rIndex, lIndex, joinPairs.map(_.swap))
-      else return None
-    def list(k: String) = props.get(k).map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val vPairs = list("mv.join.on").map { pair =>
-      val Array(l, r) = pair.split('='); (l, r) }.toSet
-    if (pairsOriented != vPairs) return None
-    val vKeys = props.get("mv.keys").map(_.split(',').toSeq).getOrElse(return None)
-    val vSums = list("mv.sums")
-    val exactKeys = keys.toSet == vKeys.toSet
-    if (!keys.toSet.subsetOf(vKeys.toSet)) return None
-    if (!filterNames.forall(vKeys.contains)) return None
-    def covered(cn: String): Boolean =
-      cn == "row_count" ||
-        (cn.startsWith("sum_") && vSums.contains(cn.stripPrefix("sum_"))) ||
-        (cn.startsWith("nn_") && vSums.contains(cn.stripPrefix("nn_")))
-    if (!specs.flatMap(_.needs).forall(covered)) return None
-    if (!exactKeys && specs.exists(s => !s.isKey && s.rollup.isEmpty)) return None
-    // freshness: both scans pinned at their sources' heads, and the view's
-    // two-source cursor sits exactly on that pair
-    val id = props.get("mv.id").getOrElse(return None)
-    val (h1, h2) = (Icebox(src1).currentSnapshotId, Icebox(src2).currentSnapshotId)
-    if (!qs1.snapshotId.contains(h1) || !qs2.snapshotId.contains(h2)) return None
-    if (!MaterializedView.lastRefreshedSources(target, id).contains((h1, h2))) return None
-
-    Some(buildReplacement(target, translate(filters, idToLogical, physToLogical),
-      specs, keys, exactKeys))
-  }
-
   /** One leaf of a flattened join tree: its pushed filters, scan-level
     * projection, file index, and output attribute set (side identity).
     */
@@ -323,17 +188,18 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       proj: Seq[NamedExpression], index: IceboxFileIndex,
       out: org.apache.spark.sql.catalyst.expressions.AttributeSet)
 
-  /** The STAR flavor: an aggregate over an arbitrary tree of INNER joins
-    * whose leaves are 3+ certifiable pinned-snapshot Icebox scans is
-    * answered from a fresh STAR materialized view. Shape-INDEPENDENT:
-    * leaves match the view's (fact, dims) by TABLE DIR, and every join
-    * conjunct must pair a fact column with one dim's column exactly as
-    * the view's `mv.star.on` records — so the optimizer's join reorder
-    * can't defeat the match. Intermediate projections must be bare
-    * attributes (what column pruning plants); side filters absorb the
-    * planted `isnotnull(joinkey)`s and otherwise must reference view
-    * KEYS only. Freshness gates on the N-part cursor at every source's
-    * head.
+  /** The JOIN flavor: an aggregate over an arbitrary tree of INNER joins
+    * whose leaves are 2+ certifiable pinned-snapshot Icebox scans is
+    * answered from a fresh join materialized view (a star: a two-table
+    * join is a star with one dim). Shape-INDEPENDENT: leaves match the
+    * view's (fact, dims) by TABLE DIR, and every join conjunct must pair
+    * a dim's parent column with that dim's column exactly as the view's
+    * definition records — so the optimizer's join reorder can't defeat
+    * the match. Intermediate projections must be bare attributes (what
+    * column pruning plants); side filters absorb the planted
+    * `isnotnull(joinkey)`s (implied by the inner join the view already
+    * performed) and otherwise must reference view KEYS only. Freshness
+    * gates on the N-part cursor at every source's head.
     */
   private def tryStarRewrite(agg: Aggregate, warehouse: String): Option[LogicalPlan] = {
     def conjunctsOf(e: Expression): Seq[Expression] = e match {
@@ -356,7 +222,6 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case j: Join => flatten(j)
       case _ => None
     }).getOrElse(return None)
-    if (leaves.size < 3) return None // 2-leaf plans go through tryJoinRewrite
 
     // per-leaf logical-name maps; all leaves' namespaces must be disjoint
     val maps = leaves.map { lf =>
@@ -403,32 +268,21 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       pairs: Seq[((Int, String), (Int, String))], keys: Seq[String],
       specs: Seq[OutSpec],
       nameOf: AttributeReference => Option[String]): Option[LogicalPlan] = {
-    val props = target.properties
-    val factDir = props.get("mv.source.dir").getOrElse(return None)
-    val dimDirs = props.get("mv.star.dims")
-      .map(_.split(';').filter(_.nonEmpty).toSeq).getOrElse(return None)
-    if (props.get("mv.where").exists(_.nonEmpty)) return None
+    // the codec refuses (throws on) a corrupt definition: dim, parent and
+    // join lists out of sync, or parents that are not a tree
+    val (id, d) = MvDefinition.read(target.properties).getOrElse(return None)
+    if (d.where.isDefined || d.dims.size + 1 != leaves.size) return None
     // leaves ↔ (fact, dims) by table dir, each exactly once
     val byDir = leaves.zipWithIndex.map { case (lf, i) => lf.index.tableDirString -> i }
     if (byDir.map(_._1).distinct.size != leaves.size) return None // self-join: refuse
     val dirToLeaf = byDir.toMap
-    val factLeaf = dirToLeaf.getOrElse(factDir, return None)
-    val dimLeaves = dimDirs.map(d => dirToLeaf.getOrElse(d, return None))
+    val factLeaf = dirToLeaf.getOrElse(d.sourceDir, return None)
+    val dimLeaves = d.dims.map(dm => dirToLeaf.getOrElse(dm.dir, return None))
     if ((factLeaf +: dimLeaves).toSet.size != leaves.size) return None
     // each dim's PARENT leaf: the fact for plain stars, an earlier dim for
-    // snowflake chains (`mv.star.parents`: ';'-joined indexes, -1 = fact,
-    // absent = all fact — the same convention refreshStar maintains by)
-    val parents: Seq[Int] = props.get("mv.star.parents")
-      .map(_.split(';').filter(_.nonEmpty).toSeq.map(_.toInt))
-      .getOrElse(dimDirs.map(_ => -1))
-    if (parents.length != dimDirs.length) return None // corrupt properties
-    // a parent is the fact (-1) or a STRICTLY EARLIER dim — the convention
-    // refreshStar writes. p >= d admits self-reference (p == d) and cycles
-    // (A->B->A): a corrupt/hand-edited non-tree join graph must be refused
-    // up front, not depended on to fail closed downstream
-    if (parents.zipWithIndex.exists { case (p, d) => p < -1 || p >= d }) return None
+    // snowflake chains
     val parentLeafOf: Seq[Int] =
-      parents.map(p => if (p == -1) factLeaf else dimLeaves(p))
+      d.dims.map(dm => if (dm.parent == -1) factLeaf else dimLeaves(dm.parent))
     // pairs: each conjunct must relate some dim's PARENT leaf to that dim's
     // leaf (the dim leaf identifies the dim uniquely — leaves are distinct)
     val perDim = scala.collection.mutable.Map.empty[Int, Set[(String, String)]]
@@ -444,11 +298,7 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       }
     }
-    val vOn = props.get("mv.star.on").map(_.split(';').filter(_.nonEmpty).toSeq)
-      .getOrElse(return None)
-      .map(_.split(',').filter(_.nonEmpty).toSeq.map { pr =>
-        val Array(l, r) = pr.split('='); (l, r) }.toSet)
-    if (dimLeaves.size != vOn.size) return None
+    val vOn = d.dims.map(_.on.toSet)
     if (dimLeaves.zip(vOn).exists { case (dl, on) => perDim(dl) != on }) return None
 
     // side filters: drop isnotnull on any join-key column; residuals must
@@ -463,26 +313,19 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if nameOf(ar).exists(joinKeyCols.contains) => None
       case other => Some(other)
     }
-    val vKeys = props.get("mv.keys").map(_.split(',').toSeq).getOrElse(return None)
     val filterNames = residual.flatMap(_.collect { case ar: AttributeReference =>
       nameOf(ar).getOrElse(return None) })
-    if (!filterNames.forall(vKeys.contains)) return None
-    val vSums = props.get("mv.sums").map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val exactKeys = keys.toSet == vKeys.toSet
-    if (!keys.toSet.subsetOf(vKeys.toSet)) return None
-    def covered(cn: String): Boolean =
-      cn == "row_count" ||
-        (cn.startsWith("sum_") && vSums.contains(cn.stripPrefix("sum_"))) ||
-        (cn.startsWith("nn_") && vSums.contains(cn.stripPrefix("nn_")))
-    if (!specs.flatMap(_.needs).forall(covered)) return None
+    if (!filterNames.forall(d.keys.contains)) return None
+    val exactKeys = keys.toSet == d.keys.toSet
+    if (!keys.toSet.subsetOf(d.keys.toSet)) return None
+    if (!specs.flatMap(_.needs).forall(covers(d))) return None
     if (!exactKeys && specs.exists(s => !s.isKey && s.rollup.isEmpty)) return None
     // freshness: every leaf pinned at its source's head, N-part cursor there
-    val id = props.get("mv.id").getOrElse(return None)
-    val srcHeads = (factDir +: dimDirs).map(Icebox(_).currentSnapshotId)
+    val srcHeads = (d.sourceDir +: d.dims.map(_.dir)).map(Icebox(_).currentSnapshotId)
     val leafSnaps = (factLeaf +: dimLeaves).map(i => leaves(i).index.snapshotId)
     if (leafSnaps != srcHeads.map(Some(_))) return None
-    if (!MaterializedView.lastRefreshedStar(target, id, dimDirs.size)
-      .contains(srcHeads)) return None
+    if (!MaterializedView.lastRefreshCursor(target, id)
+      .contains(srcHeads.mkString(":"))) return None
 
     val mergedIds = maps.flatMap(_._1).toMap
     val mergedPhys = maps.flatMap(_._2).toMap
@@ -516,6 +359,15 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case r => relOf(r).map(i => (Nil, Nil, i))
     }
   }
+
+  /** Whether the view of definition `d` stores canonical column `cn`. */
+  private def covers(d: MvDefinition)(cn: String): Boolean =
+    cn == "row_count" ||
+      (cn.startsWith("sum_") && d.sums.contains(cn.stripPrefix("sum_"))) ||
+      (cn.startsWith("nn_") && d.sums.contains(cn.stripPrefix("nn_"))) ||
+      (cn.startsWith("min_") && d.minmaxs.contains(cn.stripPrefix("min_"))) ||
+      (cn.startsWith("max_") && d.minmaxs.contains(cn.stripPrefix("max_"))) ||
+      (cn.startsWith("nd_") && d.distincts.contains(cn.stripPrefix("nd_")))
 
   private def logicalOf(name: String, physToLogical: Map[String, String]): String =
     physToLogical.getOrElse(name, name)
@@ -585,33 +437,21 @@ final class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       hasDistinct: Boolean, filters: Seq[Expression],
       idToLogical: Map[Long, String],
       physToLogical: Map[String, String]): Option[LogicalPlan] = {
-    val props = target.properties
-    val vdSourceDir = props.get("mv.source.dir").getOrElse(return None)
-    if (props.contains("mv.source2.dir")) return None // join views: text surface only
-    if (props.get("mv.where").exists(_.nonEmpty)) return None // filtered views: ditto
-    if (vdSourceDir != index.tableDirString) return None
-    def list(k: String) = props.get(k).map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val vKeys = props.get("mv.keys").map(_.split(',').toSeq).getOrElse(return None)
-    val vSums = list("mv.sums"); val vMm = list("mv.minmaxs"); val vNd = list("mv.distincts")
-    val exactKeys = keys.toSet == vKeys.toSet
-    if (!keys.toSet.subsetOf(vKeys.toSet)) return None
+    val (id, d) = MvDefinition.read(target.properties).getOrElse(return None)
+    // a join view never serves a single-table query: its inner join
+    // dropped the fact rows without a dim partner
+    if (d.dims.nonEmpty) return None
+    if (d.where.isDefined) return None // filtered views: text surface only
+    if (d.sourceDir != index.tableDirString) return None
+    val exactKeys = keys.toSet == d.keys.toSet
+    if (!keys.toSet.subsetOf(d.keys.toSet)) return None
     if (hasDistinct && !exactKeys) return None
-    if (!filterNames.forall(vKeys.contains)) return None
-    // column coverage: every canonical column the specs reference must exist
-    def covered(cn: String): Boolean =
-      cn == "row_count" ||
-        (cn.startsWith("sum_") && vSums.contains(cn.stripPrefix("sum_"))) ||
-        (cn.startsWith("nn_") && vSums.contains(cn.stripPrefix("nn_"))) ||
-        (cn.startsWith("min_") && vMm.contains(cn.stripPrefix("min_"))) ||
-        (cn.startsWith("max_") && vMm.contains(cn.stripPrefix("max_"))) ||
-        (cn.startsWith("nd_") && vNd.contains(cn.stripPrefix("nd_")))
-    val referenced = specs.flatMap(_.needs)
-    if (!referenced.forall(covered)) return None
+    if (!filterNames.forall(d.keys.contains)) return None
+    if (!specs.flatMap(_.needs).forall(covers(d))) return None
     if (!exactKeys && specs.exists(s => !s.isKey && s.rollup.isEmpty)) return None
     // freshness: the scanned snapshot IS the source head, and the cursor
     // sits exactly there
-    val id = props.get("mv.id").getOrElse(return None)
-    val srcHead = Icebox(vdSourceDir).currentSnapshotId
+    val srcHead = Icebox(d.sourceDir).currentSnapshotId
     if (!index.snapshotId.contains(srcHead)) return None
     if (!MaterializedView.lastRefreshedSource(target, id).contains(srcHead)) return None
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttrib
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, SubqueryAlias}
-import graft.operators.MaterializedView
+import graft.operators.{MaterializedView, MvDefinition, MvDim}
 import graft.table.Icebox
 
 /** SQL-text surface for incrementally maintained materialized views
@@ -22,15 +22,15 @@ import graft.table.Icebox
   *
   * The SELECT is parsed by SPARK'S OWN PARSER (accepted syntax is exactly
   * Spark's), then validated against the incremental-maintenance contract:
-  * one `GROUP BY` over one registered Icebox table OR an INNER EQUI-JOIN
-  * of two (`FROM a JOIN b ON a.x = b.y` — maintained via the bilinear
-  * delta rule, [[graft.operators.MaterializedView.refreshJoin]]) OR a
-  * STAR chain (`FROM f JOIN d1 ON f.x = d1.y JOIN d2 ON f.z = d2.w` —
-  * every ON relating the FIRST table to the newly joined dim, maintained
-  * by the telescoped rule, [[graft.operators.MaterializedView.refreshStar]];
-  * snowflake chains refuse). Apart from the join pairs all sides' column
-  * names must be disjoint, and keys/aggregates/WHERE reference them
-  * unqualified. The FROM may be optionally
+  * one `GROUP BY` over one registered Icebox table OR over an INNER
+  * EQUI-JOIN of a fact and its dims (`FROM f JOIN d1 ON f.x = d1.y JOIN
+  * d2 ON f.z = d2.w`, each ON relating the newly joined dim to exactly
+  * one earlier table: the fact for a star, an earlier dim for a snowflake
+  * chain). Every join view, a two-table join included (a star with one
+  * dim), is maintained by the telescoped delta rule,
+  * [[graft.operators.MaterializedView.refreshStar]]. Apart from the join
+  * pairs all sides' column names must be disjoint, and keys/aggregates/
+  * WHERE reference them unqualified. The FROM may be optionally
   * filtered by a subquery-free `WHERE` — the delta arithmetic filters
   * the change diff with the same predicate — with aggregates drawn from
   * `COUNT(*)` / `SUM(c)` / `COUNT(c)` / `AVG(c)` / `MIN(c)` / `MAX(c)`.
@@ -46,8 +46,8 @@ import graft.table.Icebox
   * (AVG = sum/nn).
   *
   * The backing table lives at `<warehouse>/_mv/<name>` (warehouse from
-  * [[DmlSql.setWarehouse]]); its definition (source table dir, keys, sum
-  * columns) persists in TABLE PROPERTIES, so `REFRESH MATERIALIZED VIEW`
+  * [[DmlSql.setWarehouse]]); its definition persists in TABLE PROPERTIES
+  * through [[graft.operators.MvDefinition]], so `REFRESH MATERIALIZED VIEW`
   * from a FRESH session needs only the warehouse — no in-memory state.
   * Refresh cost and exactly-once semantics are the operator's: O(changed
   * rows) from the manifest change diff, cursor atomic with the data
@@ -67,33 +67,19 @@ object MvSql {
   private def mvTable(warehouse: String, name: String): Icebox =
     Icebox.table(warehouse, "_mv", name.toLowerCase)
 
-  /** Parsed + validated MV definition: source table name, group keys,
-    * summed columns, columns whose AVG the view exposes (maintained as
-    * sum/nn — AVG itself is derivable, so it rides the same incremental
-    * arithmetic), the WHERE predicate's SQL text if any, and columns
-    * maintained as MIN/MAX (touched-group recompute).
-    */
-  private[graft] final case class MvDef(source: String, keys: Seq[String],
-      sums: Seq[String], avgs: Seq[String] = Nil, where: Option[String] = None,
-      minmaxs: Seq[String] = Nil, source2: Option[String] = None,
-      joinOn: Seq[(String, String)] = Nil, distincts: Seq[String] = Nil,
-      counts: Seq[String] = Nil,
-      starDims: Seq[(String, Seq[(String, String)])] = Nil,
-      // per-dim parent index (-1 = the fact); Nil ⇔ all -1 (pure star) so
-      // legacy persisted definitions compare equal to re-parsed ones
-      starParents: Seq[Int] = Nil)
-
   /** Validate `selectText` against the incremental-maintenance contract
-    * and extract (source, keys, sums). Errors name the offending clause.
+    * and extract its definition, table dirs unresolved (AVG columns ride
+    * as sum/nn; MIN/MAX and COUNT(DISTINCT) by touched-group recompute).
+    * Errors name the offending clause.
     */
-  private[graft] def parseDefinition(spark: SparkSession, selectText: String): MvDef =
+  private[graft] def parseDefinition(spark: SparkSession, selectText: String): MvDefinition =
     parseDefinitionPlan(spark, spark.sessionState.sqlParser.parsePlan(selectText))
 
   private[graft] def parseDefinitionPlan(spark: SparkSession,
-      parsedPlan: LogicalPlan): MvDef = {
+      parsedPlan: LogicalPlan): MvDefinition = {
     def fail(what: String): Nothing = sys.error(
       s"materialized views maintain one GROUP BY over one registered table " +
-      s"or an INNER equi-join of two (optionally WHERE-filtered, no " +
+      s"or an INNER equi-join star of them (optionally WHERE-filtered, no " +
       s"subqueries) with COUNT(*)/SUM(c)/COUNT(c)/AVG(c)/MIN(c)/MAX(c) " +
       s"aggregates only; $what")
 
@@ -163,14 +149,14 @@ object MvSql {
             (Some(cond.sql), inner)
           case other => (None, other)
         }
-        // INNER equi-join maintains via the bilinear delta rule — two
-        // tables through MaterializedView.refreshJoin, a left-deep STAR
-        // or SNOWFLAKE chain through refreshStar: every ON must relate
-        // the newly joined table to exactly ONE already-joined table (the
-        // fact → star dim, an earlier dim → snowflake chain). The ON
-        // clauses must be ANDs of qualifier.col = qualifier.col pairs;
-        // outer joins, joins without ON, and ONs spanning several earlier
-        // tables (a non-tree join graph) refuse.
+        // an INNER equi-join is a left-deep STAR or SNOWFLAKE chain (two
+        // tables: a star with one dim), maintained by refreshStar: every
+        // ON must relate the newly joined table to exactly ONE
+        // already-joined table (the fact → star dim, an earlier dim →
+        // snowflake chain). The ON clauses must be ANDs of
+        // qualifier.col = qualifier.col pairs; outer joins, joins without
+        // ON, and ONs spanning several earlier tables (a non-tree join
+        // graph) refuse.
         def side(x: UnresolvedAttribute): (String, String) = x.nameParts match {
           case Seq(q, c) => (q, c)
           case _ => fail(s"join column '${x.name}' must be qualified (t.col)")
@@ -206,28 +192,21 @@ object MvSql {
               else s"${j.joinType.sql} join (only INNER equi-joins maintain incrementally)")
             case other => (other, Nil)
           }
-        val (source, source2, joinOn, starDims, starParents) = child match {
+        val (source, dims) = child match {
           case j: Join =>
             val (factPlan, dimPlans) = flatten(j)
             val (ft, fq) = relationOf(factPlan)
             var quals = Seq(fq)
-            val dims = dimPlans.map { case (dp, cond) =>
+            (ft, dimPlans.map { case (dp, cond) =>
               val (dt, dq) = relationOf(dp)
               if (quals.contains(dq)) fail(
                 s"join side '$dq' collides with an earlier table (alias one)")
               val (parentQ, on) = pairsFor(cond, quals, dq)
               quals = quals :+ dq
               // parent index: -1 for the fact, else the dim's position
-              (dt, dq, on, quals.indexOf(parentQ) - 1)
-            }
-            dims match {
-              case Seq((dt, _, on, -1)) => (ft, Some(dt), on, Nil, Nil) // 2-way path
-              case many =>
-                val parents = many.map(_._4)
-                (ft, None, Nil, many.map(d => (d._1, d._3)),
-                  if (parents.forall(_ == -1)) Nil else parents)
-            }
-          case _ => (sourceOf(child), None, Nil, Nil, Nil)
+              MvDim(dt, "", on, quals.indexOf(parentQ) - 1)
+            })
+          case _ => (sourceOf(child), Nil)
         }
         val keys = groupingExprs.map(attrName)
         if (keys.isEmpty) fail("GROUP BY is required")
@@ -259,12 +238,11 @@ object MvSql {
             case None => fail(s"unsupported select expression $e")
           }
         }
-        if ((source2.isDefined || starDims.nonEmpty) &&
-            (minmaxs.nonEmpty || distincts.nonEmpty)) fail(
+        if (dims.nonEmpty && (minmaxs.nonEmpty || distincts.nonEmpty)) fail(
           "MIN/MAX or COUNT(DISTINCT) over a join (the recompute would " +
           "re-join; materialize the join first, then a single-table view)")
-        MvDef(source, keys, sums.toList, avgs.toList, where, minmaxs.toList,
-          source2, joinOn, distincts.toList, counts.toList, starDims, starParents)
+        MvDefinition(source, "", dims, keys, sums.toList, avgs.toList, counts.toList,
+          minmaxs.toList, distincts.toList, where)
       case other => fail(s"top-level ${other.getClass.getSimpleName} is not an aggregate")
     }
   }
@@ -275,81 +253,51 @@ object MvSql {
     */
   def create(spark: SparkSession, name: String, selectText: String,
       warehouse: String): DataFrame = {
-    val d = parseDefinition(spark, selectText)
-    val src = MergeSql.lookup(d.source).getOrElse(sys.error(
-      s"materialized-view source '${d.source}' is not a registered Icebox table"))
-    val src2 = d.source2.map(s2 => MergeSql.lookup(s2).getOrElse(sys.error(
-      s"materialized-view join source '$s2' is not a registered Icebox table")))
-    val starTables = d.starDims.map { case (name, on) =>
-      (MergeSql.lookup(name).getOrElse(sys.error(
-        s"materialized-view join source '$name' is not a registered Icebox table")), on)
-    }
+    val parsed = parseDefinition(spark, selectText)
+    val src = MergeSql.lookup(parsed.source).getOrElse(sys.error(
+      s"materialized-view source '${parsed.source}' is not a registered Icebox table"))
+    val dimTables = parsed.dims.map(dm => MergeSql.lookup(dm.name).getOrElse(sys.error(
+      s"materialized-view join source '${dm.name}' is not a registered Icebox table")))
+    val d = parsed.copy(sourceDir = src.tableDir, dims = parsed.dims.zip(dimTables)
+      .map { case (dm, t) => dm.copy(dir = t.tableDir) })
     val whereCols = d.where.toSeq.flatMap(w =>
       spark.sessionState.sqlParser.parseExpression(w).collect {
         case a: UnresolvedAttribute => a.nameParts.head
       })
-    // the maintained row's column set: one table's columns, or for a join
-    // the fact's columns plus each dim's non-join columns — which must not
-    // collide with the fact's or each other's (every downstream reference
-    // is unqualified)
-    def joinVisible(lCols: Seq[String],
-        sides: Seq[(String, Seq[String], Seq[(String, String)])]): Seq[String] =
-      sides.foldLeft(lCols) { case (acc, (name, rCols, on)) =>
+    // the maintained row's column set: the fact's columns plus each dim's
+    // non-join columns — which must not collide with the fact's or each
+    // other's (every downstream reference is unqualified)
+    val visibleCols = d.dims.zip(dimTables).foldLeft(src.read(spark).columns.toSeq) {
+      case (acc, (dm, t)) =>
+        val rCols = t.read(spark).columns.toSeq
         // the parent side of a pair may be the fact OR an earlier dim
         // (snowflake chain) — check against everything joined so far
-        val badL = on.map(_._1).filterNot(acc.contains)
-        val badR = on.map(_._2).filterNot(rCols.contains)
+        val badL = dm.on.map(_._1).filterNot(acc.contains)
+        val badR = dm.on.map(_._2).filterNot(rCols.contains)
         if (badL.nonEmpty || badR.nonEmpty) sys.error(
           s"join columns ${(badL ++ badR).mkString(", ")} not in their side")
-        val rExposed = rCols.diff(on.map(_._2))
+        val rExposed = rCols.diff(dm.on.map(_._2))
         val overlap = acc.intersect(rExposed)
         if (overlap.nonEmpty) sys.error(
           s"ambiguous columns ${overlap.mkString(", ")}: apart from the join " +
-          s"pairs, '$name' must not repeat earlier sides' column names")
+          s"pairs, '${dm.name}' must not repeat earlier sides' column names")
         acc ++ rExposed
-      }
-    val visibleCols = (src2, starTables) match {
-      case (None, Nil) => src.read(spark).columns.toSeq
-      case (Some(s2), _) => joinVisible(src.read(spark).columns.toSeq,
-        Seq((d.source2.get, s2.read(spark).columns.toSeq, d.joinOn)))
-      case (None, dims) => joinVisible(src.read(spark).columns.toSeq,
-        d.starDims.zip(dims).map { case ((name, on), (t, _)) =>
-          (name, t.read(spark).columns.toSeq, on) })
     }
     val badKeys = (d.keys ++ d.sums ++ d.minmaxs ++ d.distincts ++ whereCols)
       .distinct.filterNot(visibleCols.contains)
     if (badKeys.nonEmpty) sys.error(
       s"columns ${badKeys.mkString(", ")} not in source '${d.source}'" +
-      d.source2.map(s => s" JOIN '$s'").getOrElse(""))
+      d.dims.map(dm => s" JOIN '${dm.name}'").mkString)
     val target = mvTable(warehouse, name)
-    val existing = lastDef(target)
+    val props = target.properties
+    val existing = MvDefinition.read(props).map(_._2)
     require(existing.isEmpty || existing.contains(d),
       s"materialized view '$name' already exists with a different definition " +
       "(DROP MATERIALIZED VIEW first)")
-    target.setProperties(Map(
-      "mv.id" -> mvId(name, target),
-      "mv.source.dir" -> src.tableDir,
-      "mv.source.name" -> d.source,
-      "mv.keys" -> d.keys.mkString(","),
-      "mv.sums" -> d.sums.mkString(","),
-      "mv.avgs" -> d.avgs.mkString(","),
-      "mv.where" -> d.where.getOrElse(""),
-      "mv.minmaxs" -> d.minmaxs.mkString(","),
-      "mv.distincts" -> d.distincts.mkString(","),
-      "mv.counts" -> d.counts.mkString(",")) ++
-      src2.map(s2 => Map(
-        "mv.source2.dir" -> s2.tableDir,
-        "mv.source2.name" -> d.source2.get,
-        "mv.join.on" -> d.joinOn.map { case (l, r) => s"$l=$r" }.mkString(","))
-      ).getOrElse(Map.empty) ++
-      (if (starTables.isEmpty) Map.empty[String, String] else Map(
-        "mv.star.dims" -> starTables.map(_._1.tableDir).mkString(";"),
-        "mv.star.names" -> d.starDims.map(_._1).mkString(";"),
-        "mv.star.on" -> d.starDims.map(_._2.map { case (l, r) => s"$l=$r" }
-          .mkString(",")).mkString(";")) ++
-        (if (d.starParents.isEmpty) Map.empty[String, String]
-         else Map("mv.star.parents" -> d.starParents.mkString(";")))))
-    val mode = runRefresh(spark, src, src2, target, name, d)
+    // marker identity for this LIFE of the view: name + drop-epoch
+    val id = s"${name.toLowerCase}#${MvDefinition.epoch(props)}"
+    target.setProperties(MvDefinition.write(id, d))
+    val mode = MaterializedView.refreshDefinition(spark, target, id, d)
     registerMvView(spark, name, target, d)
     MergeSql.register(name, target)
     // In-process CREATE must be visible to the rewrite immediately: if it
@@ -361,34 +309,15 @@ object MvSql {
     summary(spark, s"create-mv:$mode", target)
   }
 
-  private def runRefresh(spark: SparkSession, src: Icebox, src2: Option[Icebox],
-      target: Icebox, name: String, d: MvDef): MaterializedView.Mode =
-    src2 match {
-      case Some(s2) => MaterializedView.refreshJoin(spark, src, s2, target,
-        mvId(name, target), d.joinOn, d.keys, d.sums, d.where)
-      case None if d.starDims.nonEmpty =>
-        val parents =
-          if (d.starParents.nonEmpty) d.starParents else d.starDims.map(_ => -1)
-        val dims = target.properties("mv.star.dims").split(';').filter(_.nonEmpty)
-          .toSeq.zip(d.starDims).zip(parents).map { case ((dir, (_, on)), par) =>
-            MaterializedView.StarDim(Icebox(dir), on, par) }
-        MaterializedView.refreshStar(spark, src, dims, target,
-          mvId(name, target), d.keys, d.sums, d.where)
-      case None => MaterializedView.refresh(spark, src, target,
-        mvId(name, target), d.keys, d.sums, d.where, d.minmaxs, d.distincts)
-    }
-
   /** `REFRESH MATERIALIZED VIEW name`: reload the persisted definition
     * from the backing table's properties (works from a fresh session) and
     * run a delta refresh.
     */
   def refresh(spark: SparkSession, name: String, warehouse: String): DataFrame = {
     val target = mvTable(warehouse, name)
-    val d = lastDef(target).getOrElse(sys.error(
+    val (id, d) = MvDefinition.read(target.properties).getOrElse(sys.error(
       s"no materialized view '$name' under $warehouse"))
-    val src = Icebox(target.properties("mv.source.dir"))
-    val src2 = target.properties.get("mv.source2.dir").map(Icebox(_))
-    val mode = runRefresh(spark, src, src2, target, name, d)
+    val mode = MaterializedView.refreshDefinition(spark, target, id, d)
     registerMvView(spark, name, target, d)
     MergeSql.register(name, target)
     summary(spark, s"refresh-mv:$mode", target)
@@ -406,12 +335,9 @@ object MvSql {
     // epoch, stale markers in the backing table's history would wrongly
     // route the re-created view onto the incremental path over a base it
     // never built.
-    if (target.exists) target.setProperties(Map("mv.epoch" -> (epoch(target) + 1).toString))
-    target.removeProperties(Seq(
-      "mv.id", "mv.source.dir", "mv.source.name", "mv.keys", "mv.sums", "mv.avgs",
-      "mv.where", "mv.minmaxs", "mv.distincts", "mv.counts",
-      "mv.source2.dir", "mv.source2.name", "mv.join.on",
-      "mv.star.dims", "mv.star.names", "mv.star.on"))
+    val props = target.properties
+    target.replaceProperties(MvDefinition.definitionKeys(props),
+      if (target.exists) MvDefinition.nextEpoch(props) else Map.empty)
     spark.catalog.dropTempView(name)
     // same-mtime-granule blindness as in create(): a drop landing in the
     // cached listing's granule must not leave the rewrite serving a dead view
@@ -434,34 +360,21 @@ object MvSql {
       else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
         .sortBy(_.getName).flatMap { d =>
           val t = Icebox(d.toString)
-          lastDef(t).map { df =>
-            val cursor = t.properties.get("mv.id")
-              .flatMap(id => MaterializedView.lastRefreshCursor(t, id))
-            val srcDisplay =
-              if (df.starDims.nonEmpty)
-                (df.source +: df.starDims.map(_._1)).mkString(" JOIN ")
-              else df.source2
-                .map(s2 => s"${df.source} JOIN $s2").getOrElse(df.source)
-            (d.getName, srcDisplay, df.keys.mkString(","), df.sums.mkString(","),
-              cursor.orNull)
+          MvDefinition.read(t.properties).map { case (id, df) =>
+            (d.getName, (df.source +: df.dims.map(_.name)).mkString(" JOIN "),
+              df.keys.mkString(","), df.sums.mkString(","),
+              MaterializedView.lastRefreshCursor(t, id).orNull)
           }
         }
     rows.toDF("name", "source", "keys", "sums", "refreshed_source_snapshot")
   }
-
-  private def epoch(target: Icebox): Long =
-    target.properties.get("mv.epoch").map(_.toLong).getOrElse(0L)
-
-  /** Marker identity for this LIFE of the view: name + drop-epoch. */
-  private def mvId(name: String, target: Icebox): String =
-    s"${name.toLowerCase}#${epoch(target)}"
 
   /** The session view over the backing table: raw maintenance columns
     * plus derived `avg_<c> = sum_<c> / nn_<c>` for AVG definitions (null
     * when the group holds no non-null c — sum is null there).
     */
   private def registerMvView(spark: SparkSession, name: String, target: Icebox,
-      d: MvDef): Unit = {
+      d: MvDefinition): Unit = {
     val base = target.read(spark)
     val withAvgs = d.avgs.foldLeft(base)((df, c) =>
       df.withColumn(s"avg_$c", col(s"sum_$c") / col(s"nn_$c")))
@@ -515,22 +428,21 @@ object MvSql {
     fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath).sortBy(_.getName)
       .view.flatMap { d =>
         val t = Icebox(d.toString)
-        lastDef(t).flatMap(vd => rewriteWith(spark, d.getName, t, vd, qd, having))
+        MvDefinition.read(t.properties).flatMap { case (id, vd) =>
+          rewriteWith(spark, d.getName, t, id, vd, qd, having) }
       }.headOption
   }
 
   private def rewriteWith(spark: SparkSession, name: String, target: Icebox,
-      vd: MvDef, qd: MvDef, having: Option[Expression] = None): Option[(String, DataFrame)] = {
+      id: String, vd: MvDefinition, qd: MvDefinition,
+      having: Option[Expression] = None): Option[(String, DataFrame)] = {
     // source identity — including the join shape — must match exactly
     // (star dims as a set of (table, pair-set): FROM-order is irrelevant)
-    if (vd.source != qd.source || vd.source2 != qd.source2 ||
-      vd.joinOn.toSet != qd.joinOn.toSet ||
-      vd.starDims.map { case (n, on) => (n, on.toSet) }.toSet !=
-        qd.starDims.map { case (n, on) => (n, on.toSet) }.toSet) return None
+    def shape(d: MvDefinition) = d.dims.map(m => (m.name, m.on.toSet, m.parent))
+    if (vd.source != qd.source || shape(vd).toSet != shape(qd).toSet) return None
     // snowflake chains: parent indexes are declaration-order-dependent, so
     // require the orders (and parents) to match exactly — conservative
-    if ((vd.starParents.nonEmpty || qd.starParents.nonEmpty) &&
-      (vd.starDims != qd.starDims || vd.starParents != qd.starParents)) return None
+    if (shape(vd).exists(_._3 >= 0) && shape(vd) != shape(qd)) return None
     val exactKeys = vd.keys.toSet == qd.keys.toSet
     if (!qd.keys.toSet.subsetOf(vd.keys.toSet)) return None
     if (!qd.sums.toSet.subsetOf(vd.sums.toSet)) return None
@@ -550,22 +462,10 @@ object MvSql {
       case _ => return None
     }
     val extraCounts = qd.counts.filterNot(qd.sums.contains)
-    // freshness: cursor at every source's current head
-    val props = target.properties
-    val id = props.get("mv.id").getOrElse(return None)
-    val fresh = (vd.source2, vd.starDims) match {
-      case (None, Nil) => MaterializedView.lastRefreshedSource(target, id)
-        .contains(Icebox(props("mv.source.dir")).currentSnapshotId)
-      case (Some(_), _) => MaterializedView.lastRefreshedSources(target, id)
-        .contains((Icebox(props("mv.source.dir")).currentSnapshotId,
-          Icebox(props("mv.source2.dir")).currentSnapshotId))
-      case (None, dims) =>
-        val heads = Icebox(props("mv.source.dir")).currentSnapshotId +:
-          props("mv.star.dims").split(';').filter(_.nonEmpty).toSeq
-            .map(Icebox(_).currentSnapshotId)
-        MaterializedView.lastRefreshedStar(target, id, dims.size).contains(heads)
-    }
-    if (!fresh) return None
+    // freshness: the cursor sits at every source's current head
+    val heads = (vd.sourceDir +: vd.dims.map(_.dir)).map(Icebox(_).currentSnapshotId)
+    if (!MaterializedView.lastRefreshCursor(target, id).contains(heads.mkString(":")))
+      return None
     val base0 = target.read(spark)
     val base = extraFilter.map(f => base0.filter(expr(f))).getOrElse(base0)
     val grouped =
@@ -615,28 +515,6 @@ object MvSql {
         scala.util.Try(projected.filter(expr(mapped.sql)))
           .toOption.map(f => (name, f))
     }
-  }
-
-  private def lastDef(target: Icebox): Option[MvDef] = {
-    val p = target.properties
-    def list(k: String) = p.get(k).map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    def pairs(s: String) = s.split(',').filter(_.nonEmpty).toSeq.map { pair =>
-      val Array(l, r) = pair.split('='); (l, r) }
-    val starDims = (p.get("mv.star.names"), p.get("mv.star.on")) match {
-      case (Some(names), Some(on)) =>
-        names.split(';').filter(_.nonEmpty).toSeq
-          .zip(on.split(';').filter(_.nonEmpty).toSeq.map(pairs))
-      case _ => Nil
-    }
-    val starParents = p.get("mv.star.parents")
-      .map(_.split(';').filter(_.nonEmpty).toSeq.map(_.toInt)).getOrElse(Nil)
-    p.get("mv.source.name").map(s =>
-      MvDef(s, p("mv.keys").split(',').toSeq, list("mv.sums"), list("mv.avgs"),
-        p.get("mv.where").filter(_.nonEmpty), list("mv.minmaxs"),
-        p.get("mv.source2.name"),
-        list("mv.join.on").map { pair =>
-          val Array(l, r) = pair.split('='); (l, r) },
-        list("mv.distincts"), list("mv.counts"), starDims, starParents))
   }
 
   private def summary(spark: SparkSession, op: String, t: Icebox): DataFrame =

@@ -1576,7 +1576,7 @@ final class Icebox(val tableDir: String) {
       if (m.full.isEmpty && m.shards.isEmpty) {
         val fs = resolveFiles(oldest.id)
         val fullM =
-          if (fs.size >= shardThreshold) {
+          if (fs.size >= shardThreshold(properties)) {
             val (refs, canonical) = writeShardedCheckpoint(fs)
             m.copy(fileCount = canonical.size.toLong,
               totalBytes = canonical.map(_.sizeBytes).sum,
@@ -2395,9 +2395,11 @@ final class Icebox(val tableDir: String) {
     java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
       .map("%02x".format(_)).mkString
 
-  /** Files-per-checkpoint above which full checkpoints shard. */
-  private def shardThreshold: Int =
-    properties.get("checkpoint.shard.threshold").map(_.toInt)
+  /** Files-per-checkpoint above which full checkpoints shard, as the
+    * table properties `props` set it.
+    */
+  private def shardThreshold(props: Map[String, String]): Int =
+    props.get("checkpoint.shard.threshold").map(_.toInt)
       .getOrElse(Icebox.DefaultShardThreshold)
 
   /** Write `resolved` as a content-addressed sharded checkpoint; returns
@@ -2487,9 +2489,7 @@ final class Icebox(val tableDir: String) {
       added.size + removedPaths.size >= resolved.size ||
       parentDepth + 1 >= interval
     if (writeFull) {
-      val threshold = props.get("checkpoint.shard.threshold").map(_.toInt)
-        .getOrElse(Icebox.DefaultShardThreshold)
-      if (resolved.size >= threshold) {
+      if (resolved.size >= shardThreshold(props)) {
         val (refs, canonical) = writeShardedCheckpoint(resolved)
         (Icebox.Manifest(id, parentId, ts, op, schemaJson, resolved.size.toLong,
           resolved.map(_.sizeBytes).sum, 0, None, Nil, Nil, refs), canonical)

@@ -277,8 +277,8 @@ class MaterializedViewSpec extends SparkSpec {
         sum($"v").as("sum_v"), count($"v").as("nn_v"))
 
   private def joinMv(fact: Icebox, dim: Icebox, mv: Icebox) =
-    MaterializedView.refreshJoin(spark, fact, dim, mv, "j",
-      Seq("fk" -> "k"), Seq("g"), Seq("v"))
+    MaterializedView.refreshStar(spark, fact,
+      Seq(MaterializedView.StarDim(dim, Seq("fk" -> "k"))), mv, "j", Seq("g"), Seq("v"))
 
   test("join view: full build matches the joined aggregate; pair cursor lands NoOp") {
     val fact = Icebox(tmpDir("jmvf1")); val dim = Icebox(tmpDir("jmvd1"))
@@ -287,8 +287,8 @@ class MaterializedViewSpec extends SparkSpec {
     val mv = Icebox(tmpDir("jmvt1"))
     joinMv(fact, dim, mv) shouldBe MaterializedView.FullBuild
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
-    MaterializedView.lastRefreshedSources(mv, "j") shouldBe
-      Some((fact.currentSnapshotId, dim.currentSnapshotId))
+    MaterializedView.lastRefreshedStar(mv, "j", 1) shouldBe
+      Some(Seq(fact.currentSnapshotId, dim.currentSnapshotId))
     joinMv(fact, dim, mv) shouldBe MaterializedView.NoOp
   }
 
@@ -341,11 +341,13 @@ class MaterializedViewSpec extends SparkSpec {
     fact.append((1 to 60).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.append((0 to 4).map(k => (k, s"g${k % 2}")).toDF("k", "g"))
     val mv = Icebox(tmpDir("jmvt5"))
-    MaterializedView.refreshJoin(spark, fact, dim, mv, "j", Seq("fk" -> "k"),
+    MaterializedView.refreshStar(spark, fact,
+      Seq(MaterializedView.StarDim(dim, Seq("fk" -> "k"))), mv, "j",
       Seq("g"), Seq("v"), Some("v >= 200")) shouldBe MaterializedView.FullBuild
     fact.append((61 to 100).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.deleteByKeys(Seq(3).toDF("k"))
-    MaterializedView.refreshJoin(spark, fact, dim, mv, "j", Seq("fk" -> "k"),
+    MaterializedView.refreshStar(spark, fact,
+      Seq(MaterializedView.StarDim(dim, Seq("fk" -> "k"))), mv, "j",
       Seq("g"), Seq("v"), Some("v >= 200")) shouldBe MaterializedView.Incremental
     assertSameRows(mv.read(spark),
       fact.read(spark).join(dim.read(spark), $"fk" === $"k", "inner")
@@ -362,8 +364,8 @@ class MaterializedViewSpec extends SparkSpec {
     joinMv(fact, dim, mv)
     fact.compact(spark) // rewrites files, zero row change
     joinMv(fact, dim, mv) shouldBe MaterializedView.MarkerOnly
-    MaterializedView.lastRefreshedSources(mv, "j") shouldBe
-      Some((fact.currentSnapshotId, dim.currentSnapshotId))
+    MaterializedView.lastRefreshedStar(mv, "j", 1) shouldBe
+      Some(Seq(fact.currentSnapshotId, dim.currentSnapshotId))
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
   }
 
@@ -398,6 +400,22 @@ class MaterializedViewSpec extends SparkSpec {
       IceboxCommit.SupersededCommit
     // the operator's own path re-enters on the fresh head and lands exactly
     joinMv(fact, dim, mv) shouldBe MaterializedView.Incremental
+    assertSameRows(mv.read(spark), joinedAgg(fact, dim))
+  }
+
+  test("join view: one refresh of a fact append plus a dim key-delete runs 15 Spark jobs") {
+    val fact = Icebox(tmpDir("jmvf10")); val dim = Icebox(tmpDir("jmvd10"))
+    fact.append((1 to 60).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
+    dim.append((0 to 4).map(k => (k, s"g$k")).toDF("k", "g"))
+    val mv = Icebox(tmpDir("jmvt10"))
+    joinMv(fact, dim, mv)
+    fact.append((61 to 80).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
+    dim.deleteByKeys(Seq(2).toDF("k"))
+    // both terms run; each pinned side is small, so it is read outright
+    // with no pruning probe, and no pinned read is persisted
+    var mode: MaterializedView.Mode = null
+    jobsOf { mode = joinMv(fact, dim, mv) } shouldBe 15
+    mode shouldBe MaterializedView.Incremental
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
   }
 

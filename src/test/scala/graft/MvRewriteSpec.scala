@@ -209,6 +209,32 @@ class MvRewriteSpec extends SparkSpec {
     assert(servedFromView(spark.sql(good)), "refresh must re-enable the join rewrite")
   }
 
+  test("a join view keyed by a fact column never answers a fact-only aggregate") {
+    MvRewrite.install(spark)
+    val wh = tmpDir("mvrwj3_wh")
+    DmlSql.setWarehouse(wh)
+    val fact = Icebox(tmpDir("mvrwj3_f"))
+    // fk runs 0..5 but the dim holds keys 0..4: the inner join drops fk=5
+    fact.append((1 to 60).map(i => (i.toLong, (i % 6).toLong, i * 10L)).toDF("id", "fk", "v"))
+    val dim = Icebox(tmpDir("mvrwj3_d"))
+    dim.append((0 to 4).map(k => (k.toLong, s"seg${k % 2}")).toDF("k", "seg"))
+    fact.registerView(spark, "mvrwj3_f")
+    dim.registerView(spark, "mvrwj3_d")
+    DmlSql.run(spark,
+      "CREATE MATERIALIZED VIEW mvrwj3 AS SELECT fk, count(*), sum(v) " +
+      "FROM mvrwj3_f JOIN mvrwj3_d ON mvrwj3_f.fk = mvrwj3_d.k GROUP BY fk")
+    // the view is fresh: the join query it was built for is served
+    assert(servedFromView(spark.sql("SELECT fk, sum(v) AS sv FROM mvrwj3_f " +
+      "JOIN mvrwj3_d ON mvrwj3_f.fk = mvrwj3_d.k GROUP BY fk")))
+    val q = "SELECT fk, count(*) AS cnt, sum(v) AS sv FROM mvrwj3_f GROUP BY fk"
+    val single = spark.sql(q)
+    assert(!servedFromView(single), "a join view must not answer an aggregate of its fact alone")
+    assertSameRows(single, fact.read(spark).groupBy("fk")
+      .agg(count(lit(1)).as("cnt"), sum($"v").as("sv")))
+    single.filter($"fk" === 5L).count() shouldBe 1L
+    graft.sql.MvSql.answer(spark, q, wh) shouldBe None
+  }
+
   test("star query (fact + 2 dims) is served from a star view by the optimizer rule") {
     MvRewrite.install(spark)
     val wh = tmpDir("mvrw9_wh")

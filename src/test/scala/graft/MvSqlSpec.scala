@@ -447,4 +447,86 @@ class MvSqlSpec extends SparkSpec {
         .groupBy("seg").agg(count(lit(1)).as("row_count"),
           sum($"v").as("sum_v"), count($"v").as("nn_v")))
   }
+
+  test("a join view stored in the two-source property shape refreshes, serves and lists") {
+    val wh = tmpDir("mvwh14")
+    DmlSql.setWarehouse(wh)
+    val (fact, dim) = mkJoinSources("mvjf5", "mvjd5")
+    val create = "CREATE MATERIALIZED VIEW mvj5 AS SELECT seg, count(*), sum(v) " +
+      "FROM mvjf5 JOIN mvjd5 ON mvjf5.fk = mvjd5.k GROUP BY seg"
+    DmlSql.run(spark, create)
+    // the definition as join views once stored it: the dim as a second
+    // source and one join-pair list
+    val tgt = Icebox(s"$wh/_mv/mvj5")
+    tgt.replaceProperties(Seq("mv.star.dims", "mv.star.names", "mv.star.on"),
+      Map("mv.source2.dir" -> dim.tableDir, "mv.source2.name" -> "mvjd5",
+        "mv.join.on" -> "fk=k"))
+    def expect() = fact.read(spark).join(dim.read(spark), $"fk" === $"k")
+      .groupBy("seg").agg(count(lit(1)).as("row_count"),
+        sum($"v").as("sum_v"), count($"v").as("nn_v"))
+    // both terms run: new facts, and a new dim key that facts then join
+    fact.append((81 to 90).map(i => (i.toLong, i % 6, i * 10L)).toDF("id", "fk", "v"))
+    dim.append(Seq((5, "seg1")).toDF("k", "seg"))
+    DmlSql.run(spark, "REFRESH MATERIALIZED VIEW mvj5")
+      .collect().head.getString(0) shouldBe "refresh-mv:Incremental"
+    assertSameRows(tgt.read(spark), expect())
+    fact.append(Seq((91L, 1, 3L)).toDF("id", "fk", "v"))
+    graft.operators.MaterializedView.refreshFromProperties(spark, tgt) shouldBe
+      Some(graft.operators.MaterializedView.Incremental)
+    assertSameRows(tgt.read(spark), expect())
+    // the same SQL is the same definition
+    DmlSql.run(spark, create).collect().head.getString(0) shouldBe "create-mv:NoOp"
+    DmlSql.run(spark, "SHOW MATERIALIZED VIEWS").filter($"name" === "mvj5")
+      .collect().head.getAs[String]("source") shouldBe "mvjf5 JOIN mvjd5"
+    fact.registerView(spark, "mvjf5")
+    dim.registerView(spark, "mvjd5")
+    graft.sql.MvRewrite.install(spark)
+    try {
+      val served = spark.sql("SELECT seg, count(*) AS cnt FROM mvjf5 " +
+        "JOIN mvjd5 ON mvjf5.fk = mvjd5.k GROUP BY seg")
+      assert(served.inputFiles.nonEmpty && served.inputFiles.forall(_.contains("/_mv/")),
+        s"expected a view scan, got ${served.inputFiles.toSeq}")
+      assertSameRows(served, expect().select($"seg", $"row_count".as("cnt")))
+    } finally graft.sql.MvRewrite.uninstall(spark)
+  }
+
+  test("DROP clears the whole definition: a snowflake's parents never reach the next CREATE") {
+    val wh = tmpDir("mvwh13")
+    DmlSql.setWarehouse(wh)
+    val fact = Icebox(tmpDir("mvsf_f"))
+    fact.append((1 to 60).map(i => (i.toLong, i % 6, i % 4, i * 10L))
+      .toDF("id", "ck", "pk", "v"))
+    fact.registerView(spark, "mvsf_f")
+    val cust = Icebox(tmpDir("mvsf_c"))
+    cust.append((0 to 5).map(k => (k, k % 3)).toDF("c_id", "nk"))
+    cust.registerView(spark, "mvsf_c")
+    val nat = Icebox(tmpDir("mvsf_n"))
+    nat.append((0 to 2).map(k => (k, s"nation$k")).toDF("n_id", "nname"))
+    nat.registerView(spark, "mvsf_n")
+    val prod = Icebox(tmpDir("mvsf_p"))
+    prod.append((0 to 3).map(k => (k, s"cat${k % 2}")).toDF("p_id", "cat"))
+    prod.registerView(spark, "mvsf_p")
+    DmlSql.run(spark,
+      "CREATE MATERIALIZED VIEW mvsf AS SELECT nname, count(*), sum(v) FROM mvsf_f " +
+      "JOIN mvsf_c ON mvsf_f.ck = mvsf_c.c_id JOIN mvsf_n ON mvsf_c.nk = mvsf_n.n_id " +
+      "GROUP BY nname")
+    DmlSql.run(spark, "DROP MATERIALIZED VIEW mvsf")
+    // a plain star under the same name: both dims join the fact
+    val star = "CREATE MATERIALIZED VIEW mvsf AS SELECT nk, cat, count(*), sum(v) " +
+      "FROM mvsf_f JOIN mvsf_c ON mvsf_f.ck = mvsf_c.c_id " +
+      "JOIN mvsf_p ON mvsf_f.pk = mvsf_p.p_id GROUP BY nk, cat"
+    DmlSql.run(spark, star).collect().head.getString(0) shouldBe "create-mv:FullBuild"
+    // the identical CREATE is the same definition: a NoOp refresh
+    DmlSql.run(spark, star).collect().head.getString(0) shouldBe "create-mv:NoOp"
+    val tgt = Icebox(s"$wh/_mv/mvsf")
+    tgt.properties.contains("mv.star.parents") shouldBe false
+    fact.append(Seq((61L, 1, 2, 7L)).toDF("id", "ck", "pk", "v"))
+    graft.operators.MaterializedView.refreshFromProperties(spark, tgt) shouldBe
+      Some(graft.operators.MaterializedView.Incremental)
+    assertSameRows(tgt.read(spark),
+      fact.read(spark).join(cust.read(spark), $"ck" === $"c_id")
+        .join(prod.read(spark), $"pk" === $"p_id")
+        .groupBy("nk", "cat").agg(count(lit(1)).as("row_count"),
+          sum($"v").as("sum_v"), count($"v").as("nn_v")))
+  }
 }
