@@ -6,8 +6,11 @@ import java.sql.Timestamp
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.table.EqualityDeletes
 
 /** CDC watermark: the engine analog of the reference's
   * `__airflow_cdc_metadata__` row — (source_schema, source_table,
@@ -105,16 +108,38 @@ object Cdc {
       tsCol: String, versionCol: Option[String], prev: Option[Watermark]): Watermark = {
     val aggs = Seq(max(col(tsCol)).as("ts")) ++ versionCol.map(c => max(col(c)).as("scn"))
     val row = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
+    watermark(schema, table, Option(row.getAs[Any]("ts")),
+      versionCol.flatMap(_ => Option(row.getAs[Any]("scn"))), prev)
+  }
+
+  /** [[advance]] over a batch held on the driver: each max is taken over
+    * the rows in Spark's order for the column's type, NULLs ignored, as the
+    * `max` aggregate does — no Spark job.
+    */
+  private def advanceHeld(rows: Seq[Row], batchSchema: StructType, schema: String,
+      table: String, tsCol: String, versionCol: Option[String],
+      prev: Option[Watermark]): Watermark = {
+    def maxOf(c: String): Option[Any] = {
+      val i = batchSchema.fields.indexWhere(_.name.equalsIgnoreCase(c))
+      require(i >= 0, s"column $c is not in the batch")
+      val dt = batchSchema(i).dataType
+      EqualityDeletes.extremes(rows, i, dt).map(e =>
+        CatalystTypeConverters.createToScalaConverter(dt)(e._2))
+    }
+    watermark(schema, table, maxOf(tsCol), versionCol.flatMap(maxOf), prev)
+  }
+
+  private def watermark(schema: String, table: String, ts: Option[Any], scn: Option[Any],
+      prev: Option[Watermark]): Watermark = {
     // TimestampType surfaces as java.sql.Timestamp, TimestampNTZ as LocalDateTime
-    val newTs = Option(row.getAs[Any]("ts")).map {
+    val newTs = ts.map {
       case t: Timestamp               => t.getTime
       case d: java.time.LocalDateTime => d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
       case other => sys.error(s"unsupported watermark column type: ${other.getClass}")
     }
-    val newScn = versionCol.flatMap(_ => Option(row.getAs[Any]("scn")).map(_.toString.toLong))
     Watermark(schema, table,
       newTs.orElse(prev.map(_.lastTimestampMs)).getOrElse(0L),
-      newScn.orElse(prev.map(_.lastScn)).getOrElse(0L))
+      scn.map(_.toString.toLong).orElse(prev.map(_.lastScn)).getOrElse(0L))
   }
 
   /** One micro-batch CDC cycle (the reference's whole
@@ -135,13 +160,22 @@ object Cdc {
       case Some(vc) => scnIncrement(batch0, vc, prev)
       case None     => timestampIncrement(batch0, tsCol, prev)
     }
-    // cache: the batch feeds both the sink and the watermark aggregate
-    batch.cache()
-    try {
-      if (!batch.isEmpty) sink(batch)
-      val next = advance(batch, schema, table, tsCol, versionCol, prev)
-      store.put(next)
-      next
-    } finally batch.unpersist()
+    // a batch of at most EqKeyCacheMaxRows rows is collected ONCE: the
+    // emptiness check and the watermark come from the rows, and the sink
+    // reads a LocalRelation over them; a larger one is cached for the sink
+    // and the watermark aggregate
+    val next = EqualityDeletes.collectAtMost(batch) match {
+      case Some(rows) =>
+        if (rows.nonEmpty) sink(EqualityDeletes.frame(spark, rows, batch.schema))
+        advanceHeld(rows, batch.schema, schema, table, tsCol, versionCol, prev)
+      case None =>
+        batch.cache()
+        try {
+          sink(batch)
+          advance(batch, schema, table, tsCol, versionCol, prev)
+        } finally batch.unpersist()
+    }
+    store.put(next)
+    next
   }
 }

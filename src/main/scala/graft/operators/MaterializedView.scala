@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.{Icebox, IceboxCommit, Snapshot}
+import graft.table.{EqualityDeletes, Icebox, IceboxCommit, Snapshot}
 
 /** Incrementally maintained materialized aggregate: a target Icebox table
   * holding `GROUP BY keys` counts and sums over a source Icebox table
@@ -51,9 +51,14 @@ import graft.table.{Icebox, IceboxCommit, Snapshot}
   * never read), aggregates the delta (one shuffle of changed rows), and
   * commits merge-on-read: all touched group keys equality-deleted, the
   * recomputed groups appended — no target data file is rewritten, and
-  * vanished groups (count reaching 0) simply aren't re-appended. The one
-  * target-side scan is the semi-join fetching current values of touched
-  * groups, pruned by stats/blooms when the target declares them. A
+  * vanished groups (count reaching 0) simply aren't re-appended. The
+  * touched groups are small by construction: up to
+  * `EqualityDeletes.EqKeyCacheMaxRows` of them are collected once and
+  * every later step reads the driver-held rows. The one target-side scan
+  * fetches the touched groups' current values by a membership filter
+  * (a semi-join over the cap), pruned by stats/blooms when the target
+  * declares them. A touched group with a NULL key part rebuilds the view
+  * in full. A
   * data-neutral source commit (compaction, property change) advances the
   * cursor with a metadata-only marker commit — zero data I/O. If the
   * cursor's snapshot has been EXPIRED on the source, refresh falls back
@@ -208,14 +213,14 @@ object MaterializedView {
         val diff = spreadIfNarrow(filtered(source.changeDiff(spark, from, srcHead)), nFiles)
         applyDelta(spark, target, opPrefix(mvId) + srcHead, tgtHead, diff, keys,
           sums, recompCols,
-          // recompute input deliberately NOT spread: the semi-join filter
+          // recompute input deliberately NOT spread: the touched-group filter
           // runs map-side on the scan and the recompute aggregates once —
           // an exchange of the touched-files rows costs more than the
           // starved map side (measured +0.6..0.9 s on the distinct/minmax
           // views, r18)
-          touched => filtered(source.readForKeysAt(spark, touched, Some(srcSnap)))
-            .join(touched, keys, "left_semi")
+          (touched, keep) => keep(filtered(source.readForKeysAt(spark, touched, Some(srcSnap))))
             .groupBy(keys.map(col): _*).agg(recompAggs.head, recompAggs.tail: _*),
+          () => fullBuild(),
           () => refresh(spark, source, target, mvId, keys, sums, where, minmaxs, distincts))
     }
   }
@@ -464,7 +469,8 @@ object MaterializedView {
         val diff = filtered(terms.reduce(
           _.unionByName(_, allowMissingColumns = true)))
         applyDelta(spark, target, op, tgtHead, diff, keys, sums, Nil,
-          _ => sys.error("min/max not maintained over stars"),
+          (_, _) => sys.error("min/max not maintained over stars"),
+          () => fullBuild(),
           () => refreshStar(spark, fact, dims, target, mvId, keys, sums, where))
         } finally cached.foreach(_.unpersist(blocking = false))
     }
@@ -474,82 +480,117 @@ object MaterializedView {
     * (rows + `_change_type`) into per-group deltas, merge with the
     * current values of the touched groups, and publish ONE atomic
     * merge-on-read commit whose op string carries the cursor. Empty
-    * delta → marker-only cursor advance. A concurrent refresher moving
-    * the target head aborts the commit ([[IceboxCommit.SupersededCommit]]) and
-    * control re-enters via `onSuperseded`.
+    * delta → marker-only cursor advance. A touched group with a NULL key
+    * part → `rebuild` (the view's full build): the joins below match keys
+    * with `=` and an equality delete never deletes a NULL-bearing key, so
+    * the group's stored row could be neither read nor replaced. A
+    * concurrent refresher moving the target head aborts the commit
+    * ([[IceboxCommit.SupersededCommit]]) and control re-enters via
+    * `onSuperseded`. `recompute(touched, keep)` re-aggregates the
+    * non-delta-maintainable columns of the touched groups, `keep`
+    * restricting a frame to them.
     */
   private def applyDelta(spark: SparkSession, target: Icebox, op: String,
       tgtHead: Long, diff: DataFrame, keys: Seq[String], sums: Seq[String],
-      recompCols: Seq[String], recompute: DataFrame => DataFrame,
-      onSuperseded: () => Mode): Mode = {
-        val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
-        val ins = col("_change_type") === "insert"
-        // per-column deltas as SAME-TYPED sums (insert-sum minus delete-sum
-        // — never c*sign, whose decimal widening would drift the target
-        // schema across refreshes)
-        val deltaAggs = sum(sign).as("__dcnt") +: sums.flatMap(c => Seq(
-          (coalesce(sum(when(ins, col(c))), lit(0)) -
-            coalesce(sum(when(!ins, col(c))), lit(0))).as(s"__dsum_$c"),
-          (count(when(ins, col(c))) - count(when(!ins, col(c)))).as(s"__dnn_$c")))
-        // One row per TOUCHED GROUP — small by construction — but its plan
-        // re-reads the whole change diff, and it feeds four downstream
-        // consumers (emptiness check, semi-join, merge join, the commit's
-        // delete-key projection). Persist so the diff scan runs ONCE.
-        val delta = diff.groupBy(keys.map(col): _*).agg(deltaAggs.head, deltaAggs.tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      recompCols: Seq[String], recompute: (DataFrame, DataFrame => DataFrame) => DataFrame,
+      rebuild: () => Mode, onSuperseded: () => Mode): Mode = {
+    val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
+    val ins = col("_change_type") === "insert"
+    // per-column deltas as SAME-TYPED sums (insert-sum minus delete-sum
+    // — never c*sign, whose decimal widening would drift the target
+    // schema across refreshes)
+    val deltaAggs = sum(sign).as("__dcnt") +: sums.flatMap(c => Seq(
+      (coalesce(sum(when(ins, col(c))), lit(0)) -
+        coalesce(sum(when(!ins, col(c))), lit(0))).as(s"__dsum_$c"),
+      (count(when(ins, col(c))) - count(when(!ins, col(c)))).as(s"__dnn_$c")))
+    val deltaPlan = diff.groupBy(keys.map(col): _*).agg(deltaAggs.head, deltaAggs.tail: _*)
+    lazy val targetSchema = target.read(spark).schema
+    def tpe(n: String) = targetSchema.fields.find(_.name == n).get.dataType
+
+    def marker(): Mode = {
+      // data-neutral source change (compaction, metadata): advance the
+      // cursor so later diffs never re-read this range
+      target.commitMarker(op, expectHeadId = tgtHead)
+      MarkerOnly
+    }
+    // `cur`: the target's rows of the touched groups, recomputed columns
+    // dropped; a `held` delta's groups are written from one task, one file
+    // per refresh, as the persisted aggregate's single partition writes them
+    def merge(delta: DataFrame, cur: DataFrame, keep: DataFrame => DataFrame,
+        held: Boolean): Mode = {
+      val touched = delta.select(keys.map(col): _*)
+      var merged = delta.join(cur, keys, "left")
+      val mmCols = if (recompCols.isEmpty) Nil else {
+        // bounded touched-group recompute: non-delta-maintainable
+        // aggregates (min/max extrema, distinct counts) re-aggregated
+        // from the head-state rows of ONLY the touched groups, scanning
+        // only the source files that might hold those keys (stats/bloom
+        // pruned, pinned to the cursor's snapshot)
+        merged = merged.join(recompute(touched, keep), keys, "left")
+        recompCols.map(c => col(c).cast(tpe(c)).as(c))
+      }
+      val newCnt = (coalesce(col("row_count"), lit(0L)) + col("__dcnt")).as("row_count")
+      val valueCols = sums.flatMap { c =>
+        val nn = (coalesce(col(s"nn_$c"), lit(0L)) + col(s"__dnn_$c"))
+        val raw = coalesce(col(s"sum_$c"), lit(0)) + col(s"__dsum_$c")
+        Seq(when(nn === 0L, lit(null)).otherwise(raw).cast(tpe(s"sum_$c")).as(s"sum_$c"),
+          nn.as(s"nn_$c"))
+      }
+      val updated = merged
+        .select((keys.map(col) :+ newCnt) ++ valueCols ++ mmCols: _*)
+        .filter(col("row_count") > 0L)
+      // ONE atomic merge-on-read commit: every touched key deleted, the
+      // recomputed groups appended, cursor marker in the op string
+      target.commitEqualityDeletes(op, touched,
+        Some(if (held) updated.coalesce(1) else updated), expectHeadId = tgtHead)
+      Incremental
+    }
+
+    try EqualityDeletes.collectAtMost(deltaPlan) match {
+      // One row per TOUCHED GROUP — small by construction — collected ONCE
+      // (the diff's aggregation runs once): emptiness and NULL keys are
+      // checked on the rows, the delta is a LocalRelation (the commit reads
+      // its keys with no job), and the touched groups are read by a
+      // membership filter over the key-pruned target read — a semi-join
+      // would broadcast the local side in a job of its own
+      case Some(rows) =>
+        if (rows.isEmpty) marker()
+        else if (rows.exists(r => keys.indices.exists(r.isNullAt))) rebuild()
+        else {
+          val delta = EqualityDeletes.frame(spark, rows, deltaPlan.schema)
+          val touched = delta.select(keys.map(col): _*)
+          // a semi-join only when a key type cannot compare in a set or
+          // differs from the target column's
+          val keep: DataFrame => DataFrame = Some(touched.schema)
+            .filter(_.forall(f => targetSchema.fields.exists(t =>
+              t.name == f.name && t.dataType == f.dataType)))
+            .flatMap(ks => EqualityDeletes.isIn(spark, ks,
+              rows.map(r => Row.fromSeq(r.toSeq.take(keys.size)))))
+            .fold((df: DataFrame) => df.join(touched, keys, "left_semi"))(in => _.filter(in))
+          // the touched groups' rows: at most one per held delta row
+          merge(delta, broadcast(keep(target.readForKeys(spark, touched)).drop(recompCols: _*)),
+            keep, held = true)
+        }
+      // over the cap: persisted, so the checks, the semi-joins and the
+      // commit's key projection share one more run of the aggregation
+      case None =>
+        val delta = deltaPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-        // count(), not isEmpty(): isEmpty is take(1) and materializes only
-        // the persist's FIRST partitions — every downstream broadcast of
-        // delta/touched would then re-scan the whole change diff inside its
-        // own subquery job. One count pays one diff scan and the cache
-        // serves everything after it.
-        if (delta.count() == 0L) {
-          // data-neutral source change (compaction, metadata): advance the
-          // cursor so later diffs never re-read this range
-          target.commitMarker(op, expectHeadId = tgtHead)
-          return MarkerOnly
-        }
-        val targetSchema = target.read(spark).schema
-        def tpe(n: String) = targetSchema.fields.find(_.name == n).get.dataType
-        val touched = delta.select(keys.map(col): _*)
-        // current values of TOUCHED groups only (semi-join keeps the scan's
-        // shuffle at O(touched); stats/bloom pruning applies when declared)
-        val cur = target.read(spark).join(touched, keys, "left_semi")
-          .drop(recompCols: _*)
-        var merged = delta.join(cur, keys, "left")
-        val mmCols = if (recompCols.isEmpty) Nil else {
-          // bounded touched-group recompute: non-delta-maintainable
-          // aggregates (min/max extrema, distinct counts) re-aggregated
-          // from the head-state rows of ONLY the touched groups, scanning
-          // only the source files that might hold those keys (stats/bloom
-          // pruned, pinned to the cursor's snapshot)
-          val mm = recompute(touched)
-          merged = merged.join(mm, keys, "left")
-          recompCols.map(c => col(c).cast(tpe(c)).as(c))
-        }
-        val newCnt = (coalesce(col("row_count"), lit(0L)) + col("__dcnt")).as("row_count")
-        val valueCols = sums.flatMap { c =>
-          val nn = (coalesce(col(s"nn_$c"), lit(0L)) + col(s"__dnn_$c"))
-          val raw = coalesce(col(s"sum_$c"), lit(0)) + col(s"__dsum_$c")
-          Seq(when(nn === 0L, lit(null)).otherwise(raw).cast(tpe(s"sum_$c")).as(s"sum_$c"),
-            nn.as(s"nn_$c"))
-        }
-        val updated = merged
-          .select((keys.map(col) :+ newCnt) ++ valueCols ++ mmCols: _*)
-          .filter(col("row_count") > 0L)
-        // ONE atomic merge-on-read commit: every touched key deleted, the
-        // recomputed groups appended, cursor marker in the op string
-        target.commitEqualityDeletes(op,
-          delta.select(keys.map(col): _*), Some(updated), expectHeadId = tgtHead)
-        Incremental
-        } catch {
-          case IceboxCommit.SupersededCommit =>
-            // a concurrent refresher won the commit race: release OUR
-            // cached delta first (the finally below is idempotent), then
-            // re-enter with a fresh cursor (usually a NoOp) — so stacked
-            // re-entries never hold more than one persisted delta
-            delta.unpersist(blocking = false)
-            onSuperseded()
+          val anyNull = keys.map(k => col(k).isNull).reduce(_ || _)
+          val r = delta.agg(count(lit(1)), count(when(anyNull, lit(1)))).head()
+          if (r.getLong(0) == 0L) marker()
+          else if (r.getLong(1) > 0L) rebuild()
+          else {
+            val touched = delta.select(keys.map(col): _*)
+            val keep = (df: DataFrame) => df.join(touched, keys, "left_semi")
+            merge(delta, keep(target.read(spark)).drop(recompCols: _*), keep, held = false)
+          }
         } finally delta.unpersist(blocking = false)
+    } catch {
+      // a concurrent refresher won the commit race: re-enter with a fresh
+      // cursor (usually a NoOp); the persisted delta of the over-cap path
+      // is already released, so stacked re-entries never hold more than one
+      case IceboxCommit.SupersededCommit => onSuperseded()
+    }
   }
 }

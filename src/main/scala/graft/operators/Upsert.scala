@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.table.{Icebox, IceboxCommit}
+import graft.table.{EqualityDeletes, Icebox, IceboxCommit}
 
 /** Real upsert/MERGE semantics.
   *
@@ -102,7 +102,18 @@ object Upsert {
     // between the exists check and the publish must force a re-merge (the
     // retry re-enters via the MoR delete path), never a silent replace
     if (!table.exists) { table.overwriteAs("upsert", src, parts, expectHeadId = -1L); return }
-    table.commitEqualityDeletes("upsert-mor", src.select(pk.map(col): _*), Some(src), parts)
+    // a deduped batch of at most EqKeyCacheMaxRows rows is collected ONCE:
+    // its keys and its payload are LocalRelations (the delete commit reads
+    // the keys with no job), and the payload is written from one task — one
+    // file per touched partition value, as the deduped plan's single
+    // post-shuffle partition writes them
+    val (keys, payload) = EqualityDeletes.collectAtMost(src) match {
+      case Some(rows) =>
+        val local = EqualityDeletes.frame(src.sparkSession, rows, src.schema)
+        (local, local.coalesce(1))
+      case None => (src, src)
+    }
+    table.commitEqualityDeletes("upsert-mor", keys.select(pk.map(col): _*), Some(payload), parts)
     ()
   }
 

@@ -7,14 +7,16 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, struct, udf}
 import org.apache.spark.sql.types._
 
-/** Read side of equality deletes (Iceberg v2's merge-on-read delete type,
-  * written by [[Icebox.commitEqualityDeletes]]): a row is deleted by a
-  * delete file iff its key tuple is in the file's key set AND its data
-  * file carries the delete in its attach list (the attach list IS the
-  * sequence semantics — files appended after the delete never carry it).
+/** Equality deletes (Iceberg v2's merge-on-read delete type, written by
+  * [[Icebox.commitEqualityDeletes]]): a row is deleted by a delete file iff
+  * its key tuple is in the file's key set AND its data file carries the
+  * delete in its attach list (the attach list IS the sequence semantics —
+  * files appended after the delete never carry it).
   *
   * Both sets are driver-held and ship as driver-created broadcast
   * VARIABLES behind one membership predicate ([[deletedBy]]) — the way
@@ -24,10 +26,20 @@ import org.apache.spark.sql.types._
   * that side is a driver-side LocalRelation. Key sets over
   * [[EqKeyCacheMaxRows]] are not driver-held; they keep a distributed
   * broadcast-hinted key join.
+  *
+  * The same cap bounds every relation the engine holds on the driver
+  * because it is small by construction — a CDC batch, an upsert batch's
+  * deduplicated rows and keys, a view refresh's touched groups:
+  * [[collectAtMost]] collects one in a single job (none when it is already
+  * a LocalRelation) and every consumer then reads the rows or a
+  * LocalRelation frame over them ([[frame]]) instead of re-running its
+  * plan. Over the cap the callers keep their distributed plans.
   */
 private[graft] object EqualityDeletes {
 
-  /** The largest key set held on the driver; bigger ones stay distributed. */
+  /** The largest key set, or small relation, held on the driver; bigger
+    * ones stay distributed.
+    */
   private[graft] val EqKeyCacheMaxRows = 100000
   private val EqKeyCacheMaxEntries = 512
 
@@ -99,22 +111,90 @@ private[graft] object EqualityDeletes {
   private def keySetOf(schema: StructType, rows: Seq[Row]): KeySet =
     new KeySet(schema, rows.iterator.map(keyOf).filter(_ != null).toSet)
 
-  /** Write `keys` (distinct tuples of the equality columns) as one delete
-    * file through `writeFile`, which returns its path (None when it holds
-    * no rows). A set that fits [[EqKeyCacheMaxRows]] is collected ONCE,
-    * written from that local copy and admitted to the cache under the
-    * file's path, so no reader ever runs a key-file job for it; a larger
-    * set is written distributed and marked as not driver-held.
+  // a frame whose optimized plan is a LocalRelation — a [[frame]], or a
+  // projection of one — is read with no Spark job
+  private def localRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect().toSeq)
+      case _ => None
+    }
+
+  /** `df`'s rows, in partition order, when it has at most
+    * [[EqKeyCacheMaxRows]] of them; None when it has more. A local frame
+    * runs no Spark job; any other runs ONE job over all its partitions,
+    * each returning at most one row over the cap — unlike
+    * `limit(cap + 1).collect()`, whose take scans one partition first and
+    * then starts a second job for the rest.
     */
-  private[table] def write(keys: DataFrame,
+  private[graft] def collectAtMost(df: DataFrame): Option[Seq[Row]] = {
+    val n = EqKeyCacheMaxRows
+    localRows(df) match {
+      case Some(rows) => Some(rows).filter(_.length <= n)
+      case None =>
+        val rdd = df.rdd
+        val parts = new Array[Array[Row]](rdd.getNumPartitions)
+        var total = 0L
+        df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => it.take(n + 1).toArray,
+          (i: Int, rows: Array[Row]) => parts.synchronized {
+            total += rows.length
+            if (total <= n) parts(i) = rows else parts.indices.foreach(parts(_) = null)
+          })
+        if (total > n) None else Some(parts.iterator.flatMap(_.iterator).toSeq)
+    }
+  }
+
+  /** `df`'s distinct rows when there are at most [[EqKeyCacheMaxRows]] of
+    * them: deduplicated on the driver when `df` is local (an `Aggregate`
+    * over a LocalRelation still runs jobs), else one bounded collect of
+    * `df.dropDuplicates()`.
+    */
+  private[graft] def distinctAtMost(df: DataFrame): Option[Seq[Row]] =
+    localRows(df) match {
+      case Some(rows) => localDistinct(rows)
+      case None => collectAtMost(df.dropDuplicates())
+    }
+
+  /** [[distinctAtMost]] for a local `df` only: None, with no job, for any
+    * other frame.
+    */
+  private[graft] def localDistinctAtMost(df: DataFrame): Option[Seq[Row]] =
+    localRows(df).flatMap(localDistinct)
+
+  private def localDistinct(rows: Seq[Row]): Option[Seq[Row]] =
+    Some(rows.distinct).filter(_.length <= EqKeyCacheMaxRows)
+
+  /** Driver-held `rows` as a LocalRelation frame of `schema`: projections
+    * over it fold into the relation and run no job.
+    */
+  private[graft] def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** Least and greatest non-null value of field `i` (of type `dt`) over
+    * `rows`, as Catalyst-internal values in Spark's own order for the type
+    * (strings by UTF-8 bytes, NaN above every other float, decimals by
+    * value) — what `min`/`max` aggregates return; None when every value is
+    * NULL.
+    */
+  private[graft] def extremes(rows: Seq[Row], i: Int, dt: DataType): Option[(Any, Any)] = {
+    val vs = rows.iterator.map(_.get(i)).filter(_ != null)
+      .map(CatalystTypeConverters.convertToCatalyst).toSeq
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    if (vs.isEmpty) None else Some((vs.min(ord), vs.max(ord)))
+  }
+
+  /** Write `keys` (the equality columns) as one delete file through
+    * `writeFile`, which returns its path (None when it holds no rows).
+    * `held` is the keys' distinct rows when the caller holds them on the
+    * driver ([[distinctAtMost]]): the file is then written from that local
+    * copy and, when the key types compare by value, admitted to the cache
+    * under the file's path, so no reader ever runs a key-file job for it.
+    * Otherwise the distinct keys are written distributed and the file is
+    * marked as not driver-held.
+    */
+  private[graft] def write(keys: DataFrame, held: Option[Seq[Row]],
       writeFile: DataFrame => Option[String]): Option[String] = {
-    val distinct = keys.dropDuplicates()
-    val held = Some(keys.schema).filter(comparable)
-      .map(_ => distinct.limit(EqKeyCacheMaxRows + 1).collect().toSeq)
-      .filter(_.length <= EqKeyCacheMaxRows)
-    val file = writeFile(held.fold(distinct)(rows =>
-      keys.sparkSession.createDataFrame(rows.asJava, keys.schema)))
-    file.foreach(admit(_, held.map(keySetOf(keys.schema, _))))
+    val file = writeFile(held.fold(keys.dropDuplicates())(frame(keys.sparkSession, _, keys.schema)))
+    file.foreach(admit(_, held.filter(_ => comparable(keys.schema)).map(keySetOf(keys.schema, _))))
     file
   }
 
@@ -160,9 +240,7 @@ private[graft] object EqualityDeletes {
     val (out, keyHit) = keySet(spark, path)
       .filter(_.schema.forall(f => colTypes.get(f.name.toLowerCase).contains(f.dataType))) match {
       case Some(ks) =>
-        val keys = ks.broadcastOn(spark.sparkContext)
-        val member = udf { (r: Row) => val k = keyOf(r); k != null && keys.value.contains(k) }
-        (df, member(struct(ks.schema.fieldNames.toSeq.map(col): _*)))
+        (df, member(ks.broadcastOn(spark.sparkContext), ks.schema))
       case None =>
         val keys = spark.read.parquet(path).dropDuplicates()
         (df.join(broadcast(keys.withColumn(tmp, lit(true))), keys.columns.toSeq, "left"),
@@ -170,4 +248,18 @@ private[graft] object EqualityDeletes {
     }
     (out, inFile.fold(keyHit)(keyHit && _))
   }
+
+  // true on rows whose `schema` columns hold one of `keys`' tuples
+  private def member(keys: Broadcast[Set[Any]], schema: StructType): Column =
+    udf { (r: Row) => val k = keyOf(r); k != null && keys.value.contains(k) }
+      .apply(struct(schema.fieldNames.toSeq.map(col): _*))
+
+  /** A predicate true on the rows whose `schema` columns hold one of the
+    * driver-held key tuples `keys` (a NULL-bearing tuple never matches),
+    * tested against a broadcast set like [[deletedBy]]'s; None when a key
+    * type cannot compare by value in a set.
+    */
+  private[graft] def isIn(spark: SparkSession, schema: StructType, keys: Seq[Row]): Option[Column] =
+    Option.when(comparable(schema))(
+      member(spark.sparkContext.broadcast(keySetOf(schema, keys).keys), schema))
 }

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
 import graft.plans.IceboxFileIndex
 
 /** One committed table state: an immutable file manifest + lineage.
@@ -1508,7 +1508,11 @@ final class Icebox(val tableDir: String) {
     else {
       val hotFiles = hot.values.flatten.toSeq
       val bytes = hotFiles.map(_.sizeBytes).sum
-      val n = math.max(1, math.ceil(bytes / (targetFileMb * 1024.0 * 1024.0)).toInt)
+      // at least one write task per hot partition, up to the cores: hash
+      // partitioning on the partition columns still writes one file per
+      // partition, however many tasks share the work
+      val n = math.max(math.ceil(bytes / (targetFileMb * 1024.0 * 1024.0)).toInt,
+        math.min(hot.size, spark.sparkContext.defaultParallelism))
       val df = withHiddenPartitions(IceboxFileIndex.scan(spark, this, hotFiles, snap.schemaJson))
         .repartition(n, partCols.map(col): _*)
       commit(df, partCols, "overwrite") { (parent, newFiles) =>
@@ -1785,12 +1789,16 @@ final class Icebox(val tableDir: String) {
 
   /** Build the "provably holds NONE of the batch's keys" predicate over
     * `files` — shared by the eq-delete attach pruning and [[readForKeys]].
-    * `keysPhys` columns are PHYSICAL key names.
+    * `keysPhys` columns are PHYSICAL key names; `held` is their distinct
+    * rows when the caller holds them on the driver
+    * ([[EqualityDeletes.distinctAtMost]]), and then neither check below
+    * runs a Spark job.
     *
-    * Range check: one tiny agg computes the batch's per-column bounds.
-    * Numeric keys compare numerically; STRING keys compare in UTF8 binary
-    * order — the order Spark's string min/max, the parquet footer stats,
-    * and prunedFilesByStatsString all use — so string-keyed CDC (uuids,
+    * Range check: the batch's per-column bounds — computed on the driver
+    * from held rows, else by one tiny agg. Numeric keys compare
+    * numerically; STRING keys compare in UTF8 binary order — the order
+    * Spark's string min/max, the parquet footer stats, and
+    * prunedFilesByStatsString all use — so string-keyed CDC (uuids,
     * natural keys) gets the same pruning on a range-clustered table.
     *
     * Bloom check (the point-lookup complement, and the one that works on
@@ -1798,22 +1806,37 @@ final class Icebox(val tableDir: String) {
     * columns with manifest blooms, a file is provably unaffected when NONE
     * of the batch's key hashes might be in it — blooms have no false
     * negatives, so the skip is exact; false positives only keep extra
-    * files (conservative). Bounded: the probe costs |files| x |distinct
-    * keys| driver-side bit tests, so it engages only when the batch's
-    * distinct keys fit `bloom.attach.max-keys` (default 100k;
+    * files (conservative). Held keys are hashed by an `xxhash64`
+    * projection of their LocalRelation, which folds into the relation (an
+    * aggregate or `distinct` over it would still run jobs). Bounded: the
+    * probe costs |files| x |distinct keys| driver-side bit tests, so it
+    * engages only when the batch's distinct keys fit
+    * `bloom.attach.max-keys` (default 100k;
     * short-circuiting exits at the first possible hit, and CDC batches
     * are typically far smaller). Missing/untyped stats and missing blooms
     * keep the file.
     */
-  private def keyDisjoint(files: Seq[DataFile], keysPhys: DataFrame): DataFile => Boolean = {
+  private[graft] def keyDisjoint(files: Seq[DataFile], keysPhys: DataFrame,
+      held: Option[Seq[Row]]): DataFile => Boolean = {
     val keyCols = keysPhys.columns.toSeq
     val numericKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType.isInstanceOf[NumericType])
     val stringKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType == StringType)
     val boundedCols = numericKeyCols ++ stringKeyCols
-    val (bounds, strBounds) =
-      if (boundedCols.isEmpty) (Map.empty[String, (Double, Double)],
+    val (bounds, strBounds) = held match {
+      case _ if boundedCols.isEmpty => (Map.empty[String, (Double, Double)],
         Map.empty[String, (String, String)])
-      else {
+      case Some(rows) =>
+        def extremes(c: String) =
+          EqualityDeletes.extremes(rows, keyCols.indexOf(c), keysPhys.schema(c).dataType)
+        def toDouble(v: Any): Double = v match {
+          case d: Decimal => d.toDouble
+          case n: Number => n.doubleValue
+        }
+        (numericKeyCols.flatMap(c => extremes(c).map { case (lo, hi) =>
+          c -> (toDouble(lo), toDouble(hi)) }).toMap,
+          stringKeyCols.flatMap(c => extremes(c).map { case (lo, hi) =>
+            c -> (lo.toString, hi.toString) }).toMap)
+      case None =>
         val aggs = numericKeyCols.flatMap(c =>
           Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))) ++
           stringKeyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
@@ -1828,18 +1851,26 @@ final class Icebox(val tableDir: String) {
           else Some(c -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1)))
         }.toMap
         (num, str)
-      }
+    }
     def utf8Lt(a: String, b: String): Boolean =
       org.apache.spark.unsafe.types.UTF8String.fromString(a)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     val bloomMaxKeys = properties.get("bloom.attach.max-keys").map(_.toInt).getOrElse(100000)
     val bloomKeyCols = keyCols.filter(c => files.exists(_.blooms.contains(c)))
-    val keyHashes: Map[String, Array[Long]] = bloomKeyCols.flatMap { c =>
-      val hs = keysPhys.where(col(c).isNotNull)
-        .select(org.apache.spark.sql.functions.xxhash64(col(c)).as("h"))
-        .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0))
-      if (hs.length > bloomMaxKeys) None else Some(c -> hs)
-    }.toMap
+    def bounded(c: String, hs: Array[Long]) = Option.when(hs.length <= bloomMaxKeys)(c -> hs)
+    val keyHashes: Map[String, Array[Long]] = held match {
+      case _ if bloomKeyCols.isEmpty => Map.empty
+      case Some(rows) =>
+        val hashed = EqualityDeletes.frame(keysPhys.sparkSession, rows, keysPhys.schema)
+          .select(bloomKeyCols.map(c => when(col(c).isNotNull, xxhash64(col(c)))): _*).collect()
+        bloomKeyCols.zipWithIndex.flatMap { case (c, i) =>
+          bounded(c, hashed.filterNot(_.isNullAt(i)).map(_.getLong(i)).distinct) }.toMap
+      case None =>
+        bloomKeyCols.flatMap { c =>
+          bounded(c, keysPhys.where(col(c).isNotNull).select(xxhash64(col(c)).as("h"))
+            .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0)))
+        }.toMap
+    }
     (f: DataFile) =>
       bounds.exists { case (c, (klo, khi)) =>
         f.stats.get(c).exists { case (mn, mx) =>
@@ -1877,7 +1908,8 @@ final class Icebox(val tableDir: String) {
       case Some(cur) =>
         val logicalKeyCols = keys.columns.toSeq
         val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
-        val disjoint = keyDisjoint(cur.files, keysPhys)
+        val disjoint = keyDisjoint(cur.files, keysPhys,
+          EqualityDeletes.localDistinctAtMost(keysPhys))
         IceboxFileIndex.scan(spark, this, cur.files.filterNot(disjoint), cur.schemaJson)
     }
 
@@ -1910,12 +1942,16 @@ final class Icebox(val tableDir: String) {
     // join runs below the logical aliasing, and a later column rename must
     // not orphan older delete files
     val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
-    val disjoint = keyDisjoint(cur.files, keysPhys)
+    // ONE bounded collect of the distinct keys (no job when `keys` is
+    // already local) feeds the attach pruning and the delete file; over
+    // the cap both keep their distributed plans
+    val held = EqualityDeletes.distinctAtMost(keysPhys)
+    val disjoint = keyDisjoint(cur.files, keysPhys, held)
     commitMergeOnRead(op, cur, f => !disjoint(f), _.eqDeletes.size,
       // stacked deletes applied by the read, the NEW keys anti-joined
       survivors = overFiles => IceboxFileIndex.scan(keys.sparkSession, this, overFiles,
         cur.schemaJson).join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"),
-      deleteFile = EqualityDeletes.write(keysPhys, writeDeleteFile(_, "eqdelete")),
+      deleteFile = EqualityDeletes.write(keysPhys, held, writeDeleteFile(_, "eqdelete")),
       attachTo = (f, file) => f.copy(eqDeletes = f.eqDeletes :+ file), newData, partitionBy)
   }
 

@@ -286,4 +286,102 @@ class EqualityDeleteSpec extends SparkSpec {
     point().length shouldBe 1
     withDeletes shouldBe jobsOf(point())
   }
+
+  test("one merge-on-read upsert of a small batch runs 4 Spark jobs, one file per touched partition") {
+    val t = Icebox(tmpDir("eqdel-morjobs"))
+    t.append((1 to 200).map(i => (i.toLong, i % 4, s"v$i", i.toLong)).toDF("id", "p", "s", "ts"),
+      Seq("p"))
+    t.setProperties(Map("write.upsert.mode" -> "merge-on-read"))
+    val before = t.currentSnapshot.get.files.map(_.path).toSet
+    val batch = (195 to 210).map(i => (i.toLong, i % 4, s"w$i", 1000L + i))
+      .toDF("id", "p", "s", "ts")
+    // the dedupe's two jobs collect the batch once; then the delete file
+    // and the payload are one write each
+    val jobs = jobNamesOf(Upsert.intoTable(t, batch, Seq("id"), Some("ts")))
+    jobs should have size 4
+    jobs.count(_.contains("write at DataFileCommitter")) shouldBe 2
+    t.currentSnapshot.get.files.map(_.path).filterNot(before).size shouldBe 4
+    t.read(spark).filter($"id" >= 195L).select("s").as[String].collect().sorted shouldBe
+      (195 to 210).map(i => s"w$i").sorted
+    t.read(spark).count() shouldBe 210L
+  }
+
+  /** The files `keys` attach to at `t`'s head (each named by its `k`
+    * minimum) and the rows of their delete file, through the driver-held
+    * key path and through the distributed one.
+    */
+  private def bothPaths(t: Icebox, keys: org.apache.spark.sql.DataFrame) = {
+    val files = t.currentSnapshot.get.files
+    def attached(held: Option[Seq[org.apache.spark.sql.Row]]) = {
+      val disjoint = t.keyDisjoint(files, keys, held)
+      files.filterNot(disjoint).map(f => f.stats.get("k").map(_._1).getOrElse(f.path)).toSet
+    }
+    def written(held: Option[Seq[org.apache.spark.sql.Row]]) = {
+      var rows = Seq.empty[String]
+      EqualityDeletes.write(keys, held, df => { rows = canon(df); None })
+      rows
+    }
+    val held = EqualityDeletes.distinctAtMost(keys)
+    held shouldBe defined
+    ((attached(held), written(held)), (attached(None), written(None)))
+  }
+
+  private def oneFilePerValue[T](name: String, values: Seq[T], stats: Seq[String] = Nil)(
+      toDf: Seq[T] => org.apache.spark.sql.DataFrame): Icebox = {
+    val t = Icebox(tmpDir(name))
+    values.foreach(v => t.append(toDf(Seq(v)), collectStats = stats))
+    t
+  }
+
+  test("held and distributed key handling attach the same files and write the same keys") {
+    // UTF-8 order: "\uFFFF" < "\uFFFFz" < "😀"; UTF-16 order puts "😀"
+    // first, so a Java-order bound would prune the "\uFFFFz" file
+    val strs = oneFilePerValue("eqdel-eqv-str", Seq("a", "\uFFFF", "\uFFFFz", "😀", "😀z"))(
+      _.toDF("k"))
+    val (heldS, distS) = bothPaths(strs, Seq("\uFFFF", "😀", "😀").toDF("k"))
+    heldS shouldBe distS
+    heldS._1 shouldBe Set("\uFFFF", "\uFFFFz", "😀")
+    heldS._2 shouldBe Seq("[😀]", "[\uFFFF]").sorted
+
+    val decs = oneFilePerValue("eqdel-eqv-dec", Seq("1.10", "2.20", "3.30", "4.40"), Seq("k"))(
+      vs => vs.map(BigDecimal(_)).toDF("k").select($"k".cast("decimal(10,2)").as("k")))
+    val (heldD, distD) = bothPaths(decs,
+      Seq("2.20", "3.30").map(BigDecimal(_)).toDF("k").select($"k".cast("decimal(10,2)").as("k")))
+    heldD shouldBe distD
+    heldD._1 shouldBe Set("2.20", "3.30")
+
+    val longs = oneFilePerValue("eqdel-eqv-null", Seq(1L, 5L, 9L))(_.toDF("k"))
+    val (heldN, distN) = bothPaths(longs, Seq(None, Some(5L), None).toDF("k"))
+    heldN shouldBe distN
+    heldN._1 shouldBe Set("5")
+
+    val floats = oneFilePerValue("eqdel-eqv-nan", Seq(0.5f, 1.5f, 2.5f))(_.toDF("k"))
+    val (heldF, distF) = bothPaths(floats, Seq(1.5f, Float.NaN).toDF("k"))
+    heldF shouldBe distF
+    // NaN is the greatest float: the bounds are [1.5, NaN]
+    heldF._1 shouldBe Set("1.5", "2.5")
+
+    val bloomed = Icebox(tmpDir("eqdel-eqv-bloom"))
+    bloomed.setProperties(Map("manifest.bloom.columns" -> "k", "manifest.bloom.fpp" -> "0.001"))
+    (0 until 4).foreach(off => bloomed.append((1 to 500).map(i => ((i * 7 + off).toLong,
+      s"v$off-$i")).toDF("k", "v").repartition(4, col("v"))))
+    val (heldB, distB) = bothPaths(bloomed, Seq(707L, 1414L).toDF("k"))
+    heldB shouldBe distB
+    heldB._1.size should be < bloomed.currentSnapshot.get.files.size
+  }
+
+  test("an over-cap deleteByKeys on a bloom-indexed table deletes exactly its keys") {
+    val cap = EqualityDeletes.EqKeyCacheMaxRows
+    val t = Icebox(tmpDir("eqdel-overcap-bloom"))
+    t.setProperties(Map("manifest.bloom.columns" -> "id"))
+    (0 until 2).foreach(off => t.append((1 to 300).map(i => ((2 * i + off).toLong, s"v$i", i % 4))
+      .toDF("id", "s", "grp").repartition(3, col("s"))))
+    // cap + 1 distinct keys: every multiple of 3
+    t.deleteByKeys(spark.range(0L, cap + 1L).select(($"id" * 3L).as("id")))
+    EqualityDeletes.isDriverHeld(t.currentSnapshot.get.files.flatMap(_.eqDeletes).head) shouldBe
+      false
+    val expected = (2 to 601).map(_.toLong).filter(_ % 3 != 0)
+    ids(t.read(spark)) shouldBe expected
+    ids(t.readIndexed(spark)) shouldBe expected
+  }
 }

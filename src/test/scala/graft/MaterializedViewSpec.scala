@@ -268,6 +268,39 @@ class MaterializedViewSpec extends SparkSpec {
     assertSameRows(mv.read(spark), expect())
   }
 
+  test("one incremental refresh of an append runs 5 Spark jobs") {
+    val src = Icebox(tmpDir("mvsrc-jobs"))
+    src.append((1 to 100).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "g", "v"))
+    val mv = Icebox(tmpDir("mvtgt-jobs"))
+    MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v"))
+    src.append((101 to 120).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "g", "v"))
+    // the delta's aggregation (2), the delete file, the touched target
+    // rows' broadcast and the recomputed groups' write
+    var mode: MaterializedView.Mode = null
+    val jobs = jobNamesOf { mode = MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v")) }
+    mode shouldBe MaterializedView.Incremental
+    jobs should have size 5
+    jobs.count(_.contains("write at DataFileCommitter")) shouldBe 2
+    assertSameRows(mv.read(spark), fullAgg(src))
+  }
+
+  test("a refresh touching a NULL group rebuilds: the view keeps one NULL group") {
+    val src = Icebox(tmpDir("mvsrc-null"))
+    src.append(Seq((Some("a"), 1L), (None, 2L)).toDF("g", "v"))
+    val mv = Icebox(tmpDir("mvtgt-null"))
+    def refresh() = MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v"))
+    refresh() shouldBe MaterializedView.FullBuild
+    src.append(Seq((None, 10L), (Some("a"), 5L)).toDF("g", "v"))
+    val mode = refresh()
+    canon(mv.read(spark)) shouldBe canon(Seq((Some("a"), 2L, 6L, 2L), (None, 2L, 12L, 2L))
+      .toDF("g", "row_count", "sum_v", "nn_v"))
+    mode shouldBe MaterializedView.FullBuild
+    // a delta that leaves the NULL group alone stays incremental
+    src.append(Seq((Some("b"), 7L)).toDF("g", "v"))
+    refresh() shouldBe MaterializedView.Incremental
+    assertSameRows(mv.read(spark), fullAgg(src))
+  }
+
   // ---- join views: Δ(A⋈B) = ΔA⋈B₂ + A₁⋈ΔB ------------------------------
 
   /** fact(id, fk, v) ⋈ dim(k, g) on fk = k, grouped by the dim's g. */
@@ -403,7 +436,7 @@ class MaterializedViewSpec extends SparkSpec {
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
   }
 
-  test("join view: one refresh of a fact append plus a dim key-delete runs 15 Spark jobs") {
+  test("join view: one refresh of a fact append plus a dim key-delete runs 9 Spark jobs") {
     val fact = Icebox(tmpDir("jmvf10")); val dim = Icebox(tmpDir("jmvd10"))
     fact.append((1 to 60).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.append((0 to 4).map(k => (k, s"g$k")).toDF("k", "g"))
@@ -412,11 +445,25 @@ class MaterializedViewSpec extends SparkSpec {
     fact.append((61 to 80).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.deleteByKeys(Seq(2).toDF("k"))
     // both terms run; each pinned side is small, so it is read outright
-    // with no pruning probe, and no pinned read is persisted
+    // with no pruning probe, and no pinned read is persisted; the touched
+    // groups are collected once and feed every later step
     var mode: MaterializedView.Mode = null
-    jobsOf { mode = joinMv(fact, dim, mv) } shouldBe 15
+    jobsOf { mode = joinMv(fact, dim, mv) } shouldBe 9
     mode shouldBe MaterializedView.Incremental
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
+  }
+
+  test("join view: a refresh touching a NULL group rebuilds: one NULL group") {
+    val fact = Icebox(tmpDir("jmvf11")); val dim = Icebox(tmpDir("jmvd11"))
+    fact.append((1 to 20).map(i => (i.toLong, i % 3, i * 1L)).toDF("id", "fk", "v"))
+    dim.append(Seq((0, Some("g0")), (1, None), (2, None)).toDF("k", "g"))
+    val mv = Icebox(tmpDir("jmvt11"))
+    joinMv(fact, dim, mv) shouldBe MaterializedView.FullBuild
+    fact.append(Seq((21L, 1, 100L), (22L, 0, 50L)).toDF("id", "fk", "v"))
+    val mode = joinMv(fact, dim, mv)
+    mv.read(spark).filter($"g".isNull).count() shouldBe 1L
+    assertSameRows(mv.read(spark), joinedAgg(fact, dim))
+    mode shouldBe MaterializedView.FullBuild
   }
 
   test("join view: expired cursor on a source falls back to a full rebuild") {
