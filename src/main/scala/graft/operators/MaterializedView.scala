@@ -546,6 +546,10 @@ object MaterializedView {
       Incremental
     }
 
+    // the target rows of the `touched` groups, by a key semi-join
+    def semiJoin(touched: DataFrame): DataFrame => DataFrame =
+      _.join(touched, keys, "left_semi")
+
     try EqualityDeletes.collectAtMost(deltaPlan) match {
       // One row per TOUCHED GROUP — small by construction — collected ONCE
       // (the diff's aggregation runs once): emptiness and NULL keys are
@@ -566,7 +570,7 @@ object MaterializedView {
               t.name == f.name && t.dataType == f.dataType)))
             .flatMap(ks => EqualityDeletes.isIn(spark, ks,
               rows.map(r => Row.fromSeq(r.toSeq.take(keys.size)))))
-            .fold((df: DataFrame) => df.join(touched, keys, "left_semi"))(in => _.filter(in))
+            .fold(semiJoin(touched))(in => _.filter(in))
           // the touched groups' rows: at most one per held delta row
           merge(delta, broadcast(keep(target.readForKeys(spark, touched)).drop(recompCols: _*)),
             keep, held = true)
@@ -582,7 +586,7 @@ object MaterializedView {
           else if (r.getLong(1) > 0L) rebuild()
           else {
             val touched = delta.select(keys.map(col): _*)
-            val keep = (df: DataFrame) => df.join(touched, keys, "left_semi")
+            val keep = semiJoin(touched)
             merge(delta, keep(target.read(spark)).drop(recompCols: _*), keep, held = false)
           }
         } finally delta.unpersist(blocking = false)

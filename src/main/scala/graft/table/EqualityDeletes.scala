@@ -1,9 +1,13 @@
 package graft.table
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import scala.collection.immutable.ArraySeq
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import org.apache.spark.SparkContext
+import scala.util.control.NonFatal
+import org.apache.spark.{FutureAction, SparkContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -121,10 +125,13 @@ private[graft] object EqualityDeletes {
 
   /** `df`'s rows, in partition order, when it has at most
     * [[EqKeyCacheMaxRows]] of them; None when it has more. A local frame
-    * runs no Spark job; any other runs ONE job over all its partitions,
-    * each returning at most one row over the cap — unlike
-    * `limit(cap + 1).collect()`, whose take scans one partition first and
-    * then starts a second job for the rest.
+    * runs no Spark job; any other runs ONE job over all its partitions —
+    * unlike `limit(cap + 1).collect()`, whose take scans one partition
+    * first and then starts a second job for the rest. A partition over the
+    * cap on its own ships no rows, only that it is over, and the job is
+    * cancelled at the first result that takes the total over the cap: what
+    * an over-cap `df` ships the driver is bounded by the tasks that finish
+    * before the cancel lands, never one capped slice per partition.
     */
   private[graft] def collectAtMost(df: DataFrame): Option[Seq[Row]] = {
     val n = EqKeyCacheMaxRows
@@ -134,12 +141,23 @@ private[graft] object EqualityDeletes {
         val rdd = df.rdd
         val parts = new Array[Array[Row]](rdd.getNumPartitions)
         var total = 0L
-        df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => it.take(n + 1).toArray,
-          (i: Int, rows: Array[Row]) => parts.synchronized {
-            total += rows.length
-            if (total <= n) parts(i) = rows else parts.indices.foreach(parts(_) = null)
-          })
-        if (total > n) None else Some(parts.iterator.flatMap(_.iterator).toSeq)
+        val over = new AtomicBoolean(false)
+        val job = new AtomicReference[FutureAction[Unit]]()
+        // cancelling only posts an event; a result may arrive before the
+        // handle is set, so the caller cancels again once it is
+        def cancel(): Unit = Option(job.get).foreach(_.cancel())
+        job.set(df.sparkSession.sparkContext.submitJob(rdd,
+          (it: Iterator[Row]) => Some(it.take(n + 1).toArray).filter(_.length <= n),
+          parts.indices,
+          (i: Int, rows: Option[Array[Row]]) => parts.synchronized {
+            total += rows.fold(n + 1L)(_.length.toLong)
+            if (total <= n) parts(i) = rows.get
+            else if (!over.getAndSet(true)) { parts.indices.foreach(parts(_) = null); cancel() }
+          }, ()))
+        if (over.get) cancel()
+        try Await.result(job.get, Duration.Inf)
+        catch { case NonFatal(_) if over.get => }
+        if (over.get) None else Some(parts.iterator.flatMap(_.iterator).toSeq)
     }
   }
 
@@ -150,7 +168,7 @@ private[graft] object EqualityDeletes {
     */
   private[graft] def distinctAtMost(df: DataFrame): Option[Seq[Row]] =
     localRows(df) match {
-      case Some(rows) => localDistinct(rows)
+      case Some(rows) => Some(rows.distinct).filter(_.length <= EqKeyCacheMaxRows)
       case None => collectAtMost(df.dropDuplicates())
     }
 
@@ -158,10 +176,7 @@ private[graft] object EqualityDeletes {
     * other frame.
     */
   private[graft] def localDistinctAtMost(df: DataFrame): Option[Seq[Row]] =
-    localRows(df).flatMap(localDistinct)
-
-  private def localDistinct(rows: Seq[Row]): Option[Seq[Row]] =
-    Some(rows.distinct).filter(_.length <= EqKeyCacheMaxRows)
+    localRows(df).map(_.distinct).filter(_.length <= EqKeyCacheMaxRows)
 
   /** Driver-held `rows` as a LocalRelation frame of `schema`: projections
     * over it fold into the relation and run no job.

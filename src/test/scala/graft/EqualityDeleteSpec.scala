@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.Upsert
 import graft.table.{EqualityDeletes, Icebox}
@@ -368,6 +369,48 @@ class EqualityDeleteSpec extends SparkSpec {
     val (heldB, distB) = bothPaths(bloomed, Seq(707L, 1414L).toDF("k"))
     heldB shouldBe distB
     heldB._1.size should be < bloomed.currentSnapshot.get.files.size
+  }
+
+  test("an over-cap collect is cancelled before every partition's result reaches the driver") {
+    val cap = EqualityDeletes.EqKeyCacheMaxRows
+    val parts = 8 * spark.sparkContext.defaultParallelism
+    val sc = spark.sparkContext
+    val group = s"overcap-${java.util.UUID.randomUUID()}"
+    val jobIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = new java.util.concurrent.atomic.AtomicInteger()
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobIds.add(e.jobId); e.stageIds.foreach(stages.add)
+          case g if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.reason == org.apache.spark.Success) done.incrementAndGet()
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobIds.contains(e.jobId)) ends.add(e.jobResult.toString)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // every partition alone is over the cap: the first result overflows
+      val df = spark.range(0L, parts * (cap + 1L), 1L, parts).toDF("k")
+      sc.setJobGroup(group, "over-cap collect")
+      try EqualityDeletes.collectAtMost(df) shouldBe None finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      marker.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      jobIds.size shouldBe 1
+      done.get should (be >= 1 and be < parts)
+      ends.asScala.toSeq match { case Seq(r) => r should include("cancelled") }
+    } finally sc.removeSparkListener(listener)
+    // partitions each under the cap but over it together
+    EqualityDeletes.collectAtMost(spark.range(0L, cap + 1L, 1L, parts).toDF("k")) shouldBe None
+    // under the cap every partition's rows arrive, in order
+    EqualityDeletes.collectAtMost(spark.range(0L, 1000L, 1L, parts).toDF("k"))
+      .map(_.map(_.getLong(0))) shouldBe Some(0L until 1000L)
   }
 
   test("an over-cap deleteByKeys on a bloom-indexed table deletes exactly its keys") {
