@@ -1769,14 +1769,15 @@ object SparkEntry {
       table.read(s)
     }),
 
-    // W6 partition-scoped: dynamic partition overwrite merge
+    // W6 into a partitioned table: only the files whose stats admit a
+    // batch key are rewritten
     "q_icebox_upsert_partitioned" -> ((s, dir) => {
       val table = Icebox(tmp("qup"))
       val ev = t(s, dir, "events")
       table.append(ev, partitionBy = Seq("event_type"))
       val incoming = ev.filter(col("event_type") === "click" && col("event_id") % 10 === 0)
         .withColumn("value", col("value") * 3)
-      Upsert.intoTablePartitions(table, incoming, Seq("event_id"), "event_type")
+      Upsert.intoTable(table, incoming, Seq("event_id"))
       table.read(s)
     }),
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.IceboxFileIndex
 import graft.table.{EqualityDeletes, Icebox, IceboxCommit}
 
 /** Real upsert/MERGE semantics.
@@ -25,10 +26,11 @@ import graft.table.{EqualityDeletes, Icebox, IceboxCommit}
   * turns it into a broadcast anti-join when incoming fits. Duplicate pks
   * within a batch resolve deterministically latest-wins by `orderCol`
   * (SURVEY §7.4 — the reference is silent; we define it and property-test
-  * idempotence). For partitioned targets prefer `intoTablePartitions`:
-  * it merges ONLY the partitions present in the batch and commits via
-  * dynamic partition overwrite — a 5-minute CDC cycle rewrites a few
-  * partitions, never the whole 100 TB table.
+  * idempotence). A copy-on-write upsert merges the batch against ONLY the
+  * files whose stats and blooms admit one of its keys and rewrites just
+  * those ([[Icebox.rewriteFiles]]) — a 5-minute CDC cycle into a
+  * key-clustered or bloom-indexed table rewrites a few files, never the
+  * whole 100 TB table, whatever partition a key moves to.
   */
 object Upsert {
 
@@ -42,10 +44,14 @@ object Upsert {
       .drop("__rn")
   }
 
+  // latest-wins by `orderCol` when given, else one arbitrary row per key
+  private def deduped(incoming: DataFrame, pk: Seq[String], orderCol: Option[String]) =
+    orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
+
   /** Pure DataFrame upsert (no table write). */
   def apply(target: DataFrame, incoming: DataFrame, pk: Seq[String],
       orderCol: Option[String] = None): DataFrame = {
-    val src = orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
+    val src = deduped(incoming, pk, orderCol)
     target.join(src, pk, "left_anti").unionByName(src)
   }
 
@@ -53,13 +59,15 @@ object Upsert {
     * never destroys the previous state — rollback stays available, J2/W6).
     * Partitioning is preserved: when `partitionBy` is empty the target's
     * existing partition columns are reused, so an upsert never silently
-    * degrades a partitioned table to an unpartitioned one.
+    * degrades a partitioned table to an unpartitioned one; an explicit
+    * `partitionBy` that differs from the table's layout re-lays out every
+    * file.
     */
   def intoTable(table: Icebox, incoming: DataFrame, pk: Seq[String],
       orderCol: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
       IceboxCommit.retryingStaleHead {
-    val spark = incoming.sparkSession
-    val parts = if (partitionBy.nonEmpty) partitionBy else table.currentPartitionSpec
+    val spec = table.currentPartitionSpec
+    val parts = if (partitionBy.nonEmpty) partitionBy else spec
     val mode = table.properties.getOrElse("write.upsert.mode", "copy-on-write")
     require(mode == "copy-on-write" || mode == "merge-on-read",
       s"write.upsert.mode=$mode (expected copy-on-write | merge-on-read)")
@@ -68,14 +76,20 @@ object Upsert {
     }
     // pin the head the merge reads, so a cross-process commit landing
     // mid-merge forces a re-merge instead of being silently replaced
-    val head = table.currentSnapshotId
-    val merged =
-      if (head < 0) orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
-      else apply(table.readSnapshotId(spark, head), incoming, pk, orderCol)
-    // Materialize before the commit touches metadata: `merged` reads the
-    // pinned head's files, and the new snapshot is only flipped in after
-    // the full result is durably written to a fresh commit dir.
-    table.overwriteAs("upsert", merged, parts, expectHeadId = head)
+    table.currentSnapshot match {
+      case None =>
+        table.rewriteFiles("upsert", Nil, deduped(incoming, pk, orderCol), parts, expectHeadId = -1L)
+      case Some(head) =>
+        // a row the batch replaces can only sit in a file whose stats and
+        // blooms admit its key, whatever partition the key had; every other
+        // file carries over by reference
+        val candidates =
+          if (parts.map(_.toLowerCase).sorted != spec.map(_.toLowerCase).sorted) head.files
+          else table.splitByKeys(incoming.select(pk.map(col): _*), head)._1
+        val target = IceboxFileIndex.scan(incoming.sparkSession, table, candidates, head.schemaJson)
+        table.rewriteFiles("upsert", candidates, apply(target, incoming, pk, orderCol), parts,
+          expectHeadId = head.id)
+    }
     ()
   }
 
@@ -97,11 +111,11 @@ object Upsert {
       orderCol: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
       IceboxCommit.retryingStaleHead {
     val parts = if (partitionBy.nonEmpty) partitionBy else table.currentPartitionSpec
-    val src = orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
+    val src = deduped(incoming, pk, orderCol)
     // expectHeadId = −1: computed against "no table" — a creation racing in
     // between the exists check and the publish must force a re-merge (the
     // retry re-enters via the MoR delete path), never a silent replace
-    if (!table.exists) { table.overwriteAs("upsert", src, parts, expectHeadId = -1L); return }
+    if (!table.exists) { table.rewriteFiles("upsert", Nil, src, parts, expectHeadId = -1L); return }
     // a deduped batch of at most EqKeyCacheMaxRows rows is collected ONCE:
     // its keys and its payload are LocalRelations (the delete commit reads
     // the keys with no job), and the payload is written from one task — one
@@ -114,33 +128,6 @@ object Upsert {
       case None => (src, src)
     }
     table.commitEqualityDeletes("upsert-mor", keys.select(pk.map(col): _*), Some(payload), parts)
-    ()
-  }
-
-  /** Partition-scoped upsert (the 100 TB path): merge the batch against ONLY
-    * the target partitions it touches, then commit via dynamic partition
-    * overwrite. Correct when the partition value of a given pk never changes
-    * (the common CDC layout: partition = date of an immutable event/order
-    * attribute). Reads are pruned via the manifest, the write replaces just
-    * the touched partitions' files.
-    */
-  def intoTablePartitions(table: Icebox, incoming: DataFrame, pk: Seq[String],
-      partitionCol: String, orderCol: Option[String] = None): Unit =
-      IceboxCommit.retryingStaleHead {
-    val spark = incoming.sparkSession
-    if (!table.exists) {
-      val src = orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
-      // −1 = computed against an empty table: a concurrent creation triggers
-      // the enclosing retryingStaleHead re-merge instead of a silent replace
-      table.overwriteAs("upsert", src, Seq(partitionCol), expectHeadId = -1L)
-      return
-    }
-    val head = table.currentSnapshotId // the state this merge reads
-    val values = incoming.select(col(partitionCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet // small: one value per touched partition
-    val target = table.readPartitions(spark, partitionCol, values)
-    val merged = apply(target, incoming, pk, orderCol)
-    table.overwritePartitions(merged, Seq(partitionCol), expectHeadId = head)
     ()
   }
 }

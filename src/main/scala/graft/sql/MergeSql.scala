@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
-import graft.table.{Icebox, Snapshot}
+import graft.plans.IceboxFileIndex
+import graft.table.{Icebox, IceboxCommit, Snapshot}
 
 /** SQL-text `MERGE INTO` over Icebox tables (SURVEY §4 nice-to-have).
   *
@@ -15,9 +16,10 @@ import graft.table.{Icebox, Snapshot}
   * `INSERT *`, `WHEN NOT MATCHED BY SOURCE` — is exactly Spark's, and the
   * parsed catalyst expressions are executed verbatim (re-rendered via
   * `Expression.sql` onto aliased DataFrames). Execution is copy-on-write
-  * against the Icebox snapshot log: one join pass computes the merged row
-  * set, one atomic `overwrite` commit publishes it (readers only ever see
-  * the pre- or post-merge snapshot).
+  * against the Icebox snapshot log: one join pass over the candidate files
+  * computes their merged rows, one atomic `rewriteFiles` commit pinned to
+  * the head the merge read replaces them (readers only ever see the pre-
+  * or post-merge snapshot; a commit landing mid-merge re-runs the merge).
   *
   * Why not a DSv2 `SupportsRowLevelOperations` catalog: Spark's analyzer
   * rewrite for v2 MERGE requires the table to supply a full DataSourceV2
@@ -36,9 +38,8 @@ import graft.table.{Icebox, Snapshot}
   * condition) plus broadcast-size action predicates; the cardinality check
   * is a count over the joined keys, piggybacking the same shuffle shape. At
   * 100 TB the dominant cost is the copy-on-write rewrite itself — the same
-  * cost profile as `Upsert.intoTable`, which callers with partition-scoped
-  * sources should prefer (`intoTablePartitions` rewrites only touched
-  * partitions).
+  * cost profile as `Upsert.intoTable`: with an equi ON clause and no BY
+  * SOURCE clause only the files that may hold a source key are rewritten.
   *
   * Source references: a table/temp-view name (optionally aliased), or an
   * inline `USING (SELECT ...)` subquery — the subquery is re-run from its
@@ -63,16 +64,18 @@ object MergeSql {
 
   // ------------------------------------------------------------------ exec
 
-  private def execute(spark: SparkSession, m: MergeIntoTable): Snapshot = {
+  private def execute(spark: SparkSession, m: MergeIntoTable): Snapshot =
+      IceboxCommit.retryingStaleHead {
     val (targetName, targetAlias) = ref(m.targetTable)
     val (srcDf, sourceAlias) = sourceRef(spark, m.sourceTable)
     val icebox = lookup(targetName).getOrElse(
       sys.error(s"MERGE target '$targetName' is not a registered Icebox table " +
         s"(MergeSql.register(name, table) first)"))
-    val targetSchema = icebox.currentSnapshot
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    // the head the merge reads; the copy-on-write commit is pinned to it
+    val head = icebox.currentSnapshot
       .getOrElse(sys.error(s"MERGE target '$targetName' is empty"))
+    val targetSchema = org.apache.spark.sql.types.DataType.fromJson(head.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val targetCols = targetSchema.fieldNames.toSeq
 
     val src = srcDf.alias(sourceAlias)
@@ -83,23 +86,22 @@ object MergeSql {
     // (drives both the cheap cardinality check and the merge-on-read path)
     val equiPairs = equiKeys(m.mergeCondition, targetAlias, sourceAlias)
 
-    // MERGE-ON-READ TARGET PRUNING: when the merge will commit without a
-    // whole-table rewrite (equi ON, merge-on-read mode, no BY SOURCE
-    // clause), a file PROVEN to hold none of the source's keys contributes
-    // no matched row, no anti-join hit, and no cardinality group — so the
-    // target scan reads only files that might hold source keys (stats +
-    // manifest-bloom pruned). A point-MERGE into a huge clustered or
-    // bloom-indexed table scans O(holding files), not O(table). The
-    // copy-on-write path MUST see the full table (it overwrites), so any
-    // fallback condition disables pruning.
-    val morPrunable = props(icebox) == "merge-on-read" &&
-      m.notMatchedBySourceActions.isEmpty && equiPairs.isDefined &&
-      (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty)
-    val tgt = (if (!morPrunable) icebox.read(spark) else {
-      val keyDf = srcDf.select(equiPairs.get.map { case (tc, sc) => col(sc).as(tc) }: _*)
-        .dropDuplicates()
-      icebox.readForKeys(spark, keyDf)
-    }).alias(targetAlias)
+    // TARGET PRUNING (equi ON, no BY SOURCE clause): a file PROVEN to hold
+    // none of the source's keys contributes no matched row, no anti-join
+    // hit, and no cardinality group — so the target scan reads only the
+    // candidate files that might hold source keys (stats + manifest-bloom
+    // pruned), and copy-on-write rewrites only those. A point-MERGE into a
+    // huge clustered or bloom-indexed table costs O(holding files), not
+    // O(table). Any other shape makes every file a candidate.
+    val candidates = equiPairs match {
+      case Some(pairs) if m.notMatchedBySourceActions.isEmpty =>
+        // one source column per target column: ON t.k = s.a AND t.k = s.b
+        // matches only where t.k = s.a, and a repeated name is ambiguous
+        icebox.splitByKeys(srcDf.select(pairs.distinctBy(_._1)
+          .map { case (tc, sc) => col(sc).as(tc) }: _*), head)._1
+      case _ => head.files
+    }
+    val tgt = IceboxFileIndex.scan(spark, icebox, candidates, head.schemaJson).alias(targetAlias)
 
     val matched = tgt.join(src, cond, "inner")
     // the fast path renames source keys to target-side names; an ON clause
@@ -162,7 +164,7 @@ object MergeSql {
         tgt.join(src, cond, "left_semi").select(targetCols.map(c => col(s"$targetAlias.$c")): _*)
       else applyActions(matched, m.matchedActions)
 
-    // the whole-table side — only the copy-on-write path pays for it
+    // the candidates' unmatched rows — only the copy-on-write path pays for it
     lazy val mergedUnmatched = {
       val unmatchedTarget = tgt.join(src, cond, "left_anti")
       if (m.notMatchedBySourceActions.isEmpty)
@@ -224,7 +226,8 @@ object MergeSql {
           icebox.currentPartitionSpec)
       case None =>
         val result = inserts.foldLeft(mergedMatched.unionByName(mergedUnmatched))(_ unionByName _)
-        icebox.overwrite(result, icebox.currentPartitionSpec)
+        icebox.rewriteFiles("merge", candidates, result, icebox.currentPartitionSpec,
+          expectHeadId = head.id)
     }
     // a registerView temp view is pinned to the pre-merge snapshot's file
     // set — repoint it so SELECT → MERGE → SELECT composes on one name

@@ -214,15 +214,15 @@ private[graft] object EqualityDeletes {
   }
 
   /** `path`'s key set when it is driver-held: from the cache, else one
-    * schema read plus one bounded collect, admitted for every later read.
+    * schema read plus one bounded collect ([[distinctAtMost]]), admitted
+    * for every later read.
     */
   private def keySet(spark: SparkSession, path: String): Option[KeySet] = {
     val hit = cache.get(path)
     if (hit != null) return hit
     val df = spark.read.parquet(path)
     if (!comparable(df.schema)) return admit(path, None)
-    val rows = df.dropDuplicates().limit(EqKeyCacheMaxRows + 1).collect().toSeq
-    admit(path, if (rows.length > EqKeyCacheMaxRows) None else Some(keySetOf(df.schema, rows)))
+    admit(path, distinctAtMost(df).map(keySetOf(df.schema, _)))
   }
 
   private val SchemePrefix = java.util.regex.Pattern.compile(Icebox.SchemePrefix)

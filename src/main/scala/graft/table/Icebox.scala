@@ -7,6 +7,7 @@ import scala.util.Using
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
 import graft.plans.IceboxFileIndex
@@ -1137,21 +1138,11 @@ final class Icebox(val tableDir: String) {
         .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
       "overwrite") { (_, newFiles) => newFiles }
 
-  /** Overwrite that records its operation as "upsert" (so cherry-pick and
-    * lineage reporting can distinguish CDC merges from blind overwrites).
-    * `expectHeadId` (−2 = unguarded): the head the caller's merge was
-    * computed against — read-merge-replace callers pass it so a
-    * cross-process commit landing mid-merge forces a re-merge instead of
-    * being silently replaced (see `IceboxCommit.retryingStaleHead`); −1 means "computed
-    * against an empty table".
+  /** Overwrite that records its operation as `op` (so cherry-pick and
+    * lineage reporting can tell a view rebuild from a blind overwrite).
     */
-  private[graft] def overwriteAs(op: String, df: DataFrame, partitionBy: Seq[String],
-      expectHeadId: Long = -2L): Snapshot =
-    commit(df, partitionBy, op) { (parent, newFiles) =>
-      if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-        throw IceboxCommit.StaleCommitState
-      newFiles
-    }
+  private[graft] def overwriteAs(op: String, df: DataFrame, partitionBy: Seq[String]): Snapshot =
+    commit(df, partitionBy, op) { (_, newFiles) => newFiles }
 
   /** W6 partition-scoped: dynamic partition overwrite — replaces only the
     * partitions present in `df` (Spark's
@@ -1160,8 +1151,7 @@ final class Icebox(val tableDir: String) {
     * rewriting a few partitions and rewriting the world: untouched
     * partitions' files carry over into the new snapshot by reference.
     */
-  def overwritePartitions(df: DataFrame, partitionBy: Seq[String],
-      expectHeadId: Long = -2L): Snapshot = {
+  def overwritePartitions(df: DataFrame, partitionBy: Seq[String]): Snapshot = {
     require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
     val physKeys = partitionBy.map(toPhysical)
     val snap = currentSnapshot
@@ -1169,10 +1159,6 @@ final class Icebox(val tableDir: String) {
       .getOrElse(Nil)
     if (nonConforming.isEmpty)
       return commit(df, partitionBy, "overwrite") { (parent, newFiles) =>
-        // guarded read-merge-replace (see overwriteAs): a concurrent commit
-        // touching the partitions this merge read must force a re-merge
-        if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-          throw IceboxCommit.StaleCommitState
         val touched = newFiles.map(_.partition).toSet
         parent.map(_.files).getOrElse(Nil).filterNot(f => touched(f.partition)) ++ newFiles
       }
@@ -1197,8 +1183,6 @@ final class Icebox(val tableDir: String) {
       .filter(!concat_ws(sep, partitionBy.map(rendered): _*).isin(replaced.toSeq: _*))
     val retired = nonConforming.map(_.path).toSet
     commit(df.unionByName(carry), partitionBy, "overwrite") { (parent, newFiles) =>
-      if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
-        throw IceboxCommit.StaleCommitState
       // conforming files drop iff their partition tuple was replaced by DF
       // (carry's partitions are disjoint from df's by construction, so the
       // written-files partition set must NOT be the drop rule here)
@@ -1209,12 +1193,14 @@ final class Icebox(val tableDir: String) {
     }
   }
 
-  /** Copy-on-write FILE-LEVEL rewrite (row-level DELETE/UPDATE substrate):
-    * commits a snapshot where `removed` files are replaced by the write of
-    * `replacement`; every other live file carries over BY REFERENCE. At
-    * 100 TB this is the difference between rewriting the table and
-    * rewriting only the files whose stats admit the predicate — the same
-    * pruning the read path uses, applied to the write path.
+  /** Copy-on-write FILE-LEVEL rewrite, the one copy-on-write commit of
+    * upsert, MERGE, DELETE and UPDATE: commits a snapshot where `removed`
+    * files are replaced by the write of `replacement`; every other live
+    * file carries over BY REFERENCE. At 100 TB this is the difference
+    * between rewriting the table and rewriting only the files whose stats
+    * admit the predicate ([[IceboxFileIndex.splitByPredicate]]) or a batch
+    * key ([[splitByKeys]]) — the pruning the read path uses, applied to
+    * the write path.
     */
   private[graft] def rewriteFiles(op: String, removed: Seq[DataFile],
       replacement: DataFrame, partitionBy: Seq[String],
@@ -1222,12 +1208,14 @@ final class Icebox(val tableDir: String) {
     val removedPaths = removed.map(_.path).toSet
     commit(replacement, partitionBy, op) { (parent, newFiles) =>
       // DRIFT GUARD (callers that pass the head id they classified
-      // against): `removed` and the replacement rows were computed from
-      // that head — a cross-process commit in between (an eq-delete attach
-      // on a candidate, a compaction replacing one) would make this rewrite
-      // resurrect deleted rows or duplicate compacted ones. Throwing makes
-      // the caller re-run its whole classification (see IceboxCommit.retryingStaleHead).
-      if (expectHeadId != -2L && !parent.map(_.id).contains(expectHeadId))
+      // against, −1 for "no table"): `removed` and the replacement rows were
+      // computed from that head — a cross-process commit in between (an
+      // append of a batch key, an eq-delete attach on a candidate, a
+      // compaction replacing one, a racing creation) would make this
+      // rewrite drop, resurrect or duplicate rows. Throwing makes the
+      // caller re-run its whole classification (see
+      // IceboxCommit.retryingStaleHead).
+      if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
         throw IceboxCommit.StaleCommitState
       parent.map(_.files).getOrElse(Nil).filterNot(f => removedPaths(f.path)) ++ newFiles
     }
@@ -1788,7 +1776,7 @@ final class Icebox(val tableDir: String) {
   }
 
   /** Build the "provably holds NONE of the batch's keys" predicate over
-    * `files` — shared by the eq-delete attach pruning and [[readForKeys]].
+    * `files` — shared by the eq-delete attach pruning and [[splitByKeys]].
     * `keysPhys` columns are PHYSICAL key names; `held` is their distinct
     * rows when the caller holds them on the driver
     * ([[EqualityDeletes.distinctAtMost]]), and then neither check below
@@ -1815,10 +1803,17 @@ final class Icebox(val tableDir: String) {
     * short-circuiting exits at the first possible hit, and CDC batches
     * are typically far smaller). Missing/untyped stats and missing blooms
     * keep the file.
+    * Both checks see a key column as `snap` stores it (a bloom holds the
+    * stored value's hash: an INT's differs from the same BIGINT's); one
+    * whose type does not widen losslessly to the stored type proves nothing.
     */
-  private[graft] def keyDisjoint(files: Seq[DataFile], keysPhys: DataFrame,
+  private[graft] def keyDisjoint(snap: Snapshot, keysPhys: DataFrame,
       held: Option[Seq[Row]]): DataFile => Boolean = {
-    val keyCols = keysPhys.columns.toSeq
+    val storedType = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType].fields
+      .map(f => Icebox.physicalName(f) -> f.dataType).toMap.filter { case (c, t) =>
+        keysPhys.schema.find(_.name == c).exists(k => t == k.dataType ||
+          t != StringType && Cast.canUpCast(k.dataType, t)) }
+    val keyCols = keysPhys.columns.toSeq.filter(storedType.contains)
     val numericKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType.isInstanceOf[NumericType])
     val stringKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType == StringType)
     val boundedCols = numericKeyCols ++ stringKeyCols
@@ -1827,7 +1822,7 @@ final class Icebox(val tableDir: String) {
         Map.empty[String, (String, String)])
       case Some(rows) =>
         def extremes(c: String) =
-          EqualityDeletes.extremes(rows, keyCols.indexOf(c), keysPhys.schema(c).dataType)
+          EqualityDeletes.extremes(rows, keysPhys.columns.indexOf(c), keysPhys.schema(c).dataType)
         def toDouble(v: Any): Double = v match {
           case d: Decimal => d.toDouble
           case n: Number => n.doubleValue
@@ -1856,18 +1851,19 @@ final class Icebox(val tableDir: String) {
       org.apache.spark.unsafe.types.UTF8String.fromString(a)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     val bloomMaxKeys = properties.get("bloom.attach.max-keys").map(_.toInt).getOrElse(100000)
-    val bloomKeyCols = keyCols.filter(c => files.exists(_.blooms.contains(c)))
+    val bloomKeyCols = keyCols.filter(c => snap.files.exists(_.blooms.contains(c)))
     def bounded(c: String, hs: Array[Long]) = Option.when(hs.length <= bloomMaxKeys)(c -> hs)
+    def storedHash(c: String) = xxhash64(col(c).cast(storedType(c)))
     val keyHashes: Map[String, Array[Long]] = held match {
       case _ if bloomKeyCols.isEmpty => Map.empty
       case Some(rows) =>
         val hashed = EqualityDeletes.frame(keysPhys.sparkSession, rows, keysPhys.schema)
-          .select(bloomKeyCols.map(c => when(col(c).isNotNull, xxhash64(col(c)))): _*).collect()
+          .select(bloomKeyCols.map(c => when(col(c).isNotNull, storedHash(c))): _*).collect()
         bloomKeyCols.zipWithIndex.flatMap { case (c, i) =>
           bounded(c, hashed.filterNot(_.isNullAt(i)).map(_.getLong(i)).distinct) }.toMap
       case None =>
         bloomKeyCols.flatMap { c =>
-          bounded(c, keysPhys.where(col(c).isNotNull).select(xxhash64(col(c)).as("h"))
+          bounded(c, keysPhys.where(col(c).isNotNull).select(storedHash(c).as("h"))
             .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0)))
         }.toMap
     }
@@ -1905,13 +1901,21 @@ final class Icebox(val tableDir: String) {
       at: Option[Snapshot]): DataFrame =
     at match {
       case None => read(spark)
-      case Some(cur) =>
-        val logicalKeyCols = keys.columns.toSeq
-        val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
-        val disjoint = keyDisjoint(cur.files, keysPhys,
-          EqualityDeletes.localDistinctAtMost(keysPhys))
-        IceboxFileIndex.scan(spark, this, cur.files.filterNot(disjoint), cur.schemaJson)
+      case Some(cur) => IceboxFileIndex.scan(spark, this, splitByKeys(keys, cur)._1, cur.schemaJson)
     }
+
+  /** Split `snap`'s files by whether they may hold a row whose key tuple is
+    * in `keys` (columns = the LOGICAL key columns): `(candidates,
+    * untouched)`, the key-based twin of
+    * [[IceboxFileIndex.splitByPredicate]]. A file is untouched only when
+    * its manifest stats or blooms prove it holds none of the keys
+    * ([[keyDisjoint]]); a local `keys` frame is split with no Spark job.
+    */
+  private[graft] def splitByKeys(keys: DataFrame, snap: Snapshot): (Seq[DataFile], Seq[DataFile]) = {
+    val keysPhys = keys.select(keys.columns.toSeq.map(c => col(c).as(toPhysical(c))): _*)
+    val disjoint = keyDisjoint(snap, keysPhys, EqualityDeletes.localDistinctAtMost(keysPhys))
+    snap.files.partition(f => !disjoint(f))
+  }
 
   /** EQUALITY-delete commit (Iceberg v2's other merge-on-read delete type,
     * [[commitMergeOnRead]]): records `keys` as an equality-delete file
@@ -1946,7 +1950,7 @@ final class Icebox(val tableDir: String) {
     // already local) feeds the attach pruning and the delete file; over
     // the cap both keep their distributed plans
     val held = EqualityDeletes.distinctAtMost(keysPhys)
-    val disjoint = keyDisjoint(cur.files, keysPhys, held)
+    val disjoint = keyDisjoint(cur, keysPhys, held)
     commitMergeOnRead(op, cur, f => !disjoint(f), _.eqDeletes.size,
       // stacked deletes applied by the read, the NEW keys anti-joined
       survivors = overFiles => IceboxFileIndex.scan(keys.sparkSession, this, overFiles,
@@ -2301,7 +2305,10 @@ final class Icebox(val tableDir: String) {
     }
     val next = StructType(schema.fields.map(x =>
       if (x eq f) x.copy(dataType = newType) else x))
-    commits.publish("alter", p => p.map(_.files).getOrElse(Nil), _ => next.json)
+    // an old file's bloom hashed the narrow value: it proves nothing now
+    val stale = Option.when(f.dataType != newType)(Icebox.physicalName(f))
+    commits.publish("alter", p => p.map(_.files).getOrElse(Nil)
+      .map(d => d.copy(blooms = d.blooms -- stale)), _ => next.json)
   }
 
   /** Metadata-only commit: a new snapshot with the SAME file set whose op

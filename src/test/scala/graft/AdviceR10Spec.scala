@@ -15,7 +15,7 @@ class AdviceR10Spec extends SparkSpec {
   import spark.implicits._
 
   private def writeBatch(dir: String, name: String, rows: Seq[(Long, String)]): Unit = {
-    val stage = Files.createTempDirectory("st10").toString
+    val stage = tmpDir("st10")
     rows.toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = scala.util.Using.resource(Files.list(Paths.get(stage)))(
       _.iterator().asScala.find(_.toString.endsWith(".parquet")).get)
@@ -51,14 +51,14 @@ class AdviceR10Spec extends SparkSpec {
   }
 
   test("create-path upsert commits are guarded: a racing creation throws, not silently replaced") {
-    // the window intoTableMor/intoTablePartitions close: "table absent" was
+    // the window the upsert create paths close: "table absent" was
     // observed, then another writer created it before the publish — the
-    // guarded overwrite must surface StaleCommitState so retryingStaleHead
+    // guarded rewrite must surface StaleCommitState so retryingStaleHead
     // re-merges against the new head
     val t = Icebox(tmpDir("create-race"))
     t.append(Seq((1L, "other-writer")).toDF("id", "v")) // the racing creation
     an[Exception] should be thrownBy
-      t.overwriteAs("upsert", Seq((2L, "loser")).toDF("id", "v"), Nil, expectHeadId = -1L)
+      t.rewriteFiles("upsert", Nil, Seq((2L, "loser")).toDF("id", "v"), Nil, expectHeadId = -1L)
     t.read(spark).select("v").as[String].collect() shouldBe Array("other-writer")
 
     // and the normal create paths still work end-to-end
@@ -66,8 +66,8 @@ class AdviceR10Spec extends SparkSpec {
     operators.Upsert.intoTableMor(t2, Seq((1L, "x"), (1L, "y")).toDF("id", "v"), Seq("id"))
     t2.read(spark).count() shouldBe 1
     val t3 = Icebox(tmpDir("create-parts"))
-    operators.Upsert.intoTablePartitions(t3,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "dt"), Seq("id"), "dt")
+    operators.Upsert.intoTable(t3,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "dt"), Seq("id"), partitionBy = Seq("dt"))
     t3.read(spark).count() shouldBe 2
   }
 

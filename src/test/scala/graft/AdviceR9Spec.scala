@@ -18,8 +18,7 @@ class AdviceR9Spec extends SparkSpec {
     t.setPartitionSpec(Seq("dt"))
     t.append(Seq((4L, "a", 40), (5L, "b", 50)).toDF("id", "dt", "v"))
     // rows outside dt=a live only in the old-generation file; without the
-    // exact filter they leak into the result (and Upsert.intoTablePartitions
-    // would silently duplicate them)
+    // exact filter they leak into the result
     val got = t.readPartitions(spark, "dt", Set("a"))
     got.count() shouldBe 3L
     got.select("dt").distinct().collect().map(_.getString(0)).toSeq shouldBe Seq("a")

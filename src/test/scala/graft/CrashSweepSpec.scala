@@ -218,6 +218,40 @@ class CrashSweepSpec extends SparkSpec {
       t => Upsert.intoTableMor(t, rows(3 to 5, "u"), Seq("id")))))
   }
 
+  test("crash at every step of a copy-on-write upsert") {
+    quiet(sweep(Op("cow-upsert", seeded,
+      t => Upsert.intoTable(t, rows(3 to 5, "u"), Seq("id")))))
+  }
+
+  private val mergeSql =
+    """MERGE INTO %s t USING sweep_merge_src s ON t.id = s.id
+      |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin
+
+  test("crash at every step of a copy-on-write MERGE") {
+    rows(3 to 5, "m").createOrReplaceTempView("sweep_merge_src")
+    quiet(sweep(Op("cow-merge", seeded, t => {
+      MergeSql.register("sweep_cow_merge", t)
+      MergeSql.merge(spark, mergeSql.format("sweep_cow_merge"))
+    })))
+  }
+
+  test("a copy-on-write MERGE re-merges over an append that lands mid-merge") {
+    val dir = "faultfs://" + tmpDir("sweep-merge-race")
+    seeded(Icebox(dir))
+    rows(3 to 5, "m").createOrReplaceTempView("sweep_merge_src")
+    MergeSql.register("sweep_merge_race", Icebox(dir))
+    // a second handle's append lands after the merge read the table, just
+    // before the merge claims its snapshot id: the merge must not publish a
+    // file set computed without the appended rows
+    FaultFs.reset()
+    FaultFs.before(p => p.getParent.getName == "_snapshots" && p.getName.endsWith(".json")) {
+      Icebox(dir).append(rows(7 to 8, "c"))
+    }
+    try MergeSql.merge(spark, mergeSql.format("sweep_merge_race")) finally FaultFs.reset()
+    canon(Icebox(dir).read(spark)) shouldBe
+      canon(rows(1 to 2, "a").union(rows(3 to 5, "m")).union(rows(7 to 8, "c")))
+  }
+
   test("crash at every step of a compaction") {
     quiet(sweep(Op("compact",
       t => { seeded(t); t.append(rows(5 to 6, "b")); t.append(rows(7 to 8, "c")) },

@@ -34,7 +34,7 @@ class CrossProcessSpec extends SparkSpec {
         (Seq(javaBin, "-Xmx1500m", "-cp", cp) ++ addOpens ++
           Seq("graft.tools.ConcurrentAppender", dir, "4", s"p$i")): _*)
         .redirectErrorStream(true)
-        .redirectOutput(java.io.File.createTempFile(s"xproc$i", ".log"))
+        .redirectOutput(new java.io.File(tmpDir(s"xproc$i"), "out.log"))
         .start()
     }
     procs.zipWithIndex.foreach { case (p, i) =>
@@ -55,7 +55,7 @@ class CrossProcessSpec extends SparkSpec {
       (Seq(javaBin, "-Xmx1500m", "-cp", cp) ++ addOpens ++
         Seq("graft.tools.ConcurrentAppender") ++ args): _*)
       .redirectErrorStream(true)
-      .redirectOutput(java.io.File.createTempFile(tag, ".log"))
+      .redirectOutput(new java.io.File(tmpDir(tag), "out.log"))
       .start()
   }
 

@@ -312,9 +312,10 @@ class EqualityDeleteSpec extends SparkSpec {
     * key path and through the distributed one.
     */
   private def bothPaths(t: Icebox, keys: org.apache.spark.sql.DataFrame) = {
-    val files = t.currentSnapshot.get.files
+    val head = t.currentSnapshot.get
+    val files = head.files
     def attached(held: Option[Seq[org.apache.spark.sql.Row]]) = {
-      val disjoint = t.keyDisjoint(files, keys, held)
+      val disjoint = t.keyDisjoint(head, keys, held)
       files.filterNot(disjoint).map(f => f.stats.get("k").map(_._1).getOrElse(f.path)).toSet
     }
     def written(held: Option[Seq[org.apache.spark.sql.Row]]) = {

@@ -12,7 +12,7 @@ class FileCdcSpec extends SparkSpec {
   private def writePartFile(dir: String, dt: String, name: String, rows: Seq[(Long, String)]): String = {
     val pdir = Paths.get(dir, s"dt=$dt")
     Files.createDirectories(pdir)
-    val tmp = Files.createTempDirectory("fcdc").toString
+    val tmp = tmpDir("fcdc")
     rows.toDF("id", "v").coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     val part = Files.list(Paths.get(tmp)).iterator()
     var src: java.nio.file.Path = null

@@ -162,7 +162,7 @@ class PartitionEvolutionSpec extends SparkSpec {
     t.append((31 to 36).map(i => (i.toLong, s"d${i % 3}", i * 10)).toDF("id", "dt", "v"))
     // upsert touches ONLY dt=d0: updates one old-generation key, adds one
     val batch = Seq((3L, "d0", 999), (100L, "d0", 1000)).toDF("id", "dt", "v")
-    operators.Upsert.intoTablePartitions(t, batch, Seq("id"), "dt")
+    operators.Upsert.intoTable(t, batch, Seq("id"))
     val back = t.read(spark)
     back.count() shouldBe 37L // 36 + 1 new, nothing duplicated
     back.groupBy("id").count().filter(col("count") > 1).count() shouldBe 0L

@@ -6,11 +6,9 @@ import graft.table.Icebox
 class PercentileMetaSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath
 
   test("serves exact discrete percentiles from the histogram, zero jobs") {
-    val t = Icebox(tmp("pct"))
+    val t = Icebox(tmpDir("pct"))
     // skewed frequency table: 1 x60, 2 x25, 3 x10, 7 x5 (n=100)
     val rows = Seq.fill(60)(1) ++ Seq.fill(25)(2) ++ Seq.fill(10)(3) ++ Seq.fill(5)(7)
     t.append(rows.toDF("v"), collectStats = Seq("v"))
@@ -24,14 +22,14 @@ class PercentileMetaSpec extends SparkSpec {
   }
 
   test("single-value histogram serves that value for every p") {
-    val t = Icebox(tmp("pct1"))
+    val t = Icebox(tmpDir("pct1"))
     t.append(Seq.fill(10)(42L).toDF("v"), collectStats = Seq("v"))
     t.analyzeHistogram(spark, "v", buckets = 8)
     t.percentileMeta("v", Seq(0.0, 0.5, 1.0)) shouldBe Some(Seq(42L, 42L, 42L))
   }
 
   test("refuses on non-integral columns") {
-    val t = Icebox(tmp("pctd"))
+    val t = Icebox(tmpDir("pctd"))
     t.append(Seq(1.0, 2.5, 3.0).toDF("v"), collectStats = Seq("v"))
     t.analyzeHistogram(spark, "v", buckets = 8)
     t.histogramMeta("v").isDefined shouldBe true // histogram itself exists
@@ -39,14 +37,14 @@ class PercentileMetaSpec extends SparkSpec {
   }
 
   test("refuses when the bucket width exceeds 1 (range wider than buckets)") {
-    val t = Icebox(tmp("pctw"))
+    val t = Icebox(tmpDir("pctw"))
     t.append((1 to 1000).toDF("v"), collectStats = Seq("v"))
     t.analyzeHistogram(spark, "v", buckets = 32)
     t.percentileMeta("v", Seq(0.5)) shouldBe None
   }
 
   test("refuses once the table advances past the analyzed snapshot") {
-    val t = Icebox(tmp("pcts"))
+    val t = Icebox(tmpDir("pcts"))
     t.append((1 to 5).toDF("v"), collectStats = Seq("v"))
     t.analyzeHistogram(spark, "v", buckets = 8)
     t.percentileMeta("v", Seq(0.5)) shouldBe Some(Seq(3L))
@@ -55,7 +53,7 @@ class PercentileMetaSpec extends SparkSpec {
   }
 
   test("rejects out-of-range percentile requests") {
-    val t = Icebox(tmp("pctr"))
+    val t = Icebox(tmpDir("pctr"))
     t.append(Seq(1).toDF("v"), collectStats = Seq("v"))
     an[IllegalArgumentException] should be thrownBy t.percentileMeta("v", Seq(1.5))
     an[IllegalArgumentException] should be thrownBy t.percentileMeta("v", Nil)

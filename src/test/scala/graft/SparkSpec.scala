@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -27,8 +27,22 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
 
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  // every tmpDir of this suite lives under one root, removed after the suite
+  private var tmpRoot: Option[Path] = None
+
+  def tmpDir(prefix: String): String = synchronized {
+    val root = tmpRoot.getOrElse(Files.createTempDirectory(getClass.getSimpleName + "-"))
+    tmpRoot = Some(root)
+    Files.createTempDirectory(root, prefix).toString
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally synchronized {
+      tmpRoot.foreach(root => scala.util.Using.resource(Files.walk(root))(
+        _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))))
+      tmpRoot = None
+    }
 
   /** Rows as a sorted multiset of strings — order-insensitive DataFrame equality. */
   def canon(df: DataFrame): Seq[String] = {

@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeBatch(dir: String, name: String, rows: Seq[(Long, String, Long)]): Unit = {
-    val stage = Files.createTempDirectory("st").toString
+    val stage = tmpDir("st")
     rows.toDF("id", "v", "ver").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = scala.util.Using.resource(Files.list(Paths.get(stage)))(
       _.iterator().asScala.find(_.toString.endsWith(".parquet")).get)

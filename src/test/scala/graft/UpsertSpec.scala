@@ -49,14 +49,17 @@ class UpsertSpec extends SparkSpec {
     t.currentSnapshot.get.operation shouldBe "upsert"
   }
 
-  test("intoTablePartitions merges only touched partitions") {
+  test("intoTable merges only touched partitions") {
     val t = Icebox(tmpDir("upsertp"))
+    // d1's file spans ids 1..3, so its min/max admits key 2: the bloom on
+    // the key proves it holds neither batch key
+    t.setProperties(Map("manifest.bloom.columns" -> "id"))
     val part = target.withColumn("dt", concat(lit("d"), ($"id" % 2).cast("string")))
     t.append(part, partitionBy = Seq("dt"))
     val beforeFiles = t.currentSnapshot.get.files.filter(_.partition("dt") == "d1").map(_.path).toSet
     // incoming touches only dt=d0 (ids 2 and 4)
     val inc = incoming.withColumn("dt", lit("d0"))
-    Upsert.intoTablePartitions(t, inc, Seq("id"), "dt")
+    Upsert.intoTable(t, inc, Seq("id"))
     val afterFiles = t.currentSnapshot.get.files.filter(_.partition("dt") == "d1").map(_.path).toSet
     afterFiles shouldBe beforeFiles // untouched partition's files carried over BY REFERENCE
     val back = t.read(spark)
