@@ -224,7 +224,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         failed += name
         None
-      }
+      } finally SparkEntry.clearTmp() // after the clock: not timed
     }
     val raw: Seq[(String, Double, Double)] = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

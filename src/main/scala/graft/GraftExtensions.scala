@@ -24,6 +24,8 @@ import graft.functions.{CosineSimilarityExpr, DotProductExpr, L2SqExpr, VectorEx
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(spark => new graft.sql.MvRewriteRule(spark))
+    // an aggregate over a small LocalRelation folds on the driver
+    ext.injectOptimizerRule(_ => graft.plans.LocalAggregateFold)
     // CBO stats bridge: manifest rowCount / min-max / NDV attach to Icebox
     // relations right before the cost-based batches (join reorder,
     // broadcast selection) — a no-op unless spark.sql.cbo.enabled

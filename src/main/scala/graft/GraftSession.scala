@@ -11,7 +11,9 @@ import graft.functions.VectorExpressions
   * spark_builder.py:248) plus the scale defaults this engine assumes:
   * AQE with skew-join handling for runtime re-planning, dynamic partition
   * overwrite semantics for partition-scoped CDC merges, UTC session time,
-  * and the graft native functions pre-registered.
+  * the graft native functions pre-registered, and the optimizer rule that
+  * folds an aggregate over a small LocalRelation on the driver
+  * ([[graft.plans.LocalAggregateFold]]).
   *
   * `shufflePartitions` should track cluster parallelism (cores on local
   * mode, 2-3× total executor cores on a real cluster); AQE coalesces
@@ -39,6 +41,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.parquet.filterPushdown", "true")
+      .withExtensions(_.injectOptimizerRule(_ => graft.plans.LocalAggregateFold))
 
   def create(
       master: String = "local[*]",

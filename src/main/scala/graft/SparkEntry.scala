@@ -22,8 +22,21 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Testdata.table(s, dir, name)
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  // every dir `tmp` makes lives under one root, deleted by `clearTmp`
+  private var tmpRoot: Option[java.nio.file.Path] = None
+
+  private def tmp(prefix: String): String = synchronized {
+    if (tmpRoot.isEmpty) tmpRoot = Some(Files.createTempDirectory("graft-entry-"))
+    Files.createTempDirectory(tmpRoot.get, prefix).toString
+  }
+
+  /** Delete every dir the queries made since the last call. Call it once a
+    * query's result is materialized: until then its frame may read them.
+    */
+  def clearTmp(): Unit = synchronized {
+    tmpRoot.foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+    tmpRoot = None
+  }
 
   /** Spread a small id set across the session's cores before an expensive
     * per-row media kernel (synthesis + real decode): the documents table is

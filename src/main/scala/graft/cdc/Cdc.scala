@@ -6,10 +6,8 @@ import java.sql.Timestamp
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.table.EqualityDeletes
 
 /** CDC watermark: the engine analog of the reference's
@@ -108,44 +106,28 @@ object Cdc {
       tsCol: String, versionCol: Option[String], prev: Option[Watermark]): Watermark = {
     val aggs = Seq(max(col(tsCol)).as("ts")) ++ versionCol.map(c => max(col(c)).as("scn"))
     val row = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
-    watermark(schema, table, Option(row.getAs[Any]("ts")),
-      versionCol.flatMap(_ => Option(row.getAs[Any]("scn"))), prev)
-  }
-
-  /** [[advance]] over a batch held on the driver: each max is taken over
-    * the rows in Spark's order for the column's type, NULLs ignored, as the
-    * `max` aggregate does — no Spark job.
-    */
-  private def advanceHeld(rows: Seq[Row], batchSchema: StructType, schema: String,
-      table: String, tsCol: String, versionCol: Option[String],
-      prev: Option[Watermark]): Watermark = {
-    def maxOf(c: String): Option[Any] = {
-      val i = batchSchema.fields.indexWhere(_.name.equalsIgnoreCase(c))
-      require(i >= 0, s"column $c is not in the batch")
-      val dt = batchSchema(i).dataType
-      EqualityDeletes.extremes(rows, i, dt).map(e =>
-        CatalystTypeConverters.createToScalaConverter(dt)(e._2))
-    }
-    watermark(schema, table, maxOf(tsCol), versionCol.flatMap(maxOf), prev)
-  }
-
-  private def watermark(schema: String, table: String, ts: Option[Any], scn: Option[Any],
-      prev: Option[Watermark]): Watermark = {
     // TimestampType surfaces as java.sql.Timestamp, TimestampNTZ as LocalDateTime
-    val newTs = ts.map {
+    val newTs = Option(row.getAs[Any]("ts")).map {
       case t: Timestamp               => t.getTime
       case d: java.time.LocalDateTime => d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
       case other => sys.error(s"unsupported watermark column type: ${other.getClass}")
     }
     Watermark(schema, table,
       newTs.orElse(prev.map(_.lastTimestampMs)).getOrElse(0L),
-      scn.map(_.toString.toLong).orElse(prev.map(_.lastScn)).getOrElse(0L))
+      versionCol.flatMap(_ => Option(row.getAs[Any]("scn"))).map(_.toString.toLong)
+        .orElse(prev.map(_.lastScn)).getOrElse(0L))
   }
 
   /** One micro-batch CDC cycle (the reference's whole
     * `OracleToIcebergCDCOperator.execute`, cdc_operator.py:223-297, as a
     * function): read watermark → incremental filter → empty short-circuit →
     * sink → advance watermark. `sink` receives only the changed rows.
+    *
+    * A batch of at most `EqualityDeletes.EqKeyCacheMaxRows` rows is
+    * collected once, and the sink gets a LocalRelation over the rows; a
+    * larger one is cached for the sink. [[advance]] then runs over the
+    * frame the sink got: over held rows its `max` folds on the driver
+    * ([[graft.plans.LocalAggregateFold]]) and runs no job.
     */
   def runCycle(
       store: WatermarkStore,
@@ -160,21 +142,13 @@ object Cdc {
       case Some(vc) => scnIncrement(batch0, vc, prev)
       case None     => timestampIncrement(batch0, tsCol, prev)
     }
-    // a batch of at most EqKeyCacheMaxRows rows is collected ONCE: the
-    // emptiness check and the watermark come from the rows, and the sink
-    // reads a LocalRelation over them; a larger one is cached for the sink
-    // and the watermark aggregate
-    val next = EqualityDeletes.collectAtMost(batch) match {
-      case Some(rows) =>
-        if (rows.nonEmpty) sink(EqualityDeletes.frame(spark, rows, batch.schema))
-        advanceHeld(rows, batch.schema, schema, table, tsCol, versionCol, prev)
-      case None =>
-        batch.cache()
-        try {
-          sink(batch)
-          advance(batch, schema, table, tsCol, versionCol, prev)
-        } finally batch.unpersist()
-    }
+    val held = EqualityDeletes.collectAtMost(batch)
+    val frame = held.fold(batch.cache())(EqualityDeletes.frame(spark, _, batch.schema))
+    val next =
+      try {
+        if (!held.exists(_.isEmpty)) sink(frame)
+        advance(frame, schema, table, tsCol, versionCol, prev)
+      } finally if (held.isEmpty) batch.unpersist()
     store.put(next)
     next
   }

@@ -513,12 +513,20 @@ object MaterializedView {
       target.commitMarker(op, expectHeadId = tgtHead)
       MarkerOnly
     }
+    // One row per TOUCHED GROUP — small by construction — collected ONCE
+    // (the diff's aggregation runs once): the delta is then a LocalRelation,
+    // and every aggregate over it below folds on the driver. Over the cap
+    // it is persisted, so the check, the semi-joins and the commit's key
+    // projection share one more run of the aggregation.
+    val held = EqualityDeletes.collectAtMost(deltaPlan)
+    val delta = held.fold(deltaPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+      EqualityDeletes.frame(spark, _, deltaPlan.schema))
+    val touched = delta.select(keys.map(col): _*)
+
     // `cur`: the target's rows of the touched groups, recomputed columns
-    // dropped; a `held` delta's groups are written from one task, one file
+    // dropped; a held delta's groups are written from one task, one file
     // per refresh, as the persisted aggregate's single partition writes them
-    def merge(delta: DataFrame, cur: DataFrame, keep: DataFrame => DataFrame,
-        held: Boolean): Mode = {
-      val touched = delta.select(keys.map(col): _*)
+    def merge(cur: DataFrame, keep: DataFrame => DataFrame): Mode = {
       var merged = delta.join(cur, keys, "left")
       val mmCols = if (recompCols.isEmpty) Nil else {
         // bounded touched-group recompute: non-delta-maintainable
@@ -542,54 +550,34 @@ object MaterializedView {
       // ONE atomic merge-on-read commit: every touched key deleted, the
       // recomputed groups appended, cursor marker in the op string
       target.commitEqualityDeletes(op, touched,
-        Some(if (held) updated.coalesce(1) else updated), expectHeadId = tgtHead)
+        Some(if (held.isDefined) updated.coalesce(1) else updated), expectHeadId = tgtHead)
       Incremental
     }
 
-    // the target rows of the `touched` groups, by a key semi-join
-    def semiJoin(touched: DataFrame): DataFrame => DataFrame =
-      _.join(touched, keys, "left_semi")
-
-    try EqualityDeletes.collectAtMost(deltaPlan) match {
-      // One row per TOUCHED GROUP — small by construction — collected ONCE
-      // (the diff's aggregation runs once): emptiness and NULL keys are
-      // checked on the rows, the delta is a LocalRelation (the commit reads
-      // its keys with no job), and the touched groups are read by a
-      // membership filter over the key-pruned target read — a semi-join
-      // would broadcast the local side in a job of its own
-      case Some(rows) =>
-        if (rows.isEmpty) marker()
-        else if (rows.exists(r => keys.indices.exists(r.isNullAt))) rebuild()
+    try {
+      try {
+        val anyNull = keys.map(k => col(k).isNull).reduce(_ || _)
+        val r = delta.agg(count(lit(1)), count(when(anyNull, lit(1)))).head()
+        if (r.getLong(0) == 0L) marker()
+        else if (r.getLong(1) > 0L) rebuild()
         else {
-          val delta = EqualityDeletes.frame(spark, rows, deltaPlan.schema)
-          val touched = delta.select(keys.map(col): _*)
-          // a semi-join only when a key type cannot compare in a set or
-          // differs from the target column's
-          val keep: DataFrame => DataFrame = Some(touched.schema)
-            .filter(_.forall(f => targetSchema.fields.exists(t =>
+          // a held delta's groups are kept by a membership filter (a
+          // semi-join would broadcast the local side in a job of its own)
+          // unless a key type cannot compare in a set or differs from the
+          // target column's; over the cap, by a key semi-join
+          val keep: DataFrame => DataFrame = held
+            .filter(_ => touched.schema.forall(f => targetSchema.fields.exists(t =>
               t.name == f.name && t.dataType == f.dataType)))
-            .flatMap(ks => EqualityDeletes.isIn(spark, ks,
+            .flatMap(rows => EqualityDeletes.isIn(spark, touched.schema,
               rows.map(r => Row.fromSeq(r.toSeq.take(keys.size)))))
-            .fold(semiJoin(touched))(in => _.filter(in))
-          // the touched groups' rows: at most one per held delta row
-          merge(delta, broadcast(keep(target.readForKeys(spark, touched)).drop(recompCols: _*)),
-            keep, held = true)
+            .fold[DataFrame => DataFrame](_.join(touched, keys, "left_semi"))(in => _.filter(in))
+          // a held delta's groups (at most one target row each) come from
+          // the key-pruned target read, broadcast to the merge
+          val cur = held.fold(keep(target.read(spark)))(_ =>
+            broadcast(keep(target.readForKeys(spark, touched))))
+          merge(cur.drop(recompCols: _*), keep)
         }
-      // over the cap: persisted, so the checks, the semi-joins and the
-      // commit's key projection share one more run of the aggregation
-      case None =>
-        val delta = deltaPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val anyNull = keys.map(k => col(k).isNull).reduce(_ || _)
-          val r = delta.agg(count(lit(1)), count(when(anyNull, lit(1)))).head()
-          if (r.getLong(0) == 0L) marker()
-          else if (r.getLong(1) > 0L) rebuild()
-          else {
-            val touched = delta.select(keys.map(col): _*)
-            val keep = semiJoin(touched)
-            merge(delta, keep(target.read(spark)).drop(recompCols: _*), keep, held = false)
-          }
-        } finally delta.unpersist(blocking = false)
+      } finally if (held.isEmpty) delta.unpersist(blocking = false)
     } catch {
       // a concurrent refresher won the commit race: re-enter with a fresh
       // cursor (usually a NoOp); the persisted delta of the over-cap path

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.IceboxFileIndex
@@ -111,23 +113,36 @@ object Upsert {
       orderCol: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
       IceboxCommit.retryingStaleHead {
     val parts = if (partitionBy.nonEmpty) partitionBy else table.currentPartitionSpec
-    val src = deduped(incoming, pk, orderCol)
+    val src = deduped(asStored(table, incoming), pk, orderCol)
     // expectHeadId = −1: computed against "no table" — a creation racing in
     // between the exists check and the publish must force a re-merge (the
     // retry re-enters via the MoR delete path), never a silent replace
     if (!table.exists) { table.rewriteFiles("upsert", Nil, src, parts, expectHeadId = -1L); return }
     // a deduped batch of at most EqKeyCacheMaxRows rows is collected ONCE:
-    // its keys and its payload are LocalRelations (the delete commit reads
-    // the keys with no job), and the payload is written from one task — one
-    // file per touched partition value, as the deduped plan's single
-    // post-shuffle partition writes them
-    val (keys, payload) = EqualityDeletes.collectAtMost(src) match {
-      case Some(rows) =>
-        val local = EqualityDeletes.frame(src.sparkSession, rows, src.schema)
-        (local, local.coalesce(1))
-      case None => (src, src)
-    }
-    table.commitEqualityDeletes("upsert-mor", keys.select(pk.map(col): _*), Some(payload), parts)
+    // its keys and its payload are LocalRelations (the delete commit's key
+    // aggregates fold on the driver), and the payload is written from one
+    // task — one file per touched partition value, as the deduped plan's
+    // single post-shuffle partition writes them
+    val held = EqualityDeletes.collectAtMost(src).map(EqualityDeletes.frame(src.sparkSession, _,
+      src.schema))
+    table.commitEqualityDeletes("upsert-mor", held.getOrElse(src).select(pk.map(col): _*),
+      Some(held.fold(src)(_.coalesce(1))), parts)
     ()
+  }
+
+  /** `df` with each column cast to the type the table stores it as, by
+    * name: the merge-on-read commit takes the batch's schema, so an INT
+    * batch would make a BIGINT table unreadable. Only a lossless widening
+    * (`Cast.canUpCast`) is allowed.
+    */
+  private def asStored(table: Icebox, df: DataFrame): DataFrame = {
+    val stored = table.currentSchemaStruct.toSeq.flatMap(_.fields)
+      .map(f => f.name.toLowerCase -> f.dataType).toMap
+    df.select(df.schema.fields.toSeq.map(f => stored.get(f.name.toLowerCase)
+      .filterNot(DataTypeUtils.sameType(_, f.dataType)).fold(col(f.name)) { t =>
+        require(Cast.canUpCast(f.dataType, t),
+          s"upsert column ${f.name} is ${f.dataType.simpleString}, not widenable to ${t.simpleString}")
+        col(f.name).cast(t).as(f.name)
+      }): _*)
   }
 }

@@ -12,7 +12,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, struct, udf}
 import org.apache.spark.sql.types._
 
@@ -35,9 +34,12 @@ import org.apache.spark.sql.types._
   * because it is small by construction — a CDC batch, an upsert batch's
   * deduplicated rows and keys, a view refresh's touched groups:
   * [[collectAtMost]] collects one in a single job (none when it is already
-  * a LocalRelation) and every consumer then reads the rows or a
-  * LocalRelation frame over them ([[frame]]) instead of re-running its
-  * plan. Over the cap the callers keep their distributed plans.
+  * a LocalRelation) and every consumer then reads a LocalRelation frame
+  * over the rows ([[frame]]) instead of re-running its plan. Its
+  * projections, filters and aggregates fold on the driver
+  * ([[graft.plans.LocalAggregateFold]], under the same cap), so each
+  * consumer has one plan whether its input is held or not. Over the cap
+  * the input stays distributed.
   */
 private[graft] object EqualityDeletes {
 
@@ -162,54 +164,32 @@ private[graft] object EqualityDeletes {
   }
 
   /** `df`'s distinct rows when there are at most [[EqKeyCacheMaxRows]] of
-    * them: deduplicated on the driver when `df` is local (an `Aggregate`
-    * over a LocalRelation still runs jobs), else one bounded collect of
-    * `df.dropDuplicates()`.
+    * them: one bounded collect of `df.dropDuplicates()`, which runs no job
+    * when `df` is local ([[graft.plans.LocalAggregateFold]]).
     */
   private[graft] def distinctAtMost(df: DataFrame): Option[Seq[Row]] =
-    localRows(df) match {
-      case Some(rows) => Some(rows.distinct).filter(_.length <= EqKeyCacheMaxRows)
-      case None => collectAtMost(df.dropDuplicates())
-    }
+    collectAtMost(df.dropDuplicates())
 
-  /** [[distinctAtMost]] for a local `df` only: None, with no job, for any
-    * other frame.
-    */
-  private[graft] def localDistinctAtMost(df: DataFrame): Option[Seq[Row]] =
-    localRows(df).map(_.distinct).filter(_.length <= EqKeyCacheMaxRows)
-
-  /** Driver-held `rows` as a LocalRelation frame of `schema`: projections
-    * over it fold into the relation and run no job.
+  /** Driver-held `rows` as a LocalRelation frame of `schema`: projections,
+    * filters and aggregates over it fold into a LocalRelation and run no
+    * job.
     */
   private[graft] def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** Least and greatest non-null value of field `i` (of type `dt`) over
-    * `rows`, as Catalyst-internal values in Spark's own order for the type
-    * (strings by UTF-8 bytes, NaN above every other float, decimals by
-    * value) — what `min`/`max` aggregates return; None when every value is
-    * NULL.
+  /** Write `keys`' distinct rows (the equality columns) as one delete file
+    * through `writeFile`, which returns its path (None when it holds no
+    * rows). When `keys` is local — the caller holds them on the driver
+    * ([[frame]]) — the distinct keys are a LocalRelation too, and when
+    * their types compare by value they are admitted to the cache under the
+    * file's path, so no reader ever runs a key-file job for it. Otherwise
+    * the file is marked as not driver-held.
     */
-  private[graft] def extremes(rows: Seq[Row], i: Int, dt: DataType): Option[(Any, Any)] = {
-    val vs = rows.iterator.map(_.get(i)).filter(_ != null)
-      .map(CatalystTypeConverters.convertToCatalyst).toSeq
-    val ord = TypeUtils.getInterpretedOrdering(dt)
-    if (vs.isEmpty) None else Some((vs.min(ord), vs.max(ord)))
-  }
-
-  /** Write `keys` (the equality columns) as one delete file through
-    * `writeFile`, which returns its path (None when it holds no rows).
-    * `held` is the keys' distinct rows when the caller holds them on the
-    * driver ([[distinctAtMost]]): the file is then written from that local
-    * copy and, when the key types compare by value, admitted to the cache
-    * under the file's path, so no reader ever runs a key-file job for it.
-    * Otherwise the distinct keys are written distributed and the file is
-    * marked as not driver-held.
-    */
-  private[graft] def write(keys: DataFrame, held: Option[Seq[Row]],
-      writeFile: DataFrame => Option[String]): Option[String] = {
-    val file = writeFile(held.fold(keys.dropDuplicates())(frame(keys.sparkSession, _, keys.schema)))
-    file.foreach(admit(_, held.filter(_ => comparable(keys.schema)).map(keySetOf(keys.schema, _))))
+  private[graft] def write(keys: DataFrame, writeFile: DataFrame => Option[String]): Option[String] = {
+    val distinct = keys.dropDuplicates()
+    val file = writeFile(distinct)
+    file.foreach(admit(_, localRows(distinct).filter(_ => comparable(keys.schema))
+      .map(keySetOf(keys.schema, _))))
     file
   }
 

@@ -6,10 +6,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType}
 import graft.plans.IceboxFileIndex
 
 /** One committed table state: an immutable file manifest + lineage.
@@ -1625,21 +1625,26 @@ final class Icebox(val tableDir: String) {
     commits.publish("rollback", _ => target.files, _ => target.schemaJson)
   }
 
-  /** M6: cherry-pick — re-apply an (append) snapshot's added files on top of
-    * the current state (iceberg_snapshot_operator.py:175-187 stub).
+  /** M6: cherry-pick — re-apply an append-family snapshot's added files,
+    * and remove the files it replaced, on top of the current state
+    * (iceberg_snapshot_operator.py:175-187 stub). As in Iceberg, it is
+    * refused when a replaced file is no longer live at the head.
     */
   def cherrypick(snapshotId: Long): Snapshot = {
     val target = readSnapshot(snapshotId)
     require(target.operation == "append" || target.operation == "upsert",
       s"cherry-pick supports append-family snapshots, got ${target.operation}")
-    val parentFiles: Set[String] =
+    val parentPaths: Set[String] =
       if (target.parentId < 0) Set.empty
       else readSnapshot(target.parentId).files.map(_.path).toSet
-    val delta = target.files.filterNot(f => parentFiles(f.path))
+    val replaced = parentPaths -- target.files.map(_.path)
+    val delta = target.files.filterNot(f => parentPaths(f.path))
     commits.publish("cherrypick", { parent =>
       val cur = parent.map(_.files).getOrElse(Nil)
       val have = cur.map(_.path).toSet
-      cur ++ delta.filterNot(f => have(f.path))
+      require(replaced.forall(have), s"cannot cherry-pick snapshot $snapshotId: " +
+        s"${replaced.count(p => !have(p))} of the files it replaced are no longer live")
+      cur.filterNot(f => replaced(f.path)) ++ delta.filterNot(f => have(f.path))
     }, _ => target.schemaJson)
   }
 
@@ -1777,15 +1782,14 @@ final class Icebox(val tableDir: String) {
 
   /** Build the "provably holds NONE of the batch's keys" predicate over
     * `files` — shared by the eq-delete attach pruning and [[splitByKeys]].
-    * `keysPhys` columns are PHYSICAL key names; `held` is their distinct
-    * rows when the caller holds them on the driver
-    * ([[EqualityDeletes.distinctAtMost]]), and then neither check below
-    * runs a Spark job.
+    * `keysPhys` columns are PHYSICAL key names. Both checks below are
+    * aggregates over `keysPhys`; when it is a local frame (a held batch)
+    * they fold on the driver ([[graft.plans.LocalAggregateFold]]) and run
+    * no Spark job.
     *
-    * Range check: the batch's per-column bounds — computed on the driver
-    * from held rows, else by one tiny agg. Numeric keys compare
-    * numerically; STRING keys compare in UTF8 binary order — the order
-    * Spark's string min/max, the parquet footer stats, and
+    * Range check: the batch's per-column bounds, by one tiny agg. Numeric
+    * keys compare numerically; STRING keys compare in UTF8 binary order —
+    * the order Spark's string min/max, the parquet footer stats, and
     * prunedFilesByStatsString all use — so string-keyed CDC (uuids,
     * natural keys) gets the same pruning on a range-clustered table.
     *
@@ -1794,86 +1798,55 @@ final class Icebox(val tableDir: String) {
     * columns with manifest blooms, a file is provably unaffected when NONE
     * of the batch's key hashes might be in it — blooms have no false
     * negatives, so the skip is exact; false positives only keep extra
-    * files (conservative). Held keys are hashed by an `xxhash64`
-    * projection of their LocalRelation, which folds into the relation (an
-    * aggregate or `distinct` over it would still run jobs). Bounded: the
-    * probe costs |files| x |distinct keys| driver-side bit tests, so it
-    * engages only when the batch's distinct keys fit
-    * `bloom.attach.max-keys` (default 100k;
-    * short-circuiting exits at the first possible hit, and CDC batches
-    * are typically far smaller). Missing/untyped stats and missing blooms
-    * keep the file.
+    * files (conservative). The keys' distinct `xxhash64`es are collected
+    * per column. Bounded: the probe costs |files| x |distinct keys|
+    * driver-side bit tests, so it engages only when the batch's distinct
+    * keys fit `bloom.attach.max-keys` (default 100k; short-circuiting
+    * exits at the first possible hit, and CDC batches are typically far
+    * smaller). Missing/untyped stats and missing blooms keep the file.
     * Both checks see a key column as `snap` stores it (a bloom holds the
     * stored value's hash: an INT's differs from the same BIGINT's); one
     * whose type does not widen losslessly to the stored type proves nothing.
     */
-  private[graft] def keyDisjoint(snap: Snapshot, keysPhys: DataFrame,
-      held: Option[Seq[Row]]): DataFile => Boolean = {
+  private[graft] def keyDisjoint(snap: Snapshot, keysPhys: DataFrame): DataFile => Boolean = {
     val storedType = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType].fields
       .map(f => Icebox.physicalName(f) -> f.dataType).toMap.filter { case (c, t) =>
         keysPhys.schema.find(_.name == c).exists(k => t == k.dataType ||
           t != StringType && Cast.canUpCast(k.dataType, t)) }
     val keyCols = keysPhys.columns.toSeq.filter(storedType.contains)
-    val numericKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType.isInstanceOf[NumericType])
-    val stringKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType == StringType)
-    val boundedCols = numericKeyCols ++ stringKeyCols
-    val (bounds, strBounds) = held match {
-      case _ if boundedCols.isEmpty => (Map.empty[String, (Double, Double)],
-        Map.empty[String, (String, String)])
-      case Some(rows) =>
-        def extremes(c: String) =
-          EqualityDeletes.extremes(rows, keysPhys.columns.indexOf(c), keysPhys.schema(c).dataType)
-        def toDouble(v: Any): Double = v match {
-          case d: Decimal => d.toDouble
-          case n: Number => n.doubleValue
-        }
-        (numericKeyCols.flatMap(c => extremes(c).map { case (lo, hi) =>
-          c -> (toDouble(lo), toDouble(hi)) }).toMap,
-          stringKeyCols.flatMap(c => extremes(c).map { case (lo, hi) =>
-            c -> (lo.toString, hi.toString) }).toMap)
-      case None =>
-        val aggs = numericKeyCols.flatMap(c =>
-          Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))) ++
-          stringKeyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val r = keysPhys.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val num = numericKeyCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-          else Some(c -> (r.getDouble(2 * i), r.getDouble(2 * i + 1)))
-        }.toMap
-        val base = 2 * numericKeyCols.size
-        val str = stringKeyCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(base + 2 * i) || r.isNullAt(base + 2 * i + 1)) None
-          else Some(c -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1)))
-        }.toMap
-        (num, str)
+    // each numeric or STRING key column's [min, max] over the batch, a
+    // numeric one as doubles
+    val boundedCols = keyCols.filter(c => keysPhys.schema(c).dataType match {
+      case _: NumericType => true
+      case t => t == StringType
+    })
+    val bounds: Map[String, (Any, Any)] = if (boundedCols.isEmpty) Map.empty else {
+      val aggs = boundedCols.flatMap { c =>
+        val b = Seq(min(col(c)), max(col(c)))
+        if (keysPhys.schema(c).dataType == StringType) b else b.map(_.cast("double"))
+      }
+      val r = keysPhys.agg(aggs.head, aggs.tail: _*).collect()(0)
+      boundedCols.zipWithIndex.collect {
+        case (c, i) if !r.isNullAt(2 * i) => c -> (r.get(2 * i), r.get(2 * i + 1))
+      }.toMap
     }
     def utf8Lt(a: String, b: String): Boolean =
       org.apache.spark.unsafe.types.UTF8String.fromString(a)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     val bloomMaxKeys = properties.get("bloom.attach.max-keys").map(_.toInt).getOrElse(100000)
     val bloomKeyCols = keyCols.filter(c => snap.files.exists(_.blooms.contains(c)))
-    def bounded(c: String, hs: Array[Long]) = Option.when(hs.length <= bloomMaxKeys)(c -> hs)
-    def storedHash(c: String) = xxhash64(col(c).cast(storedType(c)))
-    val keyHashes: Map[String, Array[Long]] = held match {
-      case _ if bloomKeyCols.isEmpty => Map.empty
-      case Some(rows) =>
-        val hashed = EqualityDeletes.frame(keysPhys.sparkSession, rows, keysPhys.schema)
-          .select(bloomKeyCols.map(c => when(col(c).isNotNull, storedHash(c))): _*).collect()
-        bloomKeyCols.zipWithIndex.flatMap { case (c, i) =>
-          bounded(c, hashed.filterNot(_.isNullAt(i)).map(_.getLong(i)).distinct) }.toMap
-      case None =>
-        bloomKeyCols.flatMap { c =>
-          bounded(c, keysPhys.where(col(c).isNotNull).select(storedHash(c).as("h"))
-            .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0)))
-        }.toMap
-    }
+    val keyHashes: Map[String, Array[Long]] = bloomKeyCols.flatMap { c =>
+      val hs = keysPhys.where(col(c).isNotNull).select(xxhash64(col(c).cast(storedType(c))))
+        .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0))
+      Option.when(hs.length <= bloomMaxKeys)(c -> hs)
+    }.toMap
     (f: DataFile) =>
-      bounds.exists { case (c, (klo, khi)) =>
-        f.stats.get(c).exists { case (mn, mx) =>
-          scala.util.Try(mx.toDouble < klo || mn.toDouble > khi).getOrElse(false)
-        }
-      } || strBounds.exists { case (c, (klo, khi)) =>
-        f.stats.get(c).exists { case (mn, mx) => utf8Lt(mx, klo) || utf8Lt(khi, mn) }
+      bounds.exists { case (c, kb) =>
+        f.stats.get(c).exists { case (mn, mx) => kb match {
+          case (klo: String, khi: String) => utf8Lt(mx, klo) || utf8Lt(khi, mn)
+          case (klo: Double, khi: Double) =>
+            scala.util.Try(mx.toDouble < klo || mn.toDouble > khi).getOrElse(false)
+        }}
       } || keyHashes.exists { case (c, hs) =>
         f.blooms.get(c).flatMap(loadBloom).exists(bf => !hs.exists(bf.mightContainLong))
       }
@@ -1909,11 +1882,13 @@ final class Icebox(val tableDir: String) {
     * untouched)`, the key-based twin of
     * [[IceboxFileIndex.splitByPredicate]]. A file is untouched only when
     * its manifest stats or blooms prove it holds none of the keys
-    * ([[keyDisjoint]]); a local `keys` frame is split with no Spark job.
+    * ([[keyDisjoint]]). `keys` is used as given: a local frame is split on
+    * the driver with no Spark job, any other by [[keyDisjoint]]'s
+    * aggregates over it.
     */
   private[graft] def splitByKeys(keys: DataFrame, snap: Snapshot): (Seq[DataFile], Seq[DataFile]) = {
-    val keysPhys = keys.select(keys.columns.toSeq.map(c => col(c).as(toPhysical(c))): _*)
-    val disjoint = keyDisjoint(snap, keysPhys, EqualityDeletes.localDistinctAtMost(keysPhys))
+    val disjoint = keyDisjoint(snap,
+      keys.select(keys.columns.toSeq.map(c => col(c).as(toPhysical(c))): _*))
     snap.files.partition(f => !disjoint(f))
   }
 
@@ -1945,17 +1920,18 @@ final class Icebox(val tableDir: String) {
     // delete files store PHYSICAL key names — rename-proof: the read-side
     // join runs below the logical aliasing, and a later column rename must
     // not orphan older delete files
-    val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
+    val named = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
     // ONE bounded collect of the distinct keys (no job when `keys` is
-    // already local) feeds the attach pruning and the delete file; over
-    // the cap both keep their distributed plans
-    val held = EqualityDeletes.distinctAtMost(keysPhys)
-    val disjoint = keyDisjoint(cur, keysPhys, held)
+    // already local) feeds the attach pruning and the delete file as a
+    // local frame; over the cap both keep the distributed plan
+    val keysPhys = EqualityDeletes.distinctAtMost(named)
+      .fold(named)(EqualityDeletes.frame(keys.sparkSession, _, named.schema))
+    val disjoint = keyDisjoint(cur, keysPhys)
     commitMergeOnRead(op, cur, f => !disjoint(f), _.eqDeletes.size,
       // stacked deletes applied by the read, the NEW keys anti-joined
       survivors = overFiles => IceboxFileIndex.scan(keys.sparkSession, this, overFiles,
         cur.schemaJson).join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"),
-      deleteFile = EqualityDeletes.write(keysPhys, held, writeDeleteFile(_, "eqdelete")),
+      deleteFile = EqualityDeletes.write(keysPhys, writeDeleteFile(_, "eqdelete")),
       attachTo = (f, file) => f.copy(eqDeletes = f.eqDeletes :+ file), newData, partitionBy)
   }
 
@@ -2147,7 +2123,7 @@ final class Icebox(val tableDir: String) {
   }
 
   /** The current snapshot's schema as a StructType (logical names). */
-  private def currentSchemaStruct: Option[StructType] =
+  private[graft] def currentSchemaStruct: Option[StructType] =
     currentSnapshot.map(s => DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
 
   /** Map a caller-facing (logical) column name to the physical name used in

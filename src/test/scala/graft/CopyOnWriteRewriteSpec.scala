@@ -104,6 +104,32 @@ class CopyOnWriteRewriteSpec extends SparkSpec {
       Array("i205", "s307", "s9")
   }
 
+  test("a merge-on-read upsert of an INT batch into a BIGINT table stays readable") {
+    val (t, _) = clustered("mor-upsert-int-key")
+    t.setProperties(Map("write.upsert.mode" -> "merge-on-read"))
+    Upsert.intoTable(t, Seq((205, "i205")).toDF("id", "s"), Seq("id"))
+    val back = t.read(spark)
+    back.schema("id").dataType shouldBe org.apache.spark.sql.types.LongType
+    back.count() shouldBe 40L
+    back.filter($"id" === 205L).select("s").as[String].collect() shouldBe Array("i205")
+    // a type that does not widen losslessly to the stored one is refused
+    an[IllegalArgumentException] should be thrownBy
+      Upsert.intoTable(t, Seq((205.5, "d")).toDF("id", "s"), Seq("id"))
+  }
+
+  test("cherry-picking a copy-on-write upsert replaces the files it rewrote") {
+    val t = Icebox(tmpDir("cow-cherrypick"))
+    t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1))
+    Upsert.intoTable(t, Seq((2L, "b2")).toDF("id", "s"), Seq("id"))
+    val upsert = t.currentSnapshot.get
+    t.rollbackTo(0L)
+    t.cherrypick(upsert.id)
+    t.read(spark).as[(Long, String)].collect().sorted shouldBe
+      Array((1L, "a"), (2L, "b2"), (3L, "c"))
+    // the files it replaced are gone from the head: refused, not duplicated
+    an[IllegalArgumentException] should be thrownBy t.cherrypick(upsert.id)
+  }
+
   test("a MERGE with an INT source key into a bloom-indexed BIGINT table replaces the row") {
     val t = bloomed("cow-merge-int-key")
     MergeSql.register("cow_merge_int_key", t)

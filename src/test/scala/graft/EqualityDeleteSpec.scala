@@ -308,24 +308,27 @@ class EqualityDeleteSpec extends SparkSpec {
   }
 
   /** The files `keys` attach to at `t`'s head (each named by its `k`
-    * minimum) and the rows of their delete file, through the driver-held
-    * key path and through the distributed one.
+    * minimum) and the rows of their delete file, from the local `keys`
+    * frame (its aggregates fold on the driver) and from
+    * `keys.repartition(2)` (they run as Spark jobs).
     */
   private def bothPaths(t: Icebox, keys: org.apache.spark.sql.DataFrame) = {
     val head = t.currentSnapshot.get
     val files = head.files
-    def attached(held: Option[Seq[org.apache.spark.sql.Row]]) = {
-      val disjoint = t.keyDisjoint(head, keys, held)
+    def attached(keys: org.apache.spark.sql.DataFrame) = {
+      val disjoint = t.keyDisjoint(head, keys)
       files.filterNot(disjoint).map(f => f.stats.get("k").map(_._1).getOrElse(f.path)).toSet
     }
-    def written(held: Option[Seq[org.apache.spark.sql.Row]]) = {
+    def written(keys: org.apache.spark.sql.DataFrame) = {
       var rows = Seq.empty[String]
-      EqualityDeletes.write(keys, held, df => { rows = canon(df); None })
+      EqualityDeletes.write(keys, df => { rows = canon(df); None })
       rows
     }
     val held = EqualityDeletes.distinctAtMost(keys)
     held shouldBe defined
-    ((attached(held), written(held)), (attached(None), written(None)))
+    jobsOf(attached(keys)) shouldBe 0
+    val spread = keys.repartition(2)
+    ((attached(keys), written(keys)), (attached(spread), written(spread)))
   }
 
   private def oneFilePerValue[T](name: String, values: Seq[T], stats: Seq[String] = Nil)(

@@ -19,6 +19,11 @@ class GraftSessionSpec extends AnyFunSuite with Matchers {
     conf.get("spark.sql.shuffle.partitions") shouldBe "4"
   }
 
+  test("builder installs the local aggregate fold in the optimizer") {
+    SparkSpec.spark.sessionState.optimizer.batches.flatMap(_.rules) should
+      contain(graft.plans.LocalAggregateFold)
+  }
+
   test("create pre-registers the graft native functions") {
     // same arguments as SparkSpec: getOrCreate re-applies them to the
     // shared session, so they must not differ from what it already holds
