@@ -18,9 +18,11 @@ import org.apache.spark.sql.SparkSession
   * JVM/GC/ordering effects).
   *
   * The run self-certifies against host stalls at TWO granularities:
-  *  - whole-run: a fixed sentinel query timed at start/every-25/end; the
-  *    artifact carries `"degraded": true` when any reading exceeds 2× the
-  *    run's own floor (multi-query stall windows).
+  *  - whole-run: a fixed sentinel query, and beside it a one-row Icebox
+  *    append (the write and commit I/O the query does not touch), timed at
+  *    start/every-25/end; the artifact carries both sets of readings and
+  *    `"degraded": true` when either's maximum exceeds 2× its own floor by
+  *    more than a second (multi-query stall windows).
   *  - per-query (r13, anchor hardened r14): the trailing-runs MIN from the
   *    committed `BENCH_HISTORY.jsonl` (one line per full run at this SF,
   *    appended by every full run; degraded-sentinel runs excluded when any
@@ -204,9 +206,26 @@ object Bench {
       catch { case _: Throwable => }
       (System.nanoTime() - t0) / 1e9
     }
-    def sentinel(): Unit = sentinelReadings += sentinelOnce()
-    sentinelOnce() // warm-up: the first execution absorbs codegen/plan
-                   // compile and would read as phantom drift — discard it
+    // I/O CANARY beside it: a one-row Icebox append (a data file, then the
+    // commit's creates and rename) timed at each sentinel point. A window
+    // where storage writes stall shows here even when the compute-bound
+    // projection does not move.
+    val appendDir = java.nio.file.Files.createTempDirectory("graft-bench-append-")
+    val appendTable = graft.table.Icebox(appendDir.toString)
+    val appendReadings = scala.collection.mutable.ArrayBuffer[Double]()
+    def appendOnce(): Double = {
+      val t0 = System.nanoTime()
+      try appendTable.append(spark.range(1).toDF("id"))
+      catch { case _: Throwable => }
+      (System.nanoTime() - t0) / 1e9
+    }
+    def sentinel(): Unit = {
+      sentinelReadings += sentinelOnce()
+      appendReadings += appendOnce()
+    }
+    sentinelOnce(); appendOnce() // warm-up: the first execution absorbs
+                   // codegen/plan compile (and the table's creation) and
+                   // would read as phantom drift — discard it
     sentinel(); sentinel() // two at the start: the floor is in-run, not a constant
     // BEST-OF-2 per query (basis change recorded in BASELINE.md): a
     // transient host stall lands on one run, not both — rounds 7-9 each
@@ -259,13 +278,16 @@ object Bench {
         case (n, _, Some((rs, m, still))) =>
           s""""$n":{"readings":[${rs.map(fmt).mkString(",")}],"anchor":${fmt(m)},"suspect":$still}"""
       }.mkString("{", ",", "}")
-    val floor = sentinelReadings.min
+    org.apache.commons.io.FileUtils.deleteQuietly(appendDir.toFile)
     // both a RELATIVE (2× floor) and an ABSOLUTE (≥ 1 s over floor) excess:
     // sub-second readings jitter well past 2× from scheduling noise alone,
     // while the stall windows being guarded against are multi-second
-    val degraded = sentinelReadings.max > DegradedRatio * floor &&
-      sentinelReadings.max - floor > 1.0
-    val sentinelJson = s""""sentinel":{"query":"q_normalize","readings":[${sentinelReadings.map(fmt).mkString(",")}],"floor":${fmt(floor)},"max":${fmt(sentinelReadings.max)},"degraded":$degraded}"""
+    def stalled(rs: Seq[Double]): Boolean = rs.max > DegradedRatio * rs.min && rs.max - rs.min > 1.0
+    def readingsJson(rs: Seq[Double]): String =
+      s""""readings":[${rs.map(fmt).mkString(",")}],"floor":${fmt(rs.min)},"max":${fmt(rs.max)}"""
+    val degraded = stalled(sentinelReadings.toSeq) || stalled(appendReadings.toSeq)
+    val appendJson = s""""append":{${readingsJson(appendReadings.toSeq)},"degraded":${stalled(appendReadings.toSeq)}}"""
+    val sentinelJson = s""""sentinel":{"query":"q_normalize",${readingsJson(sentinelReadings.toSeq)},$appendJson,"degraded":$degraded}"""
     System.err.println(s"[bench] $sentinelJson")
     val total = results.map(_._2).sum
     // full map -> file (survives the stdout tail window; committed

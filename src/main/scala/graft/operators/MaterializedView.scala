@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.table.{EqualityDeletes, Icebox, IceboxCommit, Snapshot}
 
@@ -141,12 +142,19 @@ object MaterializedView {
     * sortBeforeRepartition is on). Scale-adaptive by construction: a table
     * at production scale holds more files than cores, the condition is
     * false, and the plan keeps plain partial aggregation with no extra
-    * exchange.
+    * exchange. A diff read on the driver is left alone: it folds on the
+    * driver, which a round-robin exchange would prevent.
     */
   private def spreadIfNarrow(df: DataFrame, backingFiles: Int): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (backingFiles > 0 && backingFiles < p) df.repartition(p) else df
+    if (backingFiles > 0 && backingFiles < p && !onDriver(df)) df.repartition(p) else df
   }
+
+  /** Whether every leaf of `df` is a LocalRelation, as a change diff read
+    * on the driver is ([[graft.plans.IceboxFileIndex.scan]]).
+    */
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
 
   /** `t` at the pinned `snap`: read outright when the snapshot is at most
     * [[SmallDimBytes]], else only the files whose stats/blooms admit
@@ -370,16 +378,18 @@ object MaterializedView {
             if (ch) Some(d.table.changeDiff(spark, from, snap.id)) else None }
         // every diff feeds k+1 consumers (its own term's join plus every
         // OTHER source's pruning-key collection) and each pruning probe is
-        // a separate collect job — persist so the diff scans run once
+        // a separate collect job — persist so the diff scans run once; a
+        // diff read on the driver is probed there, with no job
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val cached = scala.collection.mutable.ListBuffer[DataFrame]()
         def cache(df: DataFrame): DataFrame = {
           cached.synchronized { cached += df.persist(lvl) }; df
         }
+        def cacheDiff(df: DataFrame, files: Int): DataFrame =
+          if (onDriver(df)) df else cache(spreadIfNarrow(df, files))
         try {
-        val df0c = df0.map(d => cache(spreadIfNarrow(d, fSnap.files.size)))
-        val dDiffsC = dDiffs.zip(dSnaps).map { case (o, snap) =>
-          o.map(d => cache(spreadIfNarrow(d, snap.files.size))) }
+        val df0c = df0.map(cacheDiff(_, fSnap.files.size))
+        val dDiffsC = dDiffs.zip(dSnaps).map { case (o, snap) => o.map(cacheDiff(_, snap.files.size)) }
         // snapshot of dim m as seen by term j: before the swapped source at
         // NEW, at-or-after it at OLD (term 0 = the ΔF term sees all-new)
         def dimSnapInTerm(m: Int, j: Int): Snapshot =

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftDatasets}
 import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.IceboxFileIndex
 import graft.table.{EqualityDeletes, Icebox, IceboxCommit}
@@ -36,24 +36,38 @@ import graft.table.{EqualityDeletes, Icebox, IceboxCommit}
   */
 object Upsert {
 
-  /** Latest-wins dedupe of a batch on its primary key. */
+  /** Latest-wins dedupe of a batch on its primary key: per key, the row
+    * with the greatest `orderCol` (a NULL loses to any value), the first
+    * in input order on a tie. An aggregate, so a held batch dedupes on the
+    * driver ([[graft.plans.LocalAggregateFold]]): Spark folds the
+    * tie-break id into the batch's LocalRelation first.
+    */
   def dedupe(incoming: DataFrame, pk: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(orderCol).desc_nulls_last, monotonically_increasing_id())
-    incoming
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val row = struct(incoming.columns.toSeq.map(col): _*)
+    incoming.withColumn("__seq", monotonically_increasing_id())
+      .groupBy(pk.map(col): _*)
+      .agg(max_by(row, struct(col(orderCol), -col("__seq"))).as("__latest"))
+      .select(incoming.columns.toSeq.map(c => col("__latest").getField(c).as(c)): _*)
   }
 
   // latest-wins by `orderCol` when given, else one arbitrary row per key
   private def deduped(incoming: DataFrame, pk: Seq[String], orderCol: Option[String]) =
     orderCol.map(dedupe(incoming, pk, _)).getOrElse(incoming.dropDuplicates(pk))
 
+  // a batch deduped on the driver, as its rows in one partition: a
+  // distributed dedupe of a small batch ends in a shuffle AQE coalesces to
+  // one partition, and a write of the batch then makes one file per
+  // partition value, not one per core; the frame starts from the rows, so
+  // later plans over it do not dedupe again
+  private def oneTaskIfLocal(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case rows: LocalRelation => GraftDatasets.ofRows(df.sparkSession, rows).coalesce(1)
+    case _ => df
+  }
+
   /** Pure DataFrame upsert (no table write). */
   def apply(target: DataFrame, incoming: DataFrame, pk: Seq[String],
       orderCol: Option[String] = None): DataFrame = {
-    val src = deduped(incoming, pk, orderCol)
+    val src = oneTaskIfLocal(deduped(incoming, pk, orderCol))
     target.join(src, pk, "left_anti").unionByName(src)
   }
 
@@ -80,7 +94,8 @@ object Upsert {
     // mid-merge forces a re-merge instead of being silently replaced
     table.currentSnapshot match {
       case None =>
-        table.rewriteFiles("upsert", Nil, deduped(incoming, pk, orderCol), parts, expectHeadId = -1L)
+        table.rewriteFiles("upsert", Nil, oneTaskIfLocal(deduped(incoming, pk, orderCol)), parts,
+          expectHeadId = -1L)
       case Some(head) =>
         // a row the batch replaces can only sit in a file whose stats and
         // blooms admit its key, whatever partition the key had; every other
@@ -117,7 +132,9 @@ object Upsert {
     // expectHeadId = −1: computed against "no table" — a creation racing in
     // between the exists check and the publish must force a re-merge (the
     // retry re-enters via the MoR delete path), never a silent replace
-    if (!table.exists) { table.rewriteFiles("upsert", Nil, src, parts, expectHeadId = -1L); return }
+    if (!table.exists) {
+      table.rewriteFiles("upsert", Nil, oneTaskIfLocal(src), parts, expectHeadId = -1L); return
+    }
     // a deduped batch of at most EqKeyCacheMaxRows rows is collected ONCE:
     // its keys and its payload are LocalRelations (the delete commit's key
     // aggregates fold on the driver), and the payload is written from one

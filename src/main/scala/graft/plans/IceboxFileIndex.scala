@@ -1,17 +1,22 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftDatasets, SparkSession}
+import org.apache.spark.sql.functions.{col, inline}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Expression, GenericInternalRow, Literal, Predicate => CatalystPredicate}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, ExpressionSet, GenericInternalRow, IsNotNull, JoinedRow, Literal, Predicate => CatalystPredicate, Size, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, FilePartition, HadoopFsRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.connector.read.streaming.SparkDataStream
+import org.apache.spark.sql.execution.FileRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.table.{DataFile, Icebox, Snapshot}
+import graft.table.{DataFile, EqualityDeletes, Icebox, Snapshot}
 
 /** Manifest-backed `FileIndex` for Icebox tables — the integration layer
   * Iceberg itself uses to plug into Spark's scan planning. With this index:
@@ -85,7 +90,7 @@ final class IceboxFileIndex(
     * Unsupported or unparseable values fail loudly instead of silently
     * mistyping the row.
     */
-  private def partitionRow(pvals: Map[String, String]): InternalRow = {
+  private[plans] def partitionRow(pvals: Map[String, String]): InternalRow = {
     val values = partitionSchema.fields.map { f =>
       val raw = pvals.get(f.name).orNull
       if (raw == null || raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
@@ -331,13 +336,15 @@ object IceboxFileIndex {
 
   /** Position hook of [[scan]]: each row's `_metadata.file_path` and
     * `_metadata.row_index` are kept as `fpCol`/`posCol` next to the logical
-    * columns, and `after` runs per layout generation over the
-    * delete-applied, still physically named rows — the place for a
-    * caller's own extra delete logic (e.g. flagging rows that newly
-    * attached delete files remove).
+    * columns, and `before` runs per layout generation over the still
+    * physically named rows, before the files' own deletes apply — the
+    * place for a caller's own extra delete logic (e.g. keeping only the
+    * rows that newly attached delete files remove). A selective hook runs
+    * first, so the deletes are tested only on the rows it keeps; row
+    * filters commute, so the rows are the same either way.
     */
   private[graft] final case class Positions(fpCol: String, posCol: String,
-      after: (DataFrame, Seq[DataFile]) => DataFrame = (df, _) => df)
+      before: (DataFrame, Seq[DataFile]) => DataFrame = (df, _) => df)
 
   /** `files` grouped by directory-layout generation, each with its
     * partition schema taken from `full` (physical names). Partition-spec
@@ -359,20 +366,48 @@ object IceboxFileIndex {
   /** The one way Icebox opens its data files: any file set of the table —
     * a whole snapshot, an incremental delta, a key-pruned subset, DML
     * candidates — read with `schemaJson` (the snapshot schema the files
-    * belong to). One manifest-backed relation per layout generation (so
-    * each keeps its own partition pruning; the generation count is the
-    * number of spec changes since the last full compaction, i.e. small),
-    * position and equality deletes applied per generation (`_metadata`
-    * only resolves on the file relation itself), physical names aliased
-    * back to logical ones, generations unioned. Opening the data files
-    * lists no storage and runs no Spark job; only delete files, when any
-    * are attached, are read while the plan is built.
+    * belong to). One relation per layout generation (so each keeps its
+    * own partition pruning; the generation count is the number of spec
+    * changes since the last full compaction, i.e. small), position and
+    * equality deletes applied per generation, physical names aliased back
+    * to logical ones, generations unioned. Opening the data files lists no
+    * storage and runs no Spark job; only delete files, when any are
+    * attached, are read while the plan is built.
     *
     * `snapshotId` names the snapshot when `files` is its whole file set;
     * the relation then carries that identity (CBO stats, MV rewrite) and
     * may declare a bucketed scan. Only a relation that holds every file
     * of the snapshot carries it — one generation of a mixed snapshot is a
     * subset like any other.
+    *
+    * '''Small subsets are read on the driver.''' A file subset
+    * (`snapshotId = None`: both sides of a change diff and its
+    * delete-growth pairs, `readForKeysAt`, copy-on-write and MERGE
+    * candidates, `changesSince`, compaction's hot files) is read while the
+    * plan is built, one generation at a time, when the manifest proves the
+    * generation small ([[readOnDriver]]). Its rows become a
+    * LocalRelation, so the delete filters above fold into it, and an
+    * aggregate, union or except over it folds on the driver
+    * ([[LocalAggregateFold]]) instead of running Spark jobs for a few
+    * hundred rows. The bound adds no knob; it is two limits that already
+    * exist:
+    *  - at most [[EqualityDeletes.EqKeyCacheMaxRows]] rows by the
+    *    manifest's counts, the cap on every relation the engine holds on
+    *    the driver (a file with no recorded count never qualifies);
+    *  - at most one scan partition of bytes by Spark's own split cost:
+    *    Σ(file bytes + `spark.sql.files.openCostInBytes`) ≤
+    *    `spark.sql.files.maxPartitionBytes`, about 31 small files at the
+    *    defaults: no more than Spark packs into one scan partition. Past
+    *    that, one driver thread reading every file costs more than the
+    *    job it saves.
+    * The rows are read by the relation's own format reader, with the same
+    * partition values and the same `_metadata.file_path` / `row_index`
+    * rendering, so deletes and positions match either way. The rows keep
+    * the file scan's partitions ([[readOnDriver]]), so a write fed by the
+    * read lays out the files the scan would have; the fold rule looks
+    * through that packing. A snapshot read never goes to the driver: the CBO stats
+    * ([[IceboxStats]]) and the view rewrite (`MvRewriteRule`) match its
+    * `HadoopFsRelation`.
     */
   private[graft] def scan(spark: SparkSession, table: Icebox, files: Seq[DataFile],
       schemaJson: String, snapshotId: Option[Long] = None,
@@ -391,22 +426,91 @@ object IceboxFileIndex {
       positions.toSeq.flatMap(_ => Seq(col(fp), col(pos)))
     gens.map { case (g, partSchema) =>
       val dataSchema = StructType(full.fields.filterNot(f => partSchema.fieldNames.contains(f.name)))
-      val base = relation(spark, table, g, schemaJson, if (gens.size == 1) snapshotId else None,
-        partSchema, dataSchema,
-        if (snapshotId.isDefined) bucketSpecFor(table, g, dataSchema) else None)
+      val index = new IceboxFileIndex(spark, table, g, schemaJson,
+        if (gens.size == 1) snapshotId else None, partSchema)
       // merge-on-read: position- and equality-deleted rows go away here
       // (no extra plan when no file carries a delete and no caller asked
       // for positions)
+      val withDeletes = positions.nonEmpty || g.exists(f => f.deletes.nonEmpty || f.eqDeletes.nonEmpty)
+      val local = if (snapshotId.isEmpty) readOnDriver(spark, index, g, dataSchema,
+        Option.when(withDeletes)((fp, pos))) else None
+      val base = local.getOrElse(relation(spark, index, dataSchema,
+        if (snapshotId.isDefined) bucketSpecFor(table, g, dataSchema) else None))
       val live =
-        if (positions.isEmpty && !g.exists(f => f.deletes.nonEmpty || f.eqDeletes.nonEmpty)) base
+        if (!withDeletes) base
         else {
-          val withPos = base.select(col("*"), col("_metadata.file_path").as(fp),
-            col("_metadata.row_index").as(pos))
-          val applied = Icebox.applyDeletes(spark, withPos, g, fp, pos)
-          positions.fold(applied)(_.after(applied, g))
+          val withPos = if (local.isDefined) base
+            else base.select(col("*"), col("_metadata.file_path").as(fp),
+              col("_metadata.row_index").as(pos))
+          Icebox.applyDeletes(spark, positions.fold(withPos)(_.before(withPos, g)), g, fp, pos)
         }
       live.select(out: _*)
     }.reduce(_.unionByName(_))
+  }
+
+  /** `files` (one layout generation, `index`'s) read on the driver when
+    * the manifest proves them small (see [[scan]]): the `dataSchema`
+    * columns, the partition columns and, when `posCols` names them, each
+    * row's file path and row index, rendered as `_metadata.file_path` and
+    * `_metadata.row_index` render them. The rows sit in a LocalRelation
+    * packed one array per partition the file scan would have, in its
+    * order, under an `inline` ([[LocalAggregateFold.packed]]), so a plan
+    * that does not fold runs each scan partition's rows as one task, as
+    * the scan would. None over the bound.
+    */
+  private def readOnDriver(spark: SparkSession, index: IceboxFileIndex, files: Seq[DataFile],
+      dataSchema: StructType, posCols: Option[(String, String)]): Option[DataFrame] = {
+    val conf = spark.sessionState.conf
+    if (files.exists(_.rows < 0) || files.map(_.rows).sum > EqualityDeletes.EqKeyCacheMaxRows ||
+        files.map(_.sizeBytes + conf.filesOpenCostInBytes).sum > conf.filesMaxPartitionBytes)
+      return None
+    val partSchema = index.partitionSchema
+    lazy val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+      partSchema, dataSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val schema = StructType(dataSchema.fields ++ partSchema.fields ++ posCols.toSeq.flatMap {
+      case (fp, pos) => Seq(StructField(fp, StringType, nullable = false),
+        StructField(pos, LongType, nullable = false)) })
+    val toRow = UnsafeProjection.create(schema)
+    def rowsOf(pf: PartitionedFile): Iterator[InternalRow] = {
+      val extra = new GenericInternalRow(Array[Any](UTF8String.fromString(pf.filePath.toString), 0L))
+      val joined = new JoinedRow()
+      var i = -1L
+      reader(pf).map { r =>
+        i += 1
+        if (posCols.isEmpty) toRow(r).copy()
+        else { extra.setLong(1, i); toRow(joined(r, extra)).copy() }
+      }
+    }
+    // whole files, largest first, packed into partitions as the file scan
+    // packs them
+    val split = files.map(f => PartitionedFile(index.partitionRow(f.partition),
+      SparkPath.fromPath(new HPath(f.path)), 0L, f.sizeBytes, Array.empty[String], 0L, f.sizeBytes))
+      .sortBy(-_.length)
+    val partitions = if (split.isEmpty) Nil else FilePartition.getFilePartitions(spark, split,
+      FilePartition.maxSplitBytes(spark, index.listFiles(Nil, Nil)))
+    val packed = AttributeReference("rows", ArrayType(schema, containsNull = false),
+      nullable = false)()
+    val data = partitions.map(_.files.iterator.flatMap(rowsOf).toArray[Any]).filter(_.nonEmpty)
+      .map(rows => InternalRow(new GenericArrayData(rows)))
+    Some(GraftDatasets.ofRows(spark, new DriverRead(Seq(packed), data)(files.map(_.path)))
+      .select(inline(col("rows"))))
+  }
+
+  /** The packed rows of a driver read ([[readOnDriver]]): a LocalRelation
+    * that reports the files it holds as a file scan does (`Dataset.inputFiles`,
+    * e.g. to audit pruning), and declares that each packed array is
+    * non-null and non-empty, so Spark infers no filter above it that would
+    * fold it into a plain LocalRelation. A plan the fold rule folds reads
+    * no file when it runs, and reports none.
+    */
+  private final class DriverRead(output: Seq[Attribute], data: Seq[InternalRow],
+      isStreaming: Boolean = false, stream: Option[SparkDataStream] = None)(val files: Seq[String])
+      extends LocalRelation(output, data, isStreaming, stream) with FileRelation {
+    override def inputFiles: Array[String] = files.toArray
+    override protected def otherCopyArgs: Seq[AnyRef] = files :: Nil
+    override lazy val validConstraints: ExpressionSet = ExpressionSet(
+      output.flatMap(a => Seq(IsNotNull(a), GreaterThan(Size(a), Literal(0)))))
   }
 
   /** `files` as stored: the physical columns of `schemaJson` that the
@@ -418,17 +522,15 @@ object IceboxFileIndex {
       schemaJson: String): DataFrame = {
     val partCols = files.flatMap(_.partition.keys).map(_.toLowerCase).toSet
     val full = Icebox.physicalSchema(nullable(DataType.fromJson(schemaJson).asInstanceOf[StructType]))
-    relation(spark, table, files, schemaJson, None, StructType(Nil),
+    relation(spark, new IceboxFileIndex(spark, table, files, schemaJson, None, StructType(Nil)),
       StructType(full.fields.filterNot(f => partCols(f.name.toLowerCase))), None)
   }
 
-  private def relation(spark: SparkSession, table: Icebox, files: Seq[DataFile],
-      schemaJson: String, snapshotId: Option[Long], partSchema: StructType,
-      dataSchema: StructType,
+  private def relation(spark: SparkSession, index: IceboxFileIndex, dataSchema: StructType,
       bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]): DataFrame =
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = new IceboxFileIndex(spark, table, files, schemaJson, snapshotId, partSchema),
-      partitionSchema = partSchema,
+      location = index,
+      partitionSchema = index.partitionSchema,
       dataSchema = dataSchema,
       bucketSpec = bucketSpec,
       fileFormat = new ParquetFileFormat(),

@@ -7,8 +7,10 @@ import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
 import org.apache.spark.{FutureAction, SparkContext}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -228,7 +230,10 @@ private[graft] object EqualityDeletes {
     val inFile: Option[Column] =
       if (files.forall(attachedSet)) None
       else {
-        val paths = spark.sparkContext.broadcast(attachedSet.map(normPath))
+        // `fpCol` holds `_metadata.file_path`, the path's URI form (a space
+        // reads `%20`): the manifest's paths are rendered the same way
+        val paths = spark.sparkContext.broadcast(attachedSet.map(p =>
+          normPath(SparkPath.fromPath(new Path(p)).toString)))
         Some(udf((p: String) => p != null && paths.value.contains(normPath(p))).apply(col(fpCol)))
       }
     val colTypes = df.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap

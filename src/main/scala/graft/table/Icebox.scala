@@ -908,12 +908,12 @@ final class Icebox(val tableDir: String) {
     if (pairs.isEmpty) return None
     val byOld = pairs.map(p => p._1.path -> p).toMap
     val fp = "__icx_gfp"; val pos = "__icx_gpos"
-    // per layout generation, over content visible at the FROM snapshot (the
-    // scan applies the old delete sets): keep the rows the newly attached
-    // delete files remove
-    def newlyDeleted(visible: DataFrame, olds: Seq[DataFile]): DataFrame = {
+    // per layout generation: keep the rows the newly attached delete files
+    // remove; the scan then applies the old delete sets, so what is left
+    // was visible at the FROM snapshot
+    def newlyDeleted(rows: DataFrame, olds: Seq[DataFile]): DataFrame = {
       val genPairs = olds.map(f => byOld(f.path))
-      var flagged = visible
+      var flagged = rows
       val flags = scala.collection.mutable.ArrayBuffer.empty[Column]
       val newPos = genPairs.flatMap { case (o, n) =>
         n.deletes.filterNot(o.deletes.toSet) }.distinct

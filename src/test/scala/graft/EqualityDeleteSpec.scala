@@ -288,7 +288,7 @@ class EqualityDeleteSpec extends SparkSpec {
     withDeletes shouldBe jobsOf(point())
   }
 
-  test("one merge-on-read upsert of a small batch runs 4 Spark jobs, one file per touched partition") {
+  test("one merge-on-read upsert of a small batch runs 2 Spark jobs, one file per touched partition") {
     val t = Icebox(tmpDir("eqdel-morjobs"))
     t.append((1 to 200).map(i => (i.toLong, i % 4, s"v$i", i.toLong)).toDF("id", "p", "s", "ts"),
       Seq("p"))
@@ -296,10 +296,10 @@ class EqualityDeleteSpec extends SparkSpec {
     val before = t.currentSnapshot.get.files.map(_.path).toSet
     val batch = (195 to 210).map(i => (i.toLong, i % 4, s"w$i", 1000L + i))
       .toDF("id", "p", "s", "ts")
-    // the dedupe's two jobs collect the batch once; then the delete file
-    // and the payload are one write each
+    // the batch dedupes on the driver; the delete file and the payload
+    // are one write each
     val jobs = jobNamesOf(Upsert.intoTable(t, batch, Seq("id"), Some("ts")))
-    jobs should have size 4
+    jobs should have size 2
     jobs.count(_.contains("write at DataFileCommitter")) shouldBe 2
     t.currentSnapshot.get.files.map(_.path).filterNot(before).size shouldBe 4
     t.read(spark).filter($"id" >= 195L).select("s").as[String].collect().sorted shouldBe

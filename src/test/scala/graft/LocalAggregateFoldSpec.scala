@@ -73,6 +73,57 @@ class LocalAggregateFoldSpec extends SparkSpec {
     none.collect() shouldBe empty
   }
 
+  /** `plan` over the local `frames` folds to a LocalRelation, runs no
+    * Spark job, and gives the rows it gives over each frame
+    * `repartition(2)`, which does not fold.
+    */
+  private def foldsAlikeOver(frames: DataFrame*)(plan: Seq[DataFrame] => DataFrame): Seq[String] = {
+    val folded = plan(frames)
+    folded.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+    var rows = Seq.empty[String]
+    jobsOf { rows = canon(folded) } shouldBe 0
+    rows shouldBe canon(plan(frames.map(_.repartition(2))))
+    rows
+  }
+
+  test("unions, generators, exceptAll and intersectAll fold to the distributed rows") {
+    // strings whose UTF-8 and UTF-16 orders differ, decimals, NULLs and
+    // duplicates on both sides
+    def rows(xs: (String, String, Int)*) = xs.toDF("s", "d", "n")
+      .select($"s", $"d".cast("decimal(10,2)").as("d"), $"n")
+    val a = rows(("\uFFFF", "1.10", 1), ("😀", "2.25", 2), ("a", null, 3), ("😀", "2.25", 2),
+      (null, "0.00", 4), (null, "0.00", 4))
+    val b = rows(("😀", "2.25", 2), ("a", null, 3), ("b", "9.99", 5), (null, "0.00", 4))
+    val none = a.filter($"n" < 0)
+    foldsAlikeOver(a, b)(f => f(0).union(f(1))) should have size 10
+    foldsAlikeOver(a, b)(f => f(0).exceptAll(f(1))) shouldBe
+      Seq("[0.00,4,null]", "[1.10,1,\uFFFF]", "[2.25,2,😀]")
+    foldsAlikeOver(a, b)(f => f(1).exceptAll(f(0))) shouldBe Seq("[9.99,5,b]")
+    foldsAlikeOver(a, b)(f => f(0).intersectAll(f(1))) shouldBe
+      Seq("[0.00,4,null]", "[2.25,2,😀]", "[null,3,a]")
+    // an empty side
+    foldsAlikeOver(a, none)(f => f(0).exceptAll(f(1))) shouldBe canon(a)
+    foldsAlikeOver(none, a)(f => f(0).exceptAll(f(1))) shouldBe empty
+    foldsAlikeOver(a, none)(f => f(0).intersectAll(f(1))) shouldBe empty
+    // generators, with an outer one over NULL and empty arrays
+    foldsAlikeOver(a)(_.head.select($"n", explode(array($"s", $"s")).as("e"))) should have size 12
+    foldsAlikeOver(a)(_.head.select($"n", explode_outer(
+      when($"n" > 3, array().cast("array<string>")).when($"n" > 1, array($"s"))).as("e"))) should have size 6
+    foldsAlikeOver(a)(_.head.select($"n", posexplode(array($"d", $"d")))) should have size 12
+  }
+
+  test("a folded union sums doubles to the distributed sum, within rounding") {
+    val xs = Seq((1, 0.1), (1, 0.2), (1, 1e16), (1, -1e16), (2, 1.0 / 3), (2, 2.0 / 3)).toDF("k", "x")
+    val ys = Seq((1, 0.3), (2, 1e-9)).toDF("k", "x")
+    def sums(df: DataFrame): Map[Int, Double] = df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val plan = (f: Seq[DataFrame]) => f(0).union(f(1)).groupBy("k").agg(sum("x").as("x"))
+    val folded = plan(Seq(xs, ys))
+    folded.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+    val spread = sums(plan(Seq(xs.repartition(2), ys.repartition(2))))
+    sums(folded).foreach { case (k, v) => v shouldBe spread(k) +- 4.0 }
+    sums(folded)(2) shouldBe 1.0 +- 1e-6
+  }
+
   test("dropDuplicates keeps the first row in input order, and distinct folds") {
     val rows = Seq((2, "c"), (1, "a"), (2, "d"), (1, "b"), (1, "a")).toDF("k", "s")
     val deduped = rows.dropDuplicates("k")

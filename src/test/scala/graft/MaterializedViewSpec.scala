@@ -268,18 +268,19 @@ class MaterializedViewSpec extends SparkSpec {
     assertSameRows(mv.read(spark), expect())
   }
 
-  test("one incremental refresh of an append runs 5 Spark jobs") {
+  test("one incremental refresh of an append runs 3 Spark jobs") {
     val src = Icebox(tmpDir("mvsrc-jobs"))
     src.append((1 to 100).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "g", "v"))
     val mv = Icebox(tmpDir("mvtgt-jobs"))
     MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v"))
     src.append((101 to 120).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "g", "v"))
-    // the delta's aggregation (2), the delete file, the touched target
-    // rows' broadcast and the recomputed groups' write
+    // the appended file is read on the driver and the delta aggregates
+    // there; then the delete file, the touched target rows' broadcast and
+    // the recomputed groups' write
     var mode: MaterializedView.Mode = null
     val jobs = jobNamesOf { mode = MaterializedView.refresh(spark, src, mv, "m", Seq("g"), Seq("v")) }
     mode shouldBe MaterializedView.Incremental
-    jobs should have size 5
+    jobs should have size 3
     jobs.count(_.contains("write at DataFileCommitter")) shouldBe 2
     assertSameRows(mv.read(spark), fullAgg(src))
   }
@@ -436,7 +437,7 @@ class MaterializedViewSpec extends SparkSpec {
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
   }
 
-  test("join view: one refresh of a fact append plus a dim key-delete runs 9 Spark jobs") {
+  test("join view: one refresh of a fact append plus a dim key-delete runs 7 Spark jobs") {
     val fact = Icebox(tmpDir("jmvf10")); val dim = Icebox(tmpDir("jmvd10"))
     fact.append((1 to 60).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.append((0 to 4).map(k => (k, s"g$k")).toDF("k", "g"))
@@ -445,10 +446,11 @@ class MaterializedViewSpec extends SparkSpec {
     fact.append((61 to 80).map(i => (i.toLong, i % 5, i * 10L)).toDF("id", "fk", "v"))
     dim.deleteByKeys(Seq(2).toDF("k"))
     // both terms run; each pinned side is small, so it is read outright
-    // with no pruning probe, and no pinned read is persisted; the touched
-    // groups are collected once and feed every later step
+    // with no pruning probe, and no pinned read is persisted; both diffs
+    // are read on the driver and not persisted either; the touched groups
+    // are collected once and feed every later step
     var mode: MaterializedView.Mode = null
-    jobsOf { mode = joinMv(fact, dim, mv) } shouldBe 9
+    jobsOf { mode = joinMv(fact, dim, mv) } shouldBe 7
     mode shouldBe MaterializedView.Incremental
     assertSameRows(mv.read(spark), joinedAgg(fact, dim))
   }

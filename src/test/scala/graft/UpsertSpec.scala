@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Upsert
 import graft.table.Icebox
@@ -33,6 +36,23 @@ class UpsertSpec extends SparkSpec {
     val out = Upsert(target, dupBatch, Seq("id"), orderCol = Some("ver"))
     out.filter($"id" === 2).select("payload").as[String].collect() shouldBe Array("v2")
     out.count() shouldBe 3
+  }
+
+  test("the aggregate dedupe keeps what the window form kept: NULL orderCol loses, a tie keeps the first row") {
+    def windowForm(df: DataFrame): DataFrame = {
+      val w = Window.partitionBy($"id").orderBy($"ver".desc_nulls_last, monotonically_increasing_id())
+      df.withColumn("__rn", row_number().over(w)).filter($"__rn" === 1).drop("__rn")
+    }
+    val batch = Seq((1L, "a", Some(10L)), (1L, "b", Some(20L)), (1L, "c", Some(20L)),
+      (2L, "d", None), (2L, "e", Some(1L)), (3L, "f", None), (3L, "g", None), (4L, "h", Some(5L)))
+      .toDF("id", "payload", "ver")
+    val deduped = Upsert.dedupe(batch, Seq("id"), "ver")
+    deduped.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+    deduped.columns.toSeq shouldBe batch.columns.toSeq
+    canon(deduped) shouldBe Seq("[1,b,20]", "[2,e,1]", "[3,f,null]", "[4,h,5]")
+    canon(deduped) shouldBe canon(windowForm(batch))
+    val spread = batch.repartition(2)
+    canon(Upsert.dedupe(spread, Seq("id"), "ver")) shouldBe canon(windowForm(spread))
   }
 
   test("intoTable preserves the target's partition columns") {
